@@ -182,6 +182,8 @@ def main() -> None:
         round(spark_oracle_total / duck_total, 2) if duck_total else None
     )
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    # normalized, so "032" or " 32" names the default profile too
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     # Full detail (per-query spark/cold/duckdb/ratio) goes to a repo file; the
     # driver's stdout capture keeps only a 2,000-char tail, which truncated the
@@ -199,6 +201,7 @@ def main() -> None:
         "ratio": ratio,
         "ratio_overall": ratio_overall,
         "sf": sf_val,
+        "cpus": cpus,
     }
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     # The durable record is the sf0.1 run AT THE DEFAULT CORE PROFILE (what
@@ -207,8 +210,7 @@ def main() -> None:
     # (the driver's 8-core scaling validation) — write a suffixed file
     # instead of clobbering it (VERDICT r10 item 2: the 8-core validation
     # run overwrote the committed record).
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    csuffix = "" if cpus == "32" else f"_c{cpus}"
+    csuffix = "" if cpus == 32 else f"_c{cpus}"
     record = (
         f"BENCH_full{csuffix}.json"
         if isinstance(sf_val, float) and abs(sf_val - 0.1) < 1e-9

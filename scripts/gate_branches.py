@@ -31,6 +31,8 @@ REPO = os.path.dirname(HERE)
 # the queries whose plans contain a strategy gate (pacf's fold; the CC
 # family — dedup_clusters and its two oracle-checked consumers)
 QUERIES = ["pacf", "dedup_clusters", "neardup_survivors", "curate_decisions"]
+# where driver_gate.py writes its per-query results
+GATE_SIM = "/tmp/gate_sim.json"
 
 
 def _run(force: "str | None") -> dict:
@@ -38,11 +40,18 @@ def _run(force: "str | None") -> dict:
     env.pop("SPARK_GRAFT_FORCE_PATH", None)
     if force:
         env["SPARK_GRAFT_FORCE_PATH"] = force
+    # a pass must never read the results an earlier run left behind
+    if os.path.exists(GATE_SIM):
+        os.remove(GATE_SIM)
     rc = subprocess.run(
         [sys.executable, os.path.join(HERE, "driver_gate.py"), *QUERIES],
         env=env,
     ).returncode
-    with open("/tmp/gate_sim.json") as f:
+    if not os.path.exists(GATE_SIM):
+        raise SystemExit(
+            f"driver_gate.py (force_path={force!r}, exit {rc}) wrote no {GATE_SIM}"
+        )
+    with open(GATE_SIM) as f:
         results = json.load(f)
     return {"rc": rc, "force_path": force or "", "results": results}
 

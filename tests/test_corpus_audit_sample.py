@@ -15,6 +15,8 @@ from scripts.corpus_audit import ROOT, _build, _compare
 
 def _one_file_per_family():
     out = []
+    if not os.path.isdir(ROOT):
+        return out
     for family in sorted(os.listdir(ROOT)):
         fdir = os.path.join(ROOT, family)
         if not os.path.isdir(fdir):
@@ -36,6 +38,7 @@ def _one_file_per_family():
 _SAMPLE = _one_file_per_family()
 
 
+@pytest.mark.skipif(not _SAMPLE, reason=f"no reference corpus at {ROOT}")
 @pytest.mark.parametrize(
     "family,path", _SAMPLE, ids=[f for f, _ in _SAMPLE]
 )

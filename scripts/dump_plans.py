@@ -53,7 +53,7 @@ FLAGSHIPS = [
     ("winnowing", "MOSS fingerprints: position explode + ONE doc-keyed window (rightmost-min encoded in the value) + exchange-free DISTINCT"),
     ("gopher_repetition", "repetition table: zero-exchange Arrow-batched python stage over the pruned scan (fold twin retired by A/B)"),
     ("line_dedup", "line-grain dedup: hash-keyed sortless first-doc window + touched-docs-only anti-join rebuild"),
-    ("kmeans_embed", "Lloyd k-means (gate scale): 3 unrolled iterations, broadcast centroid relations, map-side partial argmin"),
+    ("kmeans_embed", "Lloyd k-means: 3 rounds of Arrow-batched numpy assignment (mapInPandas over the pruned scan), K*dims micro-mean centroid updates read on the driver"),
     ("quality_classifier", "trained quality filter: session-materialized design matrix, 5 integer-state LR rounds, feature-keyed codegen aggregations"),
     ("doc_embed", "hashing-trick doc vectors: word x dim explode partial-aggregated to 16 rows/doc before ONE exchange"),
     ("interpolate_ts", "series gap-fill: two ignore-nulls bracket windows over one series-keyed sort, no joins"),
@@ -61,11 +61,11 @@ FLAGSHIPS = [
     ("winnow_dup", "MOSS candidate pairs: capped-fingerprint equality self-join, never doc x doc"),
     ("imputation_error", "gap-fill benchmark metric: interpolate windows + truth join + event-type-bounded micro-sum rollup"),
     ("discovery_benchmark", "EP3 composed: literal user-cutoff pushed to the events scan, caps-bounded src broadcast into the lag pair join, single-scan pair-grouped metric rollup (r9)"),
-    ("vec_topk_ivf_trained", "trained-quantizer IVF: Lloyd chain index relation materialized once, probe-2 semi-join + broadcast exact-cosine verify (r9)"),
+    ("vec_topk_ivf_trained", "trained-quantizer IVF: numpy-trained Lloyd quantizer inlined as VALUES, index relation materialized once, probe-2 semi-join + broadcast exact-cosine verify (r9)"),
     ("acf", "per-series autocorrelation: ONE series window computes all 8 lag columns, stack() unpivots in the same pass (r9)"),
     ("source_kl", "pairwise unigram KL: telescoped to per-source scalars + one term equi-join over the session-materialized count relation (r9)"),
     ("dsir_resample", "Gumbel-top-k selection: weights pipeline into TakeOrderedAndProject, footer-derived budget, no global sort (r9)"),
-    ("pacf", "Durbin-Levinson partial autocorrelation: acf's single series window + 36-col pivot + let-bound integer-state fold; numpy mapInPandas fold past 2M events (r10)"),
+    ("pacf", "Durbin-Levinson partial autocorrelation: acf's single series window + 36-col pivot + integer-state numpy mapInPandas fold"),
     ("cusum_changepoint", "CUSUM argmax: ONE series exchange carries cumsum + rank windows, rn=1 reduces in-stage (r9)"),
     ("bigram_xent", "bigram LM cross-entropy: doc-clustered tf12 never moves, bigram vocab partial-aggs then broadcasts back, size-gated (r9)"),
     ("zipf_fit", "Zipf OLS per source: explode → tf agg → vocab-sized rank window → exact micro-nat regression fold (r9)"),

@@ -381,7 +381,8 @@ def build_ivf_index(
     :func:`append_ivf_index`. Returns the table name."""
     from ..sources import load
 
-    load(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
+    emb = load(spark, sf_dir, "embeddings")
+    emb.createOrReplaceTempView("embeddings")
     table = f"{prefix}_cells"
     ranked_sql = None
     if quantizer == "trained":
@@ -390,11 +391,11 @@ def build_ivf_index(
         # next to its inverted file — the index is (cells, centroids).
         from ..queries.corpus_mining import (
             _ivft_ranked_values_sql,
-            _km_trained_centroids_numpy,
+            _km_quantizer,
             trained_centroid_values,  # noqa: F401  (probe-side twin)
         )
 
-        cents = _km_trained_centroids_numpy(spark, sf_dir)
+        cents = _km_quantizer(spark, emb)
         qrows = [
             (int(c), int(dim + 1), float(w))
             for c in sorted(cents)

@@ -42,26 +42,6 @@ class Query:
 REGISTRY: dict[str, Query] = {}
 
 
-def forced_strategy() -> "str | None":
-    """Strategy-gate override for branch attestation (VERDICT r10 item 3).
-
-    Scale-gated operators (pacf's Durbin-Levinson fold strategy,
-    dedup_clusters' connected-components strategy) pick a branch from input
-    statistics, so any single test tier attests only one branch.
-
-    - ``SPARK_GRAFT_FORCE_PATH=small``  forces the below-gate branch
-      (pacf: interpreted SQL fold; CC: driver union-find — still bounded
-      by its 50k-pair collect cap, falling back past it);
-    - ``SPARK_GRAFT_FORCE_PATH=scale``  forces the above-gate branch
-      (pacf: vectorized numpy mapInPandas fold; CC: distributed hybrid).
-
-    Read at build time (not import) so one extra oracle-gate pass with the
-    knob set (scripts/gate_branches.py) gives the branch the normal tiers
-    never exercise a CORRECTNESS-grade parity record. Unset: the measured
-    gates decide, which is the production posture."""
-    v = _os.environ.get("SPARK_GRAFT_FORCE_PATH", "").strip().lower()
-    return v if v in ("small", "scale") else None
-
 _CLEANUP_PATHS: set[str] = set()
 
 

@@ -3,27 +3,26 @@
 kmeans_embed (queries/corpus_mining.py) exposes the clustering as an
 oracle-checked relation; vec_topk_ivf_trained and semdedup consume the
 SAME trained solution as their coarse quantizer (VERDICT r08 item 4). The
-chain lives here, outside both modules, because corpus_mining imports
+machinery lives here, outside both modules, because corpus_mining imports
 corpus_ext — a quantizer import in the other direction would cycle.
 
-Two bit-equal forms of the same arithmetic:
+One Spark form and its DuckDB twin, term-for-term the same FLOOR-micro
+integer arithmetic:
 
-- ``_km_cent_chain``: the iteration budget UNROLLED into declarative CTE
-  text (dialect-injected) — the gate-scale form both engines run, so the
-  DuckDB oracles replay training end to end inside one statement;
-- ``_km_trained_centroids_numpy``: per-round Arrow-batched numpy
-  assignment + one SQL micro-mean update whose K*dims rows are the only
-  driver reads — the scale form past the interpreted-HOF cliff
-  (corpus_mining._KM_NUMPY_ROWS), term-for-term the same FLOOR-micro
-  integer arithmetic (pinned bit-equal in tests/test_ann_recall.py and
-  tests/test_corpus_ext.py).
+- ``_km_lloyd``: the Spark trainer — per-round Arrow-batched numpy
+  assignment (``_km_assign_numpy``) plus one SQL micro-mean update whose
+  K*dims result rows are the only driver reads;
+- ``_km_cent_chain``: the DuckDB oracle text — the iteration budget
+  UNROLLED into declarative CTEs, so the oracles replay training end to
+  end inside one statement.
+
+The two are pinned bit-equal in tests/test_corpus_mining.py,
+tests/test_ann_recall.py and tests/test_corpus_ext.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-
-from .llm_pipeline import _SPARK_D
+from pyspark.sql import DataFrame, SparkSession
 
 _KM_K = 8
 _KM_ITERS = 3
@@ -31,24 +30,15 @@ _KM_DIMS = 64
 # Quantizer training past this many vectors runs on a deterministic stride
 # SUBSAMPLE (the FAISS posture: the coarse quantizer saturates long before
 # the corpus does, and training cost is n_train × K per round). Gate scales
-# sit far below the cap, so the declarative-chain twin and every oracle are
-# unaffected; the scale regime (which has no oracle by design) trades
-# nothing measurable for an n-independent build.
+# sit far below the cap, so every oracle is unaffected; the scale regime
+# (which has no oracle by design) trades nothing measurable for an
+# n-independent build. kmeans_embed itself always trains on every vector.
 _KM_TRAIN_CAP = 65536
 
 
-def _km_fold(d, ea: str, cw: str) -> str:
+def _km_fold(ea: str, cw: str) -> str:
     """Exact squared-distance as a BIGINT micro sum: per-dim FLOOR-micro
-    terms accumulated left-to-right (order-independent integer adds).
-    Spark side pairs the arrays with zip_with instead of indexed
-    element_at lookups — measured 6.3 -> 4.4 s steady at the 50k-vector
-    tier (interleaved A/B), identical per-term arithmetic and order."""
-    if d is _SPARK_D:
-        return (
-            f"aggregate(zip_with({ea}, {cw}, (x, y) -> "
-            f"CAST(FLOOR((x - y) * (x - y) * 1000000.0) AS BIGINT)), "
-            f"CAST(0 AS BIGINT), (acc, z) -> acc + z)"
-        )
+    terms, order-independent integer adds."""
     term = (
         f"CAST(FLOOR(({ea}[i] - {cw}[i]) * ({ea}[i] - {cw}[i]) * "
         f"1000000.0) AS BIGINT)"
@@ -59,36 +49,19 @@ def _km_fold(d, ea: str, cw: str) -> str:
     )
 
 
-def _km_cent_chain(d, k: int = _KM_K, iters: int = _KM_ITERS, prefix: str = ""):
-    """The unrolled Lloyd chain as ``(cte_list, trained_centroid_select)``.
+def _km_cent_chain(k: int = _KM_K, iters: int = _KM_ITERS, prefix: str = ""):
+    """The unrolled Lloyd chain (DuckDB dialect) as
+    ``(cte_list, trained_centroid_select)``.
 
     ``cte_list`` ends at the final assignment ``a{iters}`` (what
-    ``_kmeans_sql`` selects from); ``trained_centroid_select`` is the one
+    ``_KM_DUCK`` selects from); ``trained_centroid_select`` is the one
     more centroid update over that assignment, yielding the fully trained
-    quantizer relation (c, dim, w) that IVF/semdedup consumers slot in
+    quantizer relation (c, dim, w) that IVF/semdedup oracles slot in
     where their LCG centroids stood. Parameterized on K so a consumer can
     request its own cell count; every expression keeps the FLOOR-micro
-    integer discipline, so the chain is engine-bit-exact at any (k, iters).
+    integer discipline, so the chain is bit-exact against ``_km_lloyd``
+    at any (k, iters).
     """
-    spark = d is _SPARK_D
-    posexp = (
-        "SELECT vec_id, pos + 1 AS dim, CAST(x AS DOUBLE) AS x "
-        "FROM embeddings LATERAL VIEW posexplode(embedding) AS pos, x"
-        if spark
-        else "SELECT vec_id, generate_subscripts(embedding, 1) AS dim, "
-        "CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings"
-    )
-    to_double = (
-        "transform(embedding, x -> CAST(x AS DOUBLE))"
-        if spark
-        else "list_transform(embedding, x -> CAST(x AS DOUBLE))"
-    )
-    cent_arr = (
-        "transform(array_sort(collect_list(named_struct('dim', dim, "
-        "'w', w))), s -> s.w)"
-        if spark
-        else "list(w ORDER BY dim)"
-    )
     # centroid coordinate: exact-integer numerator over a double product
     # (CAST both operands — a bare 1000000.0 is DECIMAL in DuckDB and
     # flips the division onto the exact-decimal path, the documented
@@ -99,8 +72,11 @@ def _km_cent_chain(d, k: int = _KM_K, iters: int = _KM_ITERS, prefix: str = ""):
     )
     p = prefix
     ctes = [
-        f"""{p}v AS (SELECT vec_id, {to_double} AS ea FROM embeddings),
-    {p}comps AS ({posexp}),
+        f"""{p}v AS (SELECT vec_id,
+                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ea
+           FROM embeddings),
+    {p}comps AS (SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
+                 CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
     {p}sel8 AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {k}),
     {p}sel AS (
       SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c
@@ -112,7 +88,7 @@ def _km_cent_chain(d, k: int = _KM_K, iters: int = _KM_ITERS, prefix: str = ""):
     for t in range(1, iters + 1):
         ctes.append(
             f"""{p}a{t} AS (
-      SELECT e.vec_id, MIN({_km_fold(d, 'e.ea', 'ct.cw')} * {k} + ct.c)
+      SELECT e.vec_id, MIN({_km_fold('e.ea', 'ct.cw')} * {k} + ct.c)
                AS kk
       FROM {p}v e CROSS JOIN {p}c{t - 1} ct
       GROUP BY e.vec_id
@@ -121,7 +97,7 @@ def _km_cent_chain(d, k: int = _KM_K, iters: int = _KM_ITERS, prefix: str = ""):
         if t < iters:
             ctes.append(
                 f"""{p}c{t} AS (
-      SELECT c, {cent_arr} AS cw
+      SELECT c, list(w ORDER BY dim) AS cw
       FROM (SELECT a.kk % {k} AS c, p.dim, {w_mean} AS w
             FROM {p}comps p JOIN {p}a{t} a ON a.vec_id = p.vec_id
             GROUP BY a.kk % {k}, p.dim) m
@@ -134,23 +110,27 @@ def _km_cent_chain(d, k: int = _KM_K, iters: int = _KM_ITERS, prefix: str = ""):
     return ctes, trained
 
 
-def _km_assign_numpy(df, cents):
-    """One Lloyd assignment pass as Arrow-batched mapInPandas: the EXACT
-    arithmetic of _km_fold, vectorized — float64 (x-w)^2 * 1e6 floored to
-    int64 per dim (IEEE-identical to the SQL form term by term), summed
-    exactly, argmin encoded as MIN(d2*K + c).
+def _km_assign_numpy(df: DataFrame, cents: dict) -> DataFrame:
+    """One Lloyd assignment pass as Arrow-batched mapInPandas over ``df``
+    (vec_id, embedding) against ``cents`` {cluster: float64[dims]}:
+    (vec_id, cluster, d2_micro). The EXACT arithmetic of the oracle's
+    _km_fold, vectorized — float64 (x-w)^2 * 1e6 floored per dim
+    (IEEE-identical to the SQL form term by term), summed exactly; the
+    argmin takes the first minimum over ascending cluster ids, i.e. the
+    oracle's MIN(d2*K + c) tie rule.
 
-    The centroid axis is processed in 64-row BLOCKS (the _sd_assign_numpy
-    device): the unblocked (batch, K, dims) broadcast subtract is ~5 GB of
-    float64 intermediate per 10k-row Arrow batch at semdedup's K=1024
-    scale tier — blocking bounds it at batch×64×dims regardless of K.
-    Strict `<` on the running minimum keeps ties on the LOWER block, so
-    the blocked composite equals the one-shot (d2*K + c) min exactly."""
+    The centroid axis is processed in 64-row BLOCKS: the unblocked
+    (batch, K, dims) broadcast subtract is ~5 GB of float64 intermediate
+    per 10k-row Arrow batch at semdedup's K=1024 scale tier — blocking
+    bounds it at batch×64×dims regardless of K. Strict `<` on the running
+    minimum keeps ties on the LOWER block, so the blocked argmin equals
+    the one-shot one exactly."""
     import numpy as np
     import pandas as pd
 
-    C = cents  # (k, dims) float64; closure-captured, k*dims scalars
-    k = C.shape[0]
+    ids = sorted(cents)  # clusters can drop out: ids need not be 0..K-1
+    cmap = np.array(ids, dtype=np.int32)
+    C = np.stack([cents[c] for c in ids])  # closure-captured, K*dims scalars
 
     def assign(batches):
         for pdf in batches:
@@ -161,7 +141,7 @@ def _km_assign_numpy(df, cents):
             )
             best_d = np.full(len(pdf), np.iinfo(np.int64).max, dtype=np.int64)
             best_c = np.zeros(len(pdf), dtype=np.int64)
-            for lo in range(0, k, 64):
+            for lo in range(0, len(ids), 64):
                 Cb = C[lo : lo + 64]
                 # In-place ops + float64 reduction: each floored term is an
                 # exact small integer and 64 of them stay far below 2^53,
@@ -180,85 +160,102 @@ def _km_assign_numpy(df, cents):
                 upd = blk_d < best_d  # strict: ties keep the lower block
                 best_d = np.where(upd, blk_d, best_d)
                 best_c = np.where(upd, blk_c + lo, best_c)
-            kk = best_d * k + best_c
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "kk": kk})
+            yield pd.DataFrame(
+                {"vec_id": pdf["vec_id"], "cluster": cmap[best_c],
+                 "d2_micro": best_d}
+            )
 
-    return df.mapInPandas(assign, schema="vec_id long, kk long")
-
-
-def _km_trained_centroids_numpy(
-    spark: SparkSession, sf_dir: str, k: int = _KM_K, iters: int = _KM_ITERS
-):
-    """The scale form of the trained quantizer: _kmeans_numpy's per-round
-    numpy assignment + SQL micro-mean update, run through the FINAL update
-    (the quantizer is the k-means solution, not the last pre-assignment
-    centroids). Returns {cluster_id: float64[dims]} — K*dims planning
-    scalars, the legitimate index-build collect. Arithmetic is term-for-
-    term the declarative chain's (FLOOR-micro int64 distances, exact
-    integer numerators over double denominators), so the two forms agree
-    bit-for-bit — pinned in tests/test_ann_recall.py and
-    tests/test_corpus_ext.py. Parameterized on (k, iters) so semdedup can
-    train its own corpus-scaled cell count."""
-    import numpy as np
-
-    from ..sources import load
-
-    # Repartition BEFORE the per-round assignment kernel: the embeddings
-    # scan yields only ~2 file-split partitions at the 200k tier (one
-    # 100 MB parquet), so the compute-heavy mapInPandas ran ~2-way —
-    # measured 350 s for the K=1024 3-round build; core-count partitions
-    # make the assignment rounds actually parallel (the AQE-coalesce
-    # caveat from the verify notes, applied at the source).
-    emb = (
-        load(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint()
+    return df.mapInPandas(
+        assign, schema="vec_id long, cluster int, d2_micro long"
     )
-    n = emb.count()
-    train = emb
-    if n > _KM_TRAIN_CAP:
-        # deterministic stride sample, id-spread (not a prefix — the
-        # scaled fixtures cluster by id range): every ceil(n/cap)-th id
-        stride = -(-n // _KM_TRAIN_CAP)
-        train = emb.where(f"vec_id % {stride} = 0").localCheckpoint()
-    seeds = train.orderBy("vec_id").limit(k).collect()
-    cents = {
-        c: np.asarray(r.embedding, dtype=np.float64)
-        for c, r in enumerate(seeds)
-    }
-    dims = len(next(iter(cents.values())))
+
+
+def _km_update(spark: SparkSession, emb: DataFrame, assign: DataFrame) -> dict:
+    """One centroid update: per-(cluster, dim) exact-integer micro sums
+    over ``assign`` ⋈ ``emb``'s position explosion, divided on the driver
+    exactly as the oracle's w_mean divides. Returns {cluster:
+    float64[dims]}; the K*dims result rows are planning scalars, never
+    data."""
     import uuid
 
-    for t in range(1, iters + 1):
-        C = np.stack([cents[c] for c in sorted(cents)])
-        cmap = sorted(cents)
-        a = _km_assign_numpy(train, C)
-        kc = len(cmap)  # compact centroid count (clusters can drop out)
-        view = f"_ivft_assign_{uuid.uuid4().hex[:12]}"
-        a.createOrReplaceTempView(view)
-        train.createOrReplaceTempView(f"{view}_e")
+    import numpy as np
+
+    view = f"_km_{uuid.uuid4().hex[:12]}"
+    assign.createOrReplaceTempView(view)
+    emb.createOrReplaceTempView(f"{view}_e")
+    try:
         rows = spark.sql(
             f"""
-            SELECT CAST(a.kk % {kc} AS INT) AS c, p.dim,
+            SELECT a.cluster AS c, p.dim,
                    SUM(CAST(FLOOR(p.x * 1000000.0) AS BIGINT)) AS sx,
                    COUNT(*) AS n
             FROM (SELECT vec_id, pos + 1 AS dim, CAST(x AS DOUBLE) AS x
                   FROM {view}_e LATERAL VIEW posexplode(embedding) AS pos, x
                  ) p
             JOIN {view} a ON a.vec_id = p.vec_id
-            GROUP BY a.kk % {kc}, p.dim
+            GROUP BY a.cluster, p.dim
             """
-        ).collect()  # K*dims planning scalars, never data
+        ).collect()
+    finally:
         spark.catalog.dropTempView(view)
         spark.catalog.dropTempView(f"{view}_e")
-        upd: dict = {}
-        for r in rows:
-            upd.setdefault(cmap[r.c], np.zeros(dims))[r.dim - 1] = (
-                float(r.sx) / (r.n * 1e6)
-            )
-        cents = upd
+    dims = max(r.dim for r in rows)
+    cents: dict = {}
+    for r in rows:
+        cents.setdefault(r.c, np.zeros(dims))[r.dim - 1] = (
+            float(r.sx) / (r.n * 1e6)
+        )
     return cents
+
+
+def _km_lloyd(
+    spark: SparkSession, emb: DataFrame, k: int = _KM_K, iters: int = _KM_ITERS
+) -> DataFrame:
+    """Lloyd k-means over ``emb`` (vec_id, embedding): seeds are the k
+    smallest vec_ids' vectors, then ``iters`` assignment rounds with a
+    centroid update between consecutive ones. Returns the last round's
+    assignment (vec_id, cluster, d2_micro) — lazy; the rounds before it
+    ran eagerly. A cluster that loses all members drops out of the next
+    round's centroids."""
+    import numpy as np
+
+    seeds = emb.orderBy("vec_id").limit(k).collect()
+    cents = {
+        c: np.asarray(r.embedding, dtype=np.float64)
+        for c, r in enumerate(seeds)
+    }
+    assign = _km_assign_numpy(emb, cents)
+    for _ in range(iters - 1):
+        assign = _km_assign_numpy(emb, _km_update(spark, emb, assign))
+    return assign
+
+
+def _km_quantizer(
+    spark: SparkSession, emb: DataFrame, k: int = _KM_K, iters: int = _KM_ITERS
+) -> dict:
+    """The trained coarse quantizer {cluster: float64[dims]}: ``_km_lloyd``
+    run through the FINAL update (the quantizer is the k-means solution,
+    not the last pre-assignment centroids) — the oracle chain's
+    ``trained_centroid_select``. Past ``_KM_TRAIN_CAP`` vectors it trains
+    on a stride subsample."""
+    # Repartition BEFORE the per-round assignment kernel: the embeddings
+    # scan yields only ~2 file-split partitions at the 200k tier (one
+    # 100 MB parquet), so the compute-heavy mapInPandas ran ~2-way —
+    # measured 350 s for the K=1024 3-round build; core-count partitions
+    # make the assignment rounds actually parallel (the AQE-coalesce
+    # caveat from the verify notes, applied at the source).
+    train = (
+        emb.select("vec_id", "embedding")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .localCheckpoint()
+    )
+    n = train.count()
+    if n > _KM_TRAIN_CAP:
+        # deterministic stride sample, id-spread (not a prefix — the
+        # scaled fixtures cluster by id range): every ceil(n/cap)-th id
+        stride = -(-n // _KM_TRAIN_CAP)
+        train = train.where(f"vec_id % {stride} = 0").localCheckpoint()
+    return _km_update(spark, train, _km_lloyd(spark, train, k, iters))
 
 
 def trained_centroid_values(cents) -> str:

@@ -40,11 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions.detrand import lcg_uniform_sql
 from ..functions.materialize import materialized
 from . import register
-from ._lloyd import (
-    _KM_ITERS,
-    _km_cent_chain,
-    _km_trained_centroids_numpy,
-)
+from ._lloyd import _KM_ITERS, _km_assign_numpy, _km_cent_chain, _km_quantizer
 from .llm_pipeline import (
     _DUCK_D,
     _ND_DUCK,
@@ -485,10 +481,8 @@ def _sd_k(n_vectors: int) -> int:
     vectors, sf0.1 = 5k) stay at K=32, bit-identical to the static DuckDB
     oracle; larger corpora widen where no oracle runs (the weak-scaling
     table in COVERAGE.md is the check there). The centroids are the
-    TRAINED Lloyd solution at every K since round 9 (declarative chain at
-    gate scales, numpy trainer + blocked mapInPandas argmin past them);
-    the relation shape — (vec_id, c) — and everything downstream of it
-    are unchanged."""
+    TRAINED Lloyd solution at every K (_sd_assign_numpy); K changes only
+    the cell count, never the relation shape (vec_id, c)."""
     if n_vectors < 20_000:
         return _SD_K
     if n_vectors < 200_000:
@@ -496,23 +490,21 @@ def _sd_k(n_vectors: int) -> int:
     return 1024
 
 
-def _sd_assign_sql(d, posexp: str, k: int = _SD_K) -> str:
-    """Per-vector nearest-centroid assignment (vec_id, c) — the index
-    relation. Since round 9 the coarse quantizer is the TRAINED Lloyd
-    solution (the _km_cent_chain kmeans_embed exposes, at semdedup's own
-    K — VERDICT r08 item 4; the LCG stand-in _SD_W is retired), so cell
-    boundaries sit between real embedding clusters and the within-cluster
-    pair stage sees actual near-duplicates. Same determinism discipline
-    as before: FLOOR-micro bigint distance sums + centroid-id tiebreak,
-    and the whole train+assign runs as ONE declarative statement at gate
-    scales, so assignment can never diverge from summation order or
-    engine."""
-    ctes, trained = _km_cent_chain(d, k=k, iters=_KM_ITERS, prefix="km_")
+def _sd_assign_sql(k: int = _SD_K) -> str:
+    """The oracle's per-vector nearest-centroid assignment (vec_id, c) —
+    the index relation. The coarse quantizer is the TRAINED Lloyd
+    solution (the _km_cent_chain kmeans_embed's oracle runs, at
+    semdedup's own K — VERDICT r08 item 4), so cell boundaries sit
+    between real embedding clusters and the within-cluster pair stage
+    sees actual near-duplicates. FLOOR-micro bigint distance sums +
+    centroid-id tiebreak, train+assign in ONE declarative statement."""
+    ctes, trained = _km_cent_chain(k=k, iters=_KM_ITERS, prefix="km_")
     chain = ",\n    ".join(ctes)
     return f"""
     WITH {chain},
     tcent AS ({trained}),
-    comps AS ({posexp}),
+    comps AS (SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
+              CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
     dists AS (
       SELECT p.vec_id, ct.c,
              SUM(CAST(FLOOR((p.x - ct.w) * (p.x - ct.w) * 1000000.0) AS BIGINT)) AS d2
@@ -686,69 +678,22 @@ def _sd_tail(d, assign: str, guard: bool = False) -> str:
     """
 
 
-_SD_POSEXP_SPARK = (
-    "SELECT vec_id, pos + 1 AS dim, CAST(x AS DOUBLE) AS x "
-    "FROM embeddings LATERAL VIEW posexplode(embedding) AS pos, x"
-)
+def _sd_assign_numpy(spark: SparkSession, k: int, sf_dir: str) -> DataFrame:
+    """Spark's nearest-centroid assignment (vec_id, c): the TRAINED
+    quantizer (_km_quantizer at semdedup's K — K*dims planning scalars)
+    broadcast to every task of one blocked-numpy Arrow assignment pass,
+    the production IVF posture. The oracle's comps⋈centroids join would
+    be n·dims·K rows (3×10^10 at 500k vectors, K=1024); the kernel
+    computes the same FLOOR-micro bigint distances per Arrow batch, and
+    its first-min argmin over ascending cluster ids is ORDER BY d2, c."""
+    from ..sources import load
+
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    cents = _km_quantizer(spark, emb, k=k, iters=_KM_ITERS)
+    return _km_assign_numpy(emb, cents).selectExpr("vec_id", "cluster AS c")
 
 
-def _sd_assign_numpy(spark: SparkSession, k: int, sf_dir: str):
-    """Blocked-numpy nearest-centroid assignment via Arrow `mapInPandas` —
-    the scale path for the assignment stage, now against the TRAINED
-    quantizer (trained once per (k, corpus) via the shared Lloyd trainer —
-    K*dims planning scalars — then broadcast to every assignment task, the
-    production IVF posture). The SQL form materializes the
-    comps⋈centroids join as n·dims·K rows (3×10^10 at 500k vectors,
-    K=1024); here each Arrow batch computes the same FLOOR-micro bigint
-    distances as a [batch, K_block, dims] broadcast subtract — identical
-    values by construction (floor((x−w)²·1e6) per dim in float64, exact
-    int64 sums, argmin over ascending-cluster-id rows ≡ ORDER BY d2, c
-    since np.argmin takes the first minimum), verified bit-equal to the
-    SQL path in tests/test_corpus_ext.py."""
-    import numpy as np
-    import pandas as pd  # noqa: F401
-
-    cents = _km_trained_centroids_numpy(spark, sf_dir, k=k, iters=_KM_ITERS)
-    cmap = np.array(sorted(cents), dtype=np.int64)  # row -> cluster id
-    W = np.stack([cents[c] for c in sorted(cents)])
-    kc = W.shape[0]  # surviving centroid count (clusters can drop out)
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.array(
-                [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
-            )
-            best_d = np.full(len(pdf), np.iinfo(np.int64).max, dtype=np.int64)
-            best_c = np.zeros(len(pdf), dtype=np.int64)
-            for lo in range(0, kc, 64):
-                Wb = W[lo : lo + 64]
-                diff = x[:, None, :] - Wb[None, :, :]
-                d2 = (
-                    np.floor((diff * diff) * 1000000.0)
-                    .astype(np.int64)
-                    .sum(axis=2)
-                )
-                blk_c = d2.argmin(axis=1)
-                blk_d = d2[np.arange(len(pdf)), blk_c]
-                upd = blk_d < best_d  # strict: ties keep the lower block
-                best_d = np.where(upd, blk_d, best_d)
-                best_c = np.where(upd, blk_c + lo, best_c)
-            out = pdf[["vec_id"]].copy()
-            out["c"] = cmap[best_c]
-            yield out
-
-    return (
-        spark.sql("SELECT vec_id, embedding FROM embeddings")
-        .mapInPandas(assign, "vec_id long, c long")
-    )
-
-_SD_DUCK_ASSIGN = _sd_assign_sql(
-    _DUCK_D,
-    "SELECT vec_id, generate_subscripts(embedding, 1) AS dim, "
-    "CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings",
-)
+_SD_DUCK_ASSIGN = _sd_assign_sql()
 # Compose the one-statement DuckDB twin: wrap the assignment pipeline's
 # final SELECT as one more CTE and append the pair/keep tail.
 _SD_CUT = _SD_DUCK_ASSIGN.rindex("SELECT vec_id, c FROM ranked")
@@ -765,10 +710,11 @@ _SEMDEDUP_DUCK = (
 def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic near-dup pruning: nearest-of-32
     coarse-centroid assignment against the TRAINED Lloyd quantizer
-    (kmeans_embed's chain at semdedup's own K — cells sit between real
-    embedding clusters), then exact pairwise cosine ONLY between
-    vectors sharing a cluster. A vector is dropped iff some lower-id vector
-    in its cluster matches at ROUND(cos,6) >= 0.3; the output keeps
+    (kmeans_embed's trainer at semdedup's own K, _sd_assign_numpy —
+    cells sit between real embedding clusters), then exact pairwise
+    cosine ONLY between vectors sharing a cluster. A vector is dropped
+    iff some lower-id vector in its cluster matches at ROUND(cos,6) >=
+    0.3; the output keeps
     every vector with its cluster, verdict, and (for drops) the witness
     vector and similarity. Candidate pairs are cluster-bounded — K scales
     ~sqrt(n) with corpus size (see _sd_k; parquet footer row count, no
@@ -783,21 +729,13 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     load(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
     k = _sd_k(_parquet_rows(_os.path.join(sf_dir, "embeddings.parquet")))
-    if k > _SD_K:
-        # past gate scales the n·dims·K join would dominate — use the
-        # blocked-numpy Arrow kernel (bit-identical distances; see
-        # _sd_assign_numpy)
-        build = lambda: _sd_assign_numpy(spark, k, sf_dir)  # noqa: E731
-    else:
-        build = lambda: spark.sql(  # noqa: E731
-            _sd_assign_sql(_SPARK_D, _SD_POSEXP_SPARK, k)
-        )
-    materialized(spark, f"semdedup_assign|{k}|{sf_dir}", build).createOrReplaceTempView(
-        "semdedup_assign"
-    )
-    # guard engages with the same size switch as the numpy assignment:
-    # below it the dense-cluster machinery is pure stage overhead (no
-    # fixture cluster nears the cap, results identical by construction)
+    materialized(
+        spark, f"semdedup_assign|{k}|{sf_dir}",
+        lambda: _sd_assign_numpy(spark, k, sf_dir),
+    ).createOrReplaceTempView("semdedup_assign")
+    # the guard engages past gate scales only: below them the
+    # dense-cluster machinery is pure stage overhead (no fixture cluster
+    # nears the cap, results identical by construction)
     return spark.sql(
         "WITH "
         + _sd_tail(_SPARK_D, "semdedup_assign", guard=k > _SD_K).lstrip()

@@ -671,110 +671,37 @@ def line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # coarse clustering semdedup / vec_topk_ivf consume as a GIVEN (their
 # centroids are deterministic LCG stand-ins), here produced as a
 # first-class oracle-checked relation: deterministic seeding (the K
-# smallest vec_ids), a fixed iteration budget unrolled into ONE declarative
-# statement (no driver loop, no collect), and the FLOOR-micro integer
+# smallest vec_ids), a fixed iteration budget, and the FLOOR-micro integer
 # discipline end to end so assignments can never diverge from summation
-# order or engine.
+# order or engine. The oracle unrolls the budget into ONE declarative
+# statement (_km_cent_chain).
 # --------------------------------------------------------------------------
 
 from ._lloyd import (  # noqa: E402  (shared Lloyd machinery)
-    _KM_DIMS,
     _KM_ITERS,
     _KM_K,
-    _km_assign_numpy,
     _km_cent_chain,
-    _km_fold,  # noqa: F401  (re-export: historical import site)
-    _km_trained_centroids_numpy,
+    _km_lloyd,
+    _km_quantizer,
     trained_centroid_values,
 )
 
 
-def _kmeans_sql(d) -> str:
-    idiv = "DIV" if d is _SPARK_D else "//"
-    ctes, _ = _km_cent_chain(d)
+def _kmeans_duck() -> str:
+    ctes, _ = _km_cent_chain()
     return (
         "\n    WITH "
         + ",\n    ".join(ctes)
         + f"""
     SELECT vec_id,
            CAST(kk % {_KM_K} AS INT) AS cluster,
-           CAST(kk {idiv} {_KM_K} AS BIGINT) AS d2_micro
+           CAST(kk // {_KM_K} AS BIGINT) AS d2_micro
     FROM a{_KM_ITERS}
     """
     )
 
 
-_KM_SPARK, _KM_DUCK = _dual(_kmeans_sql)
-
-
-# Past this many vectors the Spark side switches from the unrolled SQL
-# fold (interpreted higher-order functions evaluate ~770M lambda terms at
-# the 500k tier — measured 40.9 s steady) to the numpy-assignment loop
-# below (vectorized (n,K,dims) distance tensor per Arrow batch; the
-# driver reads only planning scalars — K*dims centroid sums per round,
-# the bpe_train discipline). Gate scales (500/5k vectors) keep the
-# oracle-identical declarative form; the two forms are pinned row-equal
-# at the 50k tier (tests/test_corpus_mining.py).
-_KM_NUMPY_ROWS = 10_000
-
-
-def _kmeans_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The scale form: per-round numpy assignment + one SQL micro-mean
-    aggregation whose K*dims result rows are the only driver reads."""
-    import numpy as np
-
-    from ..sources import load
-
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    seeds = emb.orderBy("vec_id").limit(_KM_K).collect()
-    cents = {
-        c: np.asarray(r.embedding, dtype=np.float64)
-        for c, r in enumerate(seeds)
-    }
-    import uuid
-
-    for t in range(1, _KM_ITERS + 1):
-        C = np.stack([cents[c] for c in sorted(cents)])
-        cmap = sorted(cents)  # row -> cluster id (clusters can drop out)
-        a = _km_assign_numpy(emb, C)
-        # decode the composite against the COMPACT centroid matrix, then
-        # map back to original cluster ids
-        k = len(cmap)
-        if t == _KM_ITERS:
-            from pyspark.sql import functions as F
-
-            mapping = F.create_map(
-                *[x for i, c in enumerate(cmap) for x in (F.lit(i), F.lit(c))]
-            )
-            return a.select(
-                "vec_id",
-                mapping[(F.col("kk") % k)].cast("int").alias("cluster"),
-                (F.col("kk") / k).cast("bigint").alias("d2_micro"),
-            )
-        view = f"_km_assign_{uuid.uuid4().hex[:12]}"
-        a.createOrReplaceTempView(view)
-        emb.createOrReplaceTempView(f"{view}_e")
-        rows = spark.sql(
-            f"""
-            SELECT CAST(a.kk % {k} AS INT) AS c, p.dim,
-                   SUM(CAST(FLOOR(p.x * 1000000.0) AS BIGINT)) AS sx,
-                   COUNT(*) AS n
-            FROM (SELECT vec_id, pos + 1 AS dim, CAST(x AS DOUBLE) AS x
-                  FROM {view}_e LATERAL VIEW posexplode(embedding) AS pos, x
-                 ) p
-            JOIN {view} a ON a.vec_id = p.vec_id
-            GROUP BY a.kk % {k}, p.dim
-            """
-        ).collect()  # K*dims planning scalars, never data
-        spark.catalog.dropTempView(view)
-        spark.catalog.dropTempView(f"{view}_e")
-        upd: dict[int, "np.ndarray"] = {}
-        for r in rows:
-            upd.setdefault(cmap[r.c], np.zeros(_KM_DIMS))[r.dim - 1] = (
-                float(r.sx) / (r.n * 1e6)
-            )
-        cents = upd
-    raise AssertionError("unreachable")
+_KM_DUCK = _kmeans_duck()
 
 
 @register("kmeans_embed", _KM_DUCK)
@@ -787,36 +714,26 @@ def kmeans_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall-vs-probe comparison stays runnable). Deterministic end to end:
     seeds are
     the K smallest vec_ids' vectors, every distance is a FLOOR-micro
-    BIGINT sum (order-independent), the argmin is encoded arithmetically
-    (min over d2*K + c — the winnowing composite device, so ties break
-    to the lowest cluster id with no engine-specific min_by rule), and
-    centroid means are exact-integer numerators over double denominators.
-    A cluster that loses all members simply drops out of the next round's
-    centroid relation. Returns (vec_id, cluster, d2_micro) after the
-    final assignment.
+    BIGINT sum (order-independent), the argmin breaks ties to the lowest
+    cluster id (the oracle encodes it arithmetically as min over
+    d2*K + c — the winnowing composite device — so no engine-specific
+    min_by rule is involved), and centroid means are exact-integer
+    numerators over double denominators. A cluster that loses all
+    members simply drops out of the next round's centroids. Returns
+    (vec_id, cluster, d2_micro) after the final assignment.
 
-    Scale shape, two gated forms (the sliding_agg/dedup_spans size-gate
-    discipline, footer row count, no job): at gate scales the iteration
-    budget is UNROLLED into one declarative statement — no driver loop,
-    no collect; per iteration the assignment CROSS JOINs the K-row
-    centroid array relation (broadcast) and partial-aggregates the
-    argmin map-side, the centroid update is one (c, dim)-keyed
-    aggregation (k·d rows out). Past _KM_NUMPY_ROWS vectors the
-    assignment's interpreted higher-order folds dominate (~770M lambda
-    terms at 200k vectors — measured 40.9 s steady), so the assignment
-    becomes an Arrow-batched mapInPandas computing the SAME FLOOR-micro
-    arithmetic as a vectorized (batch, K, dims) tensor — 40.9 s → ~3-6 s
-    at 200k vectors, DuckDB-parity — while each round's centroid update
-    stays the SQL micro-mean aggregation and the driver reads only its
-    K·dims planning-scalar rows (the bpe_train discipline). Forms pinned
-    row-equal at the 20k ladder tier and a 25k synthetic corpus. Nothing is corpus-quadratic."""
+    Scale shape: each assignment is an Arrow-batched mapInPandas
+    computing the FLOOR-micro arithmetic as a vectorized (batch, K, dims)
+    tensor — no join, no exchange; each round's centroid update is one
+    SQL micro-mean aggregation whose K·dims planning-scalar rows are the
+    only driver reads (the bpe_train discipline). The retired unrolled-SQL
+    form evaluated ~770M interpreted lambda terms at 200k vectors
+    (40.9 s steady vs ~3-6 s here) and was no faster at the gate tiers.
+    Nothing is corpus-quadratic."""
     from ..sources import load
-    from ..sources.tables import table_rows
 
-    if table_rows(sf_dir, "embeddings") > _KM_NUMPY_ROWS:
-        return _kmeans_numpy(spark, sf_dir)
-    load(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    return spark.sql(_KM_SPARK)
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return _km_lloyd(spark, emb)
 
 
 # --------------------------------------------------------------------------
@@ -848,24 +765,10 @@ def _ivft_ranked_tail(comps: str = "comps") -> str:
     FROM tdists"""
 
 
-def _ivft_ranked_sql(d) -> str:
-    """The trained-IVF index relation (vec_id, c, rn): Lloyd chain +
-    distance ranking in one declarative statement (gate-scale form)."""
-    ctes, trained = _km_cent_chain(d, prefix="km_")
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f""",
-    tcent AS ({trained}),
-    """
-        + _ivft_ranked_tail("km_comps")
-    )
-
-
 def _ivft_duck() -> str:
     from .llm_pipeline import _ivf_tail
 
-    ctes, trained = _km_cent_chain(_DUCK_D, prefix="km_")
+    ctes, trained = _km_cent_chain(prefix="km_")
     # the distance + rank text is the SHARED _ivft_ranked_tail, wrapped as
     # a nested-WITH CTE — a hand-inlined copy here once desynchronized
     # from the Spark form's tail would silently split the oracle
@@ -886,9 +789,9 @@ _IVFT_DUCK = _ivft_duck()
 
 def _ivft_ranked_values_sql(cents, posexp: "str | None" = None) -> str:
     """Spark-side trained-IVF index relation with the quantizer inlined as
-    literals (the scale form — training already ran via the numpy path).
-    ``posexp`` overrides the position-explosion source (the serving-index
-    builders pass a predicate-filtered one)."""
+    literals (training already ran via ``_km_quantizer``). ``posexp``
+    overrides the position-explosion source (the serving-index builders
+    pass a predicate-filtered one)."""
     if posexp is None:
         posexp = (
             "SELECT vec_id, pos + 1 AS dim, CAST(x AS DOUBLE) AS x "
@@ -910,33 +813,25 @@ def vec_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation materializes once per session (_indexed) — the inverted file
     a serving system stores next to its quantizer.
 
-    Scale shape: gate scales run the whole train+assign chain as ONE
-    declarative statement (no driver loop); past _KM_NUMPY_ROWS vectors
-    training runs kmeans_embed's numpy-assignment loop (the measured
-    interpreted-HOF cliff) and the frozen quantizer is inlined as K*dims
+    Scale shape: training runs kmeans_embed's numpy-assignment Lloyd
+    loop (_km_quantizer) and the frozen quantizer is inlined as K*dims
     literals — exactly how a production IVF build trains once and ships
     centroids to every assignment task. Search cost is unchanged from
     vec_topk_ivf: one semi-join probe over ~2/K of the corpus."""
     from ..functions.materialize import materialized
     from ..sources import load
-    from ..sources.tables import table_rows
     from .llm_pipeline import _ivf_tail
 
-    load(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
+    emb = load(spark, sf_dir, "embeddings")
+    emb.createOrReplaceTempView("embeddings")
 
     def build():
-        # training lives INSIDE the memoized index build: the numpy
-        # trainer's per-round passes are index-BUILD cost, paid once per
-        # session like every other serving-index relation (a first cut
-        # trained on every call — measured 3.3 s steady at the 20k tier
-        # for what is a ~0.3 s probe)
-        if table_rows(sf_dir, "embeddings") > _KM_NUMPY_ROWS:
-            return spark.sql(
-                _ivft_ranked_values_sql(
-                    _km_trained_centroids_numpy(spark, sf_dir)
-                )
-            )
-        return spark.sql(_ivft_ranked_sql(_SPARK_D))
+        # training lives INSIDE the memoized index build: the trainer's
+        # per-round passes are index-BUILD cost, paid once per session
+        # like every other serving-index relation (a first cut trained on
+        # every call — measured 3.3 s steady at the 20k tier for what is
+        # a ~0.3 s probe)
+        return spark.sql(_ivft_ranked_values_sql(_km_quantizer(spark, emb)))
 
     materialized(
         spark, f"ivft_ranked|{sf_dir}", build

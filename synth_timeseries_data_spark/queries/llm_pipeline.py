@@ -1214,8 +1214,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources import table_rows
 
-    from . import forced_strategy
-
     # full 3-col pair manifest (jaccard included) under ONE session key —
     # source_overlap reuses the same materialized relation, so the two
     # consumers must agree on the schema
@@ -1227,12 +1225,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).select("doc_a", "doc_b")
 
-    force = forced_strategy()
-    try_driver = (
-        (force == "small")
-        if force
-        else table_rows(sf_dir, "documents") <= _CC_DRIVER_DOCS
-    )
+    try_driver = table_rows(sf_dir, "documents") <= _CC_DRIVER_DOCS
 
     def _build_labels() -> DataFrame:
         if try_driver:
@@ -1247,16 +1240,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels, _ = _cc_hybrid(pairs.toDF("a", "b"))
         return labels
 
-    # labels memoized per (session, corpus, strategy) alongside the
-    # mh_pairs entry (ADVICE r10: without this, every below-gate invocation
-    # re-ran the 50k-row probe collect even though the pair relation is
-    # already session-materialized — and the curation workflow consumes
-    # clusters 2-3 times per build). Same in-memory, session-lifetime
-    # discipline as mh_pairs itself; the strategy key keeps a forced
-    # attestation pass from polluting the default entry.
-    labels = materialized(
-        spark, f"cc_labels|{force or 'auto'}|{sf_dir}", _build_labels
-    )
+    # labels memoized per (session, corpus) alongside the mh_pairs entry
+    # (ADVICE r10: without this, every below-gate invocation re-ran the
+    # 50k-row probe collect even though the pair relation is already
+    # session-materialized — and the curation workflow consumes clusters
+    # 2-3 times per build). Same in-memory, session-lifetime discipline as
+    # mh_pairs itself.
+    labels = materialized(spark, f"cc_labels|{sf_dir}", _build_labels)
     w_size = F.count("*").over(Window.partitionBy("cluster_rep"))
     return labels.select(
         F.col("v").alias("doc_id"), F.col("label").alias("cluster_rep")

@@ -788,24 +788,18 @@ def acf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Durbin-Levinson on the standard biased autocovariance estimator (common
 # full-series mean, c0 denominator — the PSD estimator DL requires).
 #
-# Cross-engine discipline: this is the engine's first fully IN-EXPRESSION
-# iterative algorithm (quality_classifier iterates driver-coordinated
-# rounds; here the whole recursion runs inside one SQL expression per
-# row). The recursion state is INTEGER (nano-unit BIGINTs): every
-# intermediate — the autocorrelations r_k, each level's phi vector, the
-# reflection coefficient — is snapped to ROUND(x * 1e9) after arithmetic
-# on exactly-representable integer-valued doubles, so the state after
-# every level is bit-identical across engines regardless of how each
-# engine schedules the arithmetic (ROUND-half-away-from-zero matches for
-# doubles on both; probed). Spark runs the recursion as a higher-order
-# aggregate() fold with a struct accumulator (phis + diagonal) — a
-# FIXED-SIZE expression evaluated iteratively at runtime, deliberately
-# not an unrolled CTE chain, whose collapsed expression tree would grow
-# factorially (phi[m][j] references two level-(m-1) terms). DuckDB runs
-# the same integer-state recursion as a recursive CTE (its list_reduce
-# cannot carry a list accumulator); its list_aggregate('sum') SKIPS
-# NULLs where Spark's fold is NULL-strict, so the oracle wraps each sum
-# in an explicit any-NULL guard to replicate the strict cascade.
+# Cross-engine discipline: the recursion state is INTEGER (nano-unit
+# BIGINTs): every intermediate — the autocorrelations r_k, each level's
+# phi vector, the reflection coefficient — is snapped to ROUND(x * 1e9)
+# after arithmetic on exactly-representable integer-valued doubles, so the
+# state after every level is bit-identical across engines regardless of
+# how each engine schedules the arithmetic (ROUND-half-away-from-zero
+# matches for doubles on both; probed). Both engines compute the rn state
+# with the same SQL prefix; Spark then runs the recursion as a vectorized
+# numpy mapInPandas stage (_pacf_dl_batches, binary HALF_UP emulation
+# plus validity masks), DuckDB as a recursive CTE (its list_reduce cannot
+# carry a list accumulator) whose sums carry an explicit any-NULL guard
+# to replicate the numpy fold's NULL-strict cascade.
 # Quantization error vs float Durbin-Levinson: ≤ 1.5e-8 measured on the
 # fixtures (each level compounds ~1e-9 snaps); the suite pins a 1e-5
 # tolerance against an independent float reimplementation.
@@ -814,7 +808,24 @@ def acf(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PACF_LAGS = 8
 
 
-def _pacf_sql(spark_side: bool) -> str:
+def _pacf_snap(v: str, limit: str) -> str:
+    """Snap-with-clamp: a near-constant series can leave c0 a quantization
+    residual (~1e-18) instead of exactly 0, making the nano ratio
+    astronomically large — under ANSI that CAST would THROW. Any |r| > 2
+    or |phi| beyond its mathematical envelope is quantization garbage on
+    a degenerate series; both forms map it to NULL identically (ABS of
+    NULL is NULL, NULL > x is NULL, CASE falls through to a NULL ROUND)."""
+    return (
+        f"CASE WHEN ABS({v}) > {limit} THEN CAST(NULL AS BIGINT)"
+        f" ELSE CAST(ROUND({v}) AS BIGINT) END"
+    )
+
+
+def _pacf_prefix(spark_side: bool) -> str:
+    """The CTEs both engines share, without the WITH keyword: the lag
+    window, the lag-pair unpivot, the exact-sum aggregation and the pivot
+    ``r`` — one row per series carrying the nano-scaled autocorrelation
+    BIGINTs rn1..rnL, the whole input of the Durbin-Levinson fold."""
     L = _PACF_LAGS
     tus = "ts DIV 1000" if spark_side else "epoch_us(ts)"
     lags = ", ".join(
@@ -856,18 +867,6 @@ def _pacf_sql(spark_side: bool) -> str:
         f"(CAST(sxy0 AS DOUBLE) / 1000000.0"
         f" - CAST(n0 AS DOUBLE) * {mean} * {mean})"
     )
-    # Snap-with-clamp: a near-constant series can leave c0 a quantization
-    # residual (~1e-18) instead of exactly 0, making the nano ratio
-    # astronomically large — under ANSI that CAST would THROW. Any |r| > 2
-    # or |phi| beyond its mathematical envelope is quantization garbage on
-    # a degenerate series; both engines map it to NULL identically (ABS of
-    # NULL is NULL, NULL > x is NULL, CASE falls through to a NULL ROUND).
-    def snap(v: str, limit: str) -> str:
-        return (
-            f"CASE WHEN ABS({v}) > {limit} THEN CAST(NULL AS BIGINT)"
-            f" ELSE CAST(ROUND({v}) AS BIGINT) END"
-        )
-
     rns = []
     for k in range(1, L + 1):
         ck = (
@@ -877,118 +876,9 @@ def _pacf_sql(spark_side: bool) -> str:
             f" + CAST(n{k} AS DOUBLE) * {mean} * {mean})"
         )
         rk = f"1000000000.0 * {ck} / NULLIF({c0}, 0.0)"
-        rns.append(f"{snap(rk, '2000000000.0')} AS rn{k}")
-
-    if spark_side:
-        s1t = (
-            "CAST(ROUND(CAST(element_at(acc.phis, j) AS DOUBLE)"
-            " * CAST(element_at(rl, m - j) AS DOUBLE)"
-            " / 1000000000.0) AS BIGINT)"
-        )
-        s2t = (
-            "CAST(ROUND(CAST(element_at(acc.phis, j) AS DOUBLE)"
-            " * CAST(element_at(rl, j) AS DOUBLE)"
-            " / 1000000000.0) AS BIGINT)"
-        )
-        s1 = f"aggregate(sequence(1, m - 1), CAST(0 AS BIGINT), (s, j) -> s + {s1t})"
-        s2 = f"aggregate(sequence(1, m - 1), CAST(0 AS BIGINT), (s, j) -> s + {s2t})"
-        # SQL let-bindings: each level's sums and reflection coefficient
-        # are bound ONCE as lambda variables via single-element
-        # transform(array(x), v -> ...) wrappers. Without this, every
-        # textual reference to phim (the per-element update uses it 7×,
-        # the snap guard doubles everything it wraps) RE-EVALUATES the two
-        # inner sum-folds — a measured ~50-100× eval multiplier that, with
-        # AQE coalescing the tiny post-pivot stage to one task, turned the
-        # whole query into minutes of serial interpreted evaluation
-        # (273 s → 7 s at sf0.1; FLOOR.md §r9-pacf).
-        phim_v = (
-            f"1000000000.0 * (CAST(t.rm AS DOUBLE) - CAST(t.s1 AS DOUBLE))"
-            f" / NULLIF(1000000000.0 - CAST(t.s2 AS DOUBLE), 0.0)"
-        )
-        newphi_v = (
-            "CAST(p AS DOUBLE) - CAST(pm AS DOUBLE)"
-            " * CAST(element_at(acc.phis, m - 1 - j0) AS DOUBLE)"
-            " / 1000000000.0"
-        )
-        body = (
-            f"named_struct('phis', "
-            f"concat(transform(acc.phis, (p, j0) -> "
-            f"{snap(newphi_v, '1000000000000000.0')}), array(pm)), "
-            f"'diag', concat(acc.diag, array(pm)))"
-        )
-        level = (
-            f"element_at(transform(array(named_struct("
-            f"'s1', {s1}, 's2', {s2}, 'rm', element_at(rl, m))), t -> "
-            f"element_at(transform(array({snap(phim_v, '2000000000.0')}), "
-            f"pm -> {body}), 1)), 1)"
-        )
-        dl = (
-            f"aggregate(sequence(2, {L}), "
-            f"named_struct('phis', array(element_at(rl, 1)), "
-            f"'diag', array(element_at(rl, 1))), "
-            f"(acc, m) -> {level}, "
-            f"acc -> acc.diag)"
-        )
-        rl_arr = "array(" + ", ".join(f"rn{k}" for k in range(1, L + 1)) + ")"
-        tail = f"""
-    rlt AS (SELECT user_id, {rl_arr} AS rl FROM r)
-    SELECT user_id, CAST(pos + 1 AS INT) AS lag,
-           CAST(d AS DOUBLE) / 1000000000.0 AS pacf
-    FROM (SELECT user_id, {dl} AS diag FROM rlt)
-    LATERAL VIEW posexplode(diag) t AS pos, d
-    """
-    else:
-
-        def strict(terms: str) -> str:
-            # DuckDB's list_aggregate('sum') SKIPS NULL elements; Spark's
-            # fold is NULL-strict. Replicate strictness explicitly.
-            return (
-                f"CASE WHEN len(list_filter({terms}, t -> t IS NULL)) > 0 "
-                f"THEN NULL ELSE CAST(list_aggregate({terms}, 'sum')"
-                f" AS BIGINT) END"
-            )
-
-        s1terms = (
-            "list_transform(generate_series(1, m), j -> "
-            "CAST(ROUND(CAST(phis[j] AS DOUBLE)"
-            " * CAST(rl[m + 1 - j] AS DOUBLE) / 1000000000.0) AS BIGINT))"
-        )
-        s2terms = (
-            "list_transform(generate_series(1, m), j -> "
-            "CAST(ROUND(CAST(phis[j] AS DOUBLE)"
-            " * CAST(rl[j] AS DOUBLE) / 1000000000.0) AS BIGINT))"
-        )
-        phim_v = (
-            f"1000000000.0 * (CAST(rl[m + 1] AS DOUBLE)"
-            f" - CAST({strict(s1terms)} AS DOUBLE))"
-            f" / NULLIF(1000000000.0 - CAST({strict(s2terms)} AS DOUBLE),"
-            f" 0.0)"
-        )
-        phim = snap(phim_v, "2000000000.0")
-        newphi_v = (
-            f"CAST(p AS DOUBLE) - CAST({phim} AS DOUBLE)"
-            f" * CAST(phis[m + 1 - j0] AS DOUBLE) / 1000000000.0"
-        )
-        newphis = (
-            f"list_append(list_transform(phis, (p, j0) -> "
-            f"{snap(newphi_v, '1000000000000000.0')}), {phim})"
-        )
-        rl_arr = "[" + ", ".join(f"rn{k}" for k in range(1, L + 1)) + "]"
-        tail = f"""
-    rlt AS (SELECT user_id, {rl_arr} AS rl FROM r),
-    dl AS (
-      SELECT user_id, rl, 1 AS m, [rl[1]] AS phis FROM rlt
-      UNION ALL
-      SELECT user_id, rl, m + 1, {newphis}
-      FROM dl WHERE m < {L}
-    )
-    SELECT user_id, CAST(m AS INT) AS lag,
-           CAST(phis[m] AS DOUBLE) / 1000000000.0 AS pacf
-    FROM dl
-    """
-    rec = "" if spark_side else "RECURSIVE "
+        rns.append(f"{_pacf_snap(rk, '2000000000.0')} AS rn{k}")
     return f"""
-    WITH {rec}w AS (
+    w AS (
       SELECT user_id, value, {lags}
       FROM (SELECT user_id, event_id, {tus} AS ts_us, value FROM events) e
       WINDOW win AS (PARTITION BY user_id ORDER BY ts_us, event_id)
@@ -1006,43 +896,71 @@ def _pacf_sql(spark_side: bool) -> str:
       SELECT user_id, {", ".join(pivots)}, {", ".join(rns)}
       FROM (SELECT user_id, k, n, s_x, s_y, s_xy FROM s) sp
       GROUP BY user_id
-    ),
-    {tail}
+    )"""
+
+
+def _pacf_dl_duck(rlt: str = "rlt") -> str:
+    """The DuckDB Durbin-Levinson fold over ``rlt`` (user_id, rl
+    BIGINT[L]): the recursive ``dl`` CTE (no WITH keyword) and the final
+    select. DuckDB's list_aggregate('sum') SKIPS NULL elements where the
+    numpy fold is NULL-strict, so each sum carries an explicit any-NULL
+    guard."""
+    L = _PACF_LAGS
+
+    def strict(terms: str) -> str:
+        return (
+            f"CASE WHEN len(list_filter({terms}, t -> t IS NULL)) > 0 "
+            f"THEN NULL ELSE CAST(list_aggregate({terms}, 'sum')"
+            f" AS BIGINT) END"
+        )
+
+    s1terms = (
+        "list_transform(generate_series(1, m), j -> "
+        "CAST(ROUND(CAST(phis[j] AS DOUBLE)"
+        " * CAST(rl[m + 1 - j] AS DOUBLE) / 1000000000.0) AS BIGINT))"
+    )
+    s2terms = (
+        "list_transform(generate_series(1, m), j -> "
+        "CAST(ROUND(CAST(phis[j] AS DOUBLE)"
+        " * CAST(rl[j] AS DOUBLE) / 1000000000.0) AS BIGINT))"
+    )
+    phim_v = (
+        f"1000000000.0 * (CAST(rl[m + 1] AS DOUBLE)"
+        f" - CAST({strict(s1terms)} AS DOUBLE))"
+        f" / NULLIF(1000000000.0 - CAST({strict(s2terms)} AS DOUBLE),"
+        f" 0.0)"
+    )
+    phim = _pacf_snap(phim_v, "2000000000.0")
+    newphi_v = (
+        f"CAST(p AS DOUBLE) - CAST({phim} AS DOUBLE)"
+        f" * CAST(phis[m + 1 - j0] AS DOUBLE) / 1000000000.0"
+    )
+    newphis = (
+        f"list_append(list_transform(phis, (p, j0) -> "
+        f"{_pacf_snap(newphi_v, '1000000000000000.0')}), {phim})"
+    )
+    return f"""
+    dl AS (
+      SELECT user_id, rl, 1 AS m, [rl[1]] AS phis FROM {rlt}
+      UNION ALL
+      SELECT user_id, rl, m + 1, {newphis}
+      FROM dl WHERE m < {L}
+    )
+    SELECT user_id, CAST(m AS INT) AS lag,
+           CAST(phis[m] AS DOUBLE) / 1000000000.0 AS pacf
+    FROM dl
     """
 
 
-_PACF_DUCK = _pacf_sql(False)
-
-# Past this many events rows the Durbin-Levinson fold moves from the
-# interpreted SQL higher-order functions to a vectorized numpy
-# mapInPandas stage (the kmeans-past-10k precedent): the fold's
-# per-series interpreted cost (~3 ms/series through nested
-# transform/aggregate lambdas) is what made pacf the registry's worst
-# per-decade grower (1.7 -> 7 -> 42 s at sf0.1/1/10, VERDICT r09 item 3),
-# while the numpy recursion over the same integer state is microseconds
-# per series. r10 optimization round: the gate dropped 2M -> 50k after a
-# same-session A/B at the 100k-event bench tier measured the numpy stage
-# 2.5x faster there too (SQL 1.75 s vs numpy 0.70 s min-of-5, rows
-# BIT-equal including NULL positions) — the interpreted fold loses at
-# every tier with >= a few hundred series; 50k keeps the sf0.01/sf0.001
-# oracle tiers on the pure-SQL plan the driver gate attests, and
-# test_pacf_numpy_matches_sql pins the two paths bit-identical.
-_PACF_NUMPY_GATE = 50_000
-
-
-def _pacf_rl_sql() -> str:
-    """The SQL prefix shared by both pacf strategies: everything up to and
-    including the exact nano-scaled autocorrelation BIGINTs rn1..rnL (one
-    row per series) — the window, the stack() unpivot, the exact-sum
-    aggregation and the pivot, but NOT the Durbin-Levinson fold."""
-    full = _pacf_sql(True)
-    parts = full.split("rlt AS (")
-    # guard the string coupling: a rename of the rlt CTE inside _pacf_sql
-    # must fail HERE, not as malformed SQL on the >2M-row path only
-    assert len(parts) == 2, "rlt CTE marker not found in _pacf_sql"
-    prefix = parts[0].rstrip().rstrip(",")
-    cols = ", ".join(f"rn{k}" for k in range(1, _PACF_LAGS + 1))
-    return f"{prefix} SELECT user_id, {cols} FROM r"
+_PACF_RNS = ", ".join(f"rn{k}" for k in range(1, _PACF_LAGS + 1))
+_PACF_DUCK = f"""
+    WITH RECURSIVE {_pacf_prefix(False).lstrip()},
+    rlt AS (SELECT user_id, [{_PACF_RNS}] AS rl FROM r),
+    {_pacf_dl_duck().lstrip()}"""
+_PACF_RL_SPARK = f"""
+    WITH {_pacf_prefix(True).lstrip()}
+    SELECT user_id, {_PACF_RNS} FROM r
+    """
 
 
 def _dl_round_half_up(x):
@@ -1059,12 +977,12 @@ def _dl_round_half_up(x):
 
 def _pacf_dl_batches(batches):
     """Vectorized Durbin-Levinson over (user_id, rn1..rnL) rows —
-    bit-exact replication of the SQL fold in ``_pacf_sql`` (integer
+    bit-exact replication of the DuckDB fold in ``_pacf_dl_duck`` (integer
     nano-state, snap-with-clamp at every level, NULL-strict sums, NULL
     contaminating every later lag). State is float64 value + bool
     validity mask per series; all arithmetic follows the SQL expression
-    order term-for-term (see test_pacf_numpy_matches_sql for the
-    bit-equality pin across both fixture tiers)."""
+    order term-for-term (see test_pacf_numpy_matches_duckdb for the
+    bit-equality pin on the fixture and the degenerate series)."""
     import numpy as np
     import pandas as pd
 
@@ -1133,19 +1051,12 @@ def _pacf_dl_batches(batches):
         vals = (diag / 1000000000.0).reshape(-1)
         ok = diag_ok.reshape(-1)
         # nullable Float64 (masked) — NaN would survive Arrow as a VALUE,
-        # but the SQL path emits genuine NULLs for undefined lags
+        # but undefined lags must be genuine NULLs
         pacf_col = pd.array(vals, dtype="Float64")
         pacf_col[~ok] = pd.NA
         yield pd.DataFrame(
             {"user_id": out_uid, "lag": out_lag, "pacf": pacf_col}
         )
-
-
-def _pacf_numpy(spark: SparkSession) -> DataFrame:
-    rl = spark.sql(_pacf_rl_sql())
-    return rl.mapInPandas(
-        _pacf_dl_batches, schema="user_id bigint, lag int, pacf double"
-    )
 
 
 @register("pacf", _PACF_DUCK)
@@ -1162,31 +1073,17 @@ def pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the same ONE series-keyed window exchange as acf (all 8
     lag columns over a single sort, lag 0 riding in the same stack()
     unpivot so no totals join), one series×9-bounded aggregation with
-    map-side partials, then the whole Durbin-Levinson recursion as a
-    single fixed-size projection over one tiny row per series — no
+    map-side partials, then the whole Durbin-Levinson recursion as one
+    vectorized numpy mapInPandas stage over one tiny row per series — no
     joins, no recursion-driven shuffles, skew bound = longest single
-    series.
-
-    Strategy gate (r10): past ``_PACF_NUMPY_GATE`` events rows the DL
-    fold runs as a vectorized numpy mapInPandas stage over the same
-    exact rn1..rnL BIGINT state (bit-equality pinned both tiers); the
-    interpreted SQL fold's ~3 ms/series made pacf superlinear across
-    decades, and an explicit REPARTITION of the fold stage measured
-    WORSE (24 -> 77 s at sf10 — the exchange cost exceeds any
+    series. The retired interpreted SQL fold cost ~3 ms/series and lost
+    at every measured tier; an explicit REPARTITION of the fold stage
+    measured WORSE (24 -> 77 s at sf10 — the exchange cost exceeds any
     parallelism win on a 150k-row relation). FLOOR.md §r10-pacf."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    from . import forced_strategy
-    from ..sources import table_rows
-
-    force = forced_strategy()
-    use_numpy = (
-        (force == "scale")
-        if force
-        else table_rows(sf_dir, "events") > _PACF_NUMPY_GATE
+    return spark.sql(_PACF_RL_SPARK).mapInPandas(
+        _pacf_dl_batches, schema="user_id bigint, lag int, pacf double"
     )
-    if use_numpy:
-        return _pacf_numpy(spark)
-    return spark.sql(_pacf_sql(True))
 
 
 # --------------------------------------------------------------------------

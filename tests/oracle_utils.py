@@ -76,3 +76,37 @@ def assert_frames_match(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: s
         f"{name}: bit-exact value mismatch — the driver's hash would fail. "
         f"First sorted-row diffs (index, spark, duck): {diffs}"
     )
+
+
+# (user_id, event_id, ts_ns, value): the degenerate series the pacf
+# contract is pinned on — an exact constant, a singleton, a two-point
+# series, a perfect ramp (the 1 - S2 ≈ 0 stress) and a non-representable
+# constant (quantization residuals that must clamp to NULL, not overflow
+# an ANSI CAST)
+PACF_DEGENERATE_ROWS = (
+    [(1, i, i * 60_000_000_000, 5.0) for i in range(16)]
+    + [(2, 0, 0, 7.5)]
+    + [(3, 0, 0, 1.0), (3, 1, 60_000_000_000, 2.0)]
+    + [(4, i, i * 60_000_000_000, float(i)) for i in range(64)]
+    + [(5, i, i * 60_000_000_000, 0.1) for i in range(32)]
+)
+
+
+def write_events(dir_path, rows) -> str:
+    """Write (user_id, event_id, ts_ns, value) rows as ``events.parquet``
+    in the fixture's physical encoding (ts as timestamp[us]) and return
+    the directory, usable as an ``sf_dir`` by both engines."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    uid, eid, ts, val = (list(c) for c in zip(*rows))
+    table = pa.table(
+        {
+            "event_id": pa.array(eid, pa.int64()),
+            "ts": pa.array([t // 1000 for t in ts], pa.timestamp("us")),
+            "user_id": pa.array(uid, pa.int64()),
+            "value": pa.array(val, pa.float64()),
+        }
+    )
+    pq.write_table(table, str(dir_path / "events.parquet"))
+    return str(dir_path)

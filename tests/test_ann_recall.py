@@ -109,9 +109,13 @@ def test_trained_quantizer_recall_vs_probe_curve(spark, ann_corpus):
     probed cells. Also pins the trained probe-2 recall above the family
     floor so the wiring can't regress the headline number."""
     from synth_timeseries_data_spark.queries.corpus_mining import (
-        _ivft_ranked_sql,
+        _ivft_ranked_values_sql,
+        _km_quantizer,
     )
 
+    trained_sql = _ivft_ranked_values_sql(
+        _km_quantizer(spark, spark.table("embeddings"))
+    )
     curve = {}
     for probes in (1, 2):
         lcg = _recall(
@@ -123,7 +127,7 @@ def test_trained_quantizer_recall_vs_probe_curve(spark, ann_corpus):
         )
         trained = _recall(
             spark,
-            _ivft_ranked_sql(_SPARK_D),
+            trained_sql,
             "t_tranked",
             _ivf_tail(_SPARK_D, "t_tranked", probes=probes),
             ann_corpus,
@@ -138,27 +142,50 @@ def test_trained_quantizer_recall_vs_probe_curve(spark, ann_corpus):
 
 
 def test_trained_centroid_forms_bit_equal(spark, smoke_sf_dir):
-    """The declarative Lloyd chain (gate-scale form) and the numpy-trained
-    + inlined-VALUES form (scale form) must produce the IDENTICAL ranked
-    index relation — same exact FLOOR-micro arithmetic, literal inlining
-    via repr round-trips binary64 exactly."""
+    """The DuckDB twin's declarative Lloyd chain and Spark's numpy-trained
+    + inlined-VALUES form must produce the IDENTICAL ranked index
+    relation — same exact FLOOR-micro arithmetic, literal inlining via
+    repr round-trips binary64 exactly."""
+    import duckdb
+
     from synth_timeseries_data_spark.queries.corpus_mining import (
-        _ivft_ranked_sql,
+        _ivft_ranked_tail,
         _ivft_ranked_values_sql,
-        _km_trained_centroids_numpy,
+        _km_cent_chain,
+        _km_quantizer,
     )
     from synth_timeseries_data_spark.sources import load
 
-    load(spark, smoke_sf_dir, "embeddings").createOrReplaceTempView(
-        "embeddings"
-    )
-    decl = sorted(map(tuple, spark.sql(_ivft_ranked_sql(_SPARK_D)).collect()))
-    cents = _km_trained_centroids_numpy(spark, smoke_sf_dir)
-    vals = sorted(
-        map(tuple, spark.sql(_ivft_ranked_values_sql(cents)).collect())
-    )
-    assert decl == vals
-    spark.catalog.dropTempView("embeddings")
+    ctes, trained = _km_cent_chain(prefix="km_")
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW embeddings AS SELECT * FROM "
+            f"'{smoke_sf_dir}/embeddings.parquet'"
+        )
+        decl = sorted(
+            con.execute(
+                "WITH " + ",\n    ".join(ctes)
+                + f",\n    tcent AS ({trained}),\n    "
+                + _ivft_ranked_tail("km_comps")
+            ).fetchall()
+        )
+    finally:
+        con.close()
+    emb = load(spark, smoke_sf_dir, "embeddings")
+    emb.createOrReplaceTempView("embeddings")
+    try:
+        vals = sorted(
+            map(
+                tuple,
+                spark.sql(
+                    _ivft_ranked_values_sql(_km_quantizer(spark, emb))
+                ).collect(),
+            )
+        )
+    finally:
+        spark.catalog.dropTempView("embeddings")
+    assert len(decl) > 0 and decl == vals
 
 
 def test_dense_bucket_guard_keeps_blob_connected(spark):

@@ -158,21 +158,33 @@ def test_driver_union_find_matches_hybrid_and_stars(spark):
 
 
 def test_dedup_clusters_gate_paths_row_equal(spark, oracle_sf_dir):
-    # the registered query must emit IDENTICAL rows whichever CC path the
-    # gate picks: force the distributed path by dropping the pair gate to
-    # zero and compare against the (default) driver union-find path
-    import synth_timeseries_data_spark.queries.llm_pipeline as lp
-    from synth_timeseries_data_spark.queries import all_queries
+    """The registered query takes the driver union-find branch at the
+    oracle tier, and the oracle gate checks its rows against DuckDB. The
+    distributed branch (_cc_hybrid, the one real scale takes) must emit
+    IDENTICAL rows when run directly on the same session-memoized pair
+    relation — so both CC branches are attested at that tier."""
+    from collections import Counter
 
-    build = all_queries()["dedup_clusters"].build
-    fast = sorted(map(tuple, build(spark, oracle_sf_dir).collect()))
-    old = lp._CC_DRIVER_PAIRS
-    lp._CC_DRIVER_PAIRS = -1
-    try:
-        slow = sorted(map(tuple, build(spark, oracle_sf_dir).collect()))
-    finally:
-        lp._CC_DRIVER_PAIRS = old
-    assert fast == slow and len(fast) > 0
+    from synth_timeseries_data_spark.functions.materialize import materialized
+    from synth_timeseries_data_spark.queries import all_queries
+    from synth_timeseries_data_spark.queries.llm_pipeline import minhash_dedup
+
+    registered = sorted(
+        map(tuple, all_queries()["dedup_clusters"]
+            .build(spark, oracle_sf_dir).collect())
+    )
+    pairs = materialized(
+        spark,
+        f"mh_pairs|{oracle_sf_dir}",
+        lambda: minhash_dedup(spark, oracle_sf_dir).select(
+            "doc_a", "doc_b", "jaccard"
+        ),
+    ).select("doc_a", "doc_b")
+    labels, _ = _cc_hybrid(pairs.toDF("a", "b"))
+    lab = {r["v"]: r["label"] for r in labels.collect()}
+    size = Counter(lab.values())
+    distributed = sorted((v, rep, size[rep]) for v, rep in lab.items())
+    assert len(registered) > 0 and registered == distributed
 
 
 def test_empty_edges(spark):

@@ -364,30 +364,23 @@ def test_semdedup_drops_planted_duplicate(spark, tmp_path):
     assert rows[0].cluster_id == rows[1].cluster_id
 
 
-def test_semdedup_numpy_assignment_bitexact_vs_sql(spark, oracle_sf_dir):
-    """The blocked-numpy Arrow assignment (scale path, engaged past gate
-    scales) must produce EXACTLY the same (vec_id, c) relation as the SQL
-    path at the same K — the FLOOR-micro distances and first-min argmin are
-    the same integer arithmetic by construction."""
+def test_semdedup_numpy_assignment_bitexact_vs_sql(spark, duck, oracle_sf_dir):
+    """The numpy-trained, blocked-numpy Arrow assignment must produce
+    EXACTLY the DuckDB twin's (vec_id, c) relation at the same K — the
+    FLOOR-micro distances and first-min argmin are the same integer
+    arithmetic by construction."""
     from synth_timeseries_data_spark.queries.corpus_ext import (
-        _SD_POSEXP_SPARK,
-        _SPARK_D,
         _sd_assign_numpy,
         _sd_assign_sql,
     )
-    from synth_timeseries_data_spark.sources import load
 
-    load(spark, oracle_sf_dir, "embeddings").createOrReplaceTempView("embeddings")
     for k in (32, 256):  # gate-scale K and a scale-tier K
-        sql_rows = sorted(
-            (r.vec_id, r.c)
-            for r in spark.sql(_sd_assign_sql(_SPARK_D, _SD_POSEXP_SPARK, k)).collect()
-        )
+        duck_rows = sorted(duck.execute(_sd_assign_sql(k)).fetchall())
         np_rows = sorted(
             (r.vec_id, r.c)
             for r in _sd_assign_numpy(spark, k, oracle_sf_dir).collect()
         )
-        assert np_rows == sql_rows, k
+        assert np_rows == duck_rows, k
 
 
 def test_length_percentiles_match_numpy_rank_semantics(spark, oracle_sf_dir):

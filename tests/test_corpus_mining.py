@@ -490,12 +490,15 @@ def test_tokenizer_stats_oracle_bit_exact(spark, duck, oracle_sf_dir):
 
 
 def test_kmeans_numpy_form_row_equal_past_gate(spark, tmp_path):
-    """The numpy-assignment scale form must be row-identical to the
-    declarative SQL form on a synthetic corpus PAST the gate (25k
-    clustered vectors — both forms see real multi-member clusters and a
+    """The registered numpy-assignment Lloyd loop must be row-identical to
+    the DuckDB twin's unrolled chain on a synthetic corpus 50x the oracle
+    fixture (25k clustered vectors — real multi-member clusters and a
     real argmin surface)."""
+    import duckdb
     import numpy as np
     import pandas as pd
+
+    from synth_timeseries_data_spark.queries.corpus_mining import _KM_DUCK
 
     rng = np.random.default_rng(7)
     n, dims = 25_000, 64
@@ -503,35 +506,28 @@ def test_kmeans_numpy_form_row_equal_past_gate(spark, tmp_path):
     vecs = (
         centers[rng.integers(0, 8, n)] + rng.normal(scale=0.3, size=(n, dims))
     ).astype(np.float32)
+    path = tmp_path / "embeddings.parquet"
     pd.DataFrame(
         {"vec_id": np.arange(n), "embedding": list(map(list, vecs)),
          "label": np.zeros(n, dtype=np.int32)}
-    ).to_parquet(tmp_path / "embeddings.parquet")
+    ).to_parquet(path)
 
-    from synth_timeseries_data_spark.queries.corpus_mining import (
-        _KM_SPARK,
-        _kmeans_numpy,
-    )
-    from synth_timeseries_data_spark.sources import load
-
-    load(spark, str(tmp_path), "embeddings").createOrReplaceTempView(
-        "embeddings"
-    )
-    sql_rows = {
-        r.vec_id: (r.cluster, r.d2_micro) for r in spark.sql(_KM_SPARK).collect()
-    }
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+        duck_rows = {
+            v: (c, d2) for v, c, d2 in con.execute(_KM_DUCK).fetchall()
+        }
+    finally:
+        con.close()
     np_rows = {
         r.vec_id: (r.cluster, r.d2_micro)
-        for r in _kmeans_numpy(spark, str(tmp_path)).collect()
+        for r in all_queries()["kmeans_embed"]
+        .build(spark, str(tmp_path))
+        .collect()
     }
-    assert sql_rows == np_rows
-    assert len(sql_rows) == n
-    # and the registry gate actually dispatches to the numpy form here
-    from synth_timeseries_data_spark.queries.corpus_mining import (
-        _KM_NUMPY_ROWS,
-    )
-
-    assert n > _KM_NUMPY_ROWS
+    assert duck_rows == np_rows
+    assert len(duck_rows) == n
 
 
 # ---------------------------------------------------------------------------

@@ -353,7 +353,7 @@ def test_bigram_xent_single_token_and_empty_docs(spark):
     assert got.equals(want)
 
 
-def test_pacf_degenerate_series(spark):
+def test_pacf_degenerate_series(spark, tmp_path):
     """pacf degenerate contract: an exact-constant series has c0 = 0 →
     NULL at every lag (no ANSI crash); a singleton emits 8 NULL-pacf
     rows (its lag-0 row exists, no lag pairs); any TWO-point series has
@@ -362,31 +362,17 @@ def test_pacf_degenerate_series(spark):
     at lag 1 and never throws; a near-constant non-representable value
     (0.1) leaves quantization residuals whose garbage ratios are
     CLAMPED to NULL or [-2, 2] rather than overflowing the ANSI CAST."""
-    import pandas as pd
+    from synth_timeseries_data_spark.queries import all_queries
+    from tests.oracle_utils import PACF_DEGENERATE_ROWS, write_events
 
-    from synth_timeseries_data_spark.queries.timeseries import _pacf_sql
-
-    rows = []
-    for i in range(16):
-        rows.append((1, i, i * 60_000_000_000, 5.0))      # exact constant
-    rows.append((2, 0, 0, 7.5))                           # singleton
-    rows.append((3, 0, 0, 1.0))
-    rows.append((3, 1, 60_000_000_000, 2.0))              # two points
-    for i in range(64):
-        rows.append((4, i, i * 60_000_000_000, float(i)))  # perfect ramp
-    for i in range(32):
-        rows.append((5, i, i * 60_000_000_000, 0.1))      # non-repr constant
-    pdf = pd.DataFrame(rows, columns=["user_id", "event_id", "ts", "value"])
-    spark.createDataFrame(pdf).createOrReplaceTempView("events")
-    try:
-        got = (
-            spark.sql(_pacf_sql(True))
-            .toPandas()
-            .sort_values(["user_id", "lag"])
-            .reset_index(drop=True)
-        )
-    finally:
-        spark.catalog.dropTempView("events")
+    sf_dir = write_events(tmp_path, PACF_DEGENERATE_ROWS)
+    got = (
+        all_queries()["pacf"]
+        .build(spark, sf_dir)
+        .toPandas()
+        .sort_values(["user_id", "lag"])
+        .reset_index(drop=True)
+    )
 
     assert len(got) == 5 * 8  # every series emits exactly 8 lag rows
     assert got[got.user_id == 1]["pacf"].isna().all()

@@ -444,16 +444,15 @@ def test_gopher_repetition_zero_shuffle_python_stage(spark, oracle_sf_dir):
     assert "lang" not in plan and "source" not in plan
 
 
-def test_kmeans_embed_broadcasts_centroids_no_sortmerge(spark, oracle_sf_dir):
-    """Each Lloyd iteration's assignment joins the K-row centroid relation
-    by broadcast (nested-loop for the cross join) and partial-aggregates
-    the argmin map-side; nothing sort-merges and no corpus-wide
-    single-partition window exists (seeds come from a LIMIT top-k)."""
+def test_kmeans_embed_numpy_assignment_no_sortmerge(spark, oracle_sf_dir):
+    """The returned relation is the final Lloyd assignment: one
+    Arrow-batched numpy stage over the embeddings scan (the centroids
+    ride in the kernel's closure) — nothing sort-merges and nothing
+    cross-products the corpus against the centroid relation."""
     plan = _plan(spark, "kmeans_embed", oracle_sf_dir)
+    assert "MapInPandas" in plan, plan[:1500]
     assert "SortMergeJoin" not in plan
-    assert plan.count("BroadcastNestedLoopJoin") == 3  # one per iteration
-    assert "partial_min" in plan
-    assert "TakeOrderedAndProject" in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_line_dedup_window_antijoin_shape(spark, oracle_sf_dir):

@@ -182,57 +182,58 @@ def test_pacf_matches_float_durbin_levinson(spark, oracle_sf_dir):
     assert checked > 500
 
 
-def test_pacf_numpy_matches_sql(spark, oracle_sf_dir):
-    """Bit-equality pin for the r10 strategy gate: the vectorized numpy
-    Durbin-Levinson (`_pacf_numpy`, the past-`_PACF_NUMPY_GATE` plan)
-    must reproduce the SQL fold BIT-EXACTLY — same rows, same NULLs,
-    same IEEE doubles — on the oracle fixture AND on the degenerate
-    series set (constant / singleton / two-point / ramp / non-repr
-    constant — the snap-to-NULL and NULL-contamination paths)."""
+def _pacf_key(rows):
+    """(user_id, lag, IEEE bits or None) — NULL and every bit pattern
+    distinct, the driver's value-hash view."""
     import struct
 
-    import pandas as pd
+    return [
+        (u, lag, struct.pack("<d", v).hex() if v is not None else None)
+        for u, lag, v in rows
+    ]
 
-    from synth_timeseries_data_spark.queries.timeseries import (
-        _pacf_numpy,
-        _pacf_sql,
-    )
-    from synth_timeseries_data_spark.sources import load
 
-    def key(rows):
+def test_pacf_numpy_matches_sql(spark, duck, oracle_sf_dir, tmp_path):
+    """The registered pacf (numpy Durbin-Levinson, `_pacf_dl_batches`)
+    must reproduce the DuckDB twin's recursive-CTE fold BIT-EXACTLY —
+    same rows, same NULLs, same IEEE doubles — on the oracle fixture AND
+    on the degenerate series set (constant / singleton / two-point / ramp
+    / non-repr constant — the snap-to-NULL and NULL-contamination
+    paths)."""
+    import duckdb
+
+    from synth_timeseries_data_spark.queries import all_queries
+    from synth_timeseries_data_spark.queries.timeseries import _PACF_DUCK
+    from tests.oracle_utils import PACF_DEGENERATE_ROWS, write_events
+
+    build = all_queries()["pacf"].build
+    order = " ORDER BY user_id, lag"
+
+    def spark_rows(sf_dir):
         return [
-            (r.user_id, r.lag,
-             struct.pack("<d", r.pacf).hex() if r.pacf is not None else None)
-            for r in rows
+            tuple(r)
+            for r in build(spark, sf_dir).orderBy("user_id", "lag").collect()
         ]
 
-    load(spark, oracle_sf_dir, "events").createOrReplaceTempView("events")
-    a = spark.sql(_pacf_sql(True)).orderBy("user_id", "lag").collect()
-    b = _pacf_numpy(spark).orderBy("user_id", "lag").collect()
-    assert len(a) > 0 and key(a) == key(b)
+    a = spark_rows(oracle_sf_dir)
+    b = duck.execute(f"SELECT * FROM ({_PACF_DUCK})" + order).fetchall()
+    assert len(a) > 0 and _pacf_key(a) == _pacf_key(b)
 
-    rows = []
-    for i in range(16):
-        rows.append((1, i, i * 60_000_000_000, 5.0))
-    rows.append((2, 0, 0, 7.5))
-    rows.append((3, 0, 0, 1.0))
-    rows.append((3, 1, 60_000_000_000, 2.0))
-    for i in range(64):
-        rows.append((4, i, i * 60_000_000_000, float(i)))
-    for i in range(32):
-        rows.append((5, i, i * 60_000_000_000, 0.1))
-    pdf = pd.DataFrame(rows, columns=["user_id", "event_id", "ts", "value"])
-    spark.createDataFrame(pdf).createOrReplaceTempView("events")
+    sf_dir = write_events(tmp_path, PACF_DEGENERATE_ROWS)
+    con = duckdb.connect()
     try:
-        a = spark.sql(_pacf_sql(True)).orderBy("user_id", "lag").collect()
-        b = _pacf_numpy(spark).orderBy("user_id", "lag").collect()
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'"
+        )
+        b = con.execute(f"SELECT * FROM ({_PACF_DUCK})" + order).fetchall()
     finally:
-        spark.catalog.dropTempView("events")
-    assert len(a) == 5 * 8 and key(a) == key(b)
+        con.close()
+    a = spark_rows(sf_dir)
+    assert len(a) == 5 * 8 and _pacf_key(a) == _pacf_key(b)
 
 
-def test_pacf_fold_random_adversarial(spark):
-    """Seeded-random adversarial sweep of the numpy-vs-SQL fold
+def test_pacf_fold_random_adversarial():
+    """Seeded-random adversarial sweep of the numpy-vs-DuckDB fold
     equivalence, driving the Durbin-Levinson TAIL directly over
     constructed rn vectors (no events table): magnitudes across the
     whole snapped range, values AT the ±2e9 snap bound, sparse NULLs at
@@ -240,15 +241,15 @@ def test_pacf_fold_random_adversarial(spark):
     every emitted double. This is the direct pin on `_pacf_dl_batches`'
     claim that binary HALF_UP emulation and NULL-strict masking replicate
     the SQL fold on ALL inputs, not just fixture-shaped ones."""
-    import struct
-
+    import duckdb
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     from synth_timeseries_data_spark.queries.timeseries import (
         _PACF_LAGS,
         _pacf_dl_batches,
-        _pacf_sql,
+        _pacf_dl_duck,
     )
 
     rng = np.random.default_rng(20260817)
@@ -274,15 +275,19 @@ def test_pacf_fold_random_adversarial(spark):
                 rl[k] = None
         series.append((uid, [None if v is None else int(v) for v in rl]))
 
-    sdf = spark.createDataFrame(
-        series, "user_id bigint, rl array<bigint>"
+    rlt = pa.table(
+        {"user_id": pa.array([u for u, _ in series], pa.int64()),
+         "rl": pa.array([r for _, r in series], pa.list_(pa.int64()))}
     )
-    sdf.createOrReplaceTempView("rlt")
-    tail = _pacf_sql(True).split("FROM r)", 1)[1]
+    con = duckdb.connect()
     try:
-        got_sql = spark.sql(tail).orderBy("user_id", "lag").collect()
+        con.register("rlt", rlt)
+        got_sql = con.execute(
+            f"SELECT * FROM (WITH RECURSIVE {_pacf_dl_duck().lstrip()})"
+            " ORDER BY user_id, lag"
+        ).fetchall()
     finally:
-        spark.catalog.dropTempView("rlt")
+        con.close()
 
     pdf = pd.DataFrame(
         {"user_id": [u for u, _ in series],
@@ -292,22 +297,13 @@ def test_pacf_fold_random_adversarial(spark):
     )
     out = pd.concat(list(_pacf_dl_batches([pdf])), ignore_index=True)
     out = out.sort_values(["user_id", "lag"]).reset_index(drop=True)
+    got_np = [
+        (int(r.user_id), int(r.lag),
+         None if pd.isna(r.pacf) else float(r.pacf))
+        for r in out.itertuples(index=False)
+    ]
 
-    def k_sql(rows):
-        return [(r.user_id, r.lag,
-                 struct.pack("<d", r.pacf).hex() if r.pacf is not None
-                 else None) for r in rows]
-
-    def k_np(df):
-        res = []
-        for r in df.itertuples(index=False):
-            v = r.pacf
-            res.append((int(r.user_id), int(r.lag),
-                        None if pd.isna(v)
-                        else struct.pack("<d", float(v)).hex()))
-        return res
-
-    a, b = k_sql(got_sql), k_np(out)
+    a, b = _pacf_key(got_sql), _pacf_key(got_np)
     assert len(a) == 400 * L
     assert a == b
 

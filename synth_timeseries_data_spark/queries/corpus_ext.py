@@ -1425,8 +1425,8 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak — can never straddle an engine-divergent value. Docs with no
     tokens (NULL text) have no LM score and no bucket, as in CCNet.
 
-    Scale shape: xent's one-corpus-pass broadcast-vocab plan (size-gated
-    to a shuffle join past the vocab threshold) plus ONE lang-keyed
+    Scale shape: xent's one-corpus-pass broadcast-vocab plan (_vocab_sql
+    strips the hint past the vocab threshold) plus ONE lang-keyed
     window exchange over doc-proportional rows; at 100 TB the window
     partitions by language — the natural corpus shard key — and the rank
     is a streaming frame. The per-doc score relation is
@@ -1435,23 +1435,13 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads — here the session-index analog of that table)."""
     import uuid
 
-    from .llm_pipeline import (
-        _VOCAB_BCAST_DOCS_BYTES,
-        _XENT_SPARK,
-        _XENT_SPARK_SHUFFLE,
-        _docs_disk_bytes,
-    )
+    from .llm_pipeline import _XENT_SPARK, _vocab_sql
 
     _register_docs(spark, sf_dir)
-    xent_sql = (
-        _XENT_SPARK
-        if _docs_disk_bytes(sf_dir) < _VOCAB_BCAST_DOCS_BYTES
-        else _XENT_SPARK_SHUFFLE
-    )
     view = f"_ppl_xent_{uuid.uuid4().hex[:12]}"
-    _indexed(spark, f"pplxent|{sf_dir}", xent_sql).createOrReplaceTempView(
-        view
-    )
+    _indexed(
+        spark, f"pplxent|{sf_dir}", _vocab_sql(sf_dir, _XENT_SPARK)
+    ).createOrReplaceTempView(view)
     df = _spark_docs(
         spark, sf_dir, "WITH " + _ppl_buckets_tail(_SPARK_D, view)
     )
@@ -2168,8 +2158,9 @@ _SPANS_SPARK_AGG = _dedup_spans_sql(_SPARK_D, agg_form=True)
 # Above this many documents (parquet footer count, no job — the
 # sliding_agg precedent) the Spark side switches from the run-keyed
 # window to the agg+SHUFFLE_HASH-join form. Measured (interleaved
-# min-of-3, scripts/spans_ab_r08.py, full-plan eval; hot = one 8-token
-# block carried by 80% of docs, the aac4508 stress shape at scale):
+# min-of-3, scripts/spans_ab_r08.py — deleted; in git at 6e9be45 —
+# full-plan eval; hot = one 8-token block carried by 80% of docs, the
+# aac4508 stress shape at scale):
 #   sf1  uniform (50k docs):   window 1.51 s   agg 2.18 s
 #   sf1  hot     (50k docs):   window 2.57 s   agg 3.54 s
 #   sf10 uniform (500k docs):  window 7.18 s   agg 9.03 s

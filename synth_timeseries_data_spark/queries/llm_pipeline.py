@@ -19,6 +19,7 @@ Design rules for scale:
 from __future__ import annotations
 
 import os
+import re
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -26,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions.detrand import lcg_uniform_sql
 from ..functions.materialize import materialized
 from ..functions.spread import register_spread_view
-from ..sources import load
+from ..sources import load, table_bytes
 from . import register
 
 # --------------------------------------------------------------------------
@@ -1189,6 +1190,23 @@ def _cc_driver_labels(pairs) -> dict[int, int]:
     return {v: find(v) for v in parent}
 
 
+def _cc_labels(spark: SparkSession, sf_dir: str, pairs: DataFrame) -> DataFrame:
+    """(v, label) component-min labels over a 2-column edge relation:
+    driver union-find under _CC_DRIVER_DOCS corpus rows and
+    _CC_DRIVER_PAIRS edges, else _cc_hybrid."""
+    from ..sources import table_rows
+
+    if table_rows(sf_dir, "documents") <= _CC_DRIVER_DOCS:
+        # bounded probe: one job over the already-materialized pair
+        # relation; returns ≤ gate+1 rows regardless of true pair count
+        head = pairs.limit(_CC_DRIVER_PAIRS + 1).collect()
+        if len(head) <= _CC_DRIVER_PAIRS:
+            lab = _cc_driver_labels((r[0], r[1]) for r in head)
+            return spark.createDataFrame(sorted(lab.items()), "v long, label long")
+    labels, _ = _cc_hybrid(pairs.toDF("a", "b"))
+    return labels
+
+
 @register("dedup_clusters", _clusters_duck_sql())
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the MinHash near-dup pair graph —
@@ -1212,8 +1230,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    from ..sources import table_rows
-
     # full 3-col pair manifest (jaccard included) under ONE session key —
     # source_overlap reuses the same materialized relation, so the two
     # consumers must agree on the schema
@@ -1225,28 +1241,15 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).select("doc_a", "doc_b")
 
-    try_driver = table_rows(sf_dir, "documents") <= _CC_DRIVER_DOCS
-
-    def _build_labels() -> DataFrame:
-        if try_driver:
-            # bounded probe: one job over the already-materialized pair
-            # relation; returns ≤ gate+1 rows regardless of true pair count
-            head = pairs.limit(_CC_DRIVER_PAIRS + 1).collect()
-            if len(head) <= _CC_DRIVER_PAIRS:
-                lab = _cc_driver_labels((r[0], r[1]) for r in head)
-                return spark.createDataFrame(
-                    sorted(lab.items()), "v long, label long"
-                )
-        labels, _ = _cc_hybrid(pairs.toDF("a", "b"))
-        return labels
-
     # labels memoized per (session, corpus) alongside the mh_pairs entry
     # (ADVICE r10: without this, every below-gate invocation re-ran the
     # 50k-row probe collect even though the pair relation is already
     # session-materialized — and the curation workflow consumes clusters
     # 2-3 times per build). Same in-memory, session-lifetime discipline as
     # mh_pairs itself.
-    labels = materialized(spark, f"cc_labels|{sf_dir}", _build_labels)
+    labels = materialized(
+        spark, f"cc_labels|{sf_dir}", lambda: _cc_labels(spark, sf_dir, pairs)
+    )
     w_size = F.count("*").over(Window.partitionBy("cluster_rep"))
     return labels.select(
         F.col("v").alias("doc_id"), F.col("label").alias("cluster_rep")
@@ -2257,15 +2260,14 @@ _TFIDF_DUCK = _tfidf_sql(_DUCK_D)
 # form drops both full-relation exchanges — 0.64 s vs 0.89 s interleaved
 # min-of-8 at sf0.1, and the structurally right shape at 100 TB (same
 # device as unigram_xent).
-def _tfidf_spark(hint: str) -> str:
-    return f"""
+_TFIDF_SPARK = """
     WITH w AS (SELECT doc_id, split(text, ' ') AS ws FROM documents_par),
     toks AS (SELECT doc_id, tok AS term FROM w LATERAL VIEW explode(ws) x AS tok),
     tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
     dfr AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM toks GROUP BY term),
     n AS (SELECT COUNT(*) AS n FROM documents),
     ranked AS (
-      SELECT {hint} tf.doc_id, tf.term, tf.tf, dfr.df,
+      SELECT /*+ BROADCAST(dfr) */ tf.doc_id, tf.term, tf.tf, dfr.df,
              ROUND(tf.tf * ln((SELECT CAST(n AS DOUBLE) FROM n) / dfr.df), 6) + 0.0 AS score
       FROM tf JOIN dfr ON dfr.term = tf.term
     ),
@@ -2276,10 +2278,6 @@ def _tfidf_spark(hint: str) -> str:
     )
     SELECT doc_id, term, tf, df, score, rk FROM topk WHERE rk <= 3
     """
-
-
-_TFIDF_SPARK = _tfidf_spark("/*+ BROADCAST(dfr) */")
-_TFIDF_SPARK_SHUFFLE = _tfidf_spark("")
 
 
 # Vocab-relation broadcast gate: dfr/vocab (one row per distinct term) is
@@ -2294,44 +2292,18 @@ _TFIDF_SPARK_SHUFFLE = _tfidf_spark("")
 # sf100 ladder tier (934 MB docs, ~5M-term vocab): broadcast still wins
 # on this box (tfidf 56 s vs 66 s, xent 36 s vs 41 s), so the gate sits
 # at 1 GiB — just past the largest tier we can measure, before the
-# vocab relation's driver-collect approaches maxResultSize. The shuffle
-# variant is pinned result-equal at gate scale in tests.
+# vocab relation's driver-collect approaches maxResultSize. The
+# hint-stripped text is pinned result-equal at gate scale in tests.
 _VOCAB_BCAST_DOCS_BYTES = 1 << 30
 
 
-_DOCS_BYTES_CACHE: dict[str, int] = {}
-
-
-def _docs_disk_bytes(sf_dir: str) -> int:
-    """On-disk documents footprint for the vocab-broadcast gate. Memoized
-    per sf_dir (a bench loop builds the three gated queries repeatedly and
-    the fixture is immutable within a session; a rewritten dataset changes
-    the top-level stat rarely enough that the gate — a plan-strategy knob,
-    not a correctness input — doesn't need rewrite invalidation)."""
-    n = _DOCS_BYTES_CACHE.get(sf_dir)
-    if n is not None:
-        return n
-    p = os.path.join(sf_dir, "documents.parquet")
-    try:
-        if os.path.isdir(p):
-            # Recurse: hive-partitioned layouts nest part files, and a
-            # flat scandir would sum 0 bytes — read as "tiny corpus" and
-            # keeping the broadcast-vocab plan at any real size. A dataset
-            # dir with zero visible part files is UNKNOWN, not empty.
-            n = sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _dirs, files in os.walk(p)
-                for f in files
-                if f.endswith(".parquet")
-            )
-            if n == 0:
-                n = 1 << 62
-        else:
-            n = os.stat(p).st_size
-    except OSError:
-        n = 1 << 62  # unknown: treat as huge, keep the shuffle-safe plan
-    _DOCS_BYTES_CACHE[sf_dir] = n
-    return n
+def _vocab_sql(sf_dir: str, sql: str) -> str:
+    """``sql`` as written under the vocab-broadcast gate; past it (or for
+    an unknown documents table) the same text with its ``/*+ BROADCAST */``
+    comment removed, so Catalyst plans a shuffle join instead."""
+    if table_bytes(sf_dir, "documents") < _VOCAB_BCAST_DOCS_BYTES:
+        return sql
+    return re.sub(r"/\*\+ BROADCAST\(.*?\*/ ?", "", sql, flags=re.S)
 
 
 @register("tfidf_topterms", _TFIDF_DUCK)
@@ -2341,14 +2313,9 @@ def tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle keeps the equivalent relational tf⋈df form. Scores are
     ROUND(.,6)+0.0 per the libm (ln) discipline and ranked on the ROUNDED
     value with the term string as tiebreak, so ordering is
-    engine-independent. The dfr broadcast is size-gated (see
-    _VOCAB_BCAST_DOCS_BYTES)."""
-    sql = (
-        _TFIDF_SPARK
-        if _docs_disk_bytes(sf_dir) < _VOCAB_BCAST_DOCS_BYTES
-        else _TFIDF_SPARK_SHUFFLE
-    )
-    return _spark_docs(spark, sf_dir, sql)
+    engine-independent. Past _VOCAB_BCAST_DOCS_BYTES of on-disk documents
+    _vocab_sql strips the dfr broadcast hint."""
+    return _spark_docs(spark, sf_dir, _vocab_sql(sf_dir, _TFIDF_SPARK))
 
 
 # --------------------------------------------------------------------------
@@ -2642,11 +2609,6 @@ def _xent_sql(d) -> str:
 
 
 _XENT_SPARK, _XENT_DUCK = _dual(_xent_sql)
-# Over the vocab-broadcast gate the hint is stripped: the two aggregated
-# relations (tf, vocab) shuffle-join on term instead — see the
-# _VOCAB_BCAST_DOCS_BYTES rationale at tfidf_topterms.
-_XENT_SPARK_SHUFFLE = _XENT_SPARK.replace("/*+ BROADCAST(vocab) */ ", "")
-assert _XENT_SPARK_SHUFFLE != _XENT_SPARK
 
 
 @register("unigram_xent", _XENT_DUCK)
@@ -2657,14 +2619,9 @@ def unigram_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     (term-window count, same single-pass device as tfidf_topterms); the
     oracle keeps the relational vocab-join form. Token ln-probabilities are
     snapped to integer micro-nats and summed exactly, so the mean is
-    order-independent and engine-identical. The vocab broadcast is
-    size-gated (see _VOCAB_BCAST_DOCS_BYTES)."""
-    sql = (
-        _XENT_SPARK
-        if _docs_disk_bytes(sf_dir) < _VOCAB_BCAST_DOCS_BYTES
-        else _XENT_SPARK_SHUFFLE
-    )
-    return _spark_docs(spark, sf_dir, sql)
+    order-independent and engine-identical. Past _VOCAB_BCAST_DOCS_BYTES
+    of on-disk documents _vocab_sql strips the vocab broadcast hint."""
+    return _spark_docs(spark, sf_dir, _vocab_sql(sf_dir, _XENT_SPARK))
 
 
 # --------------------------------------------------------------------------
@@ -2748,10 +2705,6 @@ def _bigram_xent_sql(d) -> str:
 
 
 _BX_SPARK, _BX_DUCK = _dual(_bigram_xent_sql)
-_BX_SPARK_SHUFFLE = _BX_SPARK.replace(
-    "/*+ BROADCAST(v12), BROADCAST(v1) */", ""
-)
-assert _BX_SPARK_SHUFFLE != _BX_SPARK
 
 
 @register("bigram_xent", _BX_DUCK)
@@ -2759,20 +2712,15 @@ def bigram_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document cross-entropy under the corpus's own add-one-smoothed
     bigram LM — the word-ORDER fluency signal unigram_xent cannot see
     (see section comment). Single-token docs have no bigrams and emit no
-    row. The bigram-vocab broadcast is size-gated like unigram_xent's
-    (_VOCAB_BCAST_DOCS_BYTES); over the gate the two aggregated
-    relations shuffle-join on (w1, w2) instead.
+    row. The bigram-vocab broadcasts are gated like unigram_xent's: past
+    _VOCAB_BCAST_DOCS_BYTES _vocab_sql strips both hints and the
+    aggregated relations shuffle-join on (w1, w2) and w1 instead.
 
     Scale shape: two concurrent explode branches over one corpus scan
     pipeline (tf12 doc-clustered with map-side partials; v12 partial-
     aggregated to per-partition-distinct bigrams before its exchange),
     v1 folded vocab-side, broadcasts back onto the unmoved tf12."""
-    sql = (
-        _BX_SPARK
-        if _docs_disk_bytes(sf_dir) < _VOCAB_BCAST_DOCS_BYTES
-        else _BX_SPARK_SHUFFLE
-    )
-    return _spark_docs(spark, sf_dir, sql)
+    return _spark_docs(spark, sf_dir, _vocab_sql(sf_dir, _BX_SPARK))
 
 
 # --------------------------------------------------------------------------
@@ -3393,11 +3341,6 @@ def _dsir_sql(d) -> str:
 
 
 _DSIR_SPARK, _DSIR_DUCK = _dual(_dsir_sql)
-# Past the vocab-broadcast gate the hint is stripped: tf and lr shuffle-join
-# on term instead — see the _VOCAB_BCAST_DOCS_BYTES rationale at
-# tfidf_topterms.
-_DSIR_SPARK_SHUFFLE = _DSIR_SPARK.replace("/*+ BROADCAST(lr) */ ", "")
-assert _DSIR_SPARK_SHUFFLE != _DSIR_SPARK
 
 
 @register("dsir_weights", _DSIR_DUCK)
@@ -3414,19 +3357,14 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark plan is unigram_xent's single-corpus-pass shape: the tf relation
     aggregates on the spread view's doc clustering and never moves, the
     per-term log-ratio relation is vocab-sized and broadcasts back
-    (size-gated to a shuffle join past _VOCAB_BCAST_DOCS_BYTES), and the
+    (_vocab_sql strips the hint past _VOCAB_BCAST_DOCS_BYTES), and the
     LM normalizers fold into the per-term relation as whole-relation
     window totals over vocab — not a scalar subquery, which would
     re-inline (re-explode) the corpus CTE for a third pass. Token
     ln-probabilities are snapped to integer micro-nats and summed exactly,
     so every emitted value — including the sign flag — is bit-identical
     across engines and partitionings."""
-    sql = (
-        _DSIR_SPARK
-        if _docs_disk_bytes(sf_dir) < _VOCAB_BCAST_DOCS_BYTES
-        else _DSIR_SPARK_SHUFFLE
-    )
-    return _spark_docs(spark, sf_dir, sql)
+    return _spark_docs(spark, sf_dir, _vocab_sql(sf_dir, _DSIR_SPARK))
 
 # --------------------------------------------------------------------------
 # dsir_resample: the RESAMPLING stage of DSIR (round 9) — Xie et al. 2023

@@ -158,7 +158,6 @@ def curate_decisions_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     QUALITY-PASSING member per near-dup cluster (plain min when no member
     passes). LEFT joins throughout: a doc with NULL text still gets its
     audit row (NULL signals, keep follows the coalesced gates)."""
-    from .functions.scale import broadcast_if_small
     from .queries.corpus_ext import gopher_rules
     from .queries.llm_pipeline import (
         _SPARK_D,
@@ -183,11 +182,28 @@ def curate_decisions_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     dsir = dsir_weights(spark, sf_dir).select(
         "doc_id", "n_tokens", "logw_nats", "more_target_like"
     )
-    doc_bytes = table_rows(sf_dir, "documents") * 32
-    # Quality-aware survivor per cluster: min doc_id among quality-passing
-    # members (fallback: the plain cluster_rep when none pass). clusters is
-    # near-dup-proportional — both joins below broadcast under the gate.
     clusters = dedup_clusters(spark, sf_dir).select("doc_id", "cluster_rep")
+    return _keep_decisions(
+        base.join(gopher, "doc_id", "left").join(dsir, "doc_id", "left"),
+        base,
+        clusters,
+        table_rows(sf_dir, "documents") * 32,
+    )
+
+
+def _keep_decisions(
+    signals: DataFrame, quality: DataFrame, clusters: DataFrame, doc_bytes: int
+) -> DataFrame:
+    """The curation keep rule, shared by the one-shot and incremental
+    paths: the ten-column decisions projection of ``signals`` (one row per
+    document with doc_id, source, lang, n_tokens, keep_quality,
+    gopher_keep, logw_nats, more_target_like) and keep = keep_quality AND
+    dedup survivor. The survivor of a near-dup cluster (``clusters``:
+    doc_id, cluster_rep) is its min-doc_id member whose ``quality``
+    keep_quality holds, or the plain cluster_rep when none does.
+    ``doc_bytes`` gates the broadcast of the near-dup-sized flags."""
+    from .functions.scale import broadcast_if_small
+
     # r10 optimization: the survivor pick is ONE window over the
     # (near-dup-sized) member×quality relation — qrep as
     # MIN(CASE WHEN keep_quality THEN doc_id END) OVER cluster_rep — so
@@ -199,7 +215,7 @@ def curate_decisions_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The window partition is cluster-sized (skew bound = largest
     # near-dup cluster), same as the groupBy it replaces.
     memberq = clusters.join(
-        base.select("doc_id", "keep_quality"), "doc_id", "left"
+        quality.select("doc_id", "keep_quality"), "doc_id", "left"
     )
     qrep_w = F.min(F.when(F.col("keep_quality"), F.col("doc_id"))).over(
         Window.partitionBy("cluster_rep")
@@ -211,9 +227,7 @@ def curate_decisions_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return (
-        base.join(gopher, "doc_id", "left")
-        .join(dsir, "doc_id", "left")
-        .join(broadcast_if_small(member_flags, doc_bytes), "doc_id", "left")
+        signals.join(broadcast_if_small(member_flags, doc_bytes), "doc_id", "left")
         .select(
             "doc_id",
             "source",
@@ -371,7 +385,9 @@ def write_curated_corpus_incremental(
     Scale shape: the per-batch heavy work (shingle, hash, bucket probe
     with the batch side broadcast) is batch-proportional; the cross-batch
     recompute touches only edges (≪ docs) plus one edge-set cc
-    (_cc_hybrid, O(log n) rounds) and a broadcast-gated flags join.
+    (_cc_labels, unmemoized: the edge set grows every batch) and the
+    shared keep rule (_keep_decisions) with its broadcast-gated flags
+    join.
     Gopher is doc-local and batch-filtered; the DSIR signal is corpus-
     normalized by definition, so it reads the full table (recorded
     signal, not a gate — at real scale a pipeline would snapshot its raw
@@ -387,7 +403,7 @@ def write_curated_corpus_incremental(
     from .queries.corpus_ext import gopher_rules
     from .queries.llm_pipeline import (
         _SPARK_D,
-        _cc_hybrid,
+        _cc_labels,
         _doc_quality_gate_sql,
         _parquet_rows,
         _spark_docs,
@@ -473,50 +489,21 @@ def write_curated_corpus_incremental(
     ).write.mode("append").parquet(paths["signals"])
 
     # --- full-snapshot decision recompute from the accumulated SMALL
-    # relations (edges + per-doc signal rows) — the identical rule
-    # curate_decisions_frame applies one-shot
+    # relations (edges + per-doc signal rows) through _keep_decisions, the
+    # rule curate_decisions_frame applies one-shot
     # dropDuplicates(doc_id): makes an accidentally re-submitted batch
     # harmless for the DECISION path (duplicate edge/member/docagg state
     # rows are already absorbed by DISTINCT/cc downstream, but duplicate
     # signal rows would duplicate decisions rows and MULTIPLY corpus rows
     # through the kept-set join)
     sig_all = spark.read.parquet(paths["signals"]).dropDuplicates(["doc_id"])
-    edges_all = spark.read.parquet(paths["edges"])
-    labels, _ = _cc_hybrid(edges_all.toDF("a", "b"))
+    # no memo: the edge set grows every batch
+    labels = _cc_labels(spark, sf_dir, spark.read.parquet(paths["edges"]))
     clusters = labels.select(
         F.col("v").alias("doc_id"), F.col("label").alias("cluster_rep")
     )
-    memberq = clusters.join(
-        sig_all.select("doc_id", "keep_quality"), "doc_id", "left"
-    ).localCheckpoint()
-    qrep = (
-        memberq.where("keep_quality")
-        .groupBy("cluster_rep")
-        .agg(F.min("doc_id").alias("qrep"))
-    )
-    member_flags = memberq.join(qrep, "cluster_rep", "left").select(
-        "doc_id",
-        (F.col("doc_id") != F.coalesce("qrep", "cluster_rep")).alias("is_dup"),
-    )
     doc_bytes = table_rows(sf_dir, "documents") * 32
-    decisions = (
-        sig_all.join(broadcast_if_small(member_flags, doc_bytes), "doc_id", "left")
-        .select(
-            "doc_id",
-            "source",
-            "lang",
-            "n_tokens",
-            F.coalesce("keep_quality", F.lit(False)).alias("keep_quality"),
-            (~F.coalesce("is_dup", F.lit(False))).alias("keep_dedup"),
-            "gopher_keep",
-            "logw_nats",
-            "more_target_like",
-            (
-                F.coalesce("keep_quality", F.lit(False))
-                & ~F.coalesce("is_dup", F.lit(False))
-            ).alias("keep"),
-        )
-    )
+    decisions = _keep_decisions(sig_all, sig_all, clusters, doc_bytes)
     dec_path = os.path.join(out, "decisions")
     decisions.write.mode("overwrite").parquet(dec_path)
     corpus_path = os.path.join(out, "corpus")

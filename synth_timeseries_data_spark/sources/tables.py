@@ -67,12 +67,12 @@ def _fingerprint(path: str) -> tuple[float, int]:
     return mtime, size
 
 
-# Footer row-count memo: file metadata, not session state, so a plain module
-# dict keyed by PATH, storing (fingerprint, n) — a rewritten dataset gets a
-# new fingerprint and re-reads its footers, REPLACING its entry (keying by
-# (path, fingerprint) would strand one dead entry per rewrite forever in a
-# long generate→query session).
-_ROWS_CACHE: dict[str, tuple[tuple, int]] = {}
+# Footer memo: file metadata, not session state, so a plain module dict
+# keyed by PATH, storing (fingerprint, rows, bytes) — a rewritten dataset
+# gets a new fingerprint and re-reads its footers, REPLACING its entry
+# (keying by (path, fingerprint) would strand one dead entry per rewrite
+# forever in a long generate→query session).
+_ROWS_CACHE: dict[str, tuple[tuple, int, int]] = {}
 
 
 def table_rows(sf_dir: str, name: str) -> int:
@@ -91,11 +91,25 @@ def table_rows(sf_dir: str, name: str) -> int:
     failure mode is *no hint* — the plan stays correct and AQE can still
     broadcast at runtime from observed shuffle stats.
     """
+    return _footer_stats(sf_dir, name)[0]
+
+
+def table_bytes(sf_dir: str, name: str) -> int:
+    """On-disk size of a fixture table (sum of its part files), from the
+    same memoized walk as :func:`table_rows`, so a rewritten dataset is
+    re-measured. Unknown or empty datasets read as ``2**62``."""
+    return _footer_stats(sf_dir, name)[1]
+
+
+def _footer_stats(sf_dir: str, name: str) -> tuple[int, int]:
+    """(rows, on-disk bytes) of a fixture table from one walk of its part
+    files, memoized per path under the dataset fingerprint. Unknown,
+    unreadable or part-less datasets read as ``2**62`` for both."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     fp = _fingerprint(path)
     hit = _ROWS_CACHE.get(path)
     if hit is not None and hit[0] == fp:
-        return hit[1]
+        return hit[1], hit[2]
     try:
         import pyarrow.parquet as pq
 
@@ -111,18 +125,19 @@ def table_rows(sf_dir: str, name: str) -> int:
                 for f in files
                 if f.endswith(".parquet")
             ]
-            if not parts:
-                # A dataset directory with zero readable footers is
-                # UNKNOWN, not empty: keep the no-broadcast fail-safe.
-                n = 2**62
-            else:
-                n = sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
         else:
-            n = pq.ParquetFile(path).metadata.num_rows
+            parts = [path]
+        if not parts:
+            # A dataset directory with zero readable footers is
+            # UNKNOWN, not empty: keep the no-broadcast fail-safe.
+            n = nbytes = 2**62
+        else:
+            n = sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
+            nbytes = sum(os.path.getsize(p) for p in parts)
     except Exception:
-        n = 2**62
-    _ROWS_CACHE[path] = (fp, n)
-    return n
+        n = nbytes = 2**62
+    _ROWS_CACHE[path] = (fp, n, nbytes)
+    return n, nbytes
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

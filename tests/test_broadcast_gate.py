@@ -16,7 +16,7 @@ from synth_timeseries_data_spark.functions.scale import (
     broadcast_if_small,
 )
 from synth_timeseries_data_spark.queries import all_queries
-from synth_timeseries_data_spark.sources import load, table_rows
+from synth_timeseries_data_spark.sources import load, table_bytes, table_rows
 
 
 @contextlib.contextmanager
@@ -104,13 +104,15 @@ def test_revenue_scale_branch_bit_identical(spark, oracle_sf_dir, monkeypatch):
 
 
 def test_vocab_gate_strips_hint_in_plan(spark, oracle_sf_dir, monkeypatch):
-    """The corpus-proportional vocab broadcast in tfidf_topterms /
-    unigram_xent / dsir_weights is size-gated on on-disk documents bytes.
-    Under the cap the term join must be a BroadcastHashJoin; with the cap
-    monkeypatched to 0 (any input is 'over the gate') the hint must be
-    GONE from the physical plan and the term join planned as a shuffle
-    join — pinning that the gate actually changes the plan, not just
-    which SQL string is picked (their result equality is pinned in
+    """The corpus-proportional vocab broadcasts in tfidf_topterms /
+    unigram_xent / bigram_xent / dsir_weights are size-gated on on-disk
+    documents bytes. Under the cap every hinted join is a
+    BroadcastHashJoin (bigram_xent hints two); with the cap monkeypatched
+    to 0 (any input is 'over the gate') EVERY hint must be gone from the
+    physical plan — no BroadcastHashJoin at all, so one surviving hint of
+    bigram's pair fails — pinning that the gate actually changes the
+    plan, not just which SQL string is picked (their result equality is
+    pinned in
     test_corpus_ext.py::test_vocab_shuffle_variants_equal_broadcast_forms).
     Auto-broadcast is disabled so only the HINT can produce a
     BroadcastHashJoin — with it on, Catalyst's own stats would broadcast
@@ -119,18 +121,51 @@ def test_vocab_gate_strips_hint_in_plan(spark, oracle_sf_dir, monkeypatch):
     from synth_timeseries_data_spark.queries import llm_pipeline as lp
 
     with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
-        for name in ("tfidf_topterms", "unigram_xent", "dsir_weights"):
+        for name, n_hints in (
+            ("tfidf_topterms", 1),
+            ("unigram_xent", 1),
+            ("bigram_xent", 2),
+            ("dsir_weights", 1),
+        ):
             build = all_queries()[name].build
             hinted = _physical(build(spark, oracle_sf_dir))
-            assert "BroadcastHashJoin" in hinted, name
+            assert hinted.count("BroadcastHashJoin") == n_hints, name
             monkeypatch.setattr(lp, "_VOCAB_BCAST_DOCS_BYTES", 0)
             try:
                 gated = _physical(build(spark, oracle_sf_dir))
             finally:
                 monkeypatch.undo()
+            assert "BroadcastHashJoin" not in gated, (name, gated[:1500])
             assert ("SortMergeJoin" in gated) or ("ShuffledHashJoin" in gated), (
                 name, gated[:1500],
             )
+
+
+def test_vocab_gate_follows_rewritten_documents(tmp_path, monkeypatch):
+    """The gate's byte statistic is memoized under the dataset
+    fingerprint: a documents.parquet rewritten larger at the same path
+    in the same process must flip the gate to the hint-stripped text,
+    not keep the decision taken on the old file."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from synth_timeseries_data_spark.queries import llm_pipeline as lp
+
+    path = tmp_path / "documents.parquet"
+
+    def write(n: int) -> int:
+        texts = [f"w{i} x{i % 7} y{i * 31}" for i in range(n)]
+        pq.write_table(pa.table({"doc_id": list(range(n)), "text": texts}), path)
+        return os.path.getsize(path)
+
+    small = write(10)
+    monkeypatch.setattr(lp, "_VOCAB_BCAST_DOCS_BYTES", small + 1)
+    assert lp._vocab_sql(str(tmp_path), lp._XENT_SPARK) == lp._XENT_SPARK
+    assert write(5000) > small + 1
+    gated = lp._vocab_sql(str(tmp_path), lp._XENT_SPARK)
+    assert "BROADCAST" not in gated and gated != lp._XENT_SPARK
 
 
 def test_table_rows_nested_dataset_and_empty_dir(tmp_path, oracle_sf_dir):
@@ -152,20 +187,19 @@ def test_table_rows_nested_dataset_and_empty_dir(tmp_path, oracle_sf_dir):
 
 
 def test_docs_disk_bytes_nested_dataset_and_empty_dir(tmp_path, oracle_sf_dir):
-    """Same asymmetry for the vocab-broadcast gate's byte proxy: nested
-    part files must be summed recursively, and an existing-but-empty
-    dataset dir is unknown/huge (keeps the shuffle-safe plan), not 0."""
+    """Same asymmetry for the vocab-broadcast gate's byte statistic
+    (table_bytes on documents): nested part files must be summed
+    recursively, and an existing-but-empty dataset dir is unknown/huge
+    (keeps the shuffle-safe plan), not 0."""
     import os
     import shutil
-
-    from synth_timeseries_data_spark.queries.llm_pipeline import _docs_disk_bytes
 
     nested = tmp_path / "documents.parquet" / "source=a"
     nested.mkdir(parents=True)
     shutil.copy(f"{oracle_sf_dir}/nation.parquet", nested / "part-0.parquet")
     expect = os.path.getsize(nested / "part-0.parquet")
-    assert _docs_disk_bytes(str(tmp_path)) == expect
+    assert table_bytes(str(tmp_path), "documents") == expect
 
     empty = tmp_path / "emptycase"
     (empty / "documents.parquet").mkdir(parents=True)
-    assert _docs_disk_bytes(str(empty)) >= 1 << 62
+    assert table_bytes(str(empty), "documents") >= 2**62

@@ -363,12 +363,14 @@ def test_cli_curate_incremental_two_batches_equal_one_shot(
         )
     )
     assert got == want and len(got) > 0
-    # decisions snapshot covers every processed doc with the one-shot keep
+    # decisions snapshot covers every processed doc with the one-shot
+    # decision on all ten columns (both paths share one keep rule)
     dec = spark.read.parquet(os.path.join(inc_out, "decisions"))
     ref_dec = spark.read.parquet(os.path.join(ref_out, "decisions"))
+    assert len(ref_dec.columns) == 10
     assert sorted(
-        map(tuple, dec.select("doc_id", "keep").collect())
-    ) == sorted(map(tuple, ref_dec.select("doc_id", "keep").collect()))
+        map(tuple, dec.select(*ref_dec.columns).collect())
+    ) == sorted(map(tuple, ref_dec.collect()))
 
 
 def test_cli_curate_incremental_resubmitted_batch_is_harmless(

@@ -627,35 +627,30 @@ def test_dsir_weights_planted_target_skew(spark, tmp_path):
     assert got[20].avg_logw_nats > got[21].avg_logw_nats
 
 
-def test_vocab_shuffle_variants_equal_broadcast_forms(spark, oracle_sf_dir):
-    """The size-gated no-hint (shuffle-join) variants of tfidf_topterms and
-    unigram_xent must produce exactly the broadcast forms' results — the
-    gate may only ever change the join strategy, never the answer. This
-    exercises the over-the-gate branch that no test fixture is large
-    enough to trigger through the gate itself."""
-    from synth_timeseries_data_spark.queries.llm_pipeline import (
-        _DSIR_SPARK,
-        _DSIR_SPARK_SHUFFLE,
-        _TFIDF_SPARK,
-        _TFIDF_SPARK_SHUFFLE,
-        _XENT_SPARK,
-        _XENT_SPARK_SHUFFLE,
-        _spark_docs,
-    )
+def test_vocab_shuffle_variants_equal_broadcast_forms(
+    spark, oracle_sf_dir, monkeypatch
+):
+    """Past the size gate _vocab_sql hands tfidf_topterms, unigram_xent
+    (and perplexity_buckets through it), bigram_xent and dsir_weights
+    their SQL with the broadcast hint stripped; that text must produce
+    exactly the hinted form's results — the gate may only ever change
+    the join strategy, never the answer. This exercises the
+    over-the-gate branch that no test fixture is large enough to trigger
+    through the gate itself."""
+    from synth_timeseries_data_spark.queries import llm_pipeline as lp
 
-    from synth_timeseries_data_spark.queries.llm_pipeline import (
-        _BX_SPARK,
-        _BX_SPARK_SHUFFLE,
-    )
-
-    for hinted, unhinted, keycols in (
-        (_TFIDF_SPARK, _TFIDF_SPARK_SHUFFLE, ("doc_id", "rk")),
-        (_XENT_SPARK, _XENT_SPARK_SHUFFLE, ("doc_id",)),
-        (_DSIR_SPARK, _DSIR_SPARK_SHUFFLE, ("doc_id",)),
-        (_BX_SPARK, _BX_SPARK_SHUFFLE, ("doc_id",)),
+    for hinted, keycols in (
+        (lp._TFIDF_SPARK, ("doc_id", "rk")),
+        (lp._XENT_SPARK, ("doc_id",)),
+        (lp._DSIR_SPARK, ("doc_id",)),
+        (lp._BX_SPARK, ("doc_id",)),
     ):
-        a = _spark_docs(spark, oracle_sf_dir, hinted).collect()
-        b = _spark_docs(spark, oracle_sf_dir, unhinted).collect()
+        monkeypatch.setattr(lp, "_VOCAB_BCAST_DOCS_BYTES", 0)
+        unhinted = lp._vocab_sql(oracle_sf_dir, hinted)
+        monkeypatch.undo()
+        assert "BROADCAST" in hinted and "BROADCAST" not in unhinted
+        a = lp._spark_docs(spark, oracle_sf_dir, hinted).collect()
+        b = lp._spark_docs(spark, oracle_sf_dir, unhinted).collect()
         key = lambda r: tuple(r[c] for c in keycols)  # noqa: E731
         assert sorted(a, key=key) == sorted(b, key=key) and len(a) > 0
 

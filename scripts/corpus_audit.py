@@ -13,13 +13,22 @@ Usage:
     python scripts/corpus_audit.py A1 C2           # just the named families
     python scripts/corpus_audit.py --sample 5      # every 5th file
     python scripts/corpus_audit.py --jobs 1        # serial (debugging)
+    python scripts/corpus_audit.py --digests       # check every sweep grid config
+                                                   # against tests/data/kernel_digests.csv
+    python scripts/corpus_audit.py --digests --write   # regenerate that file
 
 Driver-side pandas/numpy only — no Spark session. Comparison matches the
 golden suite: exact equality for every cell, NaN == NaN (masked cells).
+
+The digest mode needs no reference corpus: it pins the kernels' current
+output (the output that last passed the full reference audit) as one
+SHA-256 per grid config of the long-form frame the sweep queries emit.
 """
 
 from __future__ import annotations
 
+import csv
+import hashlib
 import os
 import re
 import sys
@@ -204,7 +213,87 @@ def _check_one(args):
 _WORKER_CACHE: dict = {}
 
 
+DIGESTS_CSV = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "tests", "data", "kernel_digests.csv",
+)
+
+
+def frame_digest(df: pd.DataFrame) -> str:
+    """SHA-256 of a frame's canonical bytes: each column's name and dtype,
+    then its values — floats as little-endian IEEE bits (so -0.0 != 0.0
+    and NaN payloads count), everything else as NUL-joined str()."""
+    h = hashlib.sha256()
+    for name in df.columns:
+        col = df[name]
+        h.update(f"{name}:{col.dtype}\n".encode())
+        if col.dtype.kind == "f":
+            h.update(col.to_numpy().astype("<f8").tobytes())
+        else:
+            h.update("\0".join(map(str, col.to_numpy())).encode())
+    return h.hexdigest()
+
+
+def kernel_digests() -> list[dict]:
+    """One row per config of the four sweep grids, in grid order: the long-
+    form frame (`_melt_wide` / `_melt_pair`) the sweep emits for it, as a
+    row count and a `frame_digest`."""
+    from synth_timeseries_data_spark.queries import generation as G
+
+    umbrellas = (
+        (G._complete_grid, G._COMPLETE_KERNELS, False),
+        (G._confounded_grid, G._CONFOUNDED_KERNELS, False),
+        (G._missing_grid, G._PAIR_KERNELS, True),
+        (G._missing_confounded_grid, G._PAIR_CONFOUNDED_KERNELS, True),
+    )
+    out = []
+    for grid, kernels, pair in umbrellas:
+        for fam, cid, n, v, lag, noise, p1, p2, p3 in grid():
+            res = kernels[fam](n, v, lag, noise, p1, p2, p3)
+            long = G._melt_pair(fam, cid, *res) if pair else G._melt_wide(fam, cid, res)
+            out.append({"family": fam, "config_id": cid,
+                        "rows": str(len(long)), "sha256": frame_digest(long)})
+    return out
+
+
+def read_digests() -> list[dict]:
+    with open(DIGESTS_CSV, newline="") as f:
+        return list(csv.DictReader(f))
+
+
+def digest_mismatches(got: list[dict], want: list[dict]) -> list[str]:
+    """Human-readable differences between two digest tables (empty = equal)."""
+    key = lambda r: (r["family"], r["config_id"])  # noqa: E731
+    g, w = {key(r): r for r in got}, {key(r): r for r in want}
+    out = [f"missing from output: {k}" for k in w if k not in g]
+    out += [f"not in goldens: {k}" for k in g if k not in w]
+    for k in w:
+        if k in g and (g[k]["rows"], g[k]["sha256"]) != (w[k]["rows"], w[k]["sha256"]):
+            out.append(f"{k}: rows {g[k]['rows']} sha {g[k]['sha256'][:12]} "
+                       f"!= golden rows {w[k]['rows']} sha {w[k]['sha256'][:12]}")
+    return out
+
+
+def digests_main(write: bool) -> int:
+    got = kernel_digests()
+    if write:
+        os.makedirs(os.path.dirname(DIGESTS_CSV), exist_ok=True)
+        with open(DIGESTS_CSV, "w", newline="") as f:
+            w = csv.DictWriter(f, fieldnames=list(got[0]), lineterminator="\n")
+            w.writeheader()
+            w.writerows(got)
+        print(f"wrote {len(got)} config digests to {DIGESTS_CSV}")
+        return 0
+    bad = digest_mismatches(got, read_digests())
+    for line in bad[:20]:
+        print(line)
+    print(f"{len(got)} configs, {len(bad)} mismatches")
+    return 1 if bad else 0
+
+
 def main(argv: list[str]) -> int:
+    if "--digests" in argv:
+        return digests_main("--write" in argv)
     sample = 1
     jobs = os.cpu_count() or 1
     families: list[str] = []

@@ -6,9 +6,17 @@ forward calling the equation evaluator at :137-192, which resolves
 contemporaneous terms through a per-timestep memo in reverse variable order
 and lagged terms from the matrix). That recurrence is inherently sequential
 in t, so the engine's scale-out axis is ACROSS configurations
-(SURVEY.md §4.3.1): `groupBy(config).applyInPandas(...)` runs one kernel per
-config — millions of independent series parallelize embarrassingly; time
-stays a tight loop inside one partition, same as the reference.
+(SURVEY.md §4.3.1): the sweep queries pack configs into bins and run one
+kernel per config inside `mapInPandas` — millions of independent series
+parallelize embarrassingly; time stays a tight loop inside one task, same
+as the reference.
+
+Unlike the reference, a kernel never re-reads its DSL strings inside that
+loop (SURVEY.md §4.1's anti-optimizations): each config's equations are
+compiled once into term tuples (`_compile_trig`, `_linear_terms`,
+`_two_pass_program`, `_group_links`), and irregular-time lag rows come from
+one vectorized `_lag_table` per config. The loop draws noise and does the
+reference's float operations in the reference's order, nothing else.
 
 Numeric fidelity: with the same seed this kernel reproduces the
 reference's CSVs bit-for-bit for BOTH noise types (term accumulation
@@ -23,6 +31,7 @@ scripts/corpus_audit.py).
 
 from __future__ import annotations
 
+import functools
 import re
 
 import numpy as np
@@ -33,26 +42,37 @@ from ..dsl.registry import equations
 _TERM_RE = re.compile(r"^([0-9]+\.?[0-9]*)\s*\*\s*X([0-9]+)\[t(?:-([0-9]+))?\]$")
 
 
-def _nearest_lag_indices(ts: np.ndarray, t: int, mean_diff: float, max_lag: int):
+def _lag_table(ts: np.ndarray, max_lag: int, mean_diff: float) -> np.ndarray:
     """Bit-equal replacement for the reference's per-lag prefix scan
     ``np.abs(ts[:t] - (ts[t] - k*mean_diff)).argmin()`` (Codes/a2.py:162-167)
-    when ts is strictly increasing (always true here: exponential gaps with a
+    at every step at once: ``table[t, k-1]`` is the row lag k reads at step
+    t. Valid when ts is sorted (always true here: exponential gaps with a
     positive floor, monotone rescale). The argmin over a sorted prefix is one
-    of the two rows bracketing the target time; binary search finds them in
-    O(log n) instead of O(n), and the ``<=`` tie-break reproduces np.argmin's
-    first-index rule (midpoint ties go to the earlier row)."""
-    out = []
-    prefix = ts[:t]
-    for k in range(1, max_lag + 1):
-        target = ts[t] - k * mean_diff
-        j = int(np.searchsorted(prefix, target, side="left"))
-        if j <= 0:
-            out.append(0)
-        elif j >= t:
-            out.append(t - 1)
-        else:
-            out.append(j - 1 if target - ts[j - 1] <= ts[j] - target else j)
-    return out
+    of the two rows bracketing the target time; ``searchsorted`` on the full
+    series clipped to t equals the search over the prefix ``ts[:t]``, and the
+    ``<=`` tie-break reproduces np.argmin's first-index rule (midpoint ties
+    go to the earlier row)."""
+    t = np.arange(len(ts))[:, None]
+    target = ts[:, None] - np.arange(1, max_lag + 1) * mean_diff
+    j = np.minimum(np.searchsorted(ts, target, side="left"), t)
+    nearer_lo = target - ts[np.maximum(j - 1, 0)] <= ts[j] - target
+    out = np.where(nearer_lo, j - 1, j)
+    out = np.where(j >= t, t - 1, out)
+    return np.where(j <= 0, 0, out)
+
+
+def _irregular_rows(ts: np.ndarray, max_lag: int) -> list[list[int]]:
+    """Per-step row table for irregular time: ``rows[t][0] = t`` and
+    ``rows[t][k]`` the nearest-abs row for lag k, against the full-series
+    mean gap (Q5 look-ahead)."""
+    mean_diff = np.mean(np.diff(ts))
+    lags = _lag_table(ts, max_lag, mean_diff)
+    return np.column_stack([np.arange(len(ts)), lags]).tolist()
+
+
+def _regular_rows(n_points: int, max_lag: int) -> list[list[int]]:
+    """Per-step row table for regular time: ``rows[t][k] = t - k``."""
+    return (np.arange(n_points)[:, None] - np.arange(max_lag + 1)).tolist()
 
 
 def parse_linear_equation(eq: str):
@@ -140,6 +160,14 @@ def _seed_all(seed: int, t_mode: str = "dedicated") -> None:
     _T_RS = np.random.RandomState(seed) if t_mode == "dedicated" else None
 
 
+@functools.lru_cache(maxsize=64)
+def _percall_t(seed: int, df: int, n: int) -> np.ndarray:
+    """The "percall" idiom's draw: a fresh RandomState(seed) every call
+    returns the same values, so draw them once per (seed, df, n). Callers
+    only read it (``_draw`` returns a scaled copy)."""
+    return np.random.RandomState(seed).standard_t(df, size=n)
+
+
 def _draw(rng_kind: str, n: int, scale: float, df: int) -> np.ndarray:
     if rng_kind == "gaussian":
         return np.random.normal(0, scale, size=n)
@@ -147,9 +175,34 @@ def _draw(rng_kind: str, n: int, scale: float, df: int) -> np.ndarray:
         if _T_MODE == "dedicated" and _T_RS is not None:
             return _T_RS.standard_t(df, size=n) * scale
         if _T_MODE == "percall":
-            return np.random.RandomState(_T_SEED).standard_t(df, size=n) * scale
+            return _percall_t(_T_SEED, df, n) * scale
         return np.random.standard_t(df, size=n) * scale
     raise ValueError(f"unknown noise type: {rng_kind}")
+
+
+def _mixed_noise(size: int, mix_ratio: float, scale: float) -> np.ndarray:
+    """Gaussian(+)Laplace mixture draw, b2.py:75-85 order: uniform mask,
+    then BOTH component draws."""
+    mask = np.random.random(size) < mix_ratio
+    g = np.random.normal(0, scale, size)
+    l = np.random.laplace(0, scale, size)
+    return np.where(mask, g, l)
+
+
+def _group_links(links: dict, n_vars: int) -> list[list[tuple]]:
+    """Link dict keyed ``(source, lag<=0, target[, power])`` -> per-target
+    term lists ``[(coef, src_idx, abs(lag), power)]``, index i for X(i+1);
+    src_idx is None for U. The reference scans every link for every
+    target at every step; grouping once in dict order keeps its
+    accumulation order. Links to targets outside X1..Xn are never read."""
+    groups: dict[str, list[tuple]] = {}
+    for key, coef in links.items():
+        src, lag, tgt = key[:3]
+        si = None if src == "U" else int(src[1:]) - 1
+        groups.setdefault(tgt, []).append(
+            (coef, si, abs(lag), key[3] if len(key) > 3 else 1)
+        )
+    return [groups.get(f"X{i + 1}", []) for i in range(n_vars)]
 
 
 def generate_linear_config(
@@ -356,22 +409,16 @@ def generate_irregular_config(
         for eq in eqs
         if "=" in eq and "noise" in eq
     }
-    mean_diff = np.mean(np.diff(ts))  # loop-invariant (Q5 full-series look-ahead)
+    groups = _group_links(links, n_vars)
+    rows = _irregular_rows(ts, max_lag)
     for t in range(max_lag, n_points):
-        lag_idx = _nearest_lag_indices(ts, t, mean_diff, max_lag)
+        r = rows[t]
         noise = _draw(noise_type, n_vars, noise_scale, df)
         written = [False] * n_vars
         for i in range(n_vars - 1, -1, -1):
-            var_name = f"X{i + 1}"
             value = 0.0
-            for (src, lag, tgt), coef in links.items():
-                if tgt != var_name:
-                    continue
-                si = int(src[1:]) - 1
-                if lag == 0:
-                    value += coef * X[t, si]
-                else:
-                    value += coef * X[lag_idx[abs(lag) - 1], si]
+            for coef, si, k, _ in groups[i]:
+                value += coef * X[r[k], si]
             if value != 0:
                 X[t, i] = value + noise[i]
                 written[i] = True
@@ -385,6 +432,44 @@ def generate_irregular_config(
     out = pd.DataFrame(X, columns=[f"X{i + 1}" for i in range(n_vars)])
     out["time"] = ts
     return out
+
+
+def _linear_terms(right: str) -> list[tuple]:
+    """One linear-with-U right-hand side (a1c/d1/d1c grammar) compiled once:
+    ``(kind, coef, source_name, source_idx0, lag)`` per term in textual
+    order — kind 'e' (the target's own noise slot), 'U' (coef * U[t]) or
+    'X' (lag 0 = a same-t read through the per-t memo)."""
+    terms = []
+    for raw in right.split("+"):
+        term = raw.strip()
+        if term.startswith("e"):
+            terms.append(("e", 0.0, "", 0, 0))
+            continue
+        coef, var = (p.strip() for p in term.split("*")[:2])
+        src = var.split("[")[0].strip()
+        if src == "U":
+            terms.append(("U", float(coef), src, 0, 0))
+            continue
+        ti = var.split("[")[1].split("]")[0].strip()
+        lag = 0 if ti == "t" else int(ti.split("-")[1])
+        terms.append(("X", float(coef), src, int(src[1:]) - 1, lag))
+    return terms
+
+
+def _eval_linear(terms, vi, X, U, t, noise, var_values) -> float:
+    """Accumulate one compiled linear equation at step t; same-t X reads go
+    through ``var_values`` (the reference's memo, keys and all)."""
+    value = 0.0
+    for kind, coef, src, si, lag in terms:
+        if kind == "e":
+            value += noise[vi]
+        elif kind == "U":
+            value += coef * U[t]
+        elif lag:
+            value += coef * X[t - lag, si]
+        else:
+            value += coef * var_values.get(src, X[t, si])
+    return value
 
 
 # ---------------------------------------------------------------------------
@@ -424,67 +509,43 @@ def generate_confounded_config(
         X[i] = _draw(noise_type, n_vars, noise_scale, df)
         U[i] = _draw(noise_type, 1, noise_scale, df)[0]
 
+    # Deferral: a same-t X dependency not yet computed sends a variable to
+    # the back of the queue (a1c.py:196-214). Corpus-vintage quirk
+    # (scripts/corpus_audit.py): in the 8-var corpus, X8 alone did NOT
+    # defer — its X7[t] read resolves to the zero-initialized current row
+    # (implied-operand solve is exactly 0 at every probed timestep, all
+    # lags), while X1/X3/X6 in the same files use computed values. The
+    # generating script's deferral evidently missed the last-added chain
+    # head; replicated as a targeted exception: X8 skips the ready-check
+    # and computes immediately (zero-read fallback).
+    program: dict[int, tuple[list[tuple], list[str]]] = {}
+    for vi in range(n_vars):
+        eq = next((e for e in eqs if e.startswith(f"X{vi + 1}")), None)
+        if eq is None:
+            continue
+        terms = _linear_terms(eq.split("=")[1])
+        skip_defer = n_vars == 8 and vi == 7
+        deps = [] if skip_defer else [
+            src for kind, _, src, _, lag in terms if kind == "X" and lag == 0
+        ]
+        program[vi] = (terms, deps)
+
     for t in range(max_lag, n_points):
         noise = _draw(noise_type, n_vars + 1, noise_scale, df)
         U[t] = noise[-1]
         var_values: dict[str, float] = {"U": U[t]}
         remaining = list(range(n_vars))[::-1]
         while remaining:
-            vi = remaining[0]
-            name = f"X{vi + 1}"
-            eq = next((e for e in eqs if e.startswith(name)), None)
-            if eq is None:
-                remaining.pop(0)
+            vi = remaining.pop(0)
+            if vi not in program:
                 continue
-            _, right = eq.split("=")
-            terms = [x.strip() for x in right.split("+")]
-            # deferral: a same-t X dependency not yet computed sends this
-            # variable to the back of the queue (a1c.py:196-214).
-            # Corpus-vintage quirk (scripts/corpus_audit.py): in the 8-var
-            # corpus, X8 alone did NOT defer — its X7[t] read resolves to
-            # the zero-initialized current row (implied-operand solve is
-            # exactly 0 at every probed timestep, all lags), while X1/X3/
-            # X6 in the same files use computed values. The generating
-            # script's deferral evidently missed the last-added chain
-            # head; replicated as a targeted exception: X8 skips the
-            # ready-check and computes immediately (zero-read fallback).
-            skip_defer = n_vars == 8 and vi == 7
-            ready = True
-            for term in terms if not skip_defer else ():
-                if term.startswith("e") or "U[t]" in term:
-                    continue
-                parts = term.split("*")
-                if len(parts) < 2:
-                    continue
-                vp = parts[1].strip()
-                if "[t]" in vp and vp.split("[")[0] not in var_values:
-                    ready = False
-                    break
-            if not ready:
-                remaining.pop(0)
+            terms, deps = program[vi]
+            if not all(d in var_values for d in deps):
                 remaining.append(vi)
                 continue
-            value = 0.0
-            for term in terms:
-                if term.startswith("e"):
-                    value += noise[vi]
-                    continue
-                parts = term.split("*")
-                coef = float(parts[0].strip())
-                var = parts[1].strip()
-                if "U[t]" in var:
-                    value += coef * U[t]
-                    continue
-                sn = var.split("[")[0].strip()
-                ti = var.split("[")[1].split("]")[0].strip()
-                si = int(sn[1:]) - 1
-                if ti == "t":
-                    value += coef * var_values.get(sn, X[t, si])
-                else:
-                    value += coef * X[t - int(ti.split("-")[1]), si]
+            value = _eval_linear(terms, vi, X, U, t, noise, var_values)
             X[t, vi] = value
-            var_values[name] = value
-            remaining.pop(0)
+            var_values[f"X{vi + 1}"] = value
 
     out = pd.DataFrame(X, columns=[f"X{i + 1}" for i in range(n_vars)])
     if not hide_u:
@@ -527,6 +588,31 @@ def _parse_poly_links(eqs: list[str]) -> dict[tuple[str, int, str, int], float]:
     return links
 
 
+def _poly_steps(X, rows, t0, groups, noise_fn, U=None) -> None:
+    """Shared B1/B2/D2 (and, with U, B1C/B2C/D2C — b1c.py:120-137) time
+    loop: U first from the last noise slot, then reverse index order,
+    ``coef * v**power`` per grouped link, noise added unconditionally.
+    ``rows`` is the per-step row table (regular or nearest-abs)."""
+    # Reference parity: b1c.py's U^2 polynomials overflow float64 for some
+    # B/C-confounded configs and the reference keeps the resulting inf —
+    # the corpus regenerates bit-exactly BECAUSE we overflow identically.
+    # Silence only the expected scalar-power overflow so the intentional
+    # behavior isn't mistaken for a defect in audit logs.
+    n_vars = X.shape[1]
+    with np.errstate(over="ignore"):
+        for t in range(t0, X.shape[0]):
+            r = rows[t]
+            noise = noise_fn()
+            if U is not None:
+                U[t] = noise[-1]
+            for i in range(n_vars - 1, -1, -1):
+                value = 0.0
+                for coef, si, k, power in groups[i]:
+                    v = U[t] if si is None else X[r[k], si]
+                    value += coef * (v ** power)
+                X[t, i] = value + noise[i]
+
+
 def generate_poly_mixture_config(
     n_points: int,
     n_vars: int,
@@ -548,41 +634,14 @@ def generate_poly_mixture_config(
     links = _parse_poly_links(eqs)
 
     _seed_all(seed)
-
-    def _mixed(size: int) -> np.ndarray:
-        mask = np.random.random(size) < mix_ratio
-        g = np.random.normal(0, noise_scale, size)
-        l = np.random.laplace(0, noise_scale, size)
-        return np.where(mask, g, l)
-
     X = np.zeros((n_points, n_vars))
-    ts = np.zeros(n_points)
-    ts[0] = np.random.uniform(0, 0.1)
-    for i in range(1, n_points):
-        gap = np.random.exponential(scale=(100.0 - ts[i - 1]) / (n_points - i))
-        ts[i] = ts[i - 1] + max(gap, 0.1)
-        if ts[i] > 100.0:
-            ts = ts * (100.0 / ts[i])
-
+    ts = _adaptive_timestamps_noreseed(n_points)
     for i in range(max_lag):
-        X[i] = _mixed(n_vars)
-
-    mean_diff = np.mean(np.diff(ts))  # loop-invariant (Q5 full-series look-ahead)
-    for t in range(max_lag, n_points):
-        lag_idx = _nearest_lag_indices(ts, t, mean_diff, max_lag)
-        nz = _mixed(n_vars)
-        for i in range(n_vars - 1, -1, -1):
-            name = f"X{i + 1}"
-            value = 0.0
-            for (src, lag, tgt, power), coef in links.items():
-                if tgt != name:
-                    continue
-                si = int(src[1:]) - 1
-                if lag == 0:
-                    value += coef * (X[t, si] ** power)
-                else:
-                    value += coef * (X[lag_idx[abs(lag) - 1], si] ** power)
-            X[t, i] = value + nz[i]
+        X[i] = _mixed_noise(n_vars, mix_ratio, noise_scale)
+    _poly_steps(
+        X, _irregular_rows(ts, max_lag), max_lag, _group_links(links, n_vars),
+        lambda: _mixed_noise(n_vars, mix_ratio, noise_scale),
+    )
 
     out = pd.DataFrame(X, columns=[f"X{i + 1}" for i in range(n_vars)])
     out["time"] = ts
@@ -626,24 +685,167 @@ def generate_poly_config(
     else:
         for i in range(max_lag):
             X[i] = _draw(noise_type, n_vars, noise_scale, df)
-    for t in range(max_lag, n_points):
-        nz = frozen if frozen is not None else _draw(
-            noise_type, n_vars, noise_scale, df
-        )
-        for i in range(n_vars - 1, -1, -1):
-            name = f"X{i + 1}"
-            value = 0.0
-            for (src, lag, tgt, power), coef in links.items():
-                if tgt != name:
-                    continue
-                si = int(src[1:]) - 1
-                v = X[t, si] if lag == 0 else X[t - abs(lag), si]
-                value += coef * (v**power)
-            X[t, i] = value + nz[i]
+    _poly_steps(
+        X, _regular_rows(n_points, max_lag), max_lag, _group_links(links, n_vars),
+        (lambda: frozen) if frozen is not None
+        else lambda: _draw(noise_type, n_vars, noise_scale, df),
+    )
 
     out = pd.DataFrame(X, columns=[f"X{i + 1}" for i in range(n_vars)])
     out["time"] = np.arange(n_points)
     return out
+
+
+# ---------------------------------------------------------------------------
+# Trig grammar (C1/C2/D3 and C1C/C2C/D3C): each script carries its own copy
+# of evaluate_term; the copies differ only in a few quirks, compiled here
+# into fields of each term so the time loop does arithmetic only.
+# ---------------------------------------------------------------------------
+
+
+def _compile_trig(eqs: list[str], grammar: str, trends, seas) -> list[tuple]:
+    """Compile a trig equation list once into ``[(target_idx0, terms)]`` in
+    list order; each term is ``(op, coef, src_idx0, lag, arg, min_t)``:
+
+    - 'noise' (the target's noise slot) and 'series' (``arg[t]``: that
+      target's trend or season array) add without a coefficient;
+    - 'u' is ``coef * U[t]`` — LINEAR for any declared power: evaluate_term
+      tests ``expr == 'U[t]'`` before it inspects '^' (c2c.py:179-187,
+      d3c.py:275-283), so the registry's U[t]^2 evaluates as U[t];
+    - 'lin' / 'pow' / 'fn' read ``X[rows[t][lag], src]`` and add
+      ``coef * v``, ``coef * v**arg`` or ``coef * arg(v * pi / 2)``
+      (arg is np.cos or np.sin).
+
+    ``grammar`` names the script family:
+
+    - 'c1' / 'c1c' (regular time): before ``min_t`` the operand reads 0.0
+      (c1.py:143-187 and c1c.py:162-236 guard ``t >= lag``; c1's plain
+      lagged term guards ``t > lag``). c1's per-t memo holds exactly what
+      was just written to ``X[t]``, so a same-t read of X is that memo.
+    - 'c2' / 'c2c' (irregular time): no guards (nearest-abs rows are
+      never negative).
+    - Quirk Q6: c1, c2 and c2c read a plain lagged term's variable as the
+      single digit ``int(expr[1])``; c1c parses the full index.
+    """
+    regular = grammar in ("c1", "c1c")
+    program = []
+    for eq in eqs:
+        if "=" not in eq or eq.startswith("U["):
+            continue
+        left, right = eq.split("=")
+        vi = int(left.strip().split("[")[0][1:]) - 1
+        terms = []
+        for raw in right.split("+"):
+            term = raw.strip()
+            if term.startswith("e"):
+                terms.append(("noise", 0.0, 0, 0, None, 0))
+                continue
+            if term.startswith("trend") or term.startswith("season"):
+                series = trends if term.startswith("trend") else seas
+                terms.append(("series", 0.0, 0, 0, series[vi], 0))
+                continue
+            parts = term.split("*")
+            coef = float(parts[0].strip())
+            expr = parts[1].strip()
+            if expr.startswith("U["):
+                terms.append(("u", coef, 0, 0, None, 0))
+                continue
+            if "[t-" in expr and not any(f in expr for f in ("cos", "sin", "^")):
+                op, arg = "lin", None
+                src = (int(expr[1]) if grammar != "c1c"
+                       else int(expr.split("X")[1].split("[")[0])) - 1
+                lag = int(expr.split("-")[1].split("]")[0])
+                min_t = lag + 1 if grammar == "c1" else lag
+            else:
+                fname = "cos(" if "cos(" in expr else "sin(" if "sin(" in expr else None
+                inner = expr.split(fname)[1].split(")")[0] if fname else expr
+                if fname:
+                    op, arg = "fn", np.cos if fname == "cos(" else np.sin
+                elif "^" in expr:
+                    op, arg = "pow", int(expr.split("^")[1])
+                else:
+                    op, arg = "lin", None
+                src = int(inner.split("X")[1].split("[")[0]) - 1
+                lag = int(inner.split("-")[1].split("]")[0]) if "[t-" in inner else 0
+                min_t = lag
+            terms.append((op, coef, src, lag, arg, min_t if regular else 0))
+        program.append((vi, terms))
+    return program
+
+
+def _eval_trig(terms, vi, X, U, t, r, noise) -> float:
+    """Accumulate one compiled trig equation at step t (``r = rows[t]``)."""
+    value = 0.0
+    for op, coef, src, lag, arg, min_t in terms:
+        if op == "noise":
+            value += noise[vi]
+        elif op == "series":
+            value += arg[t]
+        elif op == "u":
+            value += coef * U[t]
+        else:
+            v = X[r[lag], src] if t >= min_t else 0.0
+            if op == "lin":
+                value += coef * v
+            elif op == "pow":
+                value += coef * (v ** arg)
+            else:
+                value += coef * arg(v * np.pi / 2)
+    return value
+
+
+def _trig_core(
+    eqs: list[str],
+    grammar: str,
+    n_points: int,
+    n_vars: int,
+    max_lag: int,
+    ts,
+    step_noise,
+    warmup_x,
+    warmup_u,
+    trend_strength: float,
+    seasonal_strength: float,
+    seasonal_period: int,
+):
+    """Shared C1/C2/D3/C1C/C2C/D3C machinery: trend over the integer index,
+    two-harmonic seasonality over ``ts`` (irregular families, drawn by the
+    caller first) or the index (``ts=None``), warmup rows of
+    ``warmup_x()`` (then ``warmup_u()`` when the family has U) plus trend
+    and season on X only, then per-t ``step_noise()`` (U takes its last
+    slot) and list-order evaluation. Caller seeds the RNG. Returns (X, U)."""
+    tt = np.arange(n_points)
+    clock = tt if ts is None else ts
+    trends = [trend_strength * (i + 1) * 0.5 * tt for i in range(n_vars)]
+    seas = []
+    for i in range(n_vars):
+        ph = 2 * np.pi * i / 8
+        seas.append(
+            seasonal_strength
+            * (
+                np.sin(2 * np.pi * clock / seasonal_period + ph)
+                + 0.5 * np.cos(4 * np.pi * clock / seasonal_period + ph)
+            )
+        )
+    X = np.zeros((n_points, n_vars))
+    U = None if warmup_u is None else np.zeros(n_points)
+    for i in range(max_lag):
+        X[i] = warmup_x()
+        if U is not None:
+            U[i] = warmup_u()
+        for j in range(n_vars):
+            X[i, j] += trends[j][i] + seas[j][i]
+    program = _compile_trig(eqs, grammar, trends, seas)
+    rows = (_regular_rows(n_points, max_lag) if ts is None
+            else _irregular_rows(ts, max_lag))
+    for t in range(max_lag, n_points):
+        r = rows[t]
+        noise = step_noise()
+        if U is not None:
+            U[t] = noise[-1]
+        for vi, terms in program:
+            X[t, vi] = _eval_trig(terms, vi, X, U, t, r, noise)
+    return X, U
 
 
 # ---------------------------------------------------------------------------
@@ -664,9 +866,9 @@ def generate_trend_season_config(
 ) -> pd.DataFrame:
     """C1 family, bit-exact vs the reference's seed-42 CSVs: precomputed
     trend/seasonality arrays added to warmup rows too (c1.py:228-234);
-    equations evaluated in LIST order with a per-t memo; term evaluation
-    replicates evaluate_term (c1.py:143-187) including its sub-grammar
-    branches for cos/sin/power/linear and the t>lag guards."""
+    equations evaluated in LIST order; terms follow evaluate_term
+    (c1.py:143-187) including its cos/sin/power/linear sub-grammar and the
+    t>lag guards (see _compile_trig)."""
     from ..dsl.registry import equations
 
     eqs = equations("c1", n_vars, max_lag)
@@ -674,85 +876,16 @@ def generate_trend_season_config(
         raise ValueError(f"no c1 registry for ({n_vars}, {max_lag})")
 
     _seed_all(seed)
-    tt = np.arange(n_points)
-    trends = [trend_strength * (i + 1) * 0.5 * tt for i in range(n_vars)]
-    seas = []
-    for i in range(n_vars):
-        ph = 2 * np.pi * i / 8
-        seas.append(
-            seasonal_strength
-            * (
-                np.sin(2 * np.pi * tt / seasonal_period + ph)
-                + 0.5 * np.cos(4 * np.pi * tt / seasonal_period + ph)
-            )
-        )
-    X = np.zeros((n_points, n_vars))
-    for i in range(max_lag):
-        X[i] = np.random.normal(0, noise_scale, n_vars)
-        for j in range(n_vars):
-            X[i, j] += trends[j][i] + seas[j][i]
 
-    def _eval_term(term: str, var_values: dict, t: int) -> float:
-        parts = term.split("*")
-        coef = float(parts[0].strip())
-        expr = parts[1].strip()
-        if "[t-" in expr and not any(f in expr for f in ("cos", "sin", "^")):
-            vi = int(expr[1]) - 1  # single-digit parse, quirk Q6
-            lag = int(expr.split("-")[1].split("]")[0])
-            return coef * X[t - lag, vi] if t > lag else 0.0
-        if "cos(" in expr:
-            inner = expr.split("cos(")[1].split(")")[0]
-            vi = int(inner.split("X")[1].split("[")[0]) - 1
-            tp = inner.split("[")[1].split("]")[0]
-        elif "sin(" in expr:
-            inner = expr.split("sin(")[1].split(")")[0]
-            vi = int(inner.split("X")[1].split("[")[0]) - 1
-            tp = inner.split("[")[1].split("]")[0]
-        elif "^" in expr:
-            power = int(expr.split("^")[1])
-            vi = int(expr.split("X")[1].split("[")[0]) - 1
-            tp = expr.split("[")[1].split("]")[0]
-        else:
-            vi = int(expr.split("X")[1].split("[")[0]) - 1
-            tp = expr.split("[")[1].split("]")[0]
-        if tp == "t":
-            value = var_values.get(f"X{vi + 1}", X[t, vi])
-        else:
-            lag = int(tp.split("-")[1])
-            value = X[t - lag, vi] if t >= lag else 0.0
-        if "cos(" in expr:
-            return coef * np.cos(value * np.pi / 2)
-        if "sin(" in expr:
-            return coef * np.sin(value * np.pi / 2)
-        if "^" in expr:
-            return coef * (value ** power)
-        return coef * value
+    def _noise() -> np.ndarray:
+        return np.random.normal(0, noise_scale, n_vars)
 
-    for t in range(max_lag, n_points):
-        noise = np.random.normal(0, noise_scale, n_vars)
-        var_values: dict[str, float] = {}
-        for eq in eqs:
-            if "=" not in eq:
-                continue
-            left, right = eq.split("=")
-            name = left.split("[")[0]
-            vi = int(name[1:]) - 1
-            value = 0.0
-            for raw in right.split("+"):
-                term = raw.strip()
-                if term.startswith("e"):
-                    value += noise[vi]
-                elif term.startswith("trend"):
-                    value += trends[vi][t]
-                elif term.startswith("season"):
-                    value += seas[vi][t]
-                else:
-                    value += _eval_term(term, var_values, t)
-            X[t, vi] = value
-            var_values[name] = value
-
+    X, _ = _trig_core(
+        eqs, "c1", n_points, n_vars, max_lag, None, _noise, _noise, None,
+        trend_strength, seasonal_strength, seasonal_period,
+    )
     out = pd.DataFrame(X, columns=[f"X{i + 1}" for i in range(n_vars)])
-    out["time"] = tt
+    out["time"] = np.arange(n_points)
     return out
 
 
@@ -765,6 +898,52 @@ def generate_trend_season_config(
 # processed" check skips the wrong variables. Replicated for bit-exactness;
 # the corrected semantics live in generate_linear_config.
 # ---------------------------------------------------------------------------
+
+
+def _two_pass_program(eqs: list[str]):
+    """Compile the D1/D1C two-pass schedule once (d1.py:136-212,
+    d1c.py:135-217): every X equation as ``(name, target_idx0, terms)``
+    in list order for pass 2, and the ones with no same-t term (no 't]'
+    substring, so no X[t] or U[t]) for pass 1 — keyed, as the reference's
+    loop leaves ``var_name``, by the LAST source variable it read (the
+    memo-shadowing bug), or by the target itself if it reads none."""
+    pass1, pass2 = [], []
+    for eq in eqs:
+        if "=" not in eq or eq.startswith("U[t]"):
+            continue
+        left, right = eq.split("=")
+        name = left.split("[")[0]
+        vi = int(name[1:]) - 1
+        terms = _linear_terms(right)
+        pass2.append((name, vi, terms))
+        if not any("t]" in term for term in right.split("+")):
+            key = next((src for kind, _, src, _, _ in reversed(terms) if kind != "e"), name)
+            pass1.append((key, vi, terms))
+    return pass1, pass2
+
+
+def _two_pass_steps(X, U, t0, program, noise_fn) -> None:
+    """D1/D1C time loop: pass 1 records each value under its (shadowed)
+    key; pass 2 evaluates every equation whose target name no key claims,
+    same-t reads going through that memo. With U, U[t] takes the last
+    noise slot and the memo starts as {"U": U[t]}."""
+    pass1, pass2 = program
+    for t in range(t0, X.shape[0]):
+        noise = noise_fn()
+        var_values: dict[str, float] = {}
+        if U is not None:
+            U[t] = noise[-1]
+            var_values["U"] = U[t]
+        for key, vi, terms in pass1:
+            value = _eval_linear(terms, vi, X, U, t, noise, var_values)
+            X[t, vi] = value
+            var_values[key] = value
+        for name, vi, terms in pass2:
+            if name in var_values:
+                continue
+            value = _eval_linear(terms, vi, X, U, t, noise, var_values)
+            X[t, vi] = value
+            var_values[name] = value
 
 
 def generate_mcar_config(
@@ -791,61 +970,8 @@ def generate_mcar_config(
     for i in range(max_lag):
         X[i] = _draw(noise_type, n_vars, noise_scale, df)
 
-    for t in range(max_lag, n_points):
-        noise = _draw(noise_type, n_vars, noise_scale, df)
-        var_values: dict[str, float] = {}
-        # pass 1: past-only equations; the memo key is the LAST SOURCE name
-        # (the reference's shadowing bug — kept deliberately)
-        for eq in eqs:
-            if "=" not in eq:
-                continue
-            left, right = eq.split("=")
-            var_name = left.split("[")[0]
-            var_idx = int(var_name[1:]) - 1
-            if any("t]" in term for term in right.split("+")):
-                continue
-            value = 0.0
-            for raw in right.split("+"):
-                term = raw.strip()
-                if term.startswith("e"):
-                    value += noise[var_idx]
-                else:
-                    coef = float(term.split("*")[0].strip())
-                    var = term.split("*")[1].strip()
-                    var_name = var.split("[")[0].strip()  # shadows the target
-                    time_idx = var.split("[")[1].split("]")[0].strip()
-                    si = int(var_name[1:]) - 1
-                    lag = int(time_idx.split("-")[1])
-                    value += coef * X[t - lag, si]
-            X[t, var_idx] = value
-            var_values[var_name] = value
-        # pass 2: remaining equations, skipping any target whose name was
-        # (wrongly) claimed in pass 1
-        for eq in eqs:
-            if "=" not in eq:
-                continue
-            left, right = eq.split("=")
-            var_name = left.split("[")[0]
-            var_idx = int(var_name[1:]) - 1
-            if var_name in var_values:
-                continue
-            value = 0.0
-            for raw in right.split("+"):
-                term = raw.strip()
-                if term.startswith("e"):
-                    value += noise[var_idx]
-                else:
-                    coef = float(term.split("*")[0].strip())
-                    var = term.split("*")[1].strip()
-                    src_name = var.split("[")[0].strip()
-                    time_idx = var.split("[")[1].split("]")[0].strip()
-                    si = int(src_name[1:]) - 1
-                    if time_idx == "t":
-                        value += coef * var_values.get(src_name, X[t, si])
-                    else:
-                        value += coef * X[t - int(time_idx.split("-")[1]), si]
-            X[t, var_idx] = value
-            var_values[var_name] = value
+    _two_pass_steps(X, None, max_lag, _two_pass_program(eqs),
+                    lambda: _draw(noise_type, n_vars, noise_scale, df))
 
     mask = np.random.random(X.shape) < missing_rate
     X_missing = X.copy()
@@ -920,20 +1046,10 @@ def generate_block_missing_config(
     ts = _adaptive_timestamps_noreseed(n_points)
     for i in range(max_lag):
         X[i] = _draw(noise_type, n_vars, noise_scale, df)
-    mean_diff = np.mean(np.diff(ts))  # loop-invariant (Q5 full-series look-ahead)
-    for t in range(max_lag, n_points):
-        lag_idx = _nearest_lag_indices(ts, t, mean_diff, max_lag)
-        nz = _draw(noise_type, n_vars, noise_scale, df)
-        for i in range(n_vars - 1, -1, -1):
-            name = f"X{i + 1}"
-            value = 0.0
-            for (src, lag, tgt, power), coef in links.items():
-                if tgt != name:
-                    continue
-                si = int(src[1:]) - 1
-                v = X[t, si] if lag == 0 else X[lag_idx[abs(lag) - 1], si]
-                value += coef * (v ** power)
-            X[t, i] = value + nz[i]
+    _poly_steps(
+        X, _irregular_rows(ts, max_lag), max_lag, _group_links(links, n_vars),
+        lambda: _draw(noise_type, n_vars, noise_scale, df),
+    )
     mask = _block_pattern(n_points, n_vars, block_prob)
     X_missing = X.copy()
     X_missing[mask] = np.nan
@@ -977,108 +1093,17 @@ def generate_trig_irregular_config(
         raise ValueError(f"no c2 registry for ({n_vars}, {max_lag})")
     _seed_all(seed)
 
-    def _noise(size: int) -> np.ndarray:
-        return _draw(noise_type, size, noise_scale, df)
+    def _noise() -> np.ndarray:
+        return _draw(noise_type, n_vars, noise_scale, df)
 
-    X, ts = _trig_irregular_core(
-        eqs, n_points, n_vars, max_lag, _noise,
+    ts = _adaptive_timestamps_noreseed(n_points)
+    X, _ = _trig_core(
+        eqs, "c2", n_points, n_vars, max_lag, ts, _noise, _noise, None,
         trend_strength, seasonal_strength, seasonal_period,
     )
     out = pd.DataFrame(X, columns=[f"X{i + 1}" for i in range(n_vars)])
     out["time"] = ts
     return out
-
-
-def _trig_irregular_core(
-    eqs: list[str],
-    n_points: int,
-    n_vars: int,
-    max_lag: int,
-    noise_fn,
-    trend_strength: float,
-    seasonal_strength: float,
-    seasonal_period: int,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Shared C2/D3 machinery: adaptive timestamps, index-trend +
-    continuous-time seasonality, list-order eval with direct current-row
-    reads, nearest-abs lags. Caller seeds the RNG and supplies the noise."""
-    ts = _adaptive_timestamps_noreseed(n_points)
-    tt = np.arange(n_points)
-    trends = [trend_strength * (i + 1) * 0.5 * tt for i in range(n_vars)]
-    seas = []
-    for i in range(n_vars):
-        ph = 2 * np.pi * i / 8
-        seas.append(
-            seasonal_strength
-            * (
-                np.sin(2 * np.pi * ts / seasonal_period + ph)
-                + 0.5 * np.cos(4 * np.pi * ts / seasonal_period + ph)
-            )
-        )
-    X = np.zeros((n_points, n_vars))
-    for i in range(max_lag):
-        X[i] = noise_fn(n_vars)
-        for j in range(n_vars):
-            X[i, j] += trends[j][i] + seas[j][i]
-
-    def _ev(term: str, t: int, li: list[int]) -> float:
-        parts = term.split("*")
-        coef = float(parts[0].strip())
-        expr = parts[1].strip()
-        if "[t-" in expr and not any(f in expr for f in ("cos", "sin", "^")):
-            vi = int(expr[1]) - 1
-            lag = int(expr.split("-")[1].split("]")[0])
-            return coef * X[li[lag - 1], vi]
-        for fname, fn in (("cos(", np.cos), ("sin(", np.sin)):
-            if fname in expr:
-                inner = expr.split(fname)[1].split(")")[0]
-                vi = int(inner.split("X")[1].split("[")[0]) - 1
-                if "[t-" in inner:
-                    lag = int(inner.split("-")[1].split("]")[0])
-                    v = X[li[lag - 1], vi]
-                else:
-                    v = X[t, vi]
-                return coef * fn(v * np.pi / 2)
-        if "^" in expr:
-            power = int(expr.split("^")[1])
-            vi = int(expr.split("X")[1].split("[")[0]) - 1
-            if "[t-" in expr:
-                lag = int(expr.split("-")[1].split("]")[0])
-                v = X[li[lag - 1], vi]
-            else:
-                v = X[t, vi]
-            return coef * (v ** power)
-        vi = int(expr.split("X")[1].split("[")[0]) - 1
-        if "[t-" in expr:
-            lag = int(expr.split("-")[1].split("]")[0])
-            v = X[li[lag - 1], vi]
-        else:
-            v = X[t, vi]
-        return coef * v
-
-    mean_diff = np.mean(np.diff(ts))  # loop-invariant (Q5 full-series look-ahead)
-    for t in range(max_lag, n_points):
-        li = _nearest_lag_indices(ts, t, mean_diff, max_lag)
-        noise = noise_fn(n_vars)
-        for eq in eqs:
-            if "=" not in eq:
-                continue
-            left, right = eq.split("=")
-            name = left.split("[")[0]
-            vi = int(name[1:]) - 1
-            value = 0.0
-            for raw in right.split("+"):
-                term = raw.strip()
-                if term.startswith("e"):
-                    value += noise[vi]
-                elif term.startswith("trend"):
-                    value += trends[vi][t]
-                elif term.startswith("season"):
-                    value += seas[vi][t]
-                else:
-                    value += _ev(term, t, li)
-            X[t, vi] = value
-    return X, ts
 
 
 # ---------------------------------------------------------------------------
@@ -1110,14 +1135,12 @@ def generate_mixed_missing_config(
         raise ValueError(f"no c2/d3 registry for ({n_vars}, {max_lag})")
     _seed_all(seed)
 
-    def _noise(size: int) -> np.ndarray:
-        mask = np.random.random(size) < mix_ratio
-        g = np.random.normal(0, noise_scale, size)
-        l = np.random.laplace(0, noise_scale, size)
-        return np.where(mask, g, l)
+    def _noise() -> np.ndarray:
+        return _mixed_noise(n_vars, mix_ratio, noise_scale)
 
-    X, ts = _trig_irregular_core(
-        eqs, n_points, n_vars, max_lag, _noise,
+    ts = _adaptive_timestamps_noreseed(n_points)
+    X, _ = _trig_core(
+        eqs, "c2", n_points, n_vars, max_lag, ts, _noise, _noise, None,
         trend_strength, seasonal_strength, seasonal_period,
     )
     mcar = np.random.random((n_points, n_vars)) < mcar_prob

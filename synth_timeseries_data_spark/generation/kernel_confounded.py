@@ -43,8 +43,15 @@ from .kernel import (
     _adaptive_timestamps_noreseed,
     _block_pattern,
     _draw,
+    _group_links,
+    _irregular_rows,
+    _mixed_noise,
+    _poly_steps,
+    _regular_rows,
     _seed_all,
-    _nearest_lag_indices,
+    _trig_core,
+    _two_pass_program,
+    _two_pass_steps,
 )
 
 
@@ -80,33 +87,6 @@ def _parse_poly_links_u(eqs: list[str]) -> dict[tuple[str, int, str, int], float
     return links
 
 
-def _poly_u_step(X, U, t, links, noise, n_vars, lag_of):
-    """Shared B1C/B2C/D2C per-t evaluator (b1c.py:120-137): U first from the
-    last noise slot, then reverse index order, powers honored for U too,
-    noise added unconditionally. ``lag_of(k)`` maps a positive lag to the
-    row index (t-k for regular time, nearest-abs index for irregular)."""
-    U[t] = noise[-1]
-    # Reference parity: b1c.py's U^2 polynomials overflow float64 for some
-    # B/C-confounded configs and the reference keeps the resulting inf —
-    # the corpus regenerates bit-exactly BECAUSE we overflow identically.
-    # Silence only the expected scalar-power overflow so the intentional
-    # behavior isn't mistaken for a defect in audit logs.
-    with np.errstate(over="ignore"):
-        for i in range(n_vars - 1, -1, -1):
-            name = f"X{i + 1}"
-            value = 0.0
-            for (src, lag, tgt, power), coef in links.items():
-                if tgt != name:
-                    continue
-                if src == "U":
-                    value += coef * (U[t] ** power)
-                else:
-                    si = int(src[1:]) - 1
-                    v = X[t, si] if lag == 0 else X[lag_of(abs(lag)), si]
-                    value += coef * (v ** power)
-            X[t, i] = value + noise[i]
-
-
 def _frame(X, U, time) -> pd.DataFrame:
     out = pd.DataFrame(X, columns=[f"X{i + 1}" for i in range(X.shape[1])])
     out["U"] = U
@@ -134,18 +114,11 @@ def generate_confounded_poly_config(
     for i in range(max_lag):
         X[i] = _draw(noise_type, n_vars, noise_scale, df)
         U[i] = _draw(noise_type, 1, noise_scale, df)[0]
-    for t in range(max_lag, n_points):
-        noise = _draw(noise_type, n_vars + 1, noise_scale, df)
-        _poly_u_step(X, U, t, links, noise, n_vars, lambda k: t - k)
+    _poly_steps(
+        X, _regular_rows(n_points, max_lag), max_lag, _group_links(links, n_vars),
+        lambda: _draw(noise_type, n_vars + 1, noise_scale, df), U,
+    )
     return _frame(X, U, np.arange(n_points))
-
-
-def _mixed_noise(size: int, mix_ratio: float, scale: float) -> np.ndarray:
-    """b2c.py:78-84 draw order: uniform mask, then gaussian, then laplace."""
-    mask = np.random.random(size) < mix_ratio
-    g = np.random.normal(0, scale, size)
-    l = np.random.laplace(0, scale, size)
-    return np.where(mask, g, l)
 
 
 def generate_confounded_poly_mixture_config(
@@ -169,11 +142,10 @@ def generate_confounded_poly_mixture_config(
     for i in range(max_lag):
         X[i] = _mixed_noise(n_vars, mix_ratio, noise_scale)
         U[i] = _mixed_noise(1, mix_ratio, noise_scale)[0]
-    mean_diff = np.mean(np.diff(ts))  # loop-invariant (Q5 full-series look-ahead)
-    for t in range(max_lag, n_points):
-        li = _nearest_lag_indices(ts, t, mean_diff, max_lag)
-        noise = _mixed_noise(n_vars + 1, mix_ratio, noise_scale)
-        _poly_u_step(X, U, t, links, noise, n_vars, lambda k: li[k - 1])
+    _poly_steps(
+        X, _irregular_rows(ts, max_lag), max_lag, _group_links(links, n_vars),
+        lambda: _mixed_noise(n_vars + 1, mix_ratio, noise_scale), U,
+    )
     return _frame(X, U, ts)
 
 
@@ -200,11 +172,10 @@ def generate_confounded_block_missing_config(
     for i in range(max_lag):
         X[i] = _draw(noise_type, n_vars, noise_scale, df)
         U[i] = _draw(noise_type, 1, noise_scale, df)[0]
-    mean_diff = np.mean(np.diff(ts))  # loop-invariant (Q5 full-series look-ahead)
-    for t in range(max_lag, n_points):
-        li = _nearest_lag_indices(ts, t, mean_diff, max_lag)
-        noise = _draw(noise_type, n_vars + 1, noise_scale, df)
-        _poly_u_step(X, U, t, links, noise, n_vars, lambda k: li[k - 1])
+    _poly_steps(
+        X, _irregular_rows(ts, max_lag), max_lag, _group_links(links, n_vars),
+        lambda: _draw(noise_type, n_vars + 1, noise_scale, df), U,
+    )
     mask = _block_pattern(n_points, n_vars, block_prob)
     Xm = X.copy()
     Xm[mask] = np.nan
@@ -214,44 +185,6 @@ def generate_confounded_block_missing_config(
 # ---------------------------------------------------------------------------
 # C1C: trig + trend/season + linear U, regular sampling (c1c.py:130-295).
 # ---------------------------------------------------------------------------
-
-
-def _ev_c1c(term: str, X: np.ndarray, U: np.ndarray, t: int) -> float:
-    """c1c.py evaluate_term (162-236): direct X reads (no memo), t-lagval
-    guards, U strictly linear (registry declares it linear)."""
-    parts = term.split("*")
-    coef = float(parts[0].strip())
-    expr = parts[1].strip()
-    if expr.startswith("U["):
-        return coef * U[t]  # only U[t] appears in the registry
-    if "[t-" in expr and not any(f in expr for f in ("cos", "sin", "^")):
-        vi = int(expr.split("X")[1].split("[")[0]) - 1
-        lag = int(expr.split("[")[1].split("]")[0].split("-")[1])
-        return coef * X[t - lag, vi] if t - lag >= 0 else 0.0
-    for fname, fn in (("cos(", np.cos), ("sin(", np.sin)):
-        if fname in expr:
-            inner = expr.split(fname)[1].split(")")[0]
-            vi = int(inner.split("X")[1].split("[")[0]) - 1
-            lag_str = inner.split("[")[1].split("]")[0]
-            lag = int(lag_str.split("-")[1]) if "t-" in lag_str else 0
-            v = X[t - lag, vi] if t - lag >= 0 else 0.0
-            return coef * fn(v * np.pi / 2)
-    if "^" in expr:
-        power = int(expr.split("^")[1])
-        vi = int(expr.split("X")[1].split("[")[0]) - 1
-        if "[t]" in expr:
-            v = X[t, vi]
-        else:
-            lag = int(expr.split("-")[1].split("]")[0]) if "[t-" in expr else 0
-            v = X[t - lag, vi] if t - lag >= 0 else 0.0
-        return coef * (v ** power)
-    vi = int(expr.split("X")[1].split("[")[0]) - 1
-    if "[t-" in expr:
-        lag = int(expr.split("[")[1].split("]")[0].split("-")[1])
-        v = X[t - lag, vi] if t - lag >= 0 else 0.0
-    else:
-        v = X[t, vi]
-    return coef * v
 
 
 def generate_confounded_trend_season_config(
@@ -272,156 +205,19 @@ def generate_confounded_trend_season_config(
     if not eqs:
         raise ValueError(f"no c1c registry for ({n_vars}, {max_lag})")
     _seed_all(seed)
-    tt = np.arange(n_points)
-    trends = [trend_strength * (i + 1) * 0.5 * tt for i in range(n_vars)]
-    seas = []
-    for i in range(n_vars):
-        ph = 2 * np.pi * i / 8
-        seas.append(
-            seasonal_strength
-            * (
-                np.sin(2 * np.pi * tt / seasonal_period + ph)
-                + 0.5 * np.cos(4 * np.pi * tt / seasonal_period + ph)
-            )
-        )
-    X = np.zeros((n_points, n_vars))
-    U = np.zeros(n_points)
-    for i in range(max_lag):
-        X[i] = np.random.normal(0, noise_scale, n_vars)
-        U[i] = np.random.normal(0, noise_scale, 1)[0]
-        for j in range(n_vars):
-            X[i, j] += trends[j][i] + seas[j][i]
-    for t in range(max_lag, n_points):
-        noise = np.random.normal(0, noise_scale, n_vars + 1)
-        U[t] = noise[-1]
-        for eq in eqs:
-            if "=" not in eq or eq.startswith("U["):
-                continue
-            left, right = eq.split("=")
-            name = left.strip().split("[")[0]
-            vi = int(name[1:]) - 1
-            value = 0.0
-            for raw in right.strip().split("+"):
-                term = raw.strip()
-                if term.startswith("e"):
-                    value += noise[vi]
-                elif term.startswith("trend"):
-                    value += trends[vi][t]
-                elif term.startswith("season"):
-                    value += seas[vi][t]
-                else:
-                    value += _ev_c1c(term, X, U, t)
-            X[t, vi] = value
-    return _frame(X, U, tt)
+    X, U = _trig_core(
+        eqs, "c1c", n_points, n_vars, max_lag, None,
+        lambda: np.random.normal(0, noise_scale, n_vars + 1),
+        lambda: np.random.normal(0, noise_scale, n_vars),
+        lambda: np.random.normal(0, noise_scale, 1)[0],
+        trend_strength, seasonal_strength, seasonal_period,
+    )
+    return _frame(X, U, np.arange(n_points))
 
 
 # ---------------------------------------------------------------------------
 # C2C / D3C: trig + continuous-time seasonality over irregular time, with U.
 # ---------------------------------------------------------------------------
-
-
-def _ev_trig_u(term: str, X, U, t: int, li: list[int]) -> float:
-    """c2c.py/d3c.py evaluate_term (c2c.py:174-236): identical to the C2/D3
-    evaluator plus the U branch — which is LINEAR for any declared power
-    (the ``expr == 'U[t]'`` test at c2c.py:180 makes the power sub-branch
-    unreachable for 'U[t]^2')."""
-    parts = term.split("*")
-    coef = float(parts[0].strip())
-    expr = parts[1].strip()
-    if expr.startswith("U["):
-        return coef * U[t]
-    if "[t-" in expr and not any(f in expr for f in ("cos", "sin", "^")):
-        vi = int(expr[1]) - 1
-        lag = int(expr.split("-")[1].split("]")[0])
-        return coef * X[li[lag - 1], vi]
-    for fname, fn in (("cos(", np.cos), ("sin(", np.sin)):
-        if fname in expr:
-            inner = expr.split(fname)[1].split(")")[0]
-            vi = int(inner.split("X")[1].split("[")[0]) - 1
-            if "[t-" in inner:
-                lag = int(inner.split("-")[1].split("]")[0])
-                v = X[li[lag - 1], vi]
-            else:
-                v = X[t, vi]
-            return coef * fn(v * np.pi / 2)
-    if "^" in expr:
-        power = int(expr.split("^")[1])
-        vi = int(expr.split("X")[1].split("[")[0]) - 1
-        if "[t-" in expr:
-            lag = int(expr.split("-")[1].split("]")[0])
-            v = X[li[lag - 1], vi]
-        else:
-            v = X[t, vi]
-        return coef * (v ** power)
-    vi = int(expr.split("X")[1].split("[")[0]) - 1
-    if "[t-" in expr:
-        lag = int(expr.split("-")[1].split("]")[0])
-        v = X[li[lag - 1], vi]
-    else:
-        v = X[t, vi]
-    return coef * v
-
-
-def _trig_irregular_u_core(
-    eqs: list[str],
-    n_points: int,
-    n_vars: int,
-    max_lag: int,
-    step_noise_fn,
-    warmup_x_fn,
-    warmup_u_fn,
-    trend_strength: float,
-    seasonal_strength: float,
-    seasonal_period: int,
-):
-    """Shared C2C/D3C machinery (c2c.py:270-310, d3c.py:365-395):
-    timestamps first, index trend + continuous-time seasonality, interleaved
-    X/U warmup draws (trend+season added to X only), per-t noise of
-    n_vars+1 with U taking the last slot, list-order evaluation."""
-    ts = _adaptive_timestamps_noreseed(n_points)
-    tt = np.arange(n_points)
-    trends = [trend_strength * (i + 1) * 0.5 * tt for i in range(n_vars)]
-    seas = []
-    for i in range(n_vars):
-        ph = 2 * np.pi * i / 8
-        seas.append(
-            seasonal_strength
-            * (
-                np.sin(2 * np.pi * ts / seasonal_period + ph)
-                + 0.5 * np.cos(4 * np.pi * ts / seasonal_period + ph)
-            )
-        )
-    X = np.zeros((n_points, n_vars))
-    U = np.zeros(n_points)
-    for i in range(max_lag):
-        X[i] = warmup_x_fn()
-        U[i] = warmup_u_fn()
-        for j in range(n_vars):
-            X[i, j] += trends[j][i] + seas[j][i]
-    mean_diff = np.mean(np.diff(ts))  # loop-invariant (Q5 full-series look-ahead)
-    for t in range(max_lag, n_points):
-        li = _nearest_lag_indices(ts, t, mean_diff, max_lag)
-        noise = step_noise_fn()
-        U[t] = noise[-1]
-        for eq in eqs:
-            if "=" not in eq or eq.startswith("U["):
-                continue
-            left, right = eq.split("=")
-            name = left.split("[")[0]
-            vi = int(name[1:]) - 1
-            value = 0.0
-            for raw in right.split("+"):
-                term = raw.strip()
-                if term.startswith("e"):
-                    value += noise[vi]
-                elif term.startswith("trend"):
-                    value += trends[vi][t]
-                elif term.startswith("season"):
-                    value += seas[vi][t]
-                else:
-                    value += _ev_trig_u(term, X, U, t, li)
-            X[t, vi] = value
-    return X, U, ts
 
 
 def generate_confounded_trig_irregular_config(
@@ -437,13 +233,14 @@ def generate_confounded_trig_irregular_config(
     df: int = 3,
 ) -> pd.DataFrame:
     """C2C (c2c.py:116-310): warmup U draws are plain 1-draws; per-t draws
-    are n_vars+1; U effectively linear (see _ev_trig_u)."""
+    are n_vars+1; U effectively linear (see _compile_trig)."""
     eqs = equations("c2c", n_vars, max_lag)
     if not eqs:
         raise ValueError(f"no c2c registry for ({n_vars}, {max_lag})")
     _seed_all(seed)
-    X, U, ts = _trig_irregular_u_core(
-        eqs, n_points, n_vars, max_lag,
+    ts = _adaptive_timestamps_noreseed(n_points)
+    X, U = _trig_core(
+        eqs, "c2c", n_points, n_vars, max_lag, ts,
         lambda: _draw(noise_type, n_vars + 1, noise_scale, df),
         lambda: _draw(noise_type, n_vars, noise_scale, df),
         lambda: _draw(noise_type, 1, noise_scale, df)[0],
@@ -474,8 +271,9 @@ def generate_confounded_mixed_missing_config(
     if not eqs:
         raise ValueError(f"no d3c registry for ({n_vars}, {max_lag})")
     _seed_all(seed)
-    X, U, ts = _trig_irregular_u_core(
-        eqs, n_points, n_vars, max_lag,
+    ts = _adaptive_timestamps_noreseed(n_points)
+    X, U = _trig_core(
+        eqs, "c2c", n_points, n_vars, max_lag, ts,
         lambda: _mixed_noise(n_vars + 1, mix_ratio, noise_scale),
         lambda: _mixed_noise(n_vars, mix_ratio, noise_scale),
         lambda: _mixed_noise(2, mix_ratio, noise_scale)[-1],
@@ -520,68 +318,8 @@ def generate_confounded_mcar_config(
         X[i] = _draw(noise_type, n_vars, noise_scale, df)
         U[i] = _draw(noise_type, 1, noise_scale, df)[0]
 
-    for t in range(max_lag, n_points):
-        noise = _draw(noise_type, n_vars + 1, noise_scale, df)
-        var_values: dict[str, float] = {}
-        U[t] = noise[-1]
-        var_values["U"] = U[t]
-
-        # Pass 1: equations with no same-t terms (no 't]' substring).
-        for eq in eqs:
-            if "=" not in eq or eq.startswith("U[t]"):
-                continue
-            left, right = eq.split("=")
-            var_name = left.split("[")[0]
-            var_idx = int(var_name[1:]) - 1
-            if any("t]" in term for term in right.split("+")):
-                continue
-            value = 0.0
-            for term in (s.strip() for s in right.split("+")):
-                if term.startswith("e"):
-                    value += noise[var_idx]
-                else:
-                    coef = float(term.split("*")[0].strip())
-                    var = term.split("*")[1].strip()
-                    var_name = var.split("[")[0].strip()  # shadows the target!
-                    time_idx = var.split("[")[1].split("]")[0].strip()
-                    if var_name == "U":
-                        value += coef * U[t]
-                    else:
-                        src_idx = int(var_name[1:]) - 1
-                        lag = int(time_idx.split("-")[1])
-                        value += coef * X[t - lag, src_idx]
-            X[t, var_idx] = value
-            var_values[var_name] = value  # wrong key when terms exist (bug)
-
-        # Pass 2: everything not already (mis)recorded.
-        for eq in eqs:
-            if "=" not in eq or eq.startswith("U[t]"):
-                continue
-            left, right = eq.split("=")
-            var_name = left.split("[")[0]
-            var_idx = int(var_name[1:]) - 1
-            if var_name in var_values:
-                continue
-            value = 0.0
-            for term in (s.strip() for s in right.split("+")):
-                if term.startswith("e"):
-                    value += noise[var_idx]
-                else:
-                    coef = float(term.split("*")[0].strip())
-                    var = term.split("*")[1].strip()
-                    src_name = var.split("[")[0].strip()
-                    time_idx = var.split("[")[1].split("]")[0].strip()
-                    if src_name == "U":
-                        value += coef * U[t]
-                    elif time_idx == "t":
-                        src_idx = int(src_name[1:]) - 1
-                        value += coef * var_values.get(src_name, X[t, src_idx])
-                    else:
-                        src_idx = int(src_name[1:]) - 1
-                        lag = int(time_idx.split("-")[1])
-                        value += coef * X[t - lag, src_idx]
-            X[t, var_idx] = value
-            var_values[var_name] = value
+    _two_pass_steps(X, U, max_lag, _two_pass_program(eqs),
+                    lambda: _draw(noise_type, n_vars + 1, noise_scale, df))
 
     mask = np.random.random(X.shape) < missing_rate
     Xm = X.copy()
@@ -648,26 +386,19 @@ def generate_confounded_irregular_config(
     for i in range(max_lag):
         X[i] = _draw(noise_type, n_vars, noise_scale, df)
         U[i] = _draw(noise_type, 1, noise_scale, df)[0]
-    targets = {t for (_, _, t) in links}
-    mean_diff = np.mean(np.diff(ts))  # loop-invariant (Q5 full-series look-ahead)
+    groups = _group_links(links, n_vars)
+    rows = _irregular_rows(ts, max_lag)
     for t in range(max_lag, n_points):
-        li = _nearest_lag_indices(ts, t, mean_diff, max_lag)
+        r = rows[t]
         noise = _draw(noise_type, n_vars + 1, noise_scale, df)
         U[t] = noise[-1]
         for i in range(n_vars):
-            if f"X{i + 1}" not in targets:
+            if not groups[i]:
                 X[t, i] = noise[i]
         for i in range(n_vars - 1, -1, -1):
-            name = f"X{i + 1}"
             value = 0.0
-            for (src, lag, tgt), coef in links.items():
-                if tgt != name:
-                    continue
-                if src == "U":
-                    value += coef * U[t]
-                else:
-                    si = int(src[1:]) - 1
-                    value += coef * (X[t, si] if lag == 0 else X[li[abs(lag) - 1], si])
+            for coef, si, k, _ in groups[i]:
+                value += coef * (U[t] if si is None else X[r[k], si])
             if value != 0:
                 X[t, i] = value + noise[i]
     return _frame(X, U, ts)

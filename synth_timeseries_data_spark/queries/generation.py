@@ -1,11 +1,11 @@
 """Generation queries — the scale-out face of the recurrence kernels (G6/G12/G20).
 
 The reference's sweep drivers (Codes/a1.py:308-344 and the 16 sibling
-scripts) loop configs serially in one process; the engine expresses the same
-sweeps as a config DataFrame grouped into ``applyInPandas``, so a
-1000-executor cluster generates millions of configs with zero coordination —
-the sequential recurrence stays inside each group exactly where it belongs
-(SURVEY.md §4.3.1).
+scripts) loop configs serially in one process; the engine packs the same
+sweeps' configs into cost-balanced bins, one per task, and runs each bin's
+kernels in ``mapInPandas``, so a 1000-executor cluster generates millions of
+configs with zero coordination — the sequential recurrence stays inside one
+kernel call exactly where it belongs (SURVEY.md §4.3.1).
 
 All 17 corpus families are exposed through FOUR umbrella queries rather than
 one query per family: the family is a grid axis, not an API. Each umbrella
@@ -19,6 +19,7 @@ against the reference's seed-42 corpus CSVs instead.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
@@ -92,32 +93,34 @@ _PAIR_CONFOUNDED_KERNELS = {
 
 
 def _melt_wide(fam: str, config_id: str, wide: pd.DataFrame) -> pd.DataFrame:
-    long = wide.melt(id_vars=["time"], var_name="var", value_name="value")
-    long = long.rename(columns={"time": "t"})
-    long["t"] = long["t"].astype("float64")
-    long["family"] = fam
-    long["config_id"] = config_id
-    return long[["family", "config_id", "t", "var", "value"]]
+    """Wide kernel frame -> long (family, config_id, t, var, value), one
+    block of rows per variable in column order (what ``DataFrame.melt``
+    gives), built in one go: tiled time, repeated names, column-major
+    values."""
+    cols = [c for c in wide.columns if c != "time"]
+    return pd.DataFrame({
+        "family": fam,
+        "config_id": config_id,
+        "t": np.tile(wide["time"].to_numpy(dtype="float64"), len(cols)),
+        "var": np.repeat(np.array(cols, dtype=object), len(wide)),
+        "value": wide[cols].to_numpy().ravel(order="F"),
+    })
 
 
 def _melt_pair(
     fam: str, config_id: str, missing: pd.DataFrame, complete: pd.DataFrame
 ) -> pd.DataFrame:
-    value_cols = [c for c in complete.columns if c != "time"]
-    rows = [
-        pd.DataFrame(
-            {
-                "family": fam,
-                "config_id": config_id,
-                "t": complete["time"].astype("float64"),
-                "var": var,
-                "value_complete": complete[var],
-                "value_observed": missing[var],
-            }
-        )
-        for var in value_cols
-    ]
-    return pd.concat(rows, ignore_index=True)
+    """(missing, complete) kernel frames -> long rows like ``_melt_wide``
+    with both values side by side."""
+    cols = [c for c in complete.columns if c != "time"]
+    return pd.DataFrame({
+        "family": fam,
+        "config_id": config_id,
+        "t": np.tile(complete["time"].to_numpy(dtype="float64"), len(cols)),
+        "var": np.repeat(np.array(cols, dtype=object), len(complete)),
+        "value_complete": complete[cols].to_numpy().ravel(order="F"),
+        "value_observed": missing[cols].to_numpy().ravel(order="F"),
+    })
 
 
 def _run_kernel(kernels, pdf: pd.DataFrame):
@@ -166,33 +169,32 @@ def _pair_group(kernels):
 
 # Measured kernel cost weights: µs of kernel wall time per n·n_vars cell,
 # keyed by (family, noise), calibrated by timing every grid config
-# driver-side (mean of t/(n·v) per class; see the r05 calibration run).
-# The naïve cost ≈ n·v model was WRONG — measured correlation with actual
-# kernel time was 0.07, because cost is dominated by which SAMPLER the
-# family uses: scipy student-t draws inside an irregular-timestamp or
-# poly-confounded loop (a2/a2c/b1c + student_t) run 35-48 µs/cell while
-# plain vectorized gaussian families run 2-9 µs/cell. An LPT pack on the
-# wrong model is worse than round-robin — it deliberately stacks the
-# "cheap-looking" expensive configs. The 5 ms additive term is the fixed
-# per-config overhead (kernel dispatch + melt + pandas assembly), which
-# keeps bins from hoarding many tiny configs.
+# driver-side (per config the fastest of nine timings on a 4-core host,
+# then the mean of t/(n·v) per class). Since the kernels compile their
+# equations once per config, the loop is noise draws plus arithmetic and
+# the classes sit within 0.8-4.7 µs/cell: the trig families (c*, d3*, with
+# np.cos/np.sin per term) and the polynomial/mixture ones cost most, the
+# linear regular ones least (the "percall" Student-t idiom of a2/a2c/b1c
+# is one cached draw, kernel._percall_t). The naïve cost ≈ n·v model is
+# wrong by up to 6x between classes, and an LPT pack on the wrong model
+# deliberately stacks the "cheap-looking" expensive configs.
 _COST_W = {
-    ("a1", "gaussian"): 1.7, ("a1", "student_t"): 1.8,
-    ("a2", "gaussian"): 4.4, ("a2", "student_t"): 47.6,
-    ("b1", "gaussian"): 3.5, ("b1", "student_t"): 2.8,
-    ("b2", None): 7.8, ("c1", None): 6.8,
-    ("c2", "gaussian"): 8.3, ("c2", "student_t"): 8.4,
-    ("a1c", "gaussian"): 8.7, ("a1c", "student_t"): 9.2,
-    ("a2c", "gaussian"): 4.0, ("a2c", "student_t"): 36.3,
-    ("b1c", "gaussian"): 3.2, ("b1c", "student_t"): 35.9,
-    ("b2c", None): 7.0, ("c1c", None): 7.9,
-    ("c2c", "gaussian"): 9.6, ("c2c", "student_t"): 10.0,
-    ("d1", "gaussian"): 5.4, ("d1", "student_t"): 5.7,
-    ("d2", "gaussian"): 5.2, ("d2", "student_t"): 5.5,
-    ("d3", None): 11.7,
-    ("d1c", "gaussian"): 9.9, ("d1c", "student_t"): 12.7,
-    ("d2c", "gaussian"): 13.0, ("d2c", "student_t"): 15.3,
-    ("d3c", None): 21.2,
+    ("a1", "gaussian"): 1.1, ("a1", "student_t"): 1.2,
+    ("a2", "gaussian"): 1.4, ("a2", "student_t"): 1.4,
+    ("b1", "gaussian"): 1.1, ("b1", "student_t"): 0.8,
+    ("b2", None): 2.6, ("c1", None): 2.3,
+    ("c2", "gaussian"): 3.1, ("c2", "student_t"): 3.3,
+    ("a1c", "gaussian"): 2.3, ("a1c", "student_t"): 2.7,
+    ("a2c", "gaussian"): 1.3, ("a2c", "student_t"): 1.2,
+    ("b1c", "gaussian"): 1.3, ("b1c", "student_t"): 1.3,
+    ("b2c", None): 3.3, ("c1c", None): 2.7,
+    ("c2c", "gaussian"): 2.8, ("c2c", "student_t"): 3.1,
+    ("d1", "gaussian"): 1.5, ("d1", "student_t"): 1.6,
+    ("d2", "gaussian"): 2.1, ("d2", "student_t"): 2.4,
+    ("d3", None): 4.7,
+    ("d1c", "gaussian"): 1.3, ("d1c", "student_t"): 1.6,
+    ("d2c", "gaussian"): 2.9, ("d2c", "student_t"): 3.0,
+    ("d3c", None): 4.4,
 }
 
 
@@ -240,9 +242,8 @@ def _sweep(spark: SparkSession, rows, group_fn, out_schema) -> DataFrame:
     # configs could share one residue class and straggle their task
     # (VERDICT r04 item 4). Now the driver bin-packs configs into exactly
     # `width` bins by greedy LPT on a MEASURED cost model, each bin
-    # becomes ONE packed VALUES row (array of structs), repartition(width)
-    # gives every bin its own task (round-robin assigns distinct
-    # partitions to distinct rows regardless of order), and inline()
+    # becomes ONE packed VALUES row (array of structs), the local scan
+    # gives every row its own task (see below), and inline()
     # restores per-config rows WITHOUT an exchange — placement is exact
     # and deterministic, no sampling, no hash collisions. Tradeoff at
     # cluster scale: batching gives up per-config straggler isolation —
@@ -390,10 +391,10 @@ def _missing_confounded_grid():
 def scm_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Complete-data factorial sweep across the six unconfounded families
     (A1 linear regular, A2 linear irregular, B1 poly regular, B2
-    poly+mixture, C1 trend+season, C2 trig irregular) — one applyInPandas
-    group per config,
+    poly+mixture, C1 trend+season, C2 trig irregular) — configs packed into
+    cost-balanced bins, one mapInPandas task each (see _sweep);
     long-form (family, config, t, var, value) output keeps the schema fixed
-    across families and widths; no shuffle after generation."""
+    across families and widths; no shuffle anywhere in the sweep."""
     return _sweep(spark, _complete_grid(),
                   _complete_group(_COMPLETE_KERNELS), _COMPLETE_SCHEMA)
 
@@ -448,7 +449,7 @@ def scm_generate_long(spark: SparkSession, sf_dir: str) -> DataFrame:
 # driver (seeded-numpy recurrences are not SQL); their numeric fidelity
 # is pinned by the golden corpus, but no driver row ever value-hashed
 # what the DISTRIBUTED sweep path emits. This entry closes that: the
-# Spark side runs the real applyInPandas sweep for ONE config and
+# Spark side runs the real mapInPandas sweep for ONE config and
 # aggregates its output; the oracle aggregates the SAME config generated
 # by the kernel directly (driver-side numpy, persisted once to parquet at
 # registration — deterministic seed-42 content, atomic publish). A green
@@ -518,7 +519,7 @@ def _scm_output_duck() -> str:
 @register("scm_output_stats", _scm_output_duck())
 def scm_output_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-variable summary of ONE sweep config's OUTPUT, generated
-    through the real distributed path (the same applyInPandas sweep
+    through the real distributed path (the same mapInPandas sweep
     scm_generate runs, restricted to one grid row) — the driver's value
     hash compares it against the kernel's own output persisted at
     registration, certifying that the scale-out machinery (grid pack,

@@ -50,7 +50,8 @@ def get_session(app_name: str = "synth_timeseries_data_spark") -> SparkSession:
     # mode mis-plans them. SPARK_GRAFT_AQE=false flips the trade for
     # latency-critical small-query workloads. Correctness is AQE-independent
     # (the one AQE hazard — coalescing the kernel-sweep grid to one
-    # partition — is pinned by an explicit repartition; see
+    # partition — cannot arise: the sweep has no exchange at all, one packed
+    # VALUES row per task feeding mapInPandas; see _sweep in
     # queries/generation.py).
     aqe = os.environ.get("SPARK_GRAFT_AQE", "true")
     builder = (

@@ -133,6 +133,54 @@ def test_a2_adaptive_timestamp_properties():
     assert np.median(gaps) > 0.01
 
 
+def _lag_scan(ts, max_lag, mean_diff):
+    """The reference's per-step prefix scan (a2.py:162-167), t >= 1."""
+    return np.array([
+        [np.abs(ts[:t] - (ts[t] - k * mean_diff)).argmin() for k in range(1, max_lag + 1)]
+        for t in range(1, len(ts))
+    ])
+
+
+def _midpoint_ties(ts, max_lag, mean_diff):
+    """Number of (t, k) whose target sits exactly between two prefix rows."""
+    ties = 0
+    for t in range(1, len(ts)):
+        for k in range(1, max_lag + 1):
+            d = np.abs(ts[:t] - (ts[t] - k * mean_diff))
+            ties += int((d == d.min()).sum() > 1)
+    return ties
+
+
+def test_lag_table_equals_reference_scan():
+    """_lag_table (one searchsorted per config) must pick the same row as
+    the reference's argmin scan at every step and lag: on the a2 and c2
+    timestamp walks, and on constructed series whose targets land exactly
+    on midpoints (argmin's first-index rule sends a tie to the earlier
+    row)."""
+    from synth_timeseries_data_spark.generation import irregular_timestamps
+    from synth_timeseries_data_spark.generation.kernel import (
+        _adaptive_timestamps_noreseed,
+        _lag_table,
+    )
+
+    np.random.seed(42)
+    c2_ts = _adaptive_timestamps_noreseed(1000)
+    walks = [(irregular_timestamps(1000, seed=42), 4), (c2_ts, 4)]
+    for ts, max_lag in walks:
+        md = np.mean(np.diff(ts))
+        assert (_lag_table(ts, max_lag, md)[1:] == _lag_scan(ts, max_lag, md)).all()
+
+    rng = np.random.RandomState(7)
+    tied = [
+        (np.arange(300, dtype=float), 3, 0.5),
+        (np.arange(300, dtype=float), 3, 1.5),
+        (np.cumsum(rng.randint(1, 3, 300) * 0.5), 4, 0.75),
+    ]
+    for ts, max_lag, md in tied:
+        assert _midpoint_ties(ts, max_lag, md) > 0
+        assert (_lag_table(ts, max_lag, md)[1:] == _lag_scan(ts, max_lag, md)).all()
+
+
 def test_a2_exogenous_noise_extra():
     """Quirk Q3: 6-var X5's equation is the literal 'noise_extra' string —
     X5 must be pure noise (uncorrelated with its own past beyond chance)."""
@@ -403,12 +451,15 @@ def test_c2c_u_linear_quirk():
     """c2c.py:179-187: the ``expr == 'U[t]'`` test fires before the power
     branch, so declared U[t]^2 terms contribute coef*U[t] LINEARLY. Verify
     the kernel reproduces the quirk (and therefore the corpus) rather than
-    the declared square: X3 = 0.35*X4^2 + 0.3*U + trend + season + e3."""
-    from synth_timeseries_data_spark.generation.kernel_confounded import _ev_trig_u
+    the declared square: X3 = 0.35*X4^2 + 0.3*U + trend + season + e3.
+    The term goes through the compiled program the c2c/d3c kernels run."""
+    from synth_timeseries_data_spark.generation.kernel import _compile_trig, _eval_trig
 
+    [(vi, terms)] = _compile_trig(["X3[t] = 0.3 * U[t]^2"], "c2c", None, None)
+    assert vi == 2 and terms[0][0] == "u"
     U = np.array([0.0, 0.0, 3.0])
     X = np.zeros((3, 4))
-    assert _ev_trig_u("0.3 * U[t]^2", X, U, 2, []) == pytest.approx(0.9)  # not 2.7
+    assert _eval_trig(terms, vi, X, U, 2, [2], None) == pytest.approx(0.9)  # not 2.7
 
 
 def test_d1c_bitexact_both_files():

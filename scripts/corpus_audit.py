@@ -235,24 +235,16 @@ def frame_digest(df: pd.DataFrame) -> str:
 
 
 def kernel_digests() -> list[dict]:
-    """One row per config of the four sweep grids, in grid order: the long-
-    form frame (`_melt_wide` / `_melt_pair`) the sweep emits for it, as a
-    row count and a `frame_digest`."""
-    from synth_timeseries_data_spark.queries import generation as G
+    """One row per config of the generation grid, in grid order: the long-
+    form frame the sweep emits for it (`generate_config`), as a row count
+    and a `frame_digest`."""
+    from synth_timeseries_data_spark.queries.generation import generate_config, grid
 
-    umbrellas = (
-        (G._complete_grid, G._COMPLETE_KERNELS, False),
-        (G._confounded_grid, G._CONFOUNDED_KERNELS, False),
-        (G._missing_grid, G._PAIR_KERNELS, True),
-        (G._missing_confounded_grid, G._PAIR_CONFOUNDED_KERNELS, True),
-    )
     out = []
-    for grid, kernels, pair in umbrellas:
-        for fam, cid, n, v, lag, noise, p1, p2, p3 in grid():
-            res = kernels[fam](n, v, lag, noise, p1, p2, p3)
-            long = G._melt_pair(fam, cid, *res) if pair else G._melt_wide(fam, cid, res)
-            out.append({"family": fam, "config_id": cid,
-                        "rows": str(len(long)), "sha256": frame_digest(long)})
+    for row in grid():
+        long = generate_config(row)
+        out.append({"family": row[0], "config_id": row[1],
+                    "rows": str(len(long)), "sha256": frame_digest(long)})
     return out
 
 

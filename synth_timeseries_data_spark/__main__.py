@@ -14,9 +14,11 @@ writes a partition-pruned dataset tree:
 `generate` writes long-form series partitioned by (family, config_id) —
 one directory per config like the reference's tree, readable back with a
 partition-pruned scan — plus the ground-truth structure sidecar
-(sinks.write_structure_json). Masking families (d1/d2/d3 and confounded
-twins) land under out/masked with the (value_complete, value_observed)
-pair schema; complete-data families under out/complete.
+(sinks.write_structure_json). Each umbrella directory is written once and
+holds both twins: masking families (d1/d2/d3 and their confounded twins)
+land under out/masked with the (value_complete, value_observed) pair
+schema, complete-data families (a1..c2 and their confounded twins) under
+out/complete.
 """
 
 from __future__ import annotations
@@ -24,22 +26,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-
-
-def _families_of(grid_fn) -> set[str]:
-    return {row[0] for row in grid_fn()}
-
-
-def _sweep_specs():
-    """(label, grid_fn, group_factory(kernels), schema) per umbrella."""
-    from .queries import generation as G
-
-    return (
-        ("complete", G._complete_grid, G._complete_group(G._COMPLETE_KERNELS), G._COMPLETE_SCHEMA),
-        ("complete", G._confounded_grid, G._complete_group(G._CONFOUNDED_KERNELS), G._COMPLETE_SCHEMA),
-        ("masked", G._missing_grid, G._pair_group(G._PAIR_KERNELS), G._PAIR_SCHEMA),
-        ("masked", G._missing_confounded_grid, G._pair_group(G._PAIR_CONFOUNDED_KERNELS), G._PAIR_SCHEMA),
-    )
 
 
 def cmd_list(_args) -> int:
@@ -71,36 +57,30 @@ def cmd_query(args) -> int:
 
 
 def cmd_generate(args) -> int:
+    from .queries import generation as G
     from .session import get_session
     from .sinks import write_structure_json
 
+    families = (
+        list(G._FAMILIES) if args.families == "all"
+        else args.families.split(",")
+    )
+    if missing := set(families) - set(G._FAMILIES):
+        print(f"unknown families: {sorted(missing)}", file=sys.stderr)
+        return 2
     spark = get_session()
-    wanted = None if args.families == "all" else set(args.families.split(","))
-    known: set[str] = set()
-    wrote_any = False
-    from .queries.generation import _sweep
-
-    for label, grid_fn, group_fn, schema in _sweep_specs():
-        fams = _families_of(grid_fn)
-        known |= fams
-        rows = [r for r in grid_fn() if wanted is None or r[0] in wanted]
+    for umbrella in G._SCHEMA:
+        rows = G.grid([f for f in families if G._FAMILIES[f][0] == umbrella])
         if not rows:
             continue
-        out = os.path.join(args.out, label)
-        df = _sweep(spark, rows, group_fn, schema)
+        out = os.path.join(args.out, umbrella)
+        df = G.sweep(spark, rows)
         writer = df.write.mode("overwrite").partitionBy("family", "config_id")
         if args.format == "csv":
             writer.option("header", True).option("nullValue", "").csv(out)
         else:
             writer.parquet(out)
         print(f"wrote {len(rows)} configs -> {out}")
-        wrote_any = True
-    if wanted is not None and (missing := wanted - known):
-        print(f"unknown families: {sorted(missing)}", file=sys.stderr)
-        return 2
-    if not wrote_any:
-        print("no configs matched", file=sys.stderr)
-        return 2
     write_structure_json(spark, os.path.join(args.out, "structure"))
     print(f"wrote structure sidecar -> {os.path.join(args.out, 'structure')}")
     return 0

@@ -163,9 +163,19 @@ def _a2_equations(n_vars: int, max_lag: int) -> list[str]:
     return []
 
 
+# Families that declare no registry of their own and run another family's
+# equations: b1 (reverse-derived from the corpus, no committed b1.py) and
+# d2 read b2's, d1 reads a1's, d3 reads c2's; a2c and b2c declare
+# verbatim-identical registries to a1c and b1c (Codes/a2c.py:19,
+# Codes/b2c.py:19).
+_SHARES = {"b1": "b2", "d1": "a1", "d2": "b2", "d3": "c2",
+           "a2c": "a1c", "b2c": "b1c"}
+
+
 def equations(family: str, n_vars: int, max_lag: int) -> list[str]:
     """DSL strings for a configuration; [] for unknown configs (the
     reference's registries return [] off-grid, a1.py:106)."""
+    family = _SHARES.get(family, family)
     if family == "a1":
         return list(_A1.get((n_vars, max_lag), []))
     if family == "b2":
@@ -202,27 +212,9 @@ def equations(family: str, n_vars: int, max_lag: int) -> list[str]:
             ]
             return add8 + add6 + core
         return []
-    if family in _CONFOUNDED_ALIAS:
-        from .registry_confounded import CONFOUNDED_REG
+    from .registry_confounded import CONFOUNDED_REG
 
-        key = (_CONFOUNDED_ALIAS[family], n_vars, max_lag)
-        return list(CONFOUNDED_REG.get(key, []))
-    return []
-
-
-# Confounded twins; a2c and b2c declare verbatim-identical registries to
-# a1c and b1c respectively (Codes/a2c.py:19, Codes/b2c.py:19).
-_CONFOUNDED_ALIAS = {
-    "a1c": "a1c",
-    "a2c": "a1c",
-    "b1c": "b1c",
-    "b2c": "b1c",
-    "c1c": "c1c",
-    "c2c": "c2c",
-    "d1c": "d1c",
-    "d2c": "d2c",
-    "d3c": "d3c",
-}
+    return list(CONFOUNDED_REG.get((family, n_vars, max_lag), []))
 
 
 def _rows() -> list[tuple[str, int, int, int, str]]:

@@ -671,9 +671,9 @@ def generate_poly_config(
     against all 72 Datasets/B1 CSVs (tests/test_generation.py)."""
     from ..dsl.registry import equations
 
-    eqs = equations("b2", n_vars, max_lag)
+    eqs = equations("b1", n_vars, max_lag)
     if not eqs:
-        raise ValueError(f"no b2 registry for ({n_vars}, {max_lag})")
+        raise ValueError(f"no b1 registry for ({n_vars}, {max_lag})")
     links = _parse_poly_links(eqs)
 
     _seed_all(seed)
@@ -961,7 +961,7 @@ def generate_mcar_config(
     uniform per cell in row-major order."""
     from ..dsl.registry import equations
 
-    eqs = equations("a1", n_vars, max_lag)  # d1 shares the a1 registry
+    eqs = equations("d1", n_vars, max_lag)
     if not eqs:
         raise ValueError(f"no linear registry for ({n_vars}, {max_lag})")
 
@@ -1038,7 +1038,7 @@ def generate_block_missing_config(
     """(missing_df, complete_df), bit-exact vs the D2 seed-42 CSVs."""
     from ..dsl.registry import equations
 
-    links = _parse_poly_links(equations("b2", n_vars, max_lag))
+    links = _parse_poly_links(equations("d2", n_vars, max_lag))
     if not links:
         raise ValueError(f"no poly registry for ({n_vars}, {max_lag})")
     _seed_all(seed, "global")  # t-stream idiom of this family's script (see _seed_all)
@@ -1130,9 +1130,9 @@ def generate_mixed_missing_config(
     reference's seed-42 CSVs."""
     from ..dsl.registry import equations
 
-    eqs = equations("c2", n_vars, max_lag)  # d3 shares c2's registry
+    eqs = equations("d3", n_vars, max_lag)
     if not eqs:
-        raise ValueError(f"no c2/d3 registry for ({n_vars}, {max_lag})")
+        raise ValueError(f"no d3 registry for ({n_vars}, {max_lag})")
     _seed_all(seed)
 
     def _noise() -> np.ndarray:

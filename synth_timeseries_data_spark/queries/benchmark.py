@@ -376,9 +376,9 @@ def predictions_from_edges(edges: DataFrame, family: str, n_vars: int,
 
 
 def _grid_rows(families):
-    from .generation import _complete_grid
+    from .generation import grid
 
-    rows = [r for r in _complete_grid() if r[0] in families]
+    rows = grid(families)
     if not rows:
         raise ValueError(f"no scoreable configs for families {families}")
     return rows
@@ -408,7 +408,7 @@ def benchmark_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_benchmark.py's independent numpy re-scoring and by the
     attested component queries it composes (parse_edges,
     edge_confusion/edge_scores/shd_xor/shd_reversal semantics)."""
-    from .generation import _COMPLETE_KERNELS, _COMPLETE_SCHEMA, _complete_group, _sweep
+    from .generation import sweep
 
     rows = [r for r in _grid_rows(_SCOREABLE) if r[2] == 500]
     # No localCheckpoint: although the scoring SQL references the series
@@ -418,8 +418,7 @@ def benchmark_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # executes exactly once; a materializing checkpoint was A/B'd and
     # REJECTED in the r10 optimization round (2.46 vs 2.20 s interleaved
     # min-of-5 — it only adds a blocking serialization pass).
-    gen = _sweep(spark, rows, _complete_group(_COMPLETE_KERNELS),
-                 _COMPLETE_SCHEMA)
+    gen = sweep(spark, rows)
     return score_generated(spark, gen, rows)
 
 
@@ -429,7 +428,7 @@ def run_benchmark(spark: SparkSession, families, out: str) -> dict:
     family/config_id), score the persisted data (not the in-memory frame —
     the benchmark must measure what a consumer would read), and write
     scores + the rollup cube. Returns a summary dict."""
-    from .generation import _COMPLETE_KERNELS, _COMPLETE_SCHEMA, _complete_group, _sweep
+    from .generation import sweep
 
     bad = set(families) - set(_SCOREABLE)
     if bad:
@@ -437,9 +436,8 @@ def run_benchmark(spark: SparkSession, families, out: str) -> dict:
             f"families without DSL ground truth: {sorted(bad)} "
             f"(scoreable: {_SCOREABLE})"
         )
-    rows = _grid_rows(tuple(families))
-    gen = _sweep(spark, rows, _complete_group(_COMPLETE_KERNELS),
-                 _COMPLETE_SCHEMA)
+    rows = _grid_rows(families)
+    gen = sweep(spark, rows)
     corpus_dir = os.path.join(out, "complete")
     gen.write.mode("overwrite").partitionBy("family", "config_id").parquet(
         corpus_dir

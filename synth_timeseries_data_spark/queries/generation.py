@@ -7,14 +7,20 @@ kernels in ``mapInPandas``, so a 1000-executor cluster generates millions of
 configs with zero coordination — the sequential recurrence stays inside one
 kernel call exactly where it belongs (SURVEY.md §4.3.1).
 
-All 17 corpus families are exposed through FOUR umbrella queries rather than
-one query per family: the family is a grid axis, not an API. Each umbrella
-unions its families' factorial grids (with a ``family`` discriminator column
-and generic ``p1..p3`` parameter slots) and dispatches to the right kernel
-inside the pandas group function. Seeded-numpy streams are not expressible
-in SQL, so these queries carry no DuckDB oracle (driver records a rows-only
-check); numeric fidelity is pinned by tests/test_generation.py bit-exact
-against the reference's seed-42 corpus CSVs instead.
+All 18 corpus families live in one table, ``_FAMILIES``: each row names the
+family's umbrella and its kernel, and ``_COMBOS`` holds its factorial grid.
+The umbrella fixes the output schema: "complete" families emit one
+``value`` per cell, "masked" families the (``value_complete``,
+``value_observed``) pair. ``grid`` turns families into grid rows (with
+generic ``p1..p3`` parameter slots), ``generate_config`` turns one row into
+its long-form frame, and ``sweep`` runs rows of one umbrella as a Spark
+job. The four umbrella queries below are ``sweep`` over their families;
+the family is a grid axis, not an API. Seeded-numpy streams are not
+expressible in SQL, so these queries carry no DuckDB oracle (driver records
+a rows-only check); numeric fidelity is pinned by tests/test_generation.py
+bit-exact against the reference's seed-42 corpus CSVs and, where that
+corpus is absent, by the per-config kernel digests
+(tests/test_kernel_digests.py, all 530 grid configs).
 """
 
 from __future__ import annotations
@@ -27,144 +33,186 @@ from ..generation import kernel as K
 from ..generation import kernel_confounded as KC
 from . import register
 
-# Grid rows are (family, config_id, n, n_vars, max_lag, noise, p1, p2, p3);
-# noise/p1..p3 are per-family (NULL where unused).
-_GRID_SCHEMA = (
-    "family string, config_id string, n int, n_vars int, max_lag int, "
-    "noise string, p1 double, p2 double, p3 double"
-)
+# Output schema of each umbrella's long form.
+_SCHEMA = {
+    "complete": "family string, config_id string, t double, var string, value double",
+    "masked": (
+        "family string, config_id string, t double, var string, "
+        "value_complete double, value_observed double"
+    ),
+}
 
-_COMPLETE_SCHEMA = "family string, config_id string, t double, var string, value double"
-_PAIR_SCHEMA = (
-    "family string, config_id string, t double, var string, "
-    "value_complete double, value_observed double"
-)
-
-# family -> fn(n, n_vars, max_lag, noise, p1, p2, p3) -> wide DataFrame
-# (complete-data families) or (missing, complete) pair (masking families).
-_COMPLETE_KERNELS = {
+# family -> (umbrella, fn(n, n_vars, max_lag, noise, p1, p2, p3)), in grid
+# order. A "complete" kernel returns the wide frame, a "masked" kernel the
+# (missing, complete) pair.
+_FAMILIES = {
     # A1 linear regular (a1.py:308-344)
-    "a1": lambda n, v, l, noise, p1, p2, p3: K.generate_linear_config(n, v, l, noise, seed=42),
+    "a1": ("complete", lambda n, v, l, noise, p1, p2, p3: K.generate_linear_config(n, v, l, noise, seed=42)),
     # A2 linear irregular (a2.py:306-325)
-    "a2": lambda n, v, l, noise, p1, p2, p3: K.generate_irregular_config(n, v, l, noise, seed=42),
+    "a2": ("complete", lambda n, v, l, noise, p1, p2, p3: K.generate_irregular_config(n, v, l, noise, seed=42)),
     # B1 poly regular — kernel reverse-derived from the corpus (no committed
     # b1.py; equations shared with b2, Datasets/B1 bit-exact)
-    "b1": lambda n, v, l, noise, p1, p2, p3: K.generate_poly_config(n, v, l, noise, seed=42),
+    "b1": ("complete", lambda n, v, l, noise, p1, p2, p3: K.generate_poly_config(n, v, l, noise, seed=42)),
     # B2 poly + mixture noise + irregular (b2.py:328-365); p1 = mix_ratio
-    "b2": lambda n, v, l, noise, p1, p2, p3: K.generate_poly_mixture_config(n, v, l, p1, seed=42),
+    "b2": ("complete", lambda n, v, l, noise, p1, p2, p3: K.generate_poly_mixture_config(n, v, l, p1, seed=42)),
     # C1 trig + trend + season (c1.py:423-454); p1/p2 = trend/seasonal strength
-    "c1": lambda n, v, l, noise, p1, p2, p3: K.generate_trend_season_config(n, v, l, p1, p2, seed=42),
+    "c1": ("complete", lambda n, v, l, noise, p1, p2, p3: K.generate_trend_season_config(n, v, l, p1, p2, seed=42)),
     # C2 trig irregular, continuous-time seasonality (c2.py:354-392)
-    "c2": lambda n, v, l, noise, p1, p2, p3: K.generate_trig_irregular_config(n, v, l, noise, seed=42),
-}
-
-_CONFOUNDED_KERNELS = {
+    "c2": ("complete", lambda n, v, l, noise, p1, p2, p3: K.generate_trig_irregular_config(n, v, l, noise, seed=42)),
     # A1C linear + U, retry-queue contemporaneous scheduling (a1c.py:116-277)
-    "a1c": lambda n, v, l, noise, p1, p2, p3: K.generate_confounded_config(n, v, l, noise, seed=42),
+    "a1c": ("complete", lambda n, v, l, noise, p1, p2, p3: K.generate_confounded_config(n, v, l, noise, seed=42)),
     # A2C linear + U irregular — pure-noise quirk replicated (a2c.py:227-231)
-    "a2c": lambda n, v, l, noise, p1, p2, p3: KC.generate_confounded_irregular_config(n, v, l, noise, seed=42),
+    "a2c": ("complete", lambda n, v, l, noise, p1, p2, p3: KC.generate_confounded_irregular_config(n, v, l, noise, seed=42)),
     # B1C poly + U^2 regular (b1c.py:355-390)
-    "b1c": lambda n, v, l, noise, p1, p2, p3: KC.generate_confounded_poly_config(n, v, l, noise, seed=42),
+    "b1c": ("complete", lambda n, v, l, noise, p1, p2, p3: KC.generate_confounded_poly_config(n, v, l, noise, seed=42)),
     # B2C poly + U^2 + mixture irregular (b2c.py:241-280); p1 = mix_ratio
-    "b2c": lambda n, v, l, noise, p1, p2, p3: KC.generate_confounded_poly_mixture_config(n, v, l, p1, seed=42),
+    "b2c": ("complete", lambda n, v, l, noise, p1, p2, p3: KC.generate_confounded_poly_mixture_config(n, v, l, p1, seed=42)),
     # C1C trig + trend/season + linear U (c1c.py)
-    "c1c": lambda n, v, l, noise, p1, p2, p3: KC.generate_confounded_trend_season_config(n, v, l, p1, p2, seed=42),
+    "c1c": ("complete", lambda n, v, l, noise, p1, p2, p3: KC.generate_confounded_trend_season_config(n, v, l, p1, p2, seed=42)),
     # C2C trig irregular + U, linear-U quirk (c2c.py:330-370)
-    "c2c": lambda n, v, l, noise, p1, p2, p3: KC.generate_confounded_trig_irregular_config(n, v, l, noise, seed=42),
-}
-
-_PAIR_KERNELS = {
+    "c2c": ("complete", lambda n, v, l, noise, p1, p2, p3: KC.generate_confounded_trig_irregular_config(n, v, l, noise, seed=42)),
     # D1 linear + MCAR, two-pass memo-shadowing bug replicated (d1.py:380-419)
-    "d1": lambda n, v, l, noise, p1, p2, p3: K.generate_mcar_config(n, v, l, noise, p1, seed=42),
+    "d1": ("masked", lambda n, v, l, noise, p1, p2, p3: K.generate_mcar_config(n, v, l, noise, p1, seed=42)),
     # D2 poly irregular + Markov burst blocks (d2.py:453-470); p1 = block_prob
-    "d2": lambda n, v, l, noise, p1, p2, p3: K.generate_block_missing_config(n, v, l, noise, p1, seed=42),
+    "d2": ("masked", lambda n, v, l, noise, p1, p2, p3: K.generate_block_missing_config(n, v, l, noise, p1, seed=42)),
     # D3 trig + mixture + MCAR ∪ block (d3.py:389-436); p1/p2/p3 = ratio/mcar/block
-    "d3": lambda n, v, l, noise, p1, p2, p3: K.generate_mixed_missing_config(n, v, l, p1, p2, p3, seed=42),
-}
-
-_PAIR_CONFOUNDED_KERNELS = {
+    "d3": ("masked", lambda n, v, l, noise, p1, p2, p3: K.generate_mixed_missing_config(n, v, l, p1, p2, p3, seed=42)),
     # D1C linear + U + MCAR on X only, U observed (d1c.py:418-460)
-    "d1c": lambda n, v, l, noise, p1, p2, p3: KC.generate_confounded_mcar_config(n, v, l, noise, p1, seed=42),
+    "d1c": ("masked", lambda n, v, l, noise, p1, p2, p3: KC.generate_confounded_mcar_config(n, v, l, noise, p1, seed=42)),
     # D2C poly irregular + U^2 + blocks on X only (d2c.py:505-560)
-    "d2c": lambda n, v, l, noise, p1, p2, p3: KC.generate_confounded_block_missing_config(n, v, l, noise, p1, seed=42),
+    "d2c": ("masked", lambda n, v, l, noise, p1, p2, p3: KC.generate_confounded_block_missing_config(n, v, l, noise, p1, seed=42)),
     # D3C trig + mixture + MCAR ∪ block + U, warmup double-draw (d3c.py:440-500)
-    "d3c": lambda n, v, l, noise, p1, p2, p3: KC.generate_confounded_mixed_missing_config(n, v, l, p1, p2, p3, seed=42),
+    "d3c": ("masked", lambda n, v, l, noise, p1, p2, p3: KC.generate_confounded_mixed_missing_config(n, v, l, p1, p2, p3, seed=42)),
 }
 
+_NOISES = ("gaussian", "student_t")
 
-def _melt_wide(fam: str, config_id: str, wide: pd.DataFrame) -> pd.DataFrame:
-    """Wide kernel frame -> long (family, config_id, t, var, value), one
+# family -> factorial grid of (n, n_vars, max_lag, noise, p1, p2, p3).
+_COMBOS = {
+    "a1": [(n, v, lag, noise, None, None, None)
+           for n in (500, 1000, 3000, 5000) for v in (4, 6, 8)
+           for lag in (2, 3, 4) for noise in _NOISES],
+    "a2": [(n, v, lag, noise, None, None, None)
+           for n in (500, 1000) for v in (4, 6, 8)
+           for lag in (2, 3) for noise in _NOISES],
+    "b1": [(n, v, lag, noise, None, None, None)
+           for n in (500, 1000) for v in (4, 6, 8)
+           for lag in (2, 3, 4) for noise in _NOISES],
+    "b2": [(n, v, lag, None, r, None, None)
+           for n in (500, 1000) for v in (4, 6)
+           for lag in (2, 3) for r in (0.3, 0.5, 0.7)],
+    "c1": [(n, v, lag, None, ts, ss, None)
+           for n in (500, 1000) for v in (4, 6, 8)
+           for lag in (2, 3, 4)
+           for ts in (0.01, 0.02) for ss in (0.3, 0.5)],
+    "c2": [(n, v, lag, noise, None, None, None)
+           for n in (500, 1000) for v in (4, 6)
+           for lag in (2, 3) for noise in _NOISES],
+    "a1c": [(n, 4, lag, noise, None, None, None)
+            for n in (500, 1000, 3000) for lag in (2, 3, 4)
+            for noise in _NOISES],
+    "a2c": [(n, v, lag, noise, None, None, None)
+            for n in (500, 1000) for v in (4, 6)
+            for lag in (2, 3) for noise in _NOISES],
+    "b1c": [(n, v, lag, noise, None, None, None)
+            for n in (500, 1000) for v in (4, 6)
+            for lag in (2, 3) for noise in _NOISES],
+    "b2c": [(n, 4, lag, None, r, None, None)
+            for n in (500, 1000) for lag in (2, 3)
+            for r in (0.3, 0.5, 0.7)],
+    "c1c": [(n, 4, lag, None, ts, ss, None)
+            for n in (500, 1000) for lag in (2, 3)
+            for ts in (0.01, 0.02) for ss in (0.3, 0.5)],
+    "d1": [(n, 4, lag, noise, r, None, None)
+           for n in (500, 1000) for lag in (2, 3)
+           for noise in _NOISES for r in (0.1, 0.2, 0.3)],
+    "d2": [(n, 4, lag, noise, p, None, None)
+           for n in (500, 1000) for lag in (2, 3)
+           for noise in _NOISES for p in (0.1, 0.2, 0.3)],
+    "d3": [(n, 4, lag, None, r, m, b)
+           for n in (500, 1000) for lag in (2, 3)
+           for r in (0.3, 0.5, 0.7) for m in (0.05, 0.1)
+           for b in (0.05, 0.1)],
+}
+# These confounded twins sweep their base family's grid.
+_COMBOS.update(c2c=_COMBOS["c2"], d1c=_COMBOS["d1"], d2c=_COMBOS["d2"],
+               d3c=_COMBOS["d3"])
+
+
+def _rows(fam, combos):
+    """combos: iterable of (n, v, lag, noise, p1, p2, p3); builds grid rows
+    (family, config_id, n, n_vars, max_lag, noise, p1, p2, p3) with a
+    family-prefixed config id."""
+    out = []
+    for n, v, lag, noise, p1, p2, p3 in combos:
+        bits = [fam, f"n{n}", f"v{v}", f"l{lag}"]
+        if noise is not None:
+            bits.append(noise)
+        for tag, p in (("p1", p1), ("p2", p2), ("p3", p3)):
+            if p is not None:
+                bits.append(f"{tag}{int(round(p * 100))}")
+        out.append((fam, "_".join(bits), n, v, lag, noise, p1, p2, p3))
+    return out
+
+
+def grid(families=_FAMILIES) -> list[tuple]:
+    """Grid rows of ``families``, in table order."""
+    return [r for fam in _FAMILIES if fam in families
+            for r in _rows(fam, _COMBOS[fam])]
+
+
+def _melt(fam: str, config_id: str, complete: pd.DataFrame,
+          missing: pd.DataFrame | None = None) -> pd.DataFrame:
+    """Wide kernel frame(s) -> long (family, config_id, t, var, value), one
     block of rows per variable in column order (what ``DataFrame.melt``
     gives), built in one go: tiled time, repeated names, column-major
-    values."""
-    cols = [c for c in wide.columns if c != "time"]
-    return pd.DataFrame({
-        "family": fam,
-        "config_id": config_id,
-        "t": np.tile(wide["time"].to_numpy(dtype="float64"), len(cols)),
-        "var": np.repeat(np.array(cols, dtype=object), len(wide)),
-        "value": wide[cols].to_numpy().ravel(order="F"),
-    })
-
-
-def _melt_pair(
-    fam: str, config_id: str, missing: pd.DataFrame, complete: pd.DataFrame
-) -> pd.DataFrame:
-    """(missing, complete) kernel frames -> long rows like ``_melt_wide``
-    with both values side by side."""
+    values. With ``missing``, the value pair (value_complete,
+    value_observed) side by side instead."""
     cols = [c for c in complete.columns if c != "time"]
-    return pd.DataFrame({
+    out = {
         "family": fam,
         "config_id": config_id,
         "t": np.tile(complete["time"].to_numpy(dtype="float64"), len(cols)),
         "var": np.repeat(np.array(cols, dtype=object), len(complete)),
-        "value_complete": complete[cols].to_numpy().ravel(order="F"),
-        "value_observed": missing[cols].to_numpy().ravel(order="F"),
-    })
+    }
+    values = complete[cols].to_numpy().ravel(order="F")
+    if missing is None:
+        out["value"] = values
+    else:
+        out["value_complete"] = values
+        out["value_observed"] = missing[cols].to_numpy().ravel(order="F")
+    return pd.DataFrame(out)
 
 
-def _run_kernel(kernels, pdf: pd.DataFrame):
-    cfg = pdf.iloc[0]
-    return cfg, kernels[cfg["family"]](
-        int(cfg["n"]), int(cfg["n_vars"]), int(cfg["max_lag"]),
-        cfg["noise"], cfg["p1"], cfg["p2"], cfg["p3"],
-    )
+def generate_config(row) -> pd.DataFrame:
+    """One grid row -> the long-form frame the sweep emits for it."""
+    fam, cid, n, v, lag, noise, p1, p2, p3 = row
+    umbrella, kernel = _FAMILIES[fam]
+    out = kernel(n, v, lag, noise, p1, p2, p3)
+    if umbrella == "masked":
+        missing, complete = out
+        return _melt(fam, cid, complete, missing)
+    return _melt(fam, cid, out)
 
 
-# Both group runners yield ONE concatenated frame per incoming batch (= per
-# task with the packed-bin layout), not one per config: each yield becomes
-# its own Arrow record batch on the wire, and ~8 tiny per-config batches
-# per task measured ~15% slower than a single ~60k-row batch (schema +
-# flush overhead per batch). Memory stays bounded by the bin's output —
-# tens of MB at this grid, by construction of the LPT bins.
-
-
-def _complete_group(kernels):
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for i in range(len(pdf)):
-                cfg, wide = _run_kernel(kernels, pdf.iloc[[i]])
-                out.append(_melt_wide(cfg["family"], cfg["config_id"], wide))
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    return gen
-
-
-def _pair_group(kernels):
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for i in range(len(pdf)):
-                cfg, (missing, complete) = _run_kernel(kernels, pdf.iloc[[i]])
-                out.append(
-                    _melt_pair(cfg["family"], cfg["config_id"], missing, complete)
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    return gen
+# The runner yields ONE concatenated frame per incoming batch (= per task
+# with the packed-bin layout), not one per config: each yield becomes its
+# own Arrow record batch on the wire, and ~8 tiny per-config batches per
+# task measured ~15% slower than a single ~60k-row batch (schema + flush
+# overhead per batch). Memory stays bounded by the bin's output — tens of
+# MB at this grid, by construction of the LPT bins.
+def _generate_batches(batches):
+    for pdf in batches:
+        out = []
+        for i in range(len(pdf)):
+            cfg = pdf.iloc[i]
+            out.append(generate_config((
+                cfg["family"], cfg["config_id"],
+                int(cfg["n"]), int(cfg["n_vars"]), int(cfg["max_lag"]),
+                cfg["noise"], cfg["p1"], cfg["p2"], cfg["p3"],
+            )))
+        if out:
+            yield pd.concat(out, ignore_index=True)
 
 
 # Measured kernel cost weights: µs of kernel wall time per n·n_vars cell,
@@ -208,7 +256,7 @@ def _config_cost(r) -> float:
     serialization alone — and the ~5 ms fixed per-config overhead (kernel
     dispatch + pandas assembly), which keeps bins from hoarding many tiny
     configs."""
-    w = _COST_W.get((r[0], r[5]), 8.0)
+    w = _COST_W[(r[0], r[5])]
     melt = 5.0 if r[0].startswith("d") else 2.5
     return (w + melt) * r[2] * r[3] + 5000.0
 
@@ -290,101 +338,13 @@ def _sweep(spark: SparkSession, rows, group_fn, out_schema) -> DataFrame:
     return grid.mapInPandas(group_fn, out_schema)
 
 
-def _rows(fam, combos):
-    """combos: iterable of (n, v, lag, noise, p1, p2, p3); builds grid rows
-    with a family-prefixed config id."""
-    out = []
-    for n, v, lag, noise, p1, p2, p3 in combos:
-        bits = [fam, f"n{n}", f"v{v}", f"l{lag}"]
-        if noise is not None:
-            bits.append(noise)
-        for tag, p in (("p1", p1), ("p2", p2), ("p3", p3)):
-            if p is not None:
-                bits.append(f"{tag}{int(round(p * 100))}")
-        out.append(("_".join(bits), fam, n, v, lag, noise, p1, p2, p3))
-    # reorder to match _GRID_SCHEMA (family first)
-    return [(f, cid, n, v, lag, noise, p1, p2, p3)
-            for cid, f, n, v, lag, noise, p1, p2, p3 in out]
-
-
-_NOISES = ("gaussian", "student_t")
-
-
-def _complete_grid():
-    rows = []
-    rows += _rows("a1", [(n, v, lag, noise, None, None, None)
-                         for n in (500, 1000, 3000, 5000) for v in (4, 6, 8)
-                         for lag in (2, 3, 4) for noise in _NOISES])
-    rows += _rows("a2", [(n, v, lag, noise, None, None, None)
-                         for n in (500, 1000) for v in (4, 6, 8)
-                         for lag in (2, 3) for noise in _NOISES])
-    rows += _rows("b1", [(n, v, lag, noise, None, None, None)
-                         for n in (500, 1000) for v in (4, 6, 8)
-                         for lag in (2, 3, 4) for noise in _NOISES])
-    rows += _rows("b2", [(n, v, lag, None, r, None, None)
-                         for n in (500, 1000) for v in (4, 6)
-                         for lag in (2, 3) for r in (0.3, 0.5, 0.7)])
-    rows += _rows("c1", [(n, v, lag, None, ts, ss, None)
-                         for n in (500, 1000) for v in (4, 6, 8)
-                         for lag in (2, 3, 4)
-                         for ts in (0.01, 0.02) for ss in (0.3, 0.5)])
-    rows += _rows("c2", [(n, v, lag, noise, None, None, None)
-                         for n in (500, 1000) for v in (4, 6)
-                         for lag in (2, 3) for noise in _NOISES])
-    return rows
-
-
-def _confounded_grid():
-    rows = []
-    rows += _rows("a1c", [(n, 4, lag, noise, None, None, None)
-                          for n in (500, 1000, 3000) for lag in (2, 3, 4)
-                          for noise in _NOISES])
-    rows += _rows("a2c", [(n, v, lag, noise, None, None, None)
-                          for n in (500, 1000) for v in (4, 6)
-                          for lag in (2, 3) for noise in _NOISES])
-    rows += _rows("b1c", [(n, v, lag, noise, None, None, None)
-                          for n in (500, 1000) for v in (4, 6)
-                          for lag in (2, 3) for noise in _NOISES])
-    rows += _rows("b2c", [(n, 4, lag, None, r, None, None)
-                          for n in (500, 1000) for lag in (2, 3)
-                          for r in (0.3, 0.5, 0.7)])
-    rows += _rows("c1c", [(n, 4, lag, None, ts, ss, None)
-                          for n in (500, 1000) for lag in (2, 3)
-                          for ts in (0.01, 0.02) for ss in (0.3, 0.5)])
-    rows += _rows("c2c", [(n, v, lag, noise, None, None, None)
-                          for n in (500, 1000) for v in (4, 6)
-                          for lag in (2, 3) for noise in _NOISES])
-    return rows
-
-
-def _missing_grid():
-    rows = []
-    rows += _rows("d1", [(n, 4, lag, noise, r, None, None)
-                         for n in (500, 1000) for lag in (2, 3)
-                         for noise in _NOISES for r in (0.1, 0.2, 0.3)])
-    rows += _rows("d2", [(n, 4, lag, noise, p, None, None)
-                         for n in (500, 1000) for lag in (2, 3)
-                         for noise in _NOISES for p in (0.1, 0.2, 0.3)])
-    rows += _rows("d3", [(n, 4, lag, None, r, m, b)
-                         for n in (500, 1000) for lag in (2, 3)
-                         for r in (0.3, 0.5, 0.7) for m in (0.05, 0.1)
-                         for b in (0.05, 0.1)])
-    return rows
-
-
-def _missing_confounded_grid():
-    rows = []
-    rows += _rows("d1c", [(n, 4, lag, noise, r, None, None)
-                          for n in (500, 1000) for lag in (2, 3)
-                          for noise in _NOISES for r in (0.1, 0.2, 0.3)])
-    rows += _rows("d2c", [(n, 4, lag, noise, p, None, None)
-                          for n in (500, 1000) for lag in (2, 3)
-                          for noise in _NOISES for p in (0.1, 0.2, 0.3)])
-    rows += _rows("d3c", [(n, 4, lag, None, r, m, b)
-                          for n in (500, 1000) for lag in (2, 3)
-                          for r in (0.3, 0.5, 0.7) for m in (0.05, 0.1)
-                          for b in (0.05, 0.1)])
-    return rows
+def sweep(spark: SparkSession, rows) -> DataFrame:
+    """Grid rows of ONE umbrella -> their long-form frames as one Spark job
+    (the umbrella's ``_SCHEMA``)."""
+    umbrellas = {_FAMILIES[r[0]][0] for r in rows}
+    if len(umbrellas) != 1:
+        raise ValueError(f"a sweep runs one umbrella, got {sorted(umbrellas)}")
+    return _sweep(spark, rows, _generate_batches, _SCHEMA[umbrellas.pop()])
 
 
 @register("scm_generate", None)
@@ -395,8 +355,7 @@ def scm_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost-balanced bins, one mapInPandas task each (see _sweep);
     long-form (family, config, t, var, value) output keeps the schema fixed
     across families and widths; no shuffle anywhere in the sweep."""
-    return _sweep(spark, _complete_grid(),
-                  _complete_group(_COMPLETE_KERNELS), _COMPLETE_SCHEMA)
+    return sweep(spark, grid(("a1", "a2", "b1", "b2", "c1", "c2")))
 
 
 @register("scm_generate_confounded", None)
@@ -405,8 +364,7 @@ def scm_generate_confounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     families (A1C/A2C/B1C/B2C/C1C/C2C). U rides along as an ordinary
     long-form var (quirk Q8 — the reference persists it); hiding it for
     discovery benchmarks is an explicit downstream filter."""
-    return _sweep(spark, _confounded_grid(),
-                  _complete_group(_CONFOUNDED_KERNELS), _COMPLETE_SCHEMA)
+    return sweep(spark, grid(("a1c", "a2c", "b1c", "b2c", "c1c", "c2c")))
 
 
 @register("scm_generate_missing", None)
@@ -415,8 +373,7 @@ def scm_generate_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing and complete versions of every cell side by side, as the
     reference persists both files. Replicates the reference's two-pass
     memo-shadowing bug (corpus-confirmed: X1/X3 ≡ 0 in 4-var datasets)."""
-    return _sweep(spark, _missing_grid(),
-                  _pair_group(_PAIR_KERNELS), _PAIR_SCHEMA)
+    return sweep(spark, grid(("d1", "d2", "d3")))
 
 
 @register("scm_generate_missing_confounded", None)
@@ -424,8 +381,7 @@ def scm_generate_missing_confounded(spark: SparkSession, sf_dir: str) -> DataFra
     """Confounded missingness sweep across D1C/D2C/D3C: masks hit X only —
     U stays fully observed (d1c.py:246-251, d2c.py:257) — with the D3C
     warmup double-draw quirk preserved."""
-    return _sweep(spark, _missing_confounded_grid(),
-                  _pair_group(_PAIR_CONFOUNDED_KERNELS), _PAIR_SCHEMA)
+    return sweep(spark, grid(("d1c", "d2c", "d3c")))
 
 
 @register("scm_generate_long", None)
@@ -457,7 +413,7 @@ def scm_generate_long(spark: SparkSession, sf_dir: str) -> DataFrame:
 # FLOOR-micro exact.
 # --------------------------------------------------------------------------
 
-_SCM_OUT_CFG = ("a1", 500, 4, 2, "gaussian")  # family, n, v, lag, noise
+_SCM_OUT_ROW = _rows("a1", [(500, 4, 2, "gaussian", None, None, None)])[0]
 _SCM_OUT_VERSION = "v1"  # bump when kernel/config semantics change
 
 
@@ -465,15 +421,14 @@ def _scm_output_path() -> str:
     import os
     import tempfile
 
-    fam, n, v, lag, noise = _SCM_OUT_CFG
     return os.path.join(
         tempfile.gettempdir(),
-        f"scm_output_{fam}_n{n}_v{v}_l{lag}_{noise}_{_SCM_OUT_VERSION}.parquet",
+        f"scm_output_{_SCM_OUT_ROW[1]}_{_SCM_OUT_VERSION}.parquet",
     )
 
 
 def _scm_output_publish() -> str:
-    """Write the oracle anchor file (kernel output for _SCM_OUT_CFG, long
+    """Write the oracle anchor file (kernel output for _SCM_OUT_ROW, long
     form) if absent — atomic tmp+replace, deterministic content, so
     concurrent registrations and stale readers are all safe."""
     import os
@@ -485,9 +440,7 @@ def _scm_output_publish() -> str:
     path = _scm_output_path()
     if os.path.exists(path):
         return path
-    fam, n, v, lag, noise = _SCM_OUT_CFG
-    wide = _COMPLETE_KERNELS[fam](n, v, lag, noise, None, None, None)
-    long = _melt_wide(fam, f"{fam}_n{n}_v{v}_l{lag}_{noise}", wide)
+    long = generate_config(_SCM_OUT_ROW)
     fd, tmp = tempfile.mkstemp(
         suffix=".parquet", dir=os.path.dirname(path)
     )
@@ -528,10 +481,7 @@ def scm_output_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits on both sides by construction)."""
     import uuid
 
-    fam, n, v, lag, noise = _SCM_OUT_CFG
-    grid = _rows(fam, [(n, v, lag, noise, None, None, None)])
-    out = _sweep(spark, grid, _complete_group(_COMPLETE_KERNELS),
-                 _COMPLETE_SCHEMA)
+    out = sweep(spark, [_SCM_OUT_ROW])
     # per-call view name (concurrent-builds hygiene)
     view = f"_scm_output_one_{uuid.uuid4().hex[:12]}"
     out.createOrReplaceTempView(view)

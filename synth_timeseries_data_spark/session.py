@@ -34,12 +34,9 @@ def _default_driver_mem() -> str:
 
 def get_session(app_name: str = "synth_timeseries_data_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # Shuffle parallelism is decoupled from executor threads: at local test
-    # scale the data is small enough that fewer, larger shuffle partitions
-    # beat per-task scheduling overhead; AQE still coalesces further. On a
-    # real cluster SPARK_GRAFT_SHUFFLE would be sized to the data (~128 MB
-    # per partition), not to the core count.
-    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", cpus)
+    # Shuffle parallelism starts at the core count; tune_for_input resizes
+    # it per input (8 for small fixtures, ~64 MB of input per partition for
+    # large ones) and AQE still coalesces further.
     # AQE on is the cluster posture (skew-join splitting, runtime partition
     # coalescing, dynamic broadcast) and measured best in aggregate locally
     # too: its per-exchange stage materialization costs ~100 ms per shuffle
@@ -47,18 +44,16 @@ def get_session(app_name: str = "synth_timeseries_data_spark") -> SparkSession:
     # turning it off regresses every query that leans on shuffle coalescing
     # (edge_tensor 0.9 s → 1.1 s, ngram_jaccard 0.6 s → 1.2 s) and the
     # derived-candidate joins now carry explicit BROADCAST hints so neither
-    # mode mis-plans them. SPARK_GRAFT_AQE=false flips the trade for
-    # latency-critical small-query workloads. Correctness is AQE-independent
-    # (the one AQE hazard — coalescing the kernel-sweep grid to one
-    # partition — cannot arise: the sweep has no exchange at all, one packed
-    # VALUES row per task feeding mapInPandas; see _sweep in
-    # queries/generation.py).
-    aqe = os.environ.get("SPARK_GRAFT_AQE", "true")
+    # mode mis-plans them. tune_for_input turns it off for small inputs.
+    # Correctness is AQE-independent (the one AQE hazard — coalescing the
+    # kernel-sweep grid to one partition — cannot arise: the sweep has no
+    # exchange at all, one packed VALUES row per task feeding mapInPandas;
+    # see sweep in queries/generation.py).
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.adaptive.enabled", aqe)
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -129,9 +124,7 @@ def fast_commit(spark: SparkSession) -> None:
 # tiers (171 MB/1.7 GB) in cluster posture. Measured at sf0.1: the 2-4-wave
 # floor-band queries drop 15-30% (corpus_filter 0.72->0.53 s, decontam
 # 0.85->0.60 s, asof_lag 1.12->0.65 s) with no data-proportional regression.
-_SMALL_INPUT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SMALL_INPUT", str(64 * 1024 * 1024))
-)
+_SMALL_INPUT_BYTES = 64 * 1024 * 1024
 _SMALL_SHUFFLE = "8"
 
 # Above the small gate, shuffle DOP must GROW with the input or per-task
@@ -144,9 +137,7 @@ _SMALL_SHUFFLE = "8"
 # sub-linear decade trend; AQE coalesces the count back down for queries that
 # touch only a slice of the directory. This is exactly the knob a cluster job
 # sizes first — the ladder just proved the local harness needs the same rule.
-_TARGET_PARTITION_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PARTITION_BYTES", str(64 * 1024 * 1024))
-)
+_TARGET_PARTITION_BYTES = 64 * 1024 * 1024
 _MAX_SHUFFLE = 4096
 
 _dir_bytes: dict[str, int] = {}
@@ -195,14 +186,10 @@ def tune_for_input(spark: SparkSession, sf_dir: str) -> None:
 
     Called by the query registry before each build; the dir footprint is
     memoized per sf_dir and conf writes happen only on posture CHANGE, so
-    repeat builds cost two dict hits. An explicit SPARK_GRAFT_AQE /
-    SPARK_GRAFT_SHUFFLE wins over the heuristic for its own knob, and
-    SPARK_GRAFT_AUTOTUNE=off disables it entirely. Both branches set their
-    knobs explicitly (restoring the session's original posture in the
-    large branch) so one session can serve mixed input scales — e.g. the
-    sf0.001 gate then the sf10 ladder."""
-    if os.environ.get("SPARK_GRAFT_AUTOTUNE", "on") == "off":
-        return
+    repeat builds cost two dict hits. Both branches set both knobs
+    (restoring the session's original posture in the large branch) so one
+    session can serve mixed input scales — e.g. the sf0.001 gate then the
+    sf10 ladder."""
     nbytes = _input_bytes(sf_dir)
     small = nbytes < _SMALL_INPUT_BYTES
     if spark not in _session_posture:
@@ -222,10 +209,6 @@ def tune_for_input(spark: SparkSession, sf_dir: str) -> None:
         )
     if _applied.get(spark) == (small, shuffle):
         return
-    if os.environ.get("SPARK_GRAFT_AQE") is None:
-        spark.conf.set(
-            "spark.sql.adaptive.enabled", "false" if small else orig_aqe
-        )
-    if os.environ.get("SPARK_GRAFT_SHUFFLE") is None:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    spark.conf.set("spark.sql.adaptive.enabled", "false" if small else orig_aqe)
+    spark.conf.set("spark.sql.shuffle.partitions", shuffle)
     _applied[spark] = (small, shuffle)

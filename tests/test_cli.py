@@ -9,6 +9,7 @@ import shutil
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
 from synth_timeseries_data_spark.__main__ import main
 
@@ -36,9 +37,9 @@ def test_cli_query_unknown_name_fails(spark, oracle_sf_dir):
 
 def test_cli_generate_single_family_tree(spark):
     """A pure-family subset is the case that once leaked DECIMAL literals
-    into the kernels (see _sweep.lit); the tree must land partitioned by
-    (family, config_id) with real float values, plus the structure
-    sidecar."""
+    into the kernels (see the float cast of the sweep's VALUES literal in
+    queries/generation.py); the tree must land partitioned by (family,
+    config_id) with real float values, plus the structure sidecar."""
     out = tempfile.mkdtemp(prefix="cli_g_")
     try:
         assert main(["generate", "--families", "c1", "--out", out, "--format", "parquet"]) == 0
@@ -57,6 +58,38 @@ def test_cli_generate_unknown_family_fails(spark):
     out = tempfile.mkdtemp(prefix="cli_gf_")
     try:
         assert main(["generate", "--families", "zz9", "--out", out]) == 2
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_cli_generate_writes_each_umbrella_once(spark):
+    """One call over both twins of two umbrellas: each umbrella directory
+    is written once, so every family is read back with its grid's config
+    count."""
+    out = tempfile.mkdtemp(prefix="cli_gu_")
+    try:
+        argv = ["generate", "--families", "c2,c2c,d1,d1c", "--out", out,
+                "--format", "parquet"]
+        assert main(argv) == 0
+        got = {}
+        for umbrella in ("complete", "masked"):
+            tree = spark.read.parquet(os.path.join(out, umbrella))
+            for r in tree.groupBy("family").agg(
+                F.countDistinct("config_id").alias("n")
+            ).collect():
+                got[r["family"]] = r["n"]
+        assert got == {"c2": 16, "c2c": 16, "d1": 24, "d1c": 24}
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_cli_generate_checks_families_before_writing(spark):
+    out = tempfile.mkdtemp(prefix="cli_gk_")
+    try:
+        argv = ["generate", "--families", "c2,zz9", "--out", out,
+                "--format", "parquet"]
+        assert main(argv) == 2
+        assert not os.path.exists(os.path.join(out, "complete"))
     finally:
         shutil.rmtree(out, ignore_errors=True)
 

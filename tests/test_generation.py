@@ -360,7 +360,7 @@ def test_a1c_hide_u_projection():
 
 
 def test_spark_kernel_matches_direct(spark, smoke_sf_dir):
-    """The applyInPandas path must equal the direct kernel for a config."""
+    """The mapInPandas sweep path must equal the direct kernel for a config."""
     from synth_timeseries_data_spark.queries import all_queries
 
     df = all_queries()["scm_generate"].build(spark, smoke_sf_dir)
@@ -372,6 +372,17 @@ def test_spark_kernel_matches_direct(spark, smoke_sf_dir):
     direct = generate_linear_config(500, 4, 2, "gaussian", seed=42)
     assert (got["value"].values == direct["X1"].values).all()
     assert len(got) == 500
+
+
+def test_every_grid_config_has_equations():
+    """Each family reads its own registry entry (its own or the one it
+    shares), so ground truth exists for every config the sweep generates."""
+    from synth_timeseries_data_spark.dsl.registry import equations
+    from synth_timeseries_data_spark.queries.generation import grid
+
+    missing = sorted({(r[0], r[3], r[4]) for r in grid()
+                      if not equations(r[0], r[3], r[4])})
+    assert not missing, missing
 
 
 # ---------------------------------------------------------------------------

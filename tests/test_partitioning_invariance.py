@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import pytest
 
+from synth_timeseries_data_spark import session
 from synth_timeseries_data_spark.queries import all_queries
 
 from tests.conftest import SF_SMALL
@@ -115,7 +116,7 @@ def test_results_invariant_under_shuffle_dop(spark, name, monkeypatch):
     # Pin the posture: the registry's tune_for_input must not override the
     # DOP under test, and AQE's runtime coalescing is disabled so DOP=64
     # really combines 64 ways instead of being merged back to a few tasks.
-    monkeypatch.setenv("SPARK_GRAFT_AUTOTUNE", "off")
+    monkeypatch.setattr(session, "tune_for_input", lambda spark, sf_dir: None)
     orig_dop = spark.conf.get("spark.sql.shuffle.partitions")
     orig_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")

@@ -150,9 +150,11 @@ def test_generation_sweep_partitioning_survives_aqe(spark, smoke_sf_dir):
     from synth_timeseries_data_spark.queries import generation as G
 
     df = all_queries()["scm_generate"].build(spark, smoke_sf_dir)
-    n_configs = len(G._complete_grid())
+    n_configs = len(G.grid(("a1", "a2", "b1", "b2", "c1", "c2")))
     expected = min(n_configs, spark.sparkContext.defaultParallelism)
     assert df.rdd.getNumPartitions() == expected
+    # the LPT packing weighs every grid config by a measured cost class
+    assert {(r[0], r[5]) for r in G.grid()} <= set(G._COST_W)
 
 
 def test_stratified_sample_broadcasts_rates_no_extra_shuffle(spark, oracle_sf_dir):

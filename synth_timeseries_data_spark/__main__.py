@@ -14,11 +14,12 @@ writes a partition-pruned dataset tree:
 `generate` writes long-form series partitioned by (family, config_id) —
 one directory per config like the reference's tree, readable back with a
 partition-pruned scan — plus the ground-truth structure sidecar
-(sinks.write_structure_json). Each umbrella directory is written once and
-holds both twins: masking families (d1/d2/d3 and their confounded twins)
-land under out/masked with the (value_complete, value_observed) pair
-schema, complete-data families (a1..c2 and their confounded twins) under
-out/complete.
+(sinks.write_structure_json). Each umbrella directory is written once, by
+one Spark job, and holds both twins: masking families (d1/d2/d3 and their
+confounded twins) land under out/masked with the (value_complete,
+value_observed) pair schema, complete-data families (a1..c2 and their
+confounded twins) under out/complete. The sidecar needs no job of its own:
+it is rendered once per process and written from the driver.
 """
 
 from __future__ import annotations

@@ -95,6 +95,10 @@ def get_session(app_name: str = "synth_timeseries_data_spark") -> SparkSession:
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # getOrCreate on a live session re-applies the builder's shuffle and AQE
+    # confs over whatever tune_for_input set, so its record of the applied
+    # posture no longer holds.
+    _applied.pop(spark, None)
     return spark
 
 

@@ -5,7 +5,8 @@ The reference persists one CSV + npy tensors + a structure txt per config
 into a `family/noise/vars/lag` directory tree (Codes/a1.py:237-306). The
 engine's equivalents: CSV with header and empty-string nulls (pandas
 to_csv compatible), edge lists as parquet (the relational tensor form), a
-JSON-lines structure sidecar via df.write.json, and
+JSON-lines structure sidecar (rendered once per process and written from
+the driver as one file, no Spark job), and
 `partitionBy(family, noise, n_vars, max_lag)` for the tree — which at
 100 TB doubles as partition pruning for any per-config read.
 """
@@ -42,12 +43,9 @@ def write_edge_list(spark: SparkSession, path: str) -> None:
     _parsed_edges(spark).write.mode("overwrite").parquet(path)
 
 
-def write_structure_json(spark: SparkSession, path: str) -> None:
-    """G18: structure sidecar as JSON lines (df.write.json) — one record per
-    edge with the equation text attached, replacing the reference's
-    free-text `(source, lag, target) => coef` files (a1.py:296-306)."""
-    edges = _parsed_edges(spark)
-    edges.select(
+def _structure_frame(spark: SparkSession) -> DataFrame:
+    """One record per edge with the equation text attached."""
+    return _parsed_edges(spark).select(
         "family",
         "n_vars",
         "max_lag",
@@ -60,7 +58,41 @@ def write_structure_json(spark: SparkSession, path: str) -> None:
             F.lit("("), "source", F.lit(", "), F.col("lag").cast("string"),
             F.lit(", "), "target", F.lit(") => "), F.col("coef").cast("string"),
         ).alias("link_str"),
-    ).write.mode("overwrite").json(path)
+    )
+
+
+# The sidecar's JSON-lines bytes. They depend only on EQUATION_ROWS, so one
+# render serves every call (and every session) in the process.
+_structure_json: "bytes | None" = None
+
+
+def write_structure_json(spark: SparkSession, path: str) -> None:
+    """G18: structure sidecar as JSON lines — one record per edge with the
+    equation text attached, replacing the reference's free-text
+    `(source, lag, target) => coef` files (a1.py:296-306).
+
+    The lines are rendered once per process (`toJSON().collect()`, the
+    same records and order a `df.write.json` writes) and written from the
+    driver through the path's Hadoop FileSystem: one `part-00000.json`
+    plus `_SUCCESS`, replacing whatever the path held. On a 4-core host a
+    Spark write job of these few hundred driver-literal rows costs ~0.17 s
+    per call and this write ~0.035 s; it still reaches any URI the series
+    write does."""
+    global _structure_json
+    if _structure_json is None:
+        lines = _structure_frame(spark).toJSON().collect()
+        _structure_json = "".join(f"{line}\n" for line in lines).encode("utf-8")
+    jvm = spark.sparkContext._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    out = Path(path)
+    fs = out.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    fs.delete(out, True)
+    stream = fs.create(Path(out, "part-00000.json"), True)
+    try:
+        stream.write(_structure_json)
+    finally:
+        stream.close()
+    fs.create(Path(out, "_SUCCESS"), True).close()
 
 
 def write_structure_txt(family: str, n_vars: int, max_lag: int, path: str) -> None:

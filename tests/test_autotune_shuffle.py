@@ -38,6 +38,20 @@ def test_mid_input_keeps_session_dop(spark, monkeypatch):
     assert got == base
 
 
+def test_get_session_resets_applied_posture(spark, smoke_sf_dir):
+    """get_session on the live session re-applies the builder's confs (AQE
+    on, shuffle partitions = cores) behind the tuner's back; the next
+    tune_for_input must write the small posture again, not trust its
+    record of the one it applied before."""
+    sess.tune_for_input(spark, smoke_sf_dir)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert sess.get_session("synth-ts-spark-tests") is spark
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    sess.tune_for_input(spark, smoke_sf_dir)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == sess._SMALL_SHUFFLE
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+
+
 def test_posture_restored_after_big(spark, monkeypatch):
     _with_bytes(monkeypatch, spark, 17 * (1 << 30))
     base = int(sess._session_posture[spark][1])

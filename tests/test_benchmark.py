@@ -172,6 +172,30 @@ def test_benchmark_registry_entry_scores_subgrid(spark, smoke_sf_dir):
         assert r.shd == r.fp + r.fn
 
 
+def test_benchmark_scores_parity_golden(spark, smoke_sf_dir):
+    """benchmark_scores has no DuckDB oracle: its 66-row score vector is
+    pinned by a committed canonical hash instead (columns sorted, rows
+    sorted, floats by their IEEE bits — perfbench.checks.canon_rows). The
+    vector comes from the generated sub-grid alone, so any sf dir serves.
+    An intended change of its output rewrites tests/data/
+    benchmark_scores.sha256 with the digest this test reports."""
+    import hashlib
+
+    from perfbench.checks import canon_rows
+    from synth_timeseries_data_spark.queries import all_queries
+
+    df = all_queries()["benchmark_scores"].build(spark, smoke_sf_dir)
+    rows = df.collect()
+    digest = hashlib.sha256(
+        repr(canon_rows(df.columns, rows)).encode()
+    ).hexdigest()
+    golden = os.path.join(
+        os.path.dirname(__file__), "data", "benchmark_scores.sha256"
+    )
+    with open(golden) as f:
+        assert digest == f.read().strip(), f"{len(rows)} rows hash to {digest}"
+
+
 def test_score_predictions_perfect_and_reversed(spark):
     """score_predictions (the external-algorithm scoring path): feeding
     the parsed ground truth back as predictions must score PERFECTLY

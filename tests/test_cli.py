@@ -54,6 +54,27 @@ def test_cli_generate_single_family_tree(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
+def test_cli_generate_runs_one_job_per_umbrella(spark):
+    """Once the process has rendered the structure sidecar, a one-umbrella
+    `generate` runs exactly one Spark job: the series write. The sidecar is
+    written from the driver."""
+    out = tempfile.mkdtemp(prefix="cli_gj_")
+    argv = ["generate", "--families", "c2", "--out", out, "--format", "parquet"]
+    sc = spark.sparkContext
+    try:
+        assert main(argv) == 0
+        sc.setJobGroup("cli_generate_jobs", "generate --families c2")
+        try:
+            assert main(argv) == 0
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        assert len(sc.statusTracker().getJobIdsForGroup("cli_generate_jobs")) == 1
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
 def test_cli_generate_unknown_family_fails(spark):
     out = tempfile.mkdtemp(prefix="cli_gf_")
     try:

@@ -31,14 +31,52 @@ def test_edge_list_parquet_roundtrip(spark, tmpdir_):
     }
 
 
+def _json_lines(path):
+    lines = []
+    for f in sorted(glob.glob(os.path.join(path, "part-*"))):
+        with open(f, "rb") as fh:
+            lines.extend(fh.read().splitlines())
+    return lines
+
+
 def test_structure_json_sidecar(spark, tmpdir_):
     path = os.path.join(tmpdir_, "structure")
     sinks.write_structure_json(spark, path)
     back = spark.read.json(path)
+    assert back.count() == 184
     row = back.where(
         "family = 'a1' AND n_vars = 4 AND max_lag = 2 AND target = 'X3'"
     ).collect()[0]
     assert row.link_str == "(X4, 0, X3) => 0.35"
+
+
+def test_structure_json_matches_spark_json_write(spark, tmpdir_):
+    """The driver-written file holds, line for line and in order, what a
+    Spark `df.write.json` of the same select writes across its parts."""
+    path = os.path.join(tmpdir_, "structure")
+    ref = os.path.join(tmpdir_, "reference")
+    sinks.write_structure_json(spark, path)
+    sinks._structure_frame(spark).write.mode("overwrite").json(ref)
+    got = _json_lines(path)
+    assert len(got) == 184
+    assert got == _json_lines(ref)
+
+
+def test_structure_json_layout_replaces_stale_files(spark, tmpdir_):
+    path = os.path.join(tmpdir_, "structure")
+    os.makedirs(path)
+    with open(os.path.join(path, "part-00009.json"), "w") as f:
+        f.write('{"family": "stale"}\n')
+    # a URI, not a bare path: the write goes through Hadoop's FileSystem
+    sinks.write_structure_json(spark, "file://" + path)
+    names = set(os.listdir(path))
+    assert {n for n in names if not n.endswith(".crc")} == {
+        "part-00000.json", "_SUCCESS",
+    }
+    assert names - {"part-00000.json", "_SUCCESS"} <= {
+        ".part-00000.json.crc", "._SUCCESS.crc",
+    }
+    assert spark.read.json(path).where("family = 'stale'").count() == 0
 
 
 def test_structure_txt(tmpdir_):

@@ -162,19 +162,15 @@ def cmd_benchmark(args) -> int:
 
     spark = get_session("benchmark")
     if getattr(args, "predictions", None):
-        from .queries.benchmark import rollup_scores, score_predictions
+        from .queries.benchmark import score_predictions, write_scores
 
         preds = spark.read.parquet(args.predictions)
-        scores = score_predictions(spark, preds)
-        scores_dir = os.path.join(args.out, "scores")
-        scores.write.mode("overwrite").parquet(scores_dir)
-        cube = rollup_scores(spark, spark.read.parquet(scores_dir))
-        metrics_dir = os.path.join(args.out, "metrics")
-        cube.write.mode("overwrite").parquet(metrics_dir)
-        for r in spark.read.parquet(metrics_dir).collect():
-            if r.g_family == 1 and r.g_n_vars == 1 and r.g_max_lag == 1:
-                print(f"scored {r.n_configs} configs: avg_f1={r.avg_f1:.4f} "
-                      f"avg_shd={r.avg_shd:.2f}")
+        scores_dir, metrics_dir, r = write_scores(
+            spark, score_predictions(spark, preds), args.out
+        )
+        if r is not None:
+            print(f"scored {r.n_configs} configs: avg_f1={r.avg_f1:.4f} "
+                  f"avg_shd={r.avg_shd:.2f}")
         print(f"scores -> {scores_dir}")
         print(f"metrics cube -> {metrics_dir}")
         return 0

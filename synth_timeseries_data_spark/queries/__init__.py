@@ -91,6 +91,16 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return wrap
 
 
+# Select-list row expansion, the one dialect difference most dual-engine
+# texts share: ``expand(lo, hi)`` yields one row per integer in [lo, hi].
+def _spark_expand(lo: str, hi: str) -> str:
+    return f"explode(sequence({lo}, {hi}))"
+
+
+def _duck_expand(lo: str, hi: str) -> str:
+    return f"unnest(generate_series({lo}, {hi}))"
+
+
 # --------------------------------------------------------------------------
 # Driver window scheduling.
 #

@@ -16,11 +16,15 @@ rollup cube, one ``benchmark`` CLI invocation.
 Scoreable families are those with a parsed DSL ground truth (a1 linear,
 b2 polynomial, c1 trend+season — the three registries the reference
 declares as DSL text, ``dsl/registry.py EQUATION_ROWS``); the screener
-is the same deterministic capacity-matched lagged-correlation predictor
-``discovery_benchmark`` uses (exact FLOOR-micro bigint sums, one shared
+is ``discovery_benchmark``'s deterministic capacity-matched
+lagged-correlation predictor (exact FLOOR-micro bigint sums, one shared
 IEEE correlation formula, unique-key tiebreak), applied DIRECTLY to each
 config's long-form series — no user_id→variable mapping stub, the
 generated tree's (config_id, var, t) IS the variable space.
+
+``_score_sql`` (generated sweep) and ``_PRED_SCORE_SQL``
+(``score_predictions``) are built from queries/discovery.py's ``_gtc``,
+``_screener`` and ``_metric_tail``: all three scorers run the same code.
 
 Scale shape: everything is config-parallel. The row_number index and
 the lag-aligned self-join both key on config_id (+ sample index), so one
@@ -37,7 +41,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import register
+from . import _spark_expand, register
+from .discovery import _gtc, _metric_tail, _screener
 from .dsl import _parsed_edges
 
 _SCOREABLE = ("a1", "b2", "c1")
@@ -58,17 +63,17 @@ def _meta_values(rows) -> str:
 def _score_sql(meta_sql: str) -> str:
     """Per-config M1-M5 scores over the ``gen_series`` view
     (family, config_id, t, var, value long form) against
-    ``parsed_edges_bench``. Same screener + metric tail as
-    discovery_benchmark (queries/discovery.py), keyed by config_id."""
+    ``parsed_edges_bench``, keyed by config_id."""
+    tail = _metric_tail(
+        _spark_expand, "mc", "cap", "r.rn IS NOT NULL AND r.rn <= c.cap",
+        "ranked r ON r.config_id = c.config_id"
+        " AND r.vt = c.i AND r.vs = c.j AND r.k = c.k",
+        keys=("family", "config_id", "n_vars", "max_lag"),
+        order="c.family, c.config_id",
+    )
     return f"""
     WITH meta AS ({meta_sql}),
-    gtc AS (
-      SELECT DISTINCT family, n_vars, max_lag,
-             CAST(NULLIF(SUBSTRING(target, 2), '') AS INT) AS i,
-             CAST(NULLIF(SUBSTRING(source, 2), '') AS INT) AS j,
-             lag AS k
-      FROM parsed_edges_bench
-    ),
+    {_gtc('parsed_edges_bench')},
     caps AS (
       SELECT family, n_vars, max_lag, COUNT(*) AS m
       FROM gtc GROUP BY family, n_vars, max_lag
@@ -108,7 +113,7 @@ def _score_sql(meta_sql: str) -> str:
     ),
     tgts AS (
       SELECT /*+ BROADCAST(m) */ s.config_id, s.v AS vt, s.r,
-             s.value AS yv, explode(sequence(0, m.max_lag)) AS k
+             s.value AS yv, {_spark_expand('0', 'm.max_lag')} AS k
       FROM ser s JOIN meta m ON m.config_id = s.config_id
     ),
     -- lag alignment: source sample r-k vs target sample r — both sides
@@ -118,33 +123,7 @@ def _score_sql(meta_sql: str) -> str:
       FROM tgts t
       JOIN ser s ON s.config_id = t.config_id AND s.r = t.r - t.k
     ),
-    sums AS (
-      SELECT config_id, vs, vt, k, COUNT(*) AS n,
-             SUM(CAST(FLOOR(xv * 1000000.0) AS BIGINT)) AS s_x,
-             SUM(CAST(FLOOR(yv * 1000000.0) AS BIGINT)) AS s_y,
-             SUM(CAST(FLOOR(xv * yv * 1000000.0) AS BIGINT)) AS s_xy,
-             SUM(CAST(FLOOR(xv * xv * 1000000.0) AS BIGINT)) AS s_xx,
-             SUM(CAST(FLOOR(yv * yv * 1000000.0) AS BIGINT)) AS s_yy
-      FROM pairs
-      GROUP BY config_id, vs, vt, k
-    ),
-    rho AS (
-      SELECT config_id, vs, vt, k,
-             (n * sxy - sx * sy)
-               / NULLIF(SQRT(GREATEST((n * sxx - sx * sx)
-                                      * (n * syy - sy * sy), 0.0)),
-                        0.0) AS rho
-      FROM (
-        SELECT config_id, vs, vt, k,
-               CAST(n AS DOUBLE) AS n,
-               CAST(s_x AS DOUBLE) / 1000000.0 AS sx,
-               CAST(s_y AS DOUBLE) / 1000000.0 AS sy,
-               CAST(s_xy AS DOUBLE) / 1000000.0 AS sxy,
-               CAST(s_xx AS DOUBLE) / 1000000.0 AS sxx,
-               CAST(s_yy AS DOUBLE) / 1000000.0 AS syy
-        FROM sums
-      ) d
-    ),
+    {_screener('config_id')},
     ranked AS (
       SELECT config_id, vs, vt, k,
              ROW_NUMBER() OVER (PARTITION BY config_id
@@ -159,77 +138,7 @@ def _score_sql(meta_sql: str) -> str:
       JOIN caps c ON c.family = m.family AND c.n_vars = m.n_vars
                  AND c.max_lag = m.max_lag
     ),
-    c1 AS (SELECT family, config_id, n_vars, max_lag, cap,
-                  explode(sequence(1, n_vars)) AS i FROM mc),
-    c2 AS (SELECT family, config_id, n_vars, max_lag, cap, i,
-                  explode(sequence(1, n_vars)) AS j FROM c1),
-    c3 AS (SELECT family, config_id, n_vars, max_lag, cap, i, j,
-                  explode(sequence(0, max_lag)) AS k FROM c2),
-    cells AS (SELECT * FROM c3 WHERE NOT (i = j AND k = 0)),
-    scored AS (
-      SELECT c.family, c.config_id, c.n_vars, c.max_lag, c.i, c.j, c.k,
-             CASE WHEN g.i IS NOT NULL THEN 1 ELSE 0 END AS gt,
-             CASE WHEN r.rn IS NOT NULL AND r.rn <= c.cap
-                  THEN 1 ELSE 0 END AS pred
-      FROM cells c
-      LEFT JOIN gtc g
-        ON g.family = c.family AND g.n_vars = c.n_vars
-       AND g.max_lag = c.max_lag AND g.i = c.i AND g.j = c.j AND g.k = c.k
-      LEFT JOIN ranked r
-        ON r.config_id = c.config_id
-       AND r.vt = c.i AND r.vs = c.j AND r.k = c.k
-    ),
-    -- single-scan pair-grouped metric tail (the discovery_benchmark
-    -- device — Spark inlines CTEs, so separate confusion/SHD branches
-    -- would re-run the screener per branch)
-    pgroups AS (
-      SELECT family, config_id, n_vars, max_lag,
-             LEAST(i, j) AS lo, GREATEST(i, j) AS hi, k,
-             MAX(CASE WHEN i <= j THEN gt ELSE 0 END) AS gt_lo,
-             MAX(CASE WHEN i > j THEN gt ELSE 0 END) AS gt_hi,
-             MAX(CASE WHEN i <= j THEN pred ELSE 0 END) AS pred_lo,
-             MAX(CASE WHEN i > j THEN pred ELSE 0 END) AS pred_hi,
-             MAX(CASE WHEN i = j THEN 1 ELSE 0 END) AS is_self
-      FROM scored
-      GROUP BY family, config_id, n_vars, max_lag,
-               LEAST(i, j), GREATEST(i, j), k
-    ),
-    conf AS (
-      SELECT family, config_id, n_vars, max_lag,
-             CAST(SUM(gt_lo * pred_lo + gt_hi * pred_hi) AS BIGINT) AS tp,
-             CAST(SUM((1 - gt_lo) * pred_lo
-                      + CASE WHEN is_self = 1 THEN 0
-                             ELSE (1 - gt_hi) * pred_hi END) AS BIGINT) AS fp,
-             CAST(SUM(gt_lo * (1 - pred_lo)
-                      + CASE WHEN is_self = 1 THEN 0
-                             ELSE gt_hi * (1 - pred_hi) END) AS BIGINT) AS fn,
-             CAST(SUM((1 - gt_lo) * (1 - pred_lo)
-                      + CASE WHEN is_self = 1 THEN 0
-                             ELSE (1 - gt_hi) * (1 - pred_hi) END)
-                  AS BIGINT) AS tn,
-             CAST(SUM(CASE WHEN is_self = 1 THEN ABS(gt_lo - pred_lo)
-                           ELSE ABS((gt_lo + gt_hi) - (pred_lo + pred_hi)) +
-                                CASE WHEN gt_lo + gt_hi = 1
-                                          AND pred_lo + pred_hi = 1
-                                          AND gt_lo != pred_lo
-                                     THEN 1 ELSE 0 END
-                      END) AS BIGINT) AS shd_rev
-      FROM pgroups GROUP BY family, config_id, n_vars, max_lag
-    )
-    SELECT c.family, c.config_id, c.n_vars, c.max_lag,
-           c.tp, c.fp, c.fn, c.tn,
-           CASE WHEN c.tp + c.fn = 0 THEN 0.0
-                ELSE CAST(c.tp AS DOUBLE) / (c.tp + c.fn) END AS tpr,
-           CASE WHEN c.tp + c.fp = 0 THEN 0.0
-                ELSE CAST(c.fp AS DOUBLE) / (c.tp + c.fp) END AS fdr,
-           CASE WHEN 2 * c.tp + c.fp + c.fn = 0 THEN 0.0
-                ELSE CAST(2 * c.tp AS DOUBLE)
-                     / (2 * c.tp + c.fp + c.fn) END AS f1,
-           c.fp + c.fn AS shd,
-           c.shd_rev
-    FROM conf c
-    ORDER BY c.family, c.config_id
-    """
+    {tail}"""
 
 
 _ROLLUP_SQL = """
@@ -255,87 +164,19 @@ ORDER BY g_family, g_n_vars, g_max_lag, family, n_vars, max_lag
 """
 
 
-_PRED_SCORE_SQL = """
-    WITH gtc AS (
-      SELECT DISTINCT family, n_vars, max_lag,
-             CAST(NULLIF(SUBSTRING(target, 2), '') AS INT) AS i,
-             CAST(NULLIF(SUBSTRING(source, 2), '') AS INT) AS j,
-             lag AS k
-      FROM parsed_edges_bench
-    ),
+_PRED_SCORE_SQL = f"""
+    WITH {_gtc('parsed_edges_bench')},
     preds AS (
       SELECT DISTINCT family, n_vars, max_lag, i, j, k FROM ext_preds
     ),
     configs AS (
       SELECT DISTINCT family, n_vars, max_lag FROM preds
     ),
-    c1 AS (SELECT family, n_vars, max_lag,
-                  explode(sequence(1, n_vars)) AS i FROM configs),
-    c2 AS (SELECT family, n_vars, max_lag, i,
-                  explode(sequence(1, n_vars)) AS j FROM c1),
-    c3 AS (SELECT family, n_vars, max_lag, i, j,
-                  explode(sequence(0, max_lag)) AS k FROM c2),
-    cells AS (SELECT * FROM c3 WHERE NOT (i = j AND k = 0)),
-    scored AS (
-      SELECT c.family, c.n_vars, c.max_lag, c.i, c.j, c.k,
-             CASE WHEN g.i IS NOT NULL THEN 1 ELSE 0 END AS gt,
-             CASE WHEN p.i IS NOT NULL THEN 1 ELSE 0 END AS pred
-      FROM cells c
-      LEFT JOIN gtc g
-        ON g.family = c.family AND g.n_vars = c.n_vars
-       AND g.max_lag = c.max_lag AND g.i = c.i AND g.j = c.j AND g.k = c.k
-      LEFT JOIN preds p
-        ON p.family = c.family AND p.n_vars = c.n_vars
-       AND p.max_lag = c.max_lag AND p.i = c.i AND p.j = c.j AND p.k = c.k
-    ),
-    pgroups AS (
-      SELECT family, n_vars, max_lag,
-             LEAST(i, j) AS lo, GREATEST(i, j) AS hi, k,
-             MAX(CASE WHEN i <= j THEN gt ELSE 0 END) AS gt_lo,
-             MAX(CASE WHEN i > j THEN gt ELSE 0 END) AS gt_hi,
-             MAX(CASE WHEN i <= j THEN pred ELSE 0 END) AS pred_lo,
-             MAX(CASE WHEN i > j THEN pred ELSE 0 END) AS pred_hi,
-             MAX(CASE WHEN i = j THEN 1 ELSE 0 END) AS is_self
-      FROM scored
-      GROUP BY family, n_vars, max_lag,
-               LEAST(i, j), GREATEST(i, j), k
-    ),
-    conf AS (
-      SELECT family, n_vars, max_lag,
-             CAST(SUM(gt_lo * pred_lo + gt_hi * pred_hi) AS BIGINT) AS tp,
-             CAST(SUM((1 - gt_lo) * pred_lo
-                      + CASE WHEN is_self = 1 THEN 0
-                             ELSE (1 - gt_hi) * pred_hi END) AS BIGINT) AS fp,
-             CAST(SUM(gt_lo * (1 - pred_lo)
-                      + CASE WHEN is_self = 1 THEN 0
-                             ELSE gt_hi * (1 - pred_hi) END) AS BIGINT) AS fn,
-             CAST(SUM((1 - gt_lo) * (1 - pred_lo)
-                      + CASE WHEN is_self = 1 THEN 0
-                             ELSE (1 - gt_hi) * (1 - pred_hi) END)
-                  AS BIGINT) AS tn,
-             CAST(SUM(CASE WHEN is_self = 1 THEN ABS(gt_lo - pred_lo)
-                           ELSE ABS((gt_lo + gt_hi) - (pred_lo + pred_hi)) +
-                                CASE WHEN gt_lo + gt_hi = 1
-                                          AND pred_lo + pred_hi = 1
-                                          AND gt_lo != pred_lo
-                                     THEN 1 ELSE 0 END
-                      END) AS BIGINT) AS shd_rev
-      FROM pgroups GROUP BY family, n_vars, max_lag
-    )
-    SELECT c.family, c.n_vars, c.max_lag,
-           c.tp, c.fp, c.fn, c.tn,
-           CASE WHEN c.tp + c.fn = 0 THEN 0.0
-                ELSE CAST(c.tp AS DOUBLE) / (c.tp + c.fn) END AS tpr,
-           CASE WHEN c.tp + c.fp = 0 THEN 0.0
-                ELSE CAST(c.fp AS DOUBLE) / (c.tp + c.fp) END AS fdr,
-           CASE WHEN 2 * c.tp + c.fp + c.fn = 0 THEN 0.0
-                ELSE CAST(2 * c.tp AS DOUBLE)
-                     / (2 * c.tp + c.fp + c.fn) END AS f1,
-           c.fp + c.fn AS shd,
-           c.shd_rev
-    FROM conf c
-    ORDER BY c.family, c.n_vars, c.max_lag
-"""
+    {_metric_tail(
+        _spark_expand, "configs", None, "p.i IS NOT NULL",
+        "preds p ON p.family = c.family AND p.n_vars = c.n_vars"
+        " AND p.max_lag = c.max_lag AND p.i = c.i AND p.j = c.j AND p.k = c.k",
+    )}"""
 
 
 def score_predictions(spark: SparkSession, preds: DataFrame) -> DataFrame:
@@ -346,9 +187,9 @@ def score_predictions(spark: SparkSession, preds: DataFrame) -> DataFrame:
     this closes the loop: one call from a predictions relation
     (family, n_vars, max_lag, i, j, k — one row per predicted directed
     edge, i = target index, j = source index, k = lag) to the M1-M5
-    table, using the same pair-grouped single-scan metric tail as
-    discovery_benchmark. Configs are taken FROM the predictions
-    relation; a config whose (family, n_vars, max_lag) has no DSL
+    table, through discovery_benchmark's ``_metric_tail``. Configs are
+    taken FROM the predictions relation; a config whose
+    (family, n_vars, max_lag) has no DSL
     ground truth scores against an empty gt set (all predictions fp) —
     callers wanting a guard should check `tp + fn > 0`."""
     preds.createOrReplaceTempView("ext_preds")
@@ -399,6 +240,22 @@ def rollup_scores(spark: SparkSession, scores: DataFrame) -> DataFrame:
     return spark.sql(_ROLLUP_SQL)
 
 
+def write_scores(spark: SparkSession, scores: DataFrame, out: str):
+    """Write per-config scores to out/scores and their rollup cube to
+    out/metrics; return (scores_dir, metrics_dir, the cube's grand-total
+    row or None)."""
+    scores_dir = os.path.join(out, "scores")
+    scores.write.mode("overwrite").parquet(scores_dir)
+    cube = rollup_scores(spark, spark.read.parquet(scores_dir))
+    metrics_dir = os.path.join(out, "metrics")
+    cube.write.mode("overwrite").parquet(metrics_dir)
+    # read the WRITTEN cube back (rollup-sized, one tiny job) instead of
+    # re-evaluating the lazy aggregation a second time for the summary
+    grand = [r for r in spark.read.parquet(metrics_dir).collect()
+             if r.g_family == 1 and r.g_n_vars == 1 and r.g_max_lag == 1]
+    return scores_dir, metrics_dir, grand[0] if grand else None
+
+
 @register("benchmark_scores", None)
 def benchmark_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows-only registry entry: the composed EP1→EP3 loop on a bounded
@@ -444,23 +301,13 @@ def run_benchmark(spark: SparkSession, families, out: str) -> dict:
     )
 
     persisted = spark.read.parquet(corpus_dir)
-    scores = score_generated(spark, persisted, rows)
-    scores_dir = os.path.join(out, "scores")
-    scores.write.mode("overwrite").parquet(scores_dir)
-
-    cube = rollup_scores(spark, spark.read.parquet(scores_dir))
-    metrics_dir = os.path.join(out, "metrics")
-    cube.write.mode("overwrite").parquet(metrics_dir)
-
-    # read the WRITTEN cube back (rollup-sized, one tiny job) instead of
-    # re-evaluating the lazy aggregation a second time for the summary
-    cube_rows = spark.read.parquet(metrics_dir).collect()
-    grand = [r for r in cube_rows
-             if r.g_family == 1 and r.g_n_vars == 1 and r.g_max_lag == 1]
+    scores_dir, metrics_dir, grand = write_scores(
+        spark, score_generated(spark, persisted, rows), out
+    )
     # coverage guard: a config whose (family, n_vars, max_lag) combo has
     # no parsed ground-truth edges would be dropped silently by the caps
     # join in the scoring SQL — fail loudly instead of under-covering
-    scored = grand[0].n_configs if grand else 0
+    scored = grand.n_configs if grand else 0
     if scored != len(rows):
         raise RuntimeError(
             f"benchmark scored {scored} of {len(rows)} generated configs "
@@ -471,6 +318,6 @@ def run_benchmark(spark: SparkSession, families, out: str) -> dict:
         "corpus": corpus_dir,
         "scores": scores_dir,
         "metrics": metrics_dir,
-        "avg_f1": grand[0].avg_f1 if grand else None,
-        "avg_shd": grand[0].avg_shd if grand else None,
+        "avg_f1": grand.avg_f1 if grand else None,
+        "avg_shd": grand.avg_shd if grand else None,
     }

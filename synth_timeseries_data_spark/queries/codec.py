@@ -25,20 +25,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.detrand import lcg_uniform_sql
-from . import register
+from . import _duck_expand, _spark_expand, register
 
 _P = 6  # variables in the synthetic link matrices
 _L = 3  # max lag
 
 _PAIR_U = lcg_uniform_sql("pairkey", salt=21)
-
-
-def _spark_expand(lo: str, hi: str) -> str:
-    return f"explode(sequence({lo}, {hi}))"
-
-
-def _duck_expand(lo: str, hi: str) -> str:
-    return f"unnest(generate_series({lo}, {hi}))"
 
 
 def _links_cte(expand) -> str:

@@ -41,6 +41,11 @@ Stages, all inside one dual-engine SQL text:
 Output: one row per (family, n_vars, max_lag) with the full metric set —
 the reference's benchmark results table.
 
+Each scoring block has one text builder here: ``_gtc`` (stage 1),
+``_screener`` (stage 2's ``sums``/``rho``) and ``_metric_tail`` (stage 3).
+queries/benchmark.py builds its generated-sweep scorer and
+``score_predictions`` from the same three, so every scorer runs this code.
+
 Scale shape (after the round-9 plan ladder — see FLOOR.md): the whole
 entry is SCALE-INVARIANT. Ground truth and the config grid are driver
 literals; the screener reads at most _GCAP·Vmax users via a LITERAL
@@ -63,7 +68,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources import load
-from . import register
+from . import _duck_expand, _spark_expand, register
 from .dsl import _PARSE_ORACLE, _parsed_edges
 
 _CAP = 256  # aligned samples per series fed to the correlation screener
@@ -86,19 +91,13 @@ _TS_US_DUCK = "epoch_us(ts)"
 def _body(expand, idiv: str, tus: str) -> str:
     """Everything downstream of the ``gt`` CTE — shared text, engine
     dialect injected for row expansion, integer division and time scale."""
+    tail = _metric_tail(
+        expand, "configs", "m", "r.rn IS NOT NULL AND r.rn <= c.m",
+        "ranked r ON r.v_cnt = c.n_vars AND r.l_cnt = c.max_lag"
+        " AND r.vt = c.i AND r.vs = c.j AND r.k = c.k",
+    )
     return f"""
-    gtc AS (
-      -- NULLIF keeps the cast total: DuckDB's parallel pipelines may
-      -- speculatively evaluate projection expressions on rows the parse
-      -- filter later drops (observed ~1-in-3 ConversionException without
-      -- it); a NULL from a doomed row is side-effect-free in both engines
-      -- and no surviving row has an empty index.
-      SELECT DISTINCT family, n_vars, max_lag,
-             CAST(NULLIF(SUBSTRING(target, 2), '') AS INT) AS i,
-             CAST(NULLIF(SUBSTRING(source, 2), '') AS INT) AS j,
-             lag AS k
-      FROM gt
-    ),
+    {_gtc('gt')},
     configs AS (
       SELECT family, n_vars, max_lag, COUNT(*) AS m
       FROM gtc GROUP BY family, n_vars, max_lag
@@ -154,33 +153,7 @@ def _body(expand, idiv: str, tus: str) -> str:
       JOIN srcs s
         ON s.v_cnt = t.v_cnt AND s.g = t.g AND s.r = t.r - t.k
     ),
-    sums AS (
-      SELECT v_cnt, vs, vt, k, COUNT(*) AS n,
-             SUM(CAST(FLOOR(xv * 1000000.0) AS BIGINT)) AS s_x,
-             SUM(CAST(FLOOR(yv * 1000000.0) AS BIGINT)) AS s_y,
-             SUM(CAST(FLOOR(xv * yv * 1000000.0) AS BIGINT)) AS s_xy,
-             SUM(CAST(FLOOR(xv * xv * 1000000.0) AS BIGINT)) AS s_xx,
-             SUM(CAST(FLOOR(yv * yv * 1000000.0) AS BIGINT)) AS s_yy
-      FROM pairs
-      GROUP BY v_cnt, vs, vt, k
-    ),
-    rho AS (
-      SELECT v_cnt, vs, vt, k,
-             (n * sxy - sx * sy)
-               / NULLIF(SQRT(GREATEST((n * sxx - sx * sx)
-                                      * (n * syy - sy * sy), 0.0)),
-                        0.0) AS rho
-      FROM (
-        SELECT v_cnt, vs, vt, k,
-               CAST(n AS DOUBLE) AS n,
-               CAST(s_x AS DOUBLE) / 1000000.0 AS sx,
-               CAST(s_y AS DOUBLE) / 1000000.0 AS sy,
-               CAST(s_xy AS DOUBLE) / 1000000.0 AS sxy,
-               CAST(s_xx AS DOUBLE) / 1000000.0 AS sxx,
-               CAST(s_yy AS DOUBLE) / 1000000.0 AS syy
-        FROM sums
-      ) d
-    ),
+    {_screener('v_cnt')},
     ranked AS (
       SELECT co.v_cnt, co.l_cnt, rh.vs, rh.vt, rh.k,
              ROW_NUMBER() OVER (PARTITION BY co.v_cnt, co.l_cnt
@@ -190,25 +163,87 @@ def _body(expand, idiv: str, tus: str) -> str:
       JOIN rho rh ON rh.v_cnt = co.v_cnt AND rh.k <= co.l_cnt
       WHERE NOT (rh.vs = rh.vt AND rh.k = 0)
     ),
-    c1 AS (SELECT family, n_vars, max_lag, m,
-                  {expand('1', 'n_vars')} AS i FROM configs),
-    c2 AS (SELECT family, n_vars, max_lag, m, i,
+    {tail}"""
+
+
+def _gtc(src: str) -> str:
+    """``gtc``: the deduplicated ground-truth cells (i = target index,
+    j = source index, k = lag) per config of a parsed-edges relation
+    (family, n_vars, max_lag, target, source, lag)."""
+    return f"""gtc AS (
+      -- NULLIF keeps the cast total: DuckDB's parallel pipelines may
+      -- speculatively evaluate projection expressions on rows the parse
+      -- filter later drops (observed ~1-in-3 ConversionException without
+      -- it); a NULL from a doomed row is side-effect-free in both engines
+      -- and no surviving row has an empty index.
+      SELECT DISTINCT family, n_vars, max_lag,
+             CAST(NULLIF(SUBSTRING(target, 2), '') AS INT) AS i,
+             CAST(NULLIF(SUBSTRING(source, 2), '') AS INT) AS j,
+             lag AS k
+      FROM {src}
+    )"""
+
+
+def _screener(key: str) -> str:
+    """``sums`` -> ``rho``: the lagged Pearson correlation of every
+    (key, vs, vt, k) group of ``pairs`` (source value xv, target value
+    yv) from exact FLOOR-micro bigint raw sums and one shared IEEE
+    formula — bit-identical in both engines, no rounding."""
+    return f"""sums AS (
+      SELECT {key}, vs, vt, k, COUNT(*) AS n,
+             SUM(CAST(FLOOR(xv * 1000000.0) AS BIGINT)) AS s_x,
+             SUM(CAST(FLOOR(yv * 1000000.0) AS BIGINT)) AS s_y,
+             SUM(CAST(FLOOR(xv * yv * 1000000.0) AS BIGINT)) AS s_xy,
+             SUM(CAST(FLOOR(xv * xv * 1000000.0) AS BIGINT)) AS s_xx,
+             SUM(CAST(FLOOR(yv * yv * 1000000.0) AS BIGINT)) AS s_yy
+      FROM pairs
+      GROUP BY {key}, vs, vt, k
+    ),
+    rho AS (
+      SELECT {key}, vs, vt, k,
+             (n * sxy - sx * sy)
+               / NULLIF(SQRT(GREATEST((n * sxx - sx * sx)
+                                      * (n * syy - sy * sy), 0.0)),
+                        0.0) AS rho
+      FROM (
+        SELECT {key}, vs, vt, k,
+               CAST(n AS DOUBLE) AS n,
+               CAST(s_x AS DOUBLE) / 1000000.0 AS sx,
+               CAST(s_y AS DOUBLE) / 1000000.0 AS sy,
+               CAST(s_xy AS DOUBLE) / 1000000.0 AS sxy,
+               CAST(s_xx AS DOUBLE) / 1000000.0 AS sxx,
+               CAST(s_yy AS DOUBLE) / 1000000.0 AS syy
+        FROM sums
+      ) d
+    )"""
+
+
+def _metric_tail(expand, src: str, cap: str | None, pred: str, join: str,
+                 keys=("family", "n_vars", "max_lag"), order=None) -> str:
+    """Cell expansion -> ``scored`` -> M1-M5 per config, the closing CTEs
+    and SELECT of a scorer. ``src`` holds one row per config (``keys``
+    and the capacity column ``cap``, if any); each cell but self-at-lag-0
+    is scored against ``gtc`` and ``pred``, a condition over ``join`` (the
+    text after LEFT JOIN). Rows are ordered by ``order`` or ``keys``."""
+    carry = ", ".join(keys + ((cap,) if cap else ()))
+    keys_s = ", ".join(keys)
+    ckeys = ", ".join(f"c.{k}" for k in keys)
+    return f"""c1 AS (SELECT {carry},
+                  {expand('1', 'n_vars')} AS i FROM {src}),
+    c2 AS (SELECT {carry}, i,
                   {expand('1', 'n_vars')} AS j FROM c1),
-    c3 AS (SELECT family, n_vars, max_lag, m, i, j,
+    c3 AS (SELECT {carry}, i, j,
                   {expand('0', 'max_lag')} AS k FROM c2),
     cells AS (SELECT * FROM c3 WHERE NOT (i = j AND k = 0)),
     scored AS (
-      SELECT c.family, c.n_vars, c.max_lag, c.i, c.j, c.k,
+      SELECT {ckeys}, c.i, c.j, c.k,
              CASE WHEN g.i IS NOT NULL THEN 1 ELSE 0 END AS gt,
-             CASE WHEN r.rn IS NOT NULL AND r.rn <= c.m
-                  THEN 1 ELSE 0 END AS pred
+             CASE WHEN {pred} THEN 1 ELSE 0 END AS pred
       FROM cells c
       LEFT JOIN gtc g
         ON g.family = c.family AND g.n_vars = c.n_vars
        AND g.max_lag = c.max_lag AND g.i = c.i AND g.j = c.j AND g.k = c.k
-      LEFT JOIN ranked r
-        ON r.v_cnt = c.n_vars AND r.l_cnt = c.max_lag
-       AND r.vt = c.i AND r.vs = c.j AND r.k = c.k
+      LEFT JOIN {join}
     ),
     -- ONE scan of `scored` for every metric: Spark inlines CTEs, so the
     -- textbook three-branch tail (confusion scan + pair-grouped reversal
@@ -221,7 +256,7 @@ def _body(expand, idiv: str, tus: str) -> str:
     -- algebra: each pair group carries its cells' (gt, pred) bits
     -- losslessly (cells_per_group = 2 - is_self).
     pgroups AS (
-      SELECT family, n_vars, max_lag,
+      SELECT {keys_s},
              LEAST(i, j) AS lo, GREATEST(i, j) AS hi, k,
              MAX(CASE WHEN i <= j THEN gt ELSE 0 END) AS gt_lo,
              MAX(CASE WHEN i > j THEN gt ELSE 0 END) AS gt_hi,
@@ -229,10 +264,10 @@ def _body(expand, idiv: str, tus: str) -> str:
              MAX(CASE WHEN i > j THEN pred ELSE 0 END) AS pred_hi,
              MAX(CASE WHEN i = j THEN 1 ELSE 0 END) AS is_self
       FROM scored
-      GROUP BY family, n_vars, max_lag, LEAST(i, j), GREATEST(i, j), k
+      GROUP BY {keys_s}, LEAST(i, j), GREATEST(i, j), k
     ),
     conf AS (
-      SELECT family, n_vars, max_lag,
+      SELECT {keys_s},
              CAST(SUM(gt_lo * pred_lo + gt_hi * pred_hi) AS BIGINT) AS tp,
              CAST(SUM((1 - gt_lo) * pred_lo
                       + CASE WHEN is_self = 1 THEN 0
@@ -251,9 +286,9 @@ def _body(expand, idiv: str, tus: str) -> str:
                                           AND gt_lo != pred_lo
                                      THEN 1 ELSE 0 END
                       END) AS BIGINT) AS shd_rev
-      FROM pgroups GROUP BY family, n_vars, max_lag
+      FROM pgroups GROUP BY {keys_s}
     )
-    SELECT c.family, c.n_vars, c.max_lag,
+    SELECT {ckeys},
            c.tp, c.fp, c.fn, c.tn,
            CASE WHEN c.tp + c.fn = 0 THEN 0.0
                 ELSE CAST(c.tp AS DOUBLE) / (c.tp + c.fn) END AS tpr,
@@ -265,16 +300,8 @@ def _body(expand, idiv: str, tus: str) -> str:
            c.fp + c.fn AS shd,
            c.shd_rev
     FROM conf c
-    ORDER BY c.family, c.n_vars, c.max_lag
+    ORDER BY {order or ckeys}
     """
-
-
-def _spark_expand(lo: str, hi: str) -> str:
-    return f"explode(sequence({lo}, {hi}))"
-
-
-def _duck_expand(lo: str, hi: str) -> str:
-    return f"unnest(generate_series({lo}, {hi}))"
 
 
 _DISCOVERY_DUCK = (

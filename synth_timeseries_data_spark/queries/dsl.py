@@ -127,85 +127,6 @@ def _parse_pipeline(spark: SparkSession) -> DataFrame:
     )
 
 
-def parse_edges_udtf(spark: SparkSession) -> DataFrame:
-    """Python-UDTF variant of the G2 parse pipeline (SURVEY §2.2 UDF/UDTF
-    surface): one equation row in, its edge rows out, as a LATERAL
-    table-function join — the idiom for DSL explosion when the grammar
-    outgrows regexp_extract (nested parens, operator precedence). Pinned
-    result-equal to the declarative pipeline in tests/test_dsl_semantics.py;
-    the SQL form stays the production path because it runs JVM-side with
-    zero Python workers — this variant exists to keep the escape hatch
-    tested, not to replace it. Same scale posture: the DSL registry is
-    dim-sized, so either form is a broadcast table at 100 TB."""
-    import re
-
-    from pyspark.sql.functions import udtf
-
-    coef_re, src_re = re.compile(_COEF_RE), re.compile(_SRC_RE)
-    lag_re, pow_re = re.compile(_LAG_RE), re.compile(_POW_RE)
-
-    @udtf(returnType="target string, source string, lag int,"
-                     " func string, coef double")
-    class ParseEquation:
-        def eval(self, family: str, eq: str):
-            # element_at(split(eq,'='), 1/2) semantics: segments, not
-            # "rest of string" — a (malformed) multi-'=' input keeps only
-            # the segment between the first two, same as the SQL form; an
-            # '='-less input yields no rows (the ANSI-off declarative
-            # behavior: NULL rhs → explode(NULL) → zero rows) instead of
-            # crashing the worker.
-            parts = eq.split("=")
-            if len(parts) < 2:
-                return
-            lhs, rhs = parts[0], parts[1]
-            # Mirror the declarative pipeline's lenient extraction semantics
-            # exactly (regexp_extract's no-match → ''), so the two variants
-            # stay row-equal on inputs BEYOND the current registry too: a
-            # coefficient-less term yields coef NULL (not a crash), and the
-            # power suffix keys on the '^' CHARACTER with an ''-suffix
-            # fallback for a non-numeric exponent — both verified
-            # divergence classes from review.
-            lhs_m = src_re.search(lhs)
-            target = "X" + (lhs_m.group(1) if lhs_m else "")
-            for raw in rhs.split("+"):
-                term = raw.strip()
-                if "X" not in term or (family != "c1" and "*" not in term):
-                    continue
-                lag_m = lag_re.search(term)
-                pow_m = pow_re.search(term)
-                pow_s = pow_m.group(1) if pow_m else ""
-                has_pow = "^" in term
-                if family == "a1":
-                    func = "linear"
-                elif family == "b2":
-                    func = "power" + (pow_s if has_pow else "1")
-                elif "cos(" in term:
-                    func = "cos"
-                elif "sin(" in term:
-                    func = "sin"
-                elif has_pow:
-                    func = "power" + pow_s
-                else:
-                    func = "linear"
-                src_m = src_re.search(term)
-                coef_m = coef_re.match(term)
-                yield (
-                    target,
-                    "X" + (src_m.group(1) if src_m else ""),
-                    int(lag_m.group(1)) if lag_m else 0,
-                    func,
-                    float(coef_m.group(1)) if coef_m else None,
-                )
-
-    spark.udtf.register("parse_equation", ParseEquation)
-    return spark.sql(
-        f"""SELECT eqs.family, eqs.n_vars, eqs.max_lag,
-                   t.target, t.source, t.lag, t.func, t.coef
-            FROM {_eqs_values_sql()},
-            LATERAL parse_equation(eqs.family, eqs.eq) t"""
-    )
-
-
 @register("parse_edges", _PARSE_ORACLE)
 def parse_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equation DSL → edge list across all three grammars (linear
@@ -214,16 +135,6 @@ def parse_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Driver-side literals in, ~150 rows out — the DSL is dim-sized by design;
     at 100 TB this stays a broadcast table."""
     return _parsed_edges(spark)
-
-
-@register("parse_edges_udtf", _PARSE_ORACLE)
-def parse_edges_udtf_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Python-UDTF variant of G2 under the SAME oracle as parse_edges
-    (the two are pinned row-equal in tests/test_dsl_semantics.py; this
-    registry entry gets the variant its own driver CORRECTNESS attestation
-    — VERDICT r06 item 8). The declarative form stays the production path;
-    see parse_edges_udtf's docstring for why the escape hatch exists."""
-    return parse_edges_udtf(spark)
 
 
 # --------------------------------------------------------------------------

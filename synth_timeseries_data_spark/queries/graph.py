@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.detrand import lcg_uniform_sql
-from . import register
+from . import _duck_expand, _spark_expand, register
 from .relational import _CONFIG_GRID_SQL
 
 # Unique integer key per tensor cell, identical in both engines. BIGINT from
@@ -64,14 +64,6 @@ def _edges_cte(expand) -> str:
                   THEN 1 ELSE 0 END AS pred
       FROM keyed)
     """
-
-
-def _spark_expand(lo: str, hi: str) -> str:
-    return f"explode(sequence({lo}, {hi}))"
-
-
-def _duck_expand(lo: str, hi: str) -> str:
-    return f"unnest(generate_series({lo}, {hi}))"
 
 
 def _dual(body: str):

@@ -28,7 +28,7 @@ from ..functions.detrand import lcg_uniform_sql
 from ..functions.materialize import materialized
 from ..functions.spread import register_spread_view
 from ..sources import load, table_bytes
-from . import register
+from . import _duck_expand, _spark_expand, register
 
 # --------------------------------------------------------------------------
 # Dialect table: name differences between Spark SQL and DuckDB for the
@@ -44,7 +44,7 @@ _SPARK_D = {
     "minarr": lambda a: f"array_min({a})",
     "transform": lambda a, lam: f"transform({a}, {lam})",
     "retokens": lambda s, p: f"size(regexp_extract_all({s}, '{p}', 0))",
-    "expand": lambda lo, hi: f"explode(sequence({lo}, {hi}))",
+    "expand": _spark_expand,
     "seq": lambda lo, hi: f"sequence({lo}, {hi})",
     "unnest": lambda a: f"explode({a})",
     "posexplode": "posexplode",  # handled inline
@@ -68,7 +68,7 @@ _DUCK_D = {
     "minarr": lambda a: f"list_aggregate({a}, 'min')",
     "transform": lambda a, lam: f"list_transform({a}, {lam})",
     "retokens": lambda s, p: f"len(regexp_extract_all({s}, '{p}', 0))",
-    "expand": lambda lo, hi: f"unnest(generate_series({lo}, {hi}))",
+    "expand": _duck_expand,
     "seq": lambda lo, hi: f"generate_series({lo}, {hi})",
     "unnest": lambda a: f"unnest({a})",
     "pdocs": "documents",

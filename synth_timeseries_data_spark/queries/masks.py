@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.detrand import lcg_uniform_sql
 from ..sources import load
-from . import register
+from . import _duck_expand, _spark_expand, register
 
 # --------------------------------------------------------------------------
 # G13 — MCAR over the events fixture, swept over the rate grid.
@@ -111,14 +111,6 @@ def _block_cte(expand) -> str:
     FROM runs
     GROUP BY sid, v
     """
-
-
-def _spark_expand(lo: str, hi: str) -> str:
-    return f"explode(sequence({lo}, {hi}))"
-
-
-def _duck_expand(lo: str, hi: str) -> str:
-    return f"unnest(generate_series({lo}, {hi}))"
 
 
 @register("block_mask", _block_cte(_duck_expand))

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ..functions.detrand import gaussian_sql, laplace_sql, lcg_uniform_sql
 from ..functions.spread import register_spread_view
 from ..sources import load
-from . import register
+from . import _duck_expand, _spark_expand, register
 
 # --------------------------------------------------------------------------
 # G9+G10 — trend + two-harmonic seasonality over the reference's (trend,
@@ -52,14 +52,6 @@ def _trend_season_cte(expand) -> str:
                  6) + 0.0 AS season
     FROM pts
     """
-
-
-def _spark_expand(lo: str, hi: str) -> str:
-    return f"explode(sequence({lo}, {hi}))"
-
-
-def _duck_expand(lo: str, hi: str) -> str:
-    return f"unnest(generate_series({lo}, {hi}))"
 
 
 @register("trend_season", _trend_season_cte(_duck_expand))

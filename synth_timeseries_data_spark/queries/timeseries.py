@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.detrand import exponential_sql
 from ..sources import load
-from . import register
+from . import _duck_expand, _spark_expand, register
 
 # ---------------------------------------------------------------------------
 # G7 — irregular timestamps: cumulative exponential gaps with a min-gap floor.
@@ -73,14 +73,6 @@ def _irr_cte(expand) -> str:
                  6) AS ts
     FROM gaps
     """
-
-
-def _spark_expand(lo: str, hi: str) -> str:
-    return f"explode(sequence({lo}, {hi}))"
-
-
-def _duck_expand(lo: str, hi: str) -> str:
-    return f"unnest(generate_series({lo}, {hi}))"
 
 
 @register("irregular_ts", _irr_cte(_duck_expand))

@@ -82,7 +82,13 @@ def _rescore_config(pdf: pd.DataFrame, n_vars: int, max_lag: int,
                                else -math.inf), c[0], c[1], c[2]))
     m = len(gt)
     pred = set((vt, vs, k) for (vs, vt, k) in cand[:m])
+    return _score_cells(n_vars, max_lag, gt, pred)
 
+
+def _score_cells(n_vars: int, max_lag: int, gt: set, pred: set) -> dict:
+    """The reference's M1-M5 for one config from its ground-truth and
+    predicted (i, j, k) cell sets (i = target, j = source, k = lag) over
+    the cell space without self-at-lag-0."""
     cells = [(i, j, k) for i in range(1, n_vars + 1)
              for j in range(1, n_vars + 1)
              for k in range(0, max_lag + 1) if not (i == j and k == 0)]
@@ -244,6 +250,51 @@ def test_score_predictions_perfect_and_reversed(spark):
     for other, rr in got.items():
         if other != key:
             assert rr.shd == 0 and rr.shd_rev == 0
+
+
+def test_score_predictions_noisy_matches_numpy(spark):
+    """score_predictions on an imperfect prediction set: per config, every
+    third ground-truth edge is dropped (fn), every fifth non-edge cell is
+    added (fp), one edge is reversed, one self-lag non-edge is predicted,
+    one row is duplicated, and one config has no ground truth at all.
+    Every metric column must equal the numpy scorer's."""
+    from synth_timeseries_data_spark.queries.benchmark import (
+        score_predictions,
+    )
+
+    gt_all = _gt_cells(spark)
+    configs = [("a1", 4, 2), ("b2", 6, 3), ("c1", 8, 4), ("d1", 4, 2)]
+    want, rows = {}, []
+    for key in configs:
+        fam, v, lag = key
+        gt = gt_all.get(key, set())
+        space = [(i, j, k) for i in range(1, v + 1)
+                 for j in range(1, v + 1)
+                 for k in range(0, lag + 1) if not (i == j and k == 0)]
+        pred = {c for n, c in enumerate(sorted(gt)) if n % 3}
+        pred |= {c for n, c in enumerate(c for c in space if c not in gt)
+                 if n % 5 == 0}
+        if key == ("a1", 4, 2):
+            flip = next((i, j, k) for (i, j, k) in sorted(pred & gt)
+                        if i != j and (j, i, k) not in gt)
+            pred = (pred - {flip}) | {(flip[1], flip[0], flip[2])}
+            pred.add(next((i, i, k) for (i, _, k) in space
+                          if k > 0 and (i, i, k) not in gt))
+        want[key] = _score_cells(v, lag, gt, pred)
+        rows += [(fam, v, lag, i, j, k) for (i, j, k) in sorted(pred)]
+    rows.append(rows[0])
+    preds = spark.createDataFrame(
+        rows, "family string, n_vars int, max_lag int, i int, j int, k int"
+    )
+    got = {(r.family, r.n_vars, r.max_lag):
+           dict(tp=r.tp, fp=r.fp, fn=r.fn, tn=r.tn, tpr=r.tpr, fdr=r.fdr,
+                f1=r.f1, shd=r.shd, shd_rev=r.shd_rev)
+           for r in score_predictions(spark, preds).collect()}
+    assert got == want
+    # the set exercises every confusion cell and a reversal discount
+    a1 = want[("a1", 4, 2)]
+    assert min(a1["tp"], a1["fp"], a1["fn"], a1["tn"]) > 0
+    assert a1["shd_rev"] < a1["shd"]
 
 
 def test_cli_benchmark_predictions_mode(spark, tmp_path):

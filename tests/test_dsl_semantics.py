@@ -108,40 +108,3 @@ def test_registry_matches_reference_registry():
         for v in (4, 6, 8)
         for l in (2, 3, 4)
     )
-
-
-def test_udtf_variant_equals_declarative_pipeline(spark):
-    """The Python-UDTF parse variant (SURVEY §2.2 UDF/UDTF surface) must
-    produce exactly the declarative pipeline's edge rows — same grammar,
-    same Q1/Q3 quirks, bit-equal coefs — so the escape hatch for richer
-    grammars stays verified against the production path."""
-    from synth_timeseries_data_spark.queries.dsl import (
-        _parse_pipeline,
-        parse_edges_udtf,
-    )
-
-    key = lambda r: (r["family"], r["n_vars"], r["max_lag"],  # noqa: E731
-                     r["target"], r["source"], r["lag"], r["func"])
-    a = sorted((r.asDict() for r in _parse_pipeline(spark).collect()), key=key)
-    b = sorted((r.asDict() for r in parse_edges_udtf(spark).collect()), key=key)
-    assert len(a) > 100 and a == b
-
-
-def test_udtf_variant_lenient_on_richer_grammar(spark):
-    """The UDTF mirrors regexp_extract's no-match → '' semantics on inputs
-    beyond the current registry (the exact scenario the escape hatch is
-    for): a coefficient-less trig term yields coef NULL, and a symbolic
-    exponent yields the ''-suffixed 'power' func — not a worker crash."""
-    from synth_timeseries_data_spark.queries.dsl import parse_edges_udtf
-
-    parse_edges_udtf(spark)  # registers parse_equation for this session
-    rows = spark.sql(
-        """SELECT t.* FROM (VALUES
-             ('c1', 'X2[t] = cos(X1[t-1]) + 7'),
-             ('c1', 'X3[t] = 0.5 * X1[t-1]^k + 2')
-           ) AS eqs(family, eq),
-           LATERAL parse_equation(eqs.family, eqs.eq) t"""
-    ).collect()
-    by_target = {r.target: r for r in rows}
-    assert by_target["X2"].func == "cos" and by_target["X2"].coef is None
-    assert by_target["X3"].func == "power" and by_target["X3"].coef == 0.5

@@ -53,8 +53,8 @@ FLAGSHIPS = [
     ("winnowing", "MOSS fingerprints: position explode + ONE doc-keyed window (rightmost-min encoded in the value) + exchange-free DISTINCT"),
     ("gopher_repetition", "repetition table: zero-exchange Arrow-batched python stage over the pruned scan (fold twin retired by A/B)"),
     ("line_dedup", "line-grain dedup: hash-keyed sortless first-doc window + touched-docs-only anti-join rebuild"),
-    ("kmeans_embed", "Lloyd k-means: 3 rounds of Arrow-batched numpy assignment (mapInPandas over the pruned scan), K*dims micro-mean centroid updates read on the driver"),
-    ("quality_classifier", "trained quality filter: session-materialized design matrix, 5 integer-state LR rounds, feature-keyed codegen aggregations"),
+    ("kmeans_embed", "Lloyd k-means: seeds + 2 training rounds of one job each (numpy assignment emitting per-batch K*dims partial micro sums, one (c, dim) agg read on the driver); the plan is the lazy final assignment, mapInPandas over the pruned scan"),
+    ("quality_classifier", "trained quality filter: session-materialized doc-partitioned design matrix with labels, 5 integer-state LR rounds of one job each (weights as a plan literal, the feature-keyed gradient agg the only exchange); the plan is the exchange-free scoring pass"),
     ("doc_embed", "hashing-trick doc vectors: word x dim explode partial-aggregated to 16 rows/doc before ONE exchange"),
     ("interpolate_ts", "series gap-fill: two ignore-nulls bracket windows over one series-keyed sort, no joins"),
     ("outlier_flags", "median/MAD outliers: exact rank picks, three window passes over one series exchange"),

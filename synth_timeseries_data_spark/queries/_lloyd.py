@@ -9,9 +9,13 @@ corpus_ext — a quantizer import in the other direction would cycle.
 One Spark form and its DuckDB twin, term-for-term the same FLOOR-micro
 integer arithmetic:
 
-- ``_km_lloyd``: the Spark trainer — per-round Arrow-batched numpy
-  assignment (``_km_assign_numpy``) plus one SQL micro-mean update whose
-  K*dims result rows are the only driver reads;
+- ``_km_step``: the Spark trainer — one Lloyd round as ONE job: the
+  Arrow-batched numpy assignment emits per-batch partial micro sums, one
+  (cluster, dim) aggregation combines them, and its K*dims result rows
+  are the only driver reads. ``_km_lloyd`` (kmeans_embed) and
+  ``_km_quantizer`` (the IVF/semdedup coarse quantizer) chain it, and
+  ``_km_assign_numpy`` is the final lazy assignment pass; both share the
+  blocked exact argmin ``_km_argmin``;
 - ``_km_cent_chain``: the DuckDB oracle text — the iteration budget
   UNROLLED into declarative CTEs, so the oracles replay training end to
   end inside one statement.
@@ -23,6 +27,7 @@ tests/test_ann_recall.py and tests/test_corpus_ext.py.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _KM_K = 8
 _KM_ITERS = 3
@@ -110,14 +115,13 @@ def _km_cent_chain(k: int = _KM_K, iters: int = _KM_ITERS, prefix: str = ""):
     return ctes, trained
 
 
-def _km_assign_numpy(df: DataFrame, cents: dict) -> DataFrame:
-    """One Lloyd assignment pass as Arrow-batched mapInPandas over ``df``
-    (vec_id, embedding) against ``cents`` {cluster: float64[dims]}:
-    (vec_id, cluster, d2_micro). The EXACT arithmetic of the oracle's
-    _km_fold, vectorized — float64 (x-w)^2 * 1e6 floored per dim
-    (IEEE-identical to the SQL form term by term), summed exactly; the
-    argmin takes the first minimum over ascending cluster ids, i.e. the
-    oracle's MIN(d2*K + c) tie rule.
+def _km_argmin(E, C):
+    """Blocked exact argmin of each row of ``E`` (n, dims) over the
+    centroid rows of ``C`` (K, dims): (best index into C, best d2_micro).
+    The EXACT arithmetic of the oracle's _km_fold, vectorized — float64
+    (x-w)^2 * 1e6 floored per dim (IEEE-identical to the SQL form term by
+    term), summed exactly; the argmin takes the first minimum over
+    ascending centroid rows, i.e. the oracle's MIN(d2*K + c) tie rule.
 
     The centroid axis is processed in 64-row BLOCKS: the unblocked
     (batch, K, dims) broadcast subtract is ~5 GB of float64 intermediate
@@ -126,108 +130,139 @@ def _km_assign_numpy(df: DataFrame, cents: dict) -> DataFrame:
     minimum keeps ties on the LOWER block, so the blocked argmin equals
     the one-shot one exactly."""
     import numpy as np
-    import pandas as pd
+
+    best_d = np.full(len(E), np.iinfo(np.int64).max, dtype=np.int64)
+    best_c = np.zeros(len(E), dtype=np.int64)
+    for lo in range(0, len(C), 64):
+        Cb = C[lo : lo + 64]
+        # In-place ops + float64 reduction: each floored term is an exact
+        # small integer and 64 of them stay far below 2^53, so summing in
+        # float64 is EXACT (same integer the int64 sum produces) while
+        # skipping the (batch, K, dims) int64 materialization — the K=1024
+        # build was measured memory-bandwidth-bound (137 s/round at 200k
+        # vectors) on exactly those intermediate tensors.
+        diff = E[:, None, :] - Cb[None, :, :]
+        np.multiply(diff, diff, out=diff)
+        np.multiply(diff, 1e6, out=diff)
+        np.floor(diff, out=diff)
+        d2 = diff.sum(axis=2).astype(np.int64)
+        blk_c = d2.argmin(axis=1)
+        blk_d = d2[np.arange(len(E)), blk_c]
+        upd = blk_d < best_d  # strict: ties keep the lower block
+        best_d = np.where(upd, blk_d, best_d)
+        best_c = np.where(upd, blk_c + lo, best_c)
+    return best_c, best_d
+
+
+def _km_batches(cents: dict, emit):
+    """The mapInPandas body shared by the assignment pass and the training
+    step: each non-empty Arrow batch of (vec_id, embedding) is argmin'd
+    against ``cents`` {cluster: float64[dims]} (closure-captured, K*dims
+    scalars) and handed to ``emit(pdf, E, cluster_ids, best_c, best_d)``,
+    which returns the batch's output frame."""
+    import numpy as np
 
     ids = sorted(cents)  # clusters can drop out: ids need not be 0..K-1
     cmap = np.array(ids, dtype=np.int32)
-    C = np.stack([cents[c] for c in ids])  # closure-captured, K*dims scalars
+    C = np.stack([cents[c] for c in ids])
 
-    def assign(batches):
+    def lloyd_batches(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             E = np.array(
                 [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
             )
-            best_d = np.full(len(pdf), np.iinfo(np.int64).max, dtype=np.int64)
-            best_c = np.zeros(len(pdf), dtype=np.int64)
-            for lo in range(0, len(ids), 64):
-                Cb = C[lo : lo + 64]
-                # In-place ops + float64 reduction: each floored term is an
-                # exact small integer and 64 of them stay far below 2^53,
-                # so summing in float64 is EXACT (same integer the int64
-                # sum produces) while skipping the (batch, K, dims) int64
-                # materialization — the K=1024 build was measured memory-
-                # bandwidth-bound (137 s/round at 200k vectors) on exactly
-                # those intermediate tensors.
-                diff = E[:, None, :] - Cb[None, :, :]
-                np.multiply(diff, diff, out=diff)
-                np.multiply(diff, 1e6, out=diff)
-                np.floor(diff, out=diff)
-                d2 = diff.sum(axis=2).astype(np.int64)
-                blk_c = d2.argmin(axis=1)
-                blk_d = d2[np.arange(len(pdf)), blk_c]
-                upd = blk_d < best_d  # strict: ties keep the lower block
-                best_d = np.where(upd, blk_d, best_d)
-                best_c = np.where(upd, blk_c + lo, best_c)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cluster": cmap[best_c],
-                 "d2_micro": best_d}
-            )
+            best_c, best_d = _km_argmin(E, C)
+            yield emit(pdf, E, cmap, best_c, best_d)
+
+    return lloyd_batches
+
+
+def _km_assign_numpy(df: DataFrame, cents: dict) -> DataFrame:
+    """One Lloyd assignment pass as Arrow-batched mapInPandas over ``df``
+    (vec_id, embedding) against ``cents`` {cluster: float64[dims]}:
+    (vec_id, cluster, d2_micro), argmin'd by ``_km_argmin``."""
+    import pandas as pd
+
+    def emit(pdf, E, cmap, best_c, best_d):
+        return pd.DataFrame(
+            {"vec_id": pdf["vec_id"], "cluster": cmap[best_c],
+             "d2_micro": best_d}
+        )
 
     return df.mapInPandas(
-        assign, schema="vec_id long, cluster int, d2_micro long"
+        _km_batches(cents, emit),
+        schema="vec_id long, cluster int, d2_micro long",
     )
 
 
-def _km_update(spark: SparkSession, emb: DataFrame, assign: DataFrame) -> dict:
-    """One centroid update: per-(cluster, dim) exact-integer micro sums
-    over ``assign`` ⋈ ``emb``'s position explosion, divided on the driver
-    exactly as the oracle's w_mean divides. Returns {cluster:
-    float64[dims]}; the K*dims result rows are planning scalars, never
-    data."""
-    import uuid
-
+def _km_step(emb: DataFrame, cents: dict) -> dict:
+    """One Lloyd round — assignment AND centroid update — as ONE Spark job:
+    the assignment pass emits, per Arrow batch, the partial exact-integer
+    micro sums (c, dim, Σ FLOOR(x·1e6), n) of the vectors it assigned to
+    each cluster; one (c, dim) aggregation combines them, and the driver
+    divides exactly as the oracle's w_mean divides. Returns the updated
+    {cluster: float64[dims]}: a cluster that won no vector drops out. The
+    K*dims result rows are planning scalars, never data."""
     import numpy as np
+    import pandas as pd
 
-    view = f"_km_{uuid.uuid4().hex[:12]}"
-    assign.createOrReplaceTempView(view)
-    emb.createOrReplaceTempView(f"{view}_e")
-    try:
-        rows = spark.sql(
-            f"""
-            SELECT a.cluster AS c, p.dim,
-                   SUM(CAST(FLOOR(p.x * 1000000.0) AS BIGINT)) AS sx,
-                   COUNT(*) AS n
-            FROM (SELECT vec_id, pos + 1 AS dim, CAST(x AS DOUBLE) AS x
-                  FROM {view}_e LATERAL VIEW posexplode(embedding) AS pos, x
-                 ) p
-            JOIN {view} a ON a.vec_id = p.vec_id
-            GROUP BY a.cluster, p.dim
-            """
-        ).collect()
-    finally:
-        spark.catalog.dropTempView(view)
-        spark.catalog.dropTempView(f"{view}_e")
+    def emit(pdf, E, cmap, best_c, best_d):
+        k, dims = len(cmap), E.shape[1]
+        sx = np.zeros((k, dims), dtype=np.int64)
+        # the oracle's CAST(FLOOR(x * 1000000.0) AS BIGINT) per component,
+        # scattered onto the assigned cluster's row (vectorized: K reaches
+        # 1024 at semdedup's scale tier)
+        np.add.at(sx, best_c, np.floor(E * 1e6).astype(np.int64))
+        n = np.bincount(best_c, minlength=k)
+        hit = np.flatnonzero(n)
+        return pd.DataFrame(
+            {"c": np.repeat(cmap[hit], dims),
+             "dim": np.tile(np.arange(1, dims + 1, dtype=np.int32), len(hit)),
+             "sx": sx[hit].ravel(),
+             "n": np.repeat(n[hit], dims)}
+        )
+
+    rows = (
+        emb.mapInPandas(
+            _km_batches(cents, emit), schema="c int, dim int, sx long, n long"
+        )
+        .groupBy("c", "dim")
+        .agg(F.sum("sx").alias("sx"), F.sum("n").alias("n"))
+        .collect()
+    )
     dims = max(r.dim for r in rows)
-    cents: dict = {}
+    out: dict = {}
     for r in rows:
-        cents.setdefault(r.c, np.zeros(dims))[r.dim - 1] = (
+        out.setdefault(r.c, np.zeros(dims))[r.dim - 1] = (
             float(r.sx) / (r.n * 1e6)
         )
-    return cents
+    return out
 
 
-def _km_lloyd(
-    spark: SparkSession, emb: DataFrame, k: int = _KM_K, iters: int = _KM_ITERS
-) -> DataFrame:
-    """Lloyd k-means over ``emb`` (vec_id, embedding): seeds are the k
-    smallest vec_ids' vectors, then ``iters`` assignment rounds with a
-    centroid update between consecutive ones. Returns the last round's
-    assignment (vec_id, cluster, d2_micro) — lazy; the rounds before it
-    ran eagerly. A cluster that loses all members drops out of the next
-    round's centroids."""
+def _km_seeds(emb: DataFrame, k: int) -> dict:
+    """The deterministic seeds: the k smallest vec_ids' vectors."""
     import numpy as np
 
     seeds = emb.orderBy("vec_id").limit(k).collect()
-    cents = {
+    return {
         c: np.asarray(r.embedding, dtype=np.float64)
         for c, r in enumerate(seeds)
     }
-    assign = _km_assign_numpy(emb, cents)
+
+
+def _km_lloyd(
+    emb: DataFrame, k: int = _KM_K, iters: int = _KM_ITERS
+) -> DataFrame:
+    """Lloyd k-means over ``emb`` (vec_id, embedding): the seeds, then
+    ``iters`` assignment rounds with a centroid update between consecutive
+    ones — ``iters - 1`` eager ``_km_step`` jobs. Returns the last round's
+    assignment (vec_id, cluster, d2_micro), lazy."""
+    cents = _km_seeds(emb, k)
     for _ in range(iters - 1):
-        assign = _km_assign_numpy(emb, _km_update(spark, emb, assign))
-    return assign
+        cents = _km_step(emb, cents)
+    return _km_assign_numpy(emb, cents)
 
 
 def _km_quantizer(
@@ -235,9 +270,9 @@ def _km_quantizer(
 ) -> dict:
     """The trained coarse quantizer {cluster: float64[dims]}: ``_km_lloyd``
     run through the FINAL update (the quantizer is the k-means solution,
-    not the last pre-assignment centroids) — the oracle chain's
-    ``trained_centroid_select``. Past ``_KM_TRAIN_CAP`` vectors it trains
-    on a stride subsample."""
+    not the last pre-assignment centroids) — ``iters`` ``_km_step``
+    rounds, the oracle chain's ``trained_centroid_select``. Past
+    ``_KM_TRAIN_CAP`` vectors it trains on a stride subsample."""
     # Repartition BEFORE the per-round assignment kernel: the embeddings
     # scan yields only ~2 file-split partitions at the 200k tier (one
     # 100 MB parquet), so the compute-heavy mapInPandas ran ~2-way —
@@ -255,7 +290,10 @@ def _km_quantizer(
         # scaled fixtures cluster by id range): every ceil(n/cap)-th id
         stride = -(-n // _KM_TRAIN_CAP)
         train = train.where(f"vec_id % {stride} = 0").localCheckpoint()
-    return _km_update(spark, train, _km_lloyd(spark, train, k, iters))
+    cents = _km_seeds(train, k)
+    for _ in range(iters):
+        cents = _km_step(train, cents)
+    return cents
 
 
 def trained_centroid_values(cents) -> str:

@@ -724,16 +724,19 @@ def kmeans_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each assignment is an Arrow-batched mapInPandas
     computing the FLOOR-micro arithmetic as a vectorized (batch, K, dims)
-    tensor — no join, no exchange; each round's centroid update is one
-    SQL micro-mean aggregation whose K·dims planning-scalar rows are the
-    only driver reads (the bpe_train discipline). The retired unrolled-SQL
-    form evaluated ~770M interpreted lambda terms at 200k vectors
-    (40.9 s steady vs ~3-6 s here) and was no faster at the gate tiers.
-    Nothing is corpus-quadratic."""
+    tensor — no join; each training round (_km_step) is ONE job: the
+    assignment pass emits per-batch partial micro sums and one (cluster,
+    dim) aggregation combines them into the K·dims planning-scalar rows
+    that are the only driver reads (the bpe_train discipline). The seeds
+    plus two rounds are three jobs per build; the returned final
+    assignment is lazy. The retired unrolled-SQL form evaluated ~770M
+    interpreted lambda terms at 200k vectors (40.9 s steady vs ~3-6 s
+    here) and was no faster at the gate tiers. Nothing is
+    corpus-quadratic."""
     from ..sources import load
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return _km_lloyd(spark, emb)
+    return _km_lloyd(emb)
 
 
 # --------------------------------------------------------------------------
@@ -988,19 +991,12 @@ def _qlr_y_sql(d) -> str:
     )
 
 
-def _qlr_grad_ctes(d, fx: str, y: str, wprev: str, t: int) -> str:
-    """One training round's GRADIENT: logit -> snapped sigmoid -> integer
-    gradient. Returns the CTE chain ending in g{t}.
-
-    Spark side carries an explicit BROADCAST hint on the weight relation
-    (r10 optimization): w is a bounded (≤ _QLR_FEATS rows) relation that
-    must never push the corpus-proportional design matrix into a
-    feature-keyed SortMergeJoin shuffle (plan-verified; the z
-    aggregation's own doc-keyed exchange is the only fx shuffle left)."""
-    hint = "/*+ BROADCAST(w) */ " if d is _SPARK_D else ""
+def _qlr_grad_ctes(fx: str, y: str, wprev: str, t: int) -> str:
+    """One training round's GRADIENT in the DuckDB twin: logit -> snapped
+    sigmoid -> integer gradient. Returns the CTE chain ending in g{t}."""
     return f"""
     z{t} AS (
-      SELECT {hint}x.doc_id, x.nw, SUM(x.c * COALESCE(w.wm, 0)) AS zn
+      SELECT x.doc_id, x.nw, SUM(x.c * COALESCE(w.wm, 0)) AS zn
       FROM {fx} x LEFT JOIN {wprev} w ON w.f = x.f
       GROUP BY x.doc_id, x.nw
     ),
@@ -1022,50 +1018,21 @@ def _qlr_grad_ctes(d, fx: str, y: str, wprev: str, t: int) -> str:
     )"""
 
 
-def _qlr_round_ctes(d, fx: str, y: str, wprev: str, t: int) -> str:
-    """One full training round (gradient + integer weight step) as CTEs
-    ending in w{t} — the DuckDB twin's form; the Spark side runs the
-    gradient CTEs only and steps the weights on the driver
-    (_qlr_step_weights), the two pinned bit-equal by the oracle replay."""
+def _qlr_round_ctes(fx: str, y: str, wprev: str, t: int) -> str:
+    """One full training round of the DuckDB twin (gradient + integer
+    weight step) as CTEs ending in w{t}; the Spark side steps the weights
+    on the driver (_qlr_step_weights), the two pinned bit-equal by the
+    oracle replay."""
     return (
-        _qlr_grad_ctes(d, fx, y, wprev, t)
+        _qlr_grad_ctes(fx, y, wprev, t)
         + f""",
-    w{t} AS {'MATERIALIZED ' if d is not _SPARK_D else ''}(
+    w{t} AS MATERIALIZED (
       SELECT COALESCE(w.f, g.f) AS f,
              COALESCE(w.wm, 0) - (COALESCE(g.gm, 0)
-               {'DIV' if d is _SPARK_D else '//'} {_QLR_LR_SHIFT}) AS wm
+               // {_QLR_LR_SHIFT}) AS wm
       FROM {wprev} w FULL JOIN g{t} g ON g.f = w.f
     )"""
     )
-
-
-def _qlr_w_view(spark: SparkSession, w: "dict[int, int]", name: str) -> None:
-    """Register the driver-held weight dict as a temp view. Non-empty
-    weights become a VALUES literal — a true LocalRelation, so each
-    round's BroadcastExchange builds DRIVER-SIDE with no job — bounded at
-    _QLR_FEATS rows by the hashing trick. (createDataFrame was A/B'd and
-    REJECTED: it parallelizes into a stats-less 32-partition LogicalRDD,
-    re-adding a broadcast-build job per round — interleaved min-of-4 at
-    sf0.1: VALUES 2.81 s, old full-join form 3.43 s, createDataFrame
-    5.12 s end-to-end.) The empty round-1 relation is a never-true-filter
-    subquery with BOTH columns aliased — plan-verified to keep the
-    two-column schema AND fold to a known-empty relation, so
-    PropagateEmptyRelation eliminates round 1's join outright (an empty
-    createDataFrame is a stats-less LogicalRDD the optimizer cannot see
-    through)."""
-    if not w:
-        spark.sql(
-            "SELECT f, wm FROM (SELECT CAST(NULL AS BIGINT) AS f,"
-            " CAST(NULL AS BIGINT) AS wm) WHERE 1 = 0"
-        ).createOrReplaceTempView(name)
-        return
-    vals = ", ".join(
-        f"(CAST({f} AS BIGINT), CAST({m} AS BIGINT))"
-        for f, m in sorted(w.items())
-    )
-    spark.sql(
-        f"SELECT f, wm FROM (VALUES {vals}) AS w(f, wm)"
-    ).createOrReplaceTempView(name)
 
 
 def _qlr_step_weights(w: "dict[int, int]", grad_rows) -> "dict[int, int]":
@@ -1083,14 +1050,14 @@ def _qlr_step_weights(w: "dict[int, int]", grad_rows) -> "dict[int, int]":
     return out
 
 
-def _qlr_final_sql(d, fx: str, y: str, wlast: str) -> str:
-    """Score every doc with the trained weights; the keep DECISION is the
-    integer sign of the logit numerator (no libm in the decision)."""
+def _qlr_final_sql(fx: str, y: str, wlast: str) -> str:
+    """The DuckDB twin's scoring of every doc with the trained weights;
+    the keep DECISION is the integer sign of the logit numerator (no libm
+    in the decision)."""
     t = _QLR_ROUNDS + 1
-    hint = "/*+ BROADCAST(w) */ " if d is _SPARK_D else ""
     return f"""
     z{t} AS (
-      SELECT {hint}x.doc_id, x.nw, SUM(x.c * COALESCE(w.wm, 0)) AS zn
+      SELECT x.doc_id, x.nw, SUM(x.c * COALESCE(w.wm, 0)) AS zn
       FROM {fx} x LEFT JOIN {wlast} w ON w.f = x.f
       GROUP BY x.doc_id, x.nw
     )
@@ -1115,14 +1082,70 @@ def _qlr_duck() -> str:
         " CAST(NULL AS BIGINT) AS wm WHERE FALSE)",
     ]
     for t in range(1, _QLR_ROUNDS + 1):
-        ctes.append(_qlr_round_ctes(d, "fx", "y", f"w{t - 1}", t).strip())
+        ctes.append(_qlr_round_ctes("fx", "y", f"w{t - 1}", t).strip())
     return (
         "WITH " + ",\n    ".join(ctes) + ","
-        + _qlr_final_sql(d, "fx", "y", f"w{_QLR_ROUNDS}")
+        + _qlr_final_sql("fx", "y", f"w{_QLR_ROUNDS}")
     )
 
 
 _QLR_DUCK = _qlr_duck()
+
+
+def _qlr_fxy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Spark side's one session memo: the design matrix joined to its
+    label, (doc_id, nw, f, c, y), hash-partitioned by doc_id. The
+    checkpointed relation keeps that partitioning, so each round's
+    doc-keyed logit aggregation and its p ⋈ x join run exchange-free."""
+    from .llm_pipeline import _indexed, _register_docs
+
+    _register_docs(spark, sf_dir)
+    d = _SPARK_D
+    return _indexed(
+        spark,
+        f"qlr_fxy|{sf_dir}",
+        f"SELECT * FROM (SELECT x.doc_id, x.nw, x.f, x.c, y.y "
+        f"FROM ({_qlr_fx_sql(d)}) x JOIN ({_qlr_y_sql(d)}) y "
+        f"ON y.doc_id = x.doc_id) DISTRIBUTE BY doc_id",
+    )
+
+
+def _qlr_w_sql(w: "dict[int, int]") -> str:
+    """Column ``f``'s weight from the driver-held dict ``w`` as a plan
+    LITERAL: a dense BIGINT array over the _QLR_FEATS hashing-trick
+    buckets (0 where ``w`` lacks the feature), indexed by ``f`` — in
+    [0, _QLR_FEATS) by construction. A literal needs neither a weight
+    relation nor its BroadcastExchange (a job of its own per round, even
+    over a VALUES relation). The array is written as ONE string literal
+    that constant folding splits once: _QLR_FEATS separate numeric
+    literals cost ~0.1-0.3 s per round to parse and analyze."""
+    vals = ",".join(str(w.get(k, 0)) for k in range(_QLR_FEATS))
+    return f"CAST(split('{vals}', ',') AS ARRAY<BIGINT>)[f]"
+
+
+def _qlr_p_sql(fxy: str, w: "dict[int, int]") -> str:
+    """Per-doc logit numerator zn and snapped sigmoid p over ``fxy``
+    (the same expressions as the twin's z/p CTEs): the aggregation is
+    keyed by doc_id, which the memo is already partitioned by."""
+    return f"""
+      SELECT doc_id, y, zn,
+             ROUND(1.0 / (1.0 + EXP(-(CAST(zn AS DOUBLE)
+               / (CAST(nw AS DOUBLE) * CAST(1000000.0 AS DOUBLE))))), 9)
+               AS p
+      FROM (SELECT doc_id, nw, y, SUM(c * {_qlr_w_sql(w)}) AS zn
+            FROM {fxy} GROUP BY doc_id, nw, y)"""
+
+
+def _qlr_round_sql(fxy: str, w: "dict[int, int]") -> str:
+    """One Spark training round's gradient (f, gm): ONE job whose only
+    exchange is the feature-keyed gradient aggregation."""
+    return f"""
+    WITH p AS ({_qlr_p_sql(fxy, w)})
+    SELECT /*+ SHUFFLE_HASH(p) */ x.f,
+           SUM(CAST(FLOOR((p.p - x.y) * x.c / x.nw * 1000000.0)
+               AS BIGINT)) AS gm
+    FROM {fxy} x JOIN p ON p.doc_id = x.doc_id
+    GROUP BY x.f"""
 
 
 @register("quality_classifier", _QLR_DUCK)
@@ -1139,51 +1162,44 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE-inlining blowup) is bit-exactly replayed every session by
     tests/test_corpus_mining.py.
 
-    Scale shape: the design matrix (doc, feature, count) is built ONCE
-    and session-materialized (Spark re-plans an inlined CTE per consumer
-    — 10 consumers across 5 rounds would re-run the explode+hash pass
-    10x, the measured bpe_encode failure class); each round is two
-    codegen'd aggregations (logit join keyed by feature against the
-    4096-row broadcast-sized weight relation; gradient keyed by feature)
-    ending in ONE bounded collect of the per-round gradient, and the
-    integer weight step runs on the DRIVER (r11 optimization — the
-    weights are MODEL STATE, hashing-trick-bounded at _QLR_FEATS rows at
-    ANY corpus size, so stepping them distributed cost a full-join +
-    localCheckpoint + broadcast-rebuild job per round for 4096 rows; the
+    Scale shape: the design matrix (doc, feature, count) joined to its
+    label is built ONCE, hash-partitioned by doc_id, and
+    session-materialized (_qlr_fxy; Spark re-plans an inlined CTE per
+    consumer — the measured bpe_encode failure class). Each round is ONE
+    job: the doc-keyed logit aggregation and the p ⋈ x join run on the
+    memo's own partitioning, the feature-keyed gradient aggregation is
+    the round's only exchange, and its bounded collect is the only
+    driver read. The weights are MODEL STATE, hashing-trick-bounded at
+    _QLR_FEATS entries at ANY corpus size: the integer step runs on the
+    DRIVER and each round reads them as a BIGINT plan literal (the
     kmeans-centroid / bpe-merge-table planning-scalar discipline).
     Nothing is corpus-quadratic. Learnability is pinned on a planted
     two-vocabulary corpus; cross-engine bit-exactness of all five
     training rounds is the oracle pin (the DuckDB twin keeps the
     full-join weight-step form; _qlr_step_weights replicates it exactly,
     including truncation-toward-zero integer division)."""
-    from .llm_pipeline import _indexed, _register_docs
-
-    _register_docs(spark, sf_dir)
-    d = _SPARK_D
-    fx = _indexed(spark, f"qlr_fx|{sf_dir}", _qlr_fx_sql(d))
-    yv = _indexed(spark, f"qlr_y|{sf_dir}", _qlr_y_sql(d))
     import uuid
 
-    tag = uuid.uuid4().hex[:12]
-    fxv, yvv, wv = f"_qlr_fx_{tag}", f"_qlr_y_{tag}", f"_qlr_w_{tag}"
-    fx.createOrReplaceTempView(fxv)
-    yv.createOrReplaceTempView(yvv)
-    w: "dict[int, int]" = {}
-    for t in range(1, _QLR_ROUNDS + 1):
-        _qlr_w_view(spark, w, wv)
-        grad = spark.sql(
-            "WITH "
-            + _qlr_grad_ctes(d, fxv, yvv, wv, t).strip()
-            + f" SELECT f, gm FROM g{t}"
-        ).collect()
-        w = _qlr_step_weights(w, grad)
-    _qlr_w_view(spark, w, wv)
-    out = spark.sql(
-        "WITH " + _qlr_final_sql(d, fxv, yvv, wv).strip()
-    )
-    for v in (fxv, yvv, wv):
-        spark.catalog.dropTempView(v)
-    return out
+    view = f"_qlr_fxy_{uuid.uuid4().hex[:12]}"
+    _qlr_fxy(spark, sf_dir).createOrReplaceTempView(view)
+    try:
+        w: "dict[int, int]" = {}
+        for _ in range(_QLR_ROUNDS):
+            w = _qlr_step_weights(
+                w, spark.sql(_qlr_round_sql(view, w)).collect()
+            )
+        return spark.sql(
+            f"""
+            SELECT doc_id,
+                   CAST(zn AS BIGINT) AS z_num,
+                   p AS score,
+                   zn >= 0 AS predict_keep,
+                   y = 1.0 AS label_keep,
+                   (zn >= 0) = (y = 1.0) AS correct
+            FROM ({_qlr_p_sql(view, w)})"""
+        )
+    finally:
+        spark.catalog.dropTempView(view)  # plans resolved at sql() time
 
 
 # --------------------------------------------------------------------------

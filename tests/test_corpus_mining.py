@@ -530,6 +530,84 @@ def test_kmeans_numpy_form_row_equal_past_gate(spark, tmp_path):
     assert len(duck_rows) == n
 
 
+def _quantizer_vs_chain(spark, tmp_path, vecs, k):
+    """Train the Spark quantizer (_km_quantizer: seeds + _KM_ITERS
+    _km_step rounds) and the DuckDB chain's trained_centroid_select at
+    K=k on ``vecs``; assert the (c, dim, w) relations are bit-equal and
+    return the trained cluster ids."""
+    import struct
+
+    import duckdb
+    import numpy as np
+    import pandas as pd
+
+    from synth_timeseries_data_spark.queries._lloyd import (
+        _km_cent_chain,
+        _km_quantizer,
+    )
+
+    path = tmp_path / f"embeddings_k{k}.parquet"
+    pd.DataFrame(
+        {"vec_id": np.arange(len(vecs)),
+         "embedding": list(map(list, vecs.astype(np.float32))),
+         "label": np.zeros(len(vecs), dtype=np.int32)}
+    ).to_parquet(path)
+
+    def bits(c, dim, w):
+        return (int(c), int(dim), struct.pack("<d", float(w)))
+
+    ctes, trained = _km_cent_chain(k=k)
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+        duck_rows = sorted(
+            bits(*r)
+            for r in con.execute(
+                "WITH " + ",\n    ".join(ctes) + f" {trained}"
+            ).fetchall()
+        )
+    finally:
+        con.close()
+    cents = _km_quantizer(spark, spark.read.parquet(str(path)), k=k)
+    spark_rows = sorted(
+        bits(c, d + 1, w) for c in cents for d, w in enumerate(cents[c])
+    )
+    assert spark_rows == duck_rows
+    return set(cents)
+
+
+def test_km_quantizer_cluster_dropout_matches_chain(spark, tmp_path):
+    """Seed vectors 0 and 1 are identical, so every vector tied between
+    them goes to cluster 0 (the lower id) and cluster 1 loses every member
+    in round 1. The trained quantizer drops it, exactly as the DuckDB
+    chain does."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    centers = rng.normal(scale=4.0, size=(3, 64))
+    vecs = centers[rng.integers(0, 3, 300)] + rng.normal(
+        scale=0.5, size=(300, 64)
+    )
+    vecs[1] = vecs[0]
+    got = _quantizer_vs_chain(spark, tmp_path, vecs, k=4)
+    assert 1 not in got and 0 in got
+
+
+def test_km_quantizer_k256_crosses_centroid_blocks(spark, tmp_path):
+    """At K=256 the argmin walks four 64-row centroid blocks (ties keep
+    the lower block) and the partial sums scatter onto 256 cluster rows;
+    the trained quantizer stays bit-equal to the DuckDB chain."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    centers = rng.normal(size=(40, 64))
+    vecs = centers[rng.integers(0, 40, 700)] + rng.normal(
+        scale=0.2, size=(700, 64)
+    )
+    got = _quantizer_vs_chain(spark, tmp_path, vecs, k=256)
+    assert len(got) > 64
+
+
 # ---------------------------------------------------------------------------
 # quality_classifier
 # ---------------------------------------------------------------------------

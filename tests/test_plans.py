@@ -457,6 +457,70 @@ def test_kmeans_embed_numpy_assignment_no_sortmerge(spark, oracle_sf_dir):
     assert "CartesianProduct" not in plan
 
 
+def _build_jobs(spark, name, sf_dir) -> int:
+    """Spark jobs one warm ``Query.build`` runs (its eager training
+    rounds): the first build fills the session memos, the second is
+    counted in a job group of its own."""
+    query = all_queries()[name]
+    query.build(spark, sf_dir)
+    sc = spark.sparkContext
+    group = f"build_jobs_{name}"
+    sc.setJobGroup(group, f"{name} build")
+    try:
+        query.build(spark, sf_dir)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_kmeans_embed_one_job_per_training_round(spark, oracle_sf_dir):
+    """The seeds are one job and each of the iters-1 centroid updates is
+    one more (_km_step folds the update into the assignment pass); the
+    returned final assignment is lazy."""
+    from synth_timeseries_data_spark.queries._lloyd import _KM_ITERS
+
+    assert _build_jobs(spark, "kmeans_embed", oracle_sf_dir) == _KM_ITERS
+
+
+def test_quality_classifier_one_job_per_training_round(spark, oracle_sf_dir):
+    """Each training round is one job (the gradient collect); the design
+    matrix is a session memo and the weights are a plan literal, so no
+    weight relation is broadcast and nothing else runs."""
+    from synth_timeseries_data_spark.queries.corpus_mining import _QLR_ROUNDS
+
+    jobs = _build_jobs(spark, "quality_classifier", oracle_sf_dir)
+    assert jobs == _QLR_ROUNDS
+
+
+def test_quality_classifier_round_single_exchange(spark, oracle_sf_dir):
+    """One training round over the doc-partitioned memo: the logit
+    aggregation and the p ⋈ x join run on the memo's doc_id partitioning,
+    the feature-keyed gradient aggregation is the only exchange, nothing
+    is broadcast, and the weight literal is folded at planning time."""
+    import uuid
+
+    from synth_timeseries_data_spark.queries.corpus_mining import (
+        _qlr_fxy,
+        _qlr_round_sql,
+    )
+    from synth_timeseries_data_spark.session import tune_for_input
+
+    tune_for_input(spark, oracle_sf_dir)
+    view = f"_qlr_plan_{uuid.uuid4().hex[:8]}"
+    _qlr_fxy(spark, oracle_sf_dir).createOrReplaceTempView(view)
+    try:
+        df = spark.sql(_qlr_round_sql(view, {0: -5, 17: 3_000_000_000}))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.catalog.dropTempView(view)
+    assert plan.count("Exchange") == 1, plan[:3000]
+    assert "Exchange hashpartitioning(f#" in plan, plan[:3000]
+    assert "BroadcastExchange" not in plan
+    assert "split(" not in plan
+
+
 def test_line_dedup_window_antijoin_shape(spark, oracle_sf_dir):
     """Line dedup: a hash-keyed window MIN stamps first docs, the rebuild
     is an anti-join + ordered doc aggregation over touched docs only —

@@ -11,8 +11,10 @@ bit-exactness stays pinned by test_corpus_mining's oracle replay."""
 from __future__ import annotations
 
 from synth_timeseries_data_spark.queries.corpus_mining import (
+    _QLR_FEATS,
     _QLR_LR_SHIFT,
     _qlr_step_weights,
+    _qlr_w_sql,
 )
 
 _GMS = [
@@ -53,3 +55,22 @@ def test_qlr_step_full_join_semantics():
     assert out == {1: 100, 2: -52, 3: 2, 4: 0}
     # input dict is not mutated
     assert w == {1: 100, 2: -50}
+
+
+def test_qlr_weight_literal_returns_every_weight(spark):
+    """The per-round weight literal is BIGINT-typed and returns each
+    feature's weight exactly — negative values, values past 2^31 (an
+    INT-typed literal would overflow or fail) — and 0 for a feature the
+    dict lacks, at both ends of the feature range."""
+    last = _QLR_FEATS - 1
+    w = {0: -7, 5: 3_000_000_000, 6: -(2**40), 9: 2**31, last: -(2**31) - 1}
+    feats = [0, 1, 5, 6, 8, 9, last - 1, last]
+    expr = _qlr_w_sql(w)
+    rows = spark.sql(
+        f"SELECT f, {expr} AS wm, typeof({expr}) AS t FROM VALUES "
+        + ", ".join(f"(CAST({f} AS BIGINT))" for f in feats)
+        + " AS v(f)"
+    ).collect()
+    assert {r.f: r.wm for r in rows} == {f: w.get(f, 0) for f in feats}
+    assert {r.t for r in rows} == {"bigint"}
+    assert _qlr_w_sql({}) == _qlr_w_sql({3: 0})

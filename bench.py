@@ -1,6 +1,6 @@
 """Benchmark harness — runs every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line:
+(default: the sf0.1 fixture) on local[$SPARK_GRAFT_CPUS] (default: the CPU
+affinity count) and prints ONE JSON line:
 
     {"metric": "steady_state_query_time", "value": total_sec, "unit": "sec",
      "queries": {id: sec, ...}, "cold_total": sec,
@@ -182,8 +182,8 @@ def main() -> None:
         round(spark_oracle_total / duck_total, 2) if duck_total else None
     )
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # normalized, so "032" or " 32" names the default profile too
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # the session's own core count: SPARK_GRAFT_CPUS or its default
+    cpus = spark.sparkContext.defaultParallelism
 
     # Full detail (per-query spark/cold/duckdb/ratio) goes to a repo file; the
     # driver's stdout capture keeps only a 2,000-char tail, which truncated the

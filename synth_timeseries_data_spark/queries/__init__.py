@@ -67,8 +67,10 @@ def register(name: str, oracle: str | None, doc: str = ""):
     The registered build is wrapped with :func:`session.tune_for_input`:
     before every build the session's shuffle DOP and AQE posture are sized
     to the input footprint (cost-based DOP selection — fixture-small inputs
-    run a plain 8-task DAG; at data scale the configured cluster posture
-    with AQE stands). Memoized, so the wrapper costs two dict hits."""
+    run a plain DAG with one shuffle partition per ~1 MiB of input, capped
+    at the core count; at data scale the configured cluster posture with
+    AQE stands). The footprint walk is memoized per dataset fingerprint, so
+    the wrapper costs a few stat() calls."""
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]):
         if name in REGISTRY:

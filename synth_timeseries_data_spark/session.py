@@ -1,6 +1,8 @@
 """SparkSession builders.
 
-Local test posture: one JVM, ``local[N]`` threads, shuffle partitions ≈ cores.
+Local test posture: one JVM, ``local[N]`` threads (N = the process's CPU
+affinity count unless ``SPARK_GRAFT_CPUS`` says otherwise); small inputs get
+one shuffle partition per ~1 MiB of input, capped at N (``tune_for_input``).
 Cluster posture (100 TB): the same code runs unmodified — AQE handles skew and
 partition coalescing; all operators avoid driver-side collects and express
 plans declaratively so Catalyst can push filters/prune columns.
@@ -12,6 +14,8 @@ import os
 import weakref
 
 from pyspark.sql import SparkSession
+
+from .sources.tables import table_bytes
 
 # Python workers start in the driver's cwd with the driver's PYTHONPATH, so
 # without the checkout root on their path they find the engine (and its
@@ -33,10 +37,11 @@ def _default_driver_mem() -> str:
 
 
 def get_session(app_name: str = "synth_timeseries_data_spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     # Shuffle parallelism starts at the core count; tune_for_input resizes
-    # it per input (8 for small fixtures, ~64 MB of input per partition for
-    # large ones) and AQE still coalesces further.
+    # it per input (one partition per ~1 MiB below the small gate, capped at
+    # the core count; ~64 MB of input per partition above it, where AQE
+    # still coalesces further).
     # AQE on is the cluster posture (skew-join splitting, runtime partition
     # coalescing, dynamic broadcast) and measured best in aggregate locally
     # too: its per-exchange stage materialization costs ~100 ms per shuffle
@@ -118,18 +123,27 @@ def fast_commit(spark: SparkSession) -> None:
 # Input-stat session tuning (cost-based DOP selection).
 # ---------------------------------------------------------------------------
 
-# Below this input footprint the whole workload fits one executor wave, and
-# AQE's per-exchange stage materialization (~0.15-0.2 s/wave measured,
-# FLOOR.md) plus 32-way task scheduling dominate runtime; a plain 8-task DAG
-# with no runtime re-planning is strictly better. Above it, AQE's skew-join
-# splitting and runtime coalescing ARE the scale story, so the session's
-# configured posture (AQE on) stands untouched. 64 MB keeps the gate/bench
-# fixtures (0.5-17.5 MB) in the small regime and the sf1/sf10 scale-ladder
-# tiers (171 MB/1.7 GB) in cluster posture. Measured at sf0.1: the 2-4-wave
-# floor-band queries drop 15-30% (corpus_filter 0.72->0.53 s, decontam
-# 0.85->0.60 s, asof_lag 1.12->0.65 s) with no data-proportional regression.
+# Below this input footprint AQE's per-exchange stage materialization
+# (~0.15-0.2 s per wave, FLOOR.md) costs more than its runtime re-planning
+# saves, so small inputs run a plain DAG with AQE off. Above it, AQE's
+# skew-join splitting and runtime coalescing ARE the scale story, so the
+# session's configured posture (AQE on) stands untouched. 64 MB keeps the
+# gate/bench fixtures (0.5-17.5 MB) in the small regime and the sf1/sf10
+# scale-ladder tiers (171 MB/1.7 GB) in cluster posture; the gate was set at
+# local[32], where AQE off took the 2-4-wave floor-band queries 15-30% down
+# at sf0.1 (corpus_filter 0.72->0.53 s, asof_lag 1.12->0.65 s).
 _SMALL_INPUT_BYTES = 64 * 1024 * 1024
-_SMALL_SHUFFLE = "8"
+
+# Below the gate the shuffle DOP is ceil(input bytes / 1 MiB), at least 1 and
+# at most the core count (defaultParallelism). Every job pays a floor that
+# grows with its task count (~0.09 s fixed + ~0.012 s per partition at
+# local[4], ROADMAP), so fixture-scale shuffles want few partitions, while
+# the compute-heavy queries at sf0.1 want every core (embed_decontam 1.62 s
+# on 4 partitions vs 3.72 s on 1). 1 MiB puts the benchmark's 271 kB inputs
+# and sf0.001 (468 kB) on one partition, sf0.01 (1.9 MB) on two and sf0.1
+# (17.5 MB) on every core: the fastest of the whole-registry DOPs measured
+# at each tier (FLOOR.md).
+_SMALL_PARTITION_BYTES = 1024 * 1024
 
 # Above the small gate, shuffle DOP must GROW with the input or per-task
 # sorts spill: the sf100 ladder (17 GB) at the session's fixed 32 partitions
@@ -144,13 +158,12 @@ _SMALL_SHUFFLE = "8"
 _TARGET_PARTITION_BYTES = 64 * 1024 * 1024
 _MAX_SHUFFLE = 4096
 
-_dir_bytes: dict[str, int] = {}
 # Keyed WEAKLY on the session object, not id(): the allocator reuses
 # addresses after gc, so an id-keyed entry from a dead session could make
 # tune_for_input skip conf writes (or restore a stale posture) on a brand-new
 # session that happens to share the address — same hazard sources/tables.py's
 # catalog cache guards against.
-_applied: "weakref.WeakKeyDictionary[SparkSession, bool]" = (
+_applied: "weakref.WeakKeyDictionary[SparkSession, tuple[bool, str]]" = (
     weakref.WeakKeyDictionary()
 )
 _session_posture: "weakref.WeakKeyDictionary[SparkSession, tuple[str, str]]" = (
@@ -159,41 +172,45 @@ _session_posture: "weakref.WeakKeyDictionary[SparkSession, tuple[str, str]]" = (
 
 
 def _input_bytes(sf_dir: str) -> int:
-    b = _dir_bytes.get(sf_dir)
-    if b is None:
-        try:
-            b = 0
-            for e in os.scandir(sf_dir):
-                if not e.name.endswith(".parquet"):
-                    continue
-                if e.is_file():
-                    b += e.stat().st_size
-                elif e.is_dir():
-                    # Spark-written dataset DIRECTORY (part-*.parquet inside).
-                    # Counting only flat files made a 17 GB directory fixture
-                    # read as ~0 bytes -> small posture (8 partitions, AQE
-                    # off) -> asof_lag 158 s instead of 19 s at sf100.
-                    with os.scandir(e.path) as it:
-                        b += sum(
-                            p.stat().st_size
-                            for p in it
-                            if p.is_file() and p.name.endswith(".parquet")
-                        )
-        except OSError:
-            b = _SMALL_INPUT_BYTES  # unknown input: keep cluster posture
-        _dir_bytes[sf_dir] = b
-    return b
+    """On-disk bytes of the ``*.parquet`` tables in ``sf_dir``: the sum of
+    :func:`table_bytes`, one recursive walk per table (hive-partitioned
+    datasets nest their part files), re-measured whenever a dataset's
+    fingerprint changes. An unreadable directory or table reads as
+    ``_SMALL_INPUT_BYTES``, i.e. the cluster posture."""
+    try:
+        with os.scandir(sf_dir) as it:
+            names = [
+                e.name[: -len(".parquet")]
+                for e in it
+                if e.name.endswith(".parquet")
+            ]
+    except OSError:
+        return _SMALL_INPUT_BYTES
+    total = 0
+    for name in names:
+        b = table_bytes(sf_dir, name)
+        if b >= 2**62:  # table_bytes' "unknown" fail-safe
+            return _SMALL_INPUT_BYTES
+        total += b
+    return total
 
 
 def tune_for_input(spark: SparkSession, sf_dir: str) -> None:
     """Size shuffle DOP + AQE to the input footprint (driver-side stat).
 
-    Called by the query registry before each build; the dir footprint is
-    memoized per sf_dir and conf writes happen only on posture CHANGE, so
-    repeat builds cost two dict hits. Both branches set both knobs
-    (restoring the session's original posture in the large branch) so one
-    session can serve mixed input scales — e.g. the sf0.001 gate then the
-    sf10 ladder."""
+    Called by the query registry before each build. Below
+    ``_SMALL_INPUT_BYTES`` the DOP is ``ceil(bytes / _SMALL_PARTITION_BYTES)``
+    clamped to ``[1, defaultParallelism]`` with AQE off; above it, one
+    partition per ~64 MB with the session's own AQE setting. The footprint
+    is a few stat() calls plus memoized footer walks, and conf writes
+    happen only on posture CHANGE. Both branches set both knobs (restoring
+    the session's original posture in the large branch) so one session can
+    serve mixed input scales — e.g. the sf0.001 gate then the sf10 ladder.
+
+    The confs are session-wide and Spark reads them when a DataFrame is
+    first EXECUTED, not when it is built: build A at sf0.001, build B at
+    sf0.1, then execute A, and A runs at B's DOP. Results are DOP-invariant
+    (tests/test_partitioning_invariance.py), so only A's speed changes."""
     nbytes = _input_bytes(sf_dir)
     small = nbytes < _SMALL_INPUT_BYTES
     if spark not in _session_posture:
@@ -203,7 +220,10 @@ def tune_for_input(spark: SparkSession, sf_dir: str) -> None:
         )
     orig_aqe, orig_shuffle = _session_posture[spark]
     if small:
-        shuffle = _SMALL_SHUFFLE
+        shuffle = str(
+            max(1, min(spark.sparkContext.defaultParallelism,
+                       -(-nbytes // _SMALL_PARTITION_BYTES)))
+        )
     else:
         # big-input tier: one partition per ~64 MB on disk, never below the
         # session's configured DOP, capped to keep task counts sane

@@ -13,13 +13,14 @@ writes a partition-pruned dataset tree:
 
 `generate` writes long-form series partitioned by (family, config_id) —
 one directory per config like the reference's tree, readable back with a
-partition-pruned scan — plus the ground-truth structure sidecar
-(sinks.write_structure_json). Each umbrella directory is written once, by
-one Spark job, and holds both twins: masking families (d1/d2/d3 and their
-confounded twins) land under out/masked with the (value_complete,
-value_observed) pair schema, complete-data families (a1..c2 and their
-confounded twins) under out/complete. The sidecar needs no job of its own:
-it is rendered once per process and written from the driver.
+partition-pruned scan — plus the ground-truth structure sidecar of the
+families it wrote (sinks.write_structure_json). Each umbrella directory is
+written once, by one Spark job, and holds both twins: masking families
+(d1/d2/d3 and their confounded twins) land under out/masked with the
+(value_complete, value_observed) pair schema, complete-data families
+(a1..c2 and their confounded twins) under out/complete. The sidecar needs
+no job of its own: it is rendered in Python from the kernels' equation
+compile and written from the driver.
 """
 
 from __future__ import annotations
@@ -82,7 +83,10 @@ def cmd_generate(args) -> int:
         else:
             writer.parquet(out)
         print(f"wrote {len(rows)} configs -> {out}")
-    write_structure_json(spark, os.path.join(args.out, "structure"))
+    write_structure_json(
+        spark, os.path.join(args.out, "structure"),
+        [f for f in G._FAMILIES if f in families],
+    )
     print(f"wrote structure sidecar -> {os.path.join(args.out, 'structure')}")
     return 0
 

@@ -12,11 +12,17 @@ parallelize embarrassingly; time stays a tight loop inside one task, same
 as the reference.
 
 Unlike the reference, a kernel never re-reads its DSL strings inside that
-loop (SURVEY.md §4.1's anti-optimizations): each config's equations are
-compiled once into term tuples (`_compile_trig`, `_linear_terms`,
-`_two_pass_program`, `_group_links`), and irregular-time lag rows come from
-one vectorized `_lag_table` per config. The loop draws noise and does the
-reference's float operations in the reference's order, nothing else.
+loop (SURVEY.md §4.1's anti-optimizations): each config's equations go
+through one compile (`compile_equations`), which knows the grammar of all
+18 families and keeps each script's parser quirks as data on the family's
+`_Grammar`. Every kernel evaluates the resulting term tuples with one
+evaluator (`_eval`), and the structure sidecar serializes the same tuples
+(`structure_edges`). Same-t scheduling is compiled too: the a1 topological
+order, the a1c retry queue and the d1/d1c two-pass memo each become a
+fixed list of equations to run per step (`_program_steps`). Irregular-time
+lag rows come from one vectorized `_lag_table` per config. The loop draws
+noise and does the reference's float operations in the reference's order,
+nothing else.
 
 Numeric fidelity: with the same seed this kernel reproduces the
 reference's CSVs bit-for-bit for BOTH noise types (term accumulation
@@ -33,13 +39,12 @@ from __future__ import annotations
 
 import functools
 import re
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
 
 from ..dsl.registry import equations
-
-_TERM_RE = re.compile(r"^([0-9]+\.?[0-9]*)\s*\*\s*X([0-9]+)\[t(?:-([0-9]+))?\]$")
 
 
 def _lag_table(ts: np.ndarray, max_lag: int, mean_diff: float) -> np.ndarray:
@@ -75,32 +80,193 @@ def _regular_rows(n_points: int, max_lag: int) -> list[list[int]]:
     return (np.arange(n_points)[:, None] - np.arange(max_lag + 1)).tolist()
 
 
-def parse_linear_equation(eq: str):
-    """One linear DSL string → (target_idx0, ordered term list).
+# ---------------------------------------------------------------------------
+# The equation compile: one DSL grammar for all 18 families.
+# ---------------------------------------------------------------------------
 
-    Terms are kept in textual order because float accumulation order is part
-    of the fidelity contract. Each term is ('noise',) or
-    ('var', coef, source_idx0, lag).
-    """
-    left, right = [s.strip() for s in eq.split("=")]
-    target = int(left.split("[")[0][1:]) - 1
-    terms = []
-    for raw in right.split("+"):
-        term = raw.strip()
-        if term.startswith("e"):
-            terms.append(("noise",))
+
+class _Grammar(NamedTuple):
+    """How one family's script reads the equation DSL.
+
+    - ``skip(lhs, rhs)`` drops a whole equation;
+    - ``links``: the script's link-dict form — no noise terms (the kernel
+      adds noise itself), and a repeated link overwrites the earlier one
+      in its first position;
+    - ``x_op``: an X term is ``lin``, ``pow`` (power 1 when none is
+      declared) or, for ``trig``, ``fn``/``pow``/``lin`` by sub-grammar;
+    - ``u_power``: a U term keeps its declared power (else it is linear);
+    - ``guard``: regular-time trig scripts read 0.0 before ``min_t`` —
+      ``min_t`` is the term's lag, plus ``guard`` for a plain lagged
+      linear term (None: no guard)."""
+
+    skip: Callable[[str, str], bool]
+    links: bool = False
+    x_op: str = "lin"
+    u_power: bool = False
+    guard: int | None = None
+
+
+def _u_equation(lhs: str, rhs: str) -> bool:
+    return lhs.startswith("U")
+
+
+_LINEAR = _Grammar(_u_equation)
+# Q1 (b2.py:160-194): the '+'-only split keeps the first term's coef and
+# power; pure-noise equations (U[t] = eU) are skipped.
+_POLY = _Grammar(lambda lhs, rhs: "e" in rhs and "+" not in rhs,
+                 links=True, x_op="pow", u_power=True)
+# c2c.py:179-187 / d3c.py:275-283 test ``expr == 'U[t]'`` before '^', so
+# the registry's U[t]^2 evaluates as U[t]: no trig grammar keeps U's power.
+_TRIG = _Grammar(_u_equation, x_op="trig")
+
+_GRAMMARS = {
+    "a1": _LINEAR, "a1c": _LINEAR, "d1": _LINEAR, "d1c": _LINEAR,
+    # a2.py:108-129 skips the `X5[t] = noise_extra` equations
+    "a2": _Grammar(lambda lhs, rhs: "noise" in rhs, links=True),
+    # a2c.py:227-250 skips any RHS with an 'e' in it: every equation
+    "a2c": _Grammar(lambda lhs, rhs: "e" in rhs, links=True),
+    "b1": _POLY, "b2": _POLY, "d2": _POLY,
+    "b1c": _POLY, "b2c": _POLY, "d2c": _POLY,
+    # c1.py:143-187 guards t >= lag and, for a plain lagged term, t > lag;
+    # c1c.py:162-236 guards t >= lag
+    "c1": _TRIG._replace(guard=1), "c1c": _TRIG._replace(guard=0),
+    "c2": _TRIG, "d3": _TRIG, "c2c": _TRIG, "d3c": _TRIG,
+}
+
+_VAR_RE = re.compile(r"([XU])([0-9]*)\[t(?:-([0-9]+))?\]")
+_POW_RE = re.compile(r"\^([0-9]+)")
+_READS_X = ("lin", "pow", "fn")
+
+
+def compile_equations(family: str, eqs: list[str], trends=None, seas=None):
+    """Compile one config's equations under ``family``'s grammar into
+    ``[(target_idx0, terms)]`` in list order, each term list in textual
+    order (float accumulation order is part of the fidelity contract).
+    A term is ``(op, coef, src_idx0, lag, arg, min_t)``:
+
+    - 'noise' (the target's noise slot) and 'series' (``arg[t]``: that
+      target's trend or season array, when given) add without a coef;
+    - 'u' adds ``coef * U[t] ** arg``;
+    - 'lin' / 'pow' / 'fn' read ``X[rows[t][lag], src]`` (0.0 before
+      ``min_t``) and add ``coef * v``, ``coef * v**arg`` or
+      ``coef * arg(v * pi / 2)`` (arg is np.cos or np.sin).
+
+    The source index is the full number after X: quirk Q6's single-digit
+    read (``int(expr[1])`` in c1/c2/c2c/d3/d3c) equals it on every
+    registry width. No registry declares two equations for one target."""
+    g = _GRAMMARS[family]
+    program = []
+    for eq in eqs:
+        lhs, rhs = (s.strip() for s in eq.split("="))
+        if g.skip(lhs, rhs):
             continue
-        m = _TERM_RE.match(term)
-        if not m:
-            raise ValueError(f"unparseable linear term: {term!r}")
-        coef, src, lag = float(m.group(1)), int(m.group(2)) - 1, int(m.group(3) or 0)
-        terms.append(("var", coef, src, lag))
-    return target, terms
+        vi = int(lhs.split("[")[0][1:]) - 1
+        terms, slot = [], {}
+        for raw in rhs.split("+"):
+            term = raw.strip()
+            if term.startswith("e"):
+                if not g.links:
+                    terms.append(("noise", 0.0, 0, 0, None, 0))
+                continue
+            if term.startswith(("trend", "season")):
+                series = trends if term.startswith("trend") else seas
+                arg = None if series is None else series[vi]
+                terms.append(("series", 0.0, 0, 0, arg, 0))
+                continue
+            var = _VAR_RE.search(term)
+            if "*" not in term or var is None:
+                raise ValueError(f"unparseable {family} term: {term!r}")
+            coef = float(term.split("*")[0])
+            lag = int(var.group(3) or 0)
+            power = _POW_RE.search(term)
+            power = int(power.group(1)) if power else None
+            if var.group(1) == "U":
+                t = ("u", coef, 0, 0, power if g.u_power and power else 1, 0)
+            else:
+                if g.x_op == "pow":
+                    op, arg = "pow", power or 1
+                elif g.x_op == "trig" and ("cos(" in term or "sin(" in term):
+                    op, arg = "fn", np.cos if "cos(" in term else np.sin
+                elif g.x_op == "trig" and power:
+                    op, arg = "pow", power
+                else:
+                    op, arg = "lin", None
+                min_t = 0
+                if g.guard is not None:
+                    min_t = lag + (g.guard if op == "lin" and lag else 0)
+                t = (op, coef, int(var.group(2)) - 1, lag, arg, min_t)
+            key = (t[0], t[2], t[3], t[4])  # (op, src, lag, arg)
+            if g.links and key in slot:
+                terms[slot[key]] = t
+            else:
+                slot[key] = len(terms)
+                terms.append(t)
+        program.append((vi, terms))
+    return program
 
 
-def topo_order(parsed: dict[int, list], n_vars: int) -> list[int]:
-    """Kahn topological sort of the CONTEMPORANEOUS dependency graph (lagged
-    deps never constrain within-t order). Raises on a same-t cycle.
+def structure_edges(family: str, n_vars: int, max_lag: int) -> list[tuple]:
+    """The config's causal edges as its grammar reads them, one per X or U
+    term in compile order: ``(source, target, lag, func, coef)``. U edges
+    have source "U" and lag 0; func is 'linear', 'powerN', 'cos' or 'sin'
+    (a polynomial grammar names every X term by its power, power1 included).
+    a2c yields none: its grammar drops every equation."""
+    edges = []
+    for vi, terms in compile_equations(family, equations(family, n_vars, max_lag)):
+        for op, coef, src, lag, arg, _ in terms:
+            if op in ("noise", "series"):
+                continue
+            func = ("linear" if op == "lin" or (op == "u" and arg == 1)
+                    else arg.__name__ if op == "fn" else f"power{arg}")
+            source = "U" if op == "u" else f"X{src + 1}"
+            edges.append((source, f"X{vi + 1}", lag, func, coef))
+    return edges
+
+
+def _eval(terms, vi, X, U, t, r, noise) -> float:
+    """Accumulate one compiled equation at step t (``r = rows[t]``): one
+    ``value +=`` per term, in textual order."""
+    value = 0.0
+    for op, coef, src, lag, arg, min_t in terms:
+        if op == "noise":
+            value += noise[vi]
+        elif op == "series":
+            value += arg[t]
+        elif op == "u":
+            value += coef * U[t] if arg == 1 else coef * U[t] ** arg
+        else:
+            v = X[r[lag], src] if t >= min_t else 0.0
+            if op == "lin":
+                value += coef * v
+            elif op == "pow":
+                value += coef * (v ** arg)
+            else:
+                value += coef * arg(v * np.pi / 2)
+    return value
+
+
+def _program_steps(X, U, rows, t0, program, noise_fn) -> None:
+    """The list-order time loop (a1, a1c, d1, d1c and the trig families):
+    per step one ``noise_fn()`` draw (U takes its last slot), then each
+    ``(target, terms)`` of ``program`` in order, written to ``X[t]`` —
+    later equations read it there."""
+    for t in range(t0, X.shape[0]):
+        r = rows[t]
+        noise = noise_fn()
+        if U is not None:
+            U[t] = noise[-1]
+        for vi, terms in program:
+            X[t, vi] = _eval(terms, vi, X, U, t, r, noise)
+
+
+def _same_t_sources(terms) -> list[int]:
+    return [src for op, _, src, lag, *_ in terms if op in _READS_X and not lag]
+
+
+def topo_order(program: dict[int, list], n_vars: int) -> list[int]:
+    """Kahn topological sort of the CONTEMPORANEOUS dependency graph of a
+    ``{target: terms}`` program (lagged deps never constrain within-t
+    order). Raises on a same-t cycle.
 
     The reference never sorts: it evaluates in fixed reverse index order
     (a1.py:147) — valid for its registries because contemporaneous chains
@@ -108,8 +274,7 @@ def topo_order(parsed: dict[int, list], n_vars: int) -> list[int]:
     acyclic DSL; ties broken by descending index so registry configs get the
     reference's exact order.
     """
-    deps = {v: {s for kind, *rest in parsed.get(v, []) if kind == "var"
-                for c, s, l in [rest] if l == 0} for v in range(n_vars)}
+    deps = {v: set(_same_t_sources(program.get(v, []))) for v in range(n_vars)}
     order, done = [], set()
     while len(order) < n_vars:
         ready = sorted(
@@ -189,22 +354,6 @@ def _mixed_noise(size: int, mix_ratio: float, scale: float) -> np.ndarray:
     return np.where(mask, g, l)
 
 
-def _group_links(links: dict, n_vars: int) -> list[list[tuple]]:
-    """Link dict keyed ``(source, lag<=0, target[, power])`` -> per-target
-    term lists ``[(coef, src_idx, abs(lag), power)]``, index i for X(i+1);
-    src_idx is None for U. The reference scans every link for every
-    target at every step; grouping once in dict order keeps its
-    accumulation order. Links to targets outside X1..Xn are never read."""
-    groups: dict[str, list[tuple]] = {}
-    for key, coef in links.items():
-        src, lag, tgt = key[:3]
-        si = None if src == "U" else int(src[1:]) - 1
-        groups.setdefault(tgt, []).append(
-            (coef, si, abs(lag), key[3] if len(key) > 3 else 1)
-        )
-    return [groups.get(f"X{i + 1}", []) for i in range(n_vars)]
-
-
 def generate_linear_config(
     n_points: int,
     n_vars: int,
@@ -245,51 +394,33 @@ def generate_linear_config(
     eqs = equations("a1", n_vars, max_lag)
     if not eqs:
         raise ValueError(f"no linear registry for ({n_vars}, {max_lag})")
-    parsed: dict[int, list] = {}
-    for eq in eqs:
-        tgt, terms = parse_linear_equation(eq)
-        parsed[tgt] = terms
+    program = dict(compile_equations("a1", eqs))
     if order_mode == "corpus":
         if n_vars >= 6:
             if noise_type == "student_t":
                 # oldest vintage: X5 (and X8) had no parent terms yet
-                parsed[4] = [t for t in parsed[4] if t[0] == "noise"]
+                program[4] = [t for t in program[4] if t[0] == "noise"]
                 if n_vars == 8:
-                    parsed[7] = [t for t in parsed[7] if t[0] == "noise"]
+                    program[7] = [t for t in program[7] if t[0] == "noise"]
             elif max_lag == 2:
                 # gaussian lag-2 vintage: X6's parent was X4, not X5
-                parsed[5] = [
-                    t if not (t[0] == "var" and t[3] == 0) else (t[0], t[1], 3, 0)
-                    for t in parsed[5]
+                program[5] = [
+                    t[:2] + (3,) + t[3:] if t[0] == "lin" and t[3] == 0 else t
+                    for t in program[5]
                 ]
-        order = topo_order(parsed, n_vars)
+        order = topo_order(program, n_vars)
     else:
-        order = list(range(n_vars - 1, -1, -1))
+        order = range(n_vars - 1, -1, -1)
 
     _seed_all(seed)
     X = np.zeros((n_points, n_vars))
     for i in range(max_lag):
         X[i] = _draw(noise_type, n_vars, noise_scale, df)
-
-    for t in range(max_lag, n_points):
-        noise = _draw(noise_type, n_vars, noise_scale, df)
-        var_values: dict[int, float] = {}
-        for v in order:
-            terms = parsed.get(v)
-            if terms is None:
-                continue
-            value = 0.0
-            for term in terms:
-                if term[0] == "noise":
-                    value += noise[v]
-                else:
-                    _, coef, src, lag = term
-                    if lag == 0:
-                        value += coef * var_values.get(src, X[t, src])
-                    else:
-                        value += coef * X[t - lag, src]
-            X[t, v] = value
-            var_values[v] = value
+    _program_steps(
+        X, None, _regular_rows(n_points, max_lag), max_lag,
+        [(v, program[v]) for v in order if v in program],
+        lambda: _draw(noise_type, n_vars, noise_scale, df),
+    )
 
     out = pd.DataFrame(X, columns=[f"X{i + 1}" for i in range(n_vars)])
     out["time"] = np.arange(n_points)
@@ -348,27 +479,13 @@ def generate_irregular_config(
                        replay the regular-lag recurrence), so this mode
                        reproduces those CSVs bit-for-bit.
     """
-    from ..dsl.registry import equations
-
     eqs = equations("a2", n_vars, max_lag)
     if not eqs:
         raise ValueError(f"no a2 registry for ({n_vars}, {max_lag})")
-    # a2 parser semantics (a2.py:108-129): skip 'noise' equations entirely,
-    # keep insertion order — iteration order feeds accumulation order.
-    links: dict[tuple[str, int, str], float] = {}
-    for eq in eqs:
-        if "=" not in eq or "noise" in eq:
-            continue
-        left, right = [s.strip() for s in eq.split("=")]
-        tgt = left.split("[")[0]
-        for raw in right.split("+"):
-            term = raw.strip()
-            if "*" in term and "X" in term:
-                coeff, var_part = [p.strip() for p in term.split("*")]
-                var = var_part.split("[")[0]
-                lag_part = var_part.split("[")[1].split("]")[0]
-                lag = 0 if lag_part == "t" else -int(lag_part.split("-")[1])
-                links[(var, lag, tgt)] = float(coeff)
+    # a2 grammar (a2.py:108-129): the `noise_extra` equations are skipped;
+    # link order feeds accumulation order.
+    program = dict(compile_equations("a2", eqs))
+    groups = [program.get(i, []) for i in range(n_vars)]
 
     # Corpus-vintage override (scripts/corpus_audit.py): every lag-3/4
     # wide file (both noise types) predates the 0.3*X5[t-1] feedback term
@@ -378,7 +495,7 @@ def generate_irregular_config(
     # solves show X4 = 0.25*X1[t-lag] + e4 exactly there, while the lag-2
     # files carry the term.
     if max_lag >= 3 and n_vars >= 6:
-        links.pop(("X5", -1, "X4"), None)
+        groups[3] = [t for t in groups[3] if t[2:4] != (4, 1)]
 
     _seed_all(seed, "percall")  # t-stream idiom of this family's script (see _seed_all)
     X = np.zeros((n_points, n_vars))
@@ -404,27 +521,19 @@ def generate_irregular_config(
     # embeds exactly that degeneracy (e.g. multivariate_ts_*_t.csv: X5 ≡
     # 0.060129, X6 ≡ 0.240120). 4-var configs have no unassigned vars, so
     # this path reduces to the plain reverse evaluation there.
-    noise_extra_vars = {
-        int(eq.split("[")[0].strip()[1:]) - 1
-        for eq in eqs
-        if "=" in eq and "noise" in eq
-    }
-    groups = _group_links(links, n_vars)
     rows = _irregular_rows(ts, max_lag)
     for t in range(max_lag, n_points):
         r = rows[t]
         noise = _draw(noise_type, n_vars, noise_scale, df)
         written = [False] * n_vars
         for i in range(n_vars - 1, -1, -1):
-            value = 0.0
-            for coef, si, k, _ in groups[i]:
-                value += coef * X[r[k], si]
+            value = _eval(groups[i], i, X, None, t, r, None)
             if value != 0:
                 X[t, i] = value + noise[i]
                 written[i] = True
         for i in range(n_vars):
             if not written[i]:
-                if i in noise_extra_vars:
+                if i not in program:  # the skipped `noise_extra` equation
                     X[t, i] = _draw(noise_type, 1, noise_scale, df)[0]
                 else:
                     X[t, i] = noise[i]
@@ -432,44 +541,6 @@ def generate_irregular_config(
     out = pd.DataFrame(X, columns=[f"X{i + 1}" for i in range(n_vars)])
     out["time"] = ts
     return out
-
-
-def _linear_terms(right: str) -> list[tuple]:
-    """One linear-with-U right-hand side (a1c/d1/d1c grammar) compiled once:
-    ``(kind, coef, source_name, source_idx0, lag)`` per term in textual
-    order — kind 'e' (the target's own noise slot), 'U' (coef * U[t]) or
-    'X' (lag 0 = a same-t read through the per-t memo)."""
-    terms = []
-    for raw in right.split("+"):
-        term = raw.strip()
-        if term.startswith("e"):
-            terms.append(("e", 0.0, "", 0, 0))
-            continue
-        coef, var = (p.strip() for p in term.split("*")[:2])
-        src = var.split("[")[0].strip()
-        if src == "U":
-            terms.append(("U", float(coef), src, 0, 0))
-            continue
-        ti = var.split("[")[1].split("]")[0].strip()
-        lag = 0 if ti == "t" else int(ti.split("-")[1])
-        terms.append(("X", float(coef), src, int(src[1:]) - 1, lag))
-    return terms
-
-
-def _eval_linear(terms, vi, X, U, t, noise, var_values) -> float:
-    """Accumulate one compiled linear equation at step t; same-t X reads go
-    through ``var_values`` (the reference's memo, keys and all)."""
-    value = 0.0
-    for kind, coef, src, si, lag in terms:
-        if kind == "e":
-            value += noise[vi]
-        elif kind == "U":
-            value += coef * U[t]
-        elif lag:
-            value += coef * X[t - lag, si]
-        else:
-            value += coef * var_values.get(src, X[t, si])
-    return value
 
 
 # ---------------------------------------------------------------------------
@@ -496,21 +567,14 @@ def generate_confounded_config(
     The reference writes U as an ordinary column (quirk Q8 — "hidden" only
     by convention); hide_u=True makes the hiding an explicit projection.
     """
-    from ..dsl.registry import equations
-
     eqs = equations("a1c", n_vars, max_lag)
     if not eqs:
         raise ValueError(f"no a1c registry for ({n_vars}, {max_lag})")
-
-    _seed_all(seed)
-    X = np.zeros((n_points, n_vars))
-    U = np.zeros(n_points)
-    for i in range(max_lag):
-        X[i] = _draw(noise_type, n_vars, noise_scale, df)
-        U[i] = _draw(noise_type, 1, noise_scale, df)[0]
+    program = dict(compile_equations("a1c", eqs))
 
     # Deferral: a same-t X dependency not yet computed sends a variable to
-    # the back of the queue (a1c.py:196-214). Corpus-vintage quirk
+    # the back of the queue (a1c.py:196-214); the queue's order is the same
+    # every step, so it runs once here. Corpus-vintage quirk
     # (scripts/corpus_audit.py): in the 8-var corpus, X8 alone did NOT
     # defer — its X7[t] read resolves to the zero-initialized current row
     # (implied-operand solve is exactly 0 at every probed timestep, all
@@ -518,34 +582,28 @@ def generate_confounded_config(
     # generating script's deferral evidently missed the last-added chain
     # head; replicated as a targeted exception: X8 skips the ready-check
     # and computes immediately (zero-read fallback).
-    program: dict[int, tuple[list[tuple], list[str]]] = {}
-    for vi in range(n_vars):
-        eq = next((e for e in eqs if e.startswith(f"X{vi + 1}")), None)
-        if eq is None:
+    order, remaining = [], list(range(n_vars))[::-1]
+    while remaining:
+        vi = remaining.pop(0)
+        if vi not in program:
             continue
-        terms = _linear_terms(eq.split("=")[1])
-        skip_defer = n_vars == 8 and vi == 7
-        deps = [] if skip_defer else [
-            src for kind, _, src, _, lag in terms if kind == "X" and lag == 0
-        ]
-        program[vi] = (terms, deps)
+        deps = [] if n_vars == 8 and vi == 7 else _same_t_sources(program[vi])
+        if all(d in order for d in deps):
+            order.append(vi)
+        else:
+            remaining.append(vi)
 
-    for t in range(max_lag, n_points):
-        noise = _draw(noise_type, n_vars + 1, noise_scale, df)
-        U[t] = noise[-1]
-        var_values: dict[str, float] = {"U": U[t]}
-        remaining = list(range(n_vars))[::-1]
-        while remaining:
-            vi = remaining.pop(0)
-            if vi not in program:
-                continue
-            terms, deps = program[vi]
-            if not all(d in var_values for d in deps):
-                remaining.append(vi)
-                continue
-            value = _eval_linear(terms, vi, X, U, t, noise, var_values)
-            X[t, vi] = value
-            var_values[f"X{vi + 1}"] = value
+    _seed_all(seed)
+    X = np.zeros((n_points, n_vars))
+    U = np.zeros(n_points)
+    for i in range(max_lag):
+        X[i] = _draw(noise_type, n_vars, noise_scale, df)
+        U[i] = _draw(noise_type, 1, noise_scale, df)[0]
+    _program_steps(
+        X, U, _regular_rows(n_points, max_lag), max_lag,
+        [(vi, program[vi]) for vi in order],
+        lambda: _draw(noise_type, n_vars + 1, noise_scale, df),
+    )
 
     out = pd.DataFrame(X, columns=[f"X{i + 1}" for i in range(n_vars)])
     if not hide_u:
@@ -561,37 +619,10 @@ def generate_confounded_config(
 # ---------------------------------------------------------------------------
 
 
-def _parse_poly_links(eqs: list[str]) -> dict[tuple[str, int, str, int], float]:
-    """b2.py:160-194 split-chain semantics, including Q1 (power and coef of
-    the first term win; the cubic tail is discarded)."""
-    links: dict[tuple[str, int, str, int], float] = {}
-    for eq in eqs:
-        if "=" not in eq:
-            continue
-        left, right = [s.strip() for s in eq.split("=")]
-        if "e" in right and len(right.split("+")) == 1:
-            continue
-        tgt = left.split("[")[0]
-        for raw in right.split("+"):
-            term = raw.strip()
-            if "*" not in term or "X" not in term:
-                continue
-            parts = term.split("*")
-            coeff = float(parts[0].strip())
-            vp = parts[1].strip()
-            base = vp.split("^")[0] if "^" in vp else vp
-            var = base.split("[")[0]
-            power = int(vp.split("^")[1].split(" ")[0]) if "^" in vp else 1
-            lag_part = base.split("[")[1].split("]")[0]
-            lag = 0 if lag_part == "t" else -int(lag_part.split("-")[1])
-            links[(var, lag, tgt, power)] = coeff
-    return links
-
-
-def _poly_steps(X, rows, t0, groups, noise_fn, U=None) -> None:
+def _poly_steps(X, rows, t0, program, noise_fn, U=None) -> None:
     """Shared B1/B2/D2 (and, with U, B1C/B2C/D2C — b1c.py:120-137) time
     loop: U first from the last noise slot, then reverse index order,
-    ``coef * v**power`` per grouped link, noise added unconditionally.
+    ``coef * v**power`` per compiled link, noise added unconditionally.
     ``rows`` is the per-step row table (regular or nearest-abs)."""
     # Reference parity: b1c.py's U^2 polynomials overflow float64 for some
     # B/C-confounded configs and the reference keeps the resulting inf —
@@ -599,6 +630,8 @@ def _poly_steps(X, rows, t0, groups, noise_fn, U=None) -> None:
     # Silence only the expected scalar-power overflow so the intentional
     # behavior isn't mistaken for a defect in audit logs.
     n_vars = X.shape[1]
+    links = dict(program)
+    groups = [links.get(i, []) for i in range(n_vars)]
     with np.errstate(over="ignore"):
         for t in range(t0, X.shape[0]):
             r = rows[t]
@@ -606,11 +639,7 @@ def _poly_steps(X, rows, t0, groups, noise_fn, U=None) -> None:
             if U is not None:
                 U[t] = noise[-1]
             for i in range(n_vars - 1, -1, -1):
-                value = 0.0
-                for coef, si, k, power in groups[i]:
-                    v = U[t] if si is None else X[r[k], si]
-                    value += coef * (v ** power)
-                X[t, i] = value + noise[i]
+                X[t, i] = _eval(groups[i], i, X, U, t, r, None) + noise[i]
 
 
 def generate_poly_mixture_config(
@@ -626,12 +655,9 @@ def generate_poly_mixture_config(
     b2.py:75-85), adaptive-exp timestamps WITHOUT the A2 re-seed (the ctor
     seeds once), nearest-abs lag resolution, reverse-order evaluation with
     direct current-row reads, noise always added (no gating)."""
-    from ..dsl.registry import equations
-
     eqs = equations("b2", n_vars, max_lag)
     if not eqs:
         raise ValueError(f"no b2 registry for ({n_vars}, {max_lag})")
-    links = _parse_poly_links(eqs)
 
     _seed_all(seed)
     X = np.zeros((n_points, n_vars))
@@ -639,7 +665,7 @@ def generate_poly_mixture_config(
     for i in range(max_lag):
         X[i] = _mixed_noise(n_vars, mix_ratio, noise_scale)
     _poly_steps(
-        X, _irregular_rows(ts, max_lag), max_lag, _group_links(links, n_vars),
+        X, _irregular_rows(ts, max_lag), max_lag, compile_equations("b2", eqs),
         lambda: _mixed_noise(n_vars, mix_ratio, noise_scale),
     )
 
@@ -669,12 +695,9 @@ def generate_poly_config(
     series have constant additive noise (rows 0..max_lag-1 are identical,
     and each step's residual equals that same vector). Verified bit-exact
     against all 72 Datasets/B1 CSVs (tests/test_generation.py)."""
-    from ..dsl.registry import equations
-
     eqs = equations("b1", n_vars, max_lag)
     if not eqs:
         raise ValueError(f"no b1 registry for ({n_vars}, {max_lag})")
-    links = _parse_poly_links(eqs)
 
     _seed_all(seed)
     X = np.zeros((n_points, n_vars))
@@ -686,7 +709,7 @@ def generate_poly_config(
         for i in range(max_lag):
             X[i] = _draw(noise_type, n_vars, noise_scale, df)
     _poly_steps(
-        X, _regular_rows(n_points, max_lag), max_lag, _group_links(links, n_vars),
+        X, _regular_rows(n_points, max_lag), max_lag, compile_equations("b1", eqs),
         (lambda: frozen) if frozen is not None
         else lambda: _draw(noise_type, n_vars, noise_scale, df),
     )
@@ -697,106 +720,15 @@ def generate_poly_config(
 
 
 # ---------------------------------------------------------------------------
-# Trig grammar (C1/C2/D3 and C1C/C2C/D3C): each script carries its own copy
-# of evaluate_term; the copies differ only in a few quirks, compiled here
-# into fields of each term so the time loop does arithmetic only.
+# Trig families (C1/C2/D3 and C1C/C2C/D3C): each script carries its own copy
+# of evaluate_term; the copies differ only in a few quirks, which the trig
+# grammars of compile_equations carry as data.
 # ---------------------------------------------------------------------------
-
-
-def _compile_trig(eqs: list[str], grammar: str, trends, seas) -> list[tuple]:
-    """Compile a trig equation list once into ``[(target_idx0, terms)]`` in
-    list order; each term is ``(op, coef, src_idx0, lag, arg, min_t)``:
-
-    - 'noise' (the target's noise slot) and 'series' (``arg[t]``: that
-      target's trend or season array) add without a coefficient;
-    - 'u' is ``coef * U[t]`` — LINEAR for any declared power: evaluate_term
-      tests ``expr == 'U[t]'`` before it inspects '^' (c2c.py:179-187,
-      d3c.py:275-283), so the registry's U[t]^2 evaluates as U[t];
-    - 'lin' / 'pow' / 'fn' read ``X[rows[t][lag], src]`` and add
-      ``coef * v``, ``coef * v**arg`` or ``coef * arg(v * pi / 2)``
-      (arg is np.cos or np.sin).
-
-    ``grammar`` names the script family:
-
-    - 'c1' / 'c1c' (regular time): before ``min_t`` the operand reads 0.0
-      (c1.py:143-187 and c1c.py:162-236 guard ``t >= lag``; c1's plain
-      lagged term guards ``t > lag``). c1's per-t memo holds exactly what
-      was just written to ``X[t]``, so a same-t read of X is that memo.
-    - 'c2' / 'c2c' (irregular time): no guards (nearest-abs rows are
-      never negative).
-    - Quirk Q6: c1, c2 and c2c read a plain lagged term's variable as the
-      single digit ``int(expr[1])``; c1c parses the full index.
-    """
-    regular = grammar in ("c1", "c1c")
-    program = []
-    for eq in eqs:
-        if "=" not in eq or eq.startswith("U["):
-            continue
-        left, right = eq.split("=")
-        vi = int(left.strip().split("[")[0][1:]) - 1
-        terms = []
-        for raw in right.split("+"):
-            term = raw.strip()
-            if term.startswith("e"):
-                terms.append(("noise", 0.0, 0, 0, None, 0))
-                continue
-            if term.startswith("trend") or term.startswith("season"):
-                series = trends if term.startswith("trend") else seas
-                terms.append(("series", 0.0, 0, 0, series[vi], 0))
-                continue
-            parts = term.split("*")
-            coef = float(parts[0].strip())
-            expr = parts[1].strip()
-            if expr.startswith("U["):
-                terms.append(("u", coef, 0, 0, None, 0))
-                continue
-            if "[t-" in expr and not any(f in expr for f in ("cos", "sin", "^")):
-                op, arg = "lin", None
-                src = (int(expr[1]) if grammar != "c1c"
-                       else int(expr.split("X")[1].split("[")[0])) - 1
-                lag = int(expr.split("-")[1].split("]")[0])
-                min_t = lag + 1 if grammar == "c1" else lag
-            else:
-                fname = "cos(" if "cos(" in expr else "sin(" if "sin(" in expr else None
-                inner = expr.split(fname)[1].split(")")[0] if fname else expr
-                if fname:
-                    op, arg = "fn", np.cos if fname == "cos(" else np.sin
-                elif "^" in expr:
-                    op, arg = "pow", int(expr.split("^")[1])
-                else:
-                    op, arg = "lin", None
-                src = int(inner.split("X")[1].split("[")[0]) - 1
-                lag = int(inner.split("-")[1].split("]")[0]) if "[t-" in inner else 0
-                min_t = lag
-            terms.append((op, coef, src, lag, arg, min_t if regular else 0))
-        program.append((vi, terms))
-    return program
-
-
-def _eval_trig(terms, vi, X, U, t, r, noise) -> float:
-    """Accumulate one compiled trig equation at step t (``r = rows[t]``)."""
-    value = 0.0
-    for op, coef, src, lag, arg, min_t in terms:
-        if op == "noise":
-            value += noise[vi]
-        elif op == "series":
-            value += arg[t]
-        elif op == "u":
-            value += coef * U[t]
-        else:
-            v = X[r[lag], src] if t >= min_t else 0.0
-            if op == "lin":
-                value += coef * v
-            elif op == "pow":
-                value += coef * (v ** arg)
-            else:
-                value += coef * arg(v * np.pi / 2)
-    return value
 
 
 def _trig_core(
     eqs: list[str],
-    grammar: str,
+    family: str,
     n_points: int,
     n_vars: int,
     max_lag: int,
@@ -835,16 +767,10 @@ def _trig_core(
             U[i] = warmup_u()
         for j in range(n_vars):
             X[i, j] += trends[j][i] + seas[j][i]
-    program = _compile_trig(eqs, grammar, trends, seas)
     rows = (_regular_rows(n_points, max_lag) if ts is None
             else _irregular_rows(ts, max_lag))
-    for t in range(max_lag, n_points):
-        r = rows[t]
-        noise = step_noise()
-        if U is not None:
-            U[t] = noise[-1]
-        for vi, terms in program:
-            X[t, vi] = _eval_trig(terms, vi, X, U, t, r, noise)
+    _program_steps(X, U, rows, max_lag,
+                   compile_equations(family, eqs, trends, seas), step_noise)
     return X, U
 
 
@@ -868,9 +794,7 @@ def generate_trend_season_config(
     trend/seasonality arrays added to warmup rows too (c1.py:228-234);
     equations evaluated in LIST order; terms follow evaluate_term
     (c1.py:143-187) including its cos/sin/power/linear sub-grammar and the
-    t>lag guards (see _compile_trig)."""
-    from ..dsl.registry import equations
-
+    t>lag guards (see the c1 grammar in compile_equations)."""
     eqs = equations("c1", n_vars, max_lag)
     if not eqs:
         raise ValueError(f"no c1 registry for ({n_vars}, {max_lag})")
@@ -900,50 +824,38 @@ def generate_trend_season_config(
 # ---------------------------------------------------------------------------
 
 
-def _two_pass_program(eqs: list[str]):
-    """Compile the D1/D1C two-pass schedule once (d1.py:136-212,
-    d1c.py:135-217): every X equation as ``(name, target_idx0, terms)``
-    in list order for pass 2, and the ones with no same-t term (no 't]'
-    substring, so no X[t] or U[t]) for pass 1 — keyed, as the reference's
-    loop leaves ``var_name``, by the LAST source variable it read (the
-    memo-shadowing bug), or by the target itself if it reads none."""
-    pass1, pass2 = [], []
-    for eq in eqs:
-        if "=" not in eq or eq.startswith("U[t]"):
-            continue
-        left, right = eq.split("=")
-        name = left.split("[")[0]
-        vi = int(name[1:]) - 1
-        terms = _linear_terms(right)
-        pass2.append((name, vi, terms))
-        if not any("t]" in term for term in right.split("+")):
-            key = next((src for kind, _, src, _, _ in reversed(terms) if kind != "e"), name)
-            pass1.append((key, vi, terms))
-    return pass1, pass2
+def _two_pass_schedule(program) -> list[tuple]:
+    """The D1/D1C two-pass memo (d1.py:136-212, d1c.py:135-217) compiled
+    into the list of equations one step evaluates.
 
-
-def _two_pass_steps(X, U, t0, program, noise_fn) -> None:
-    """D1/D1C time loop: pass 1 records each value under its (shadowed)
-    key; pass 2 evaluates every equation whose target name no key claims,
-    same-t reads going through that memo. With U, U[t] takes the last
-    noise slot and the memo starts as {"U": U[t]}."""
-    pass1, pass2 = program
-    for t in range(t0, X.shape[0]):
-        noise = noise_fn()
-        var_values: dict[str, float] = {}
-        if U is not None:
-            U[t] = noise[-1]
-            var_values["U"] = U[t]
-        for key, vi, terms in pass1:
-            value = _eval_linear(terms, vi, X, U, t, noise, var_values)
-            X[t, vi] = value
-            var_values[key] = value
-        for name, vi, terms in pass2:
-            if name in var_values:
-                continue
-            value = _eval_linear(terms, vi, X, U, t, noise, var_values)
-            X[t, vi] = value
-            var_values[name] = value
+    Pass 1 evaluates every equation with no same-t term (no X[t] or U[t])
+    and records its value in the per-t memo under the LAST source variable
+    it read (the reference's loop leaves ``var_name`` there — the
+    memo-shadowing bug), or under its own target if it reads none. Pass 2
+    walks every equation in list order, skips any whose target the memo
+    already holds, evaluates the rest (same-t reads go through the memo,
+    falling back to the current row) and records each under its target.
+    Which keys the memo holds at each point never depends on the data, so
+    the schedule is fixed: a memo read of X_k becomes a row read of the
+    target whose value the memo holds under k, and a pass-1 equation that
+    pass 2 would re-evaluate is not run again (it has no same-t term, so
+    it would write the same value)."""
+    first = [(vi, terms) for vi, terms in program
+             if not _same_t_sources(terms) and all(t[0] != "u" for t in terms)]
+    steps, holder = list(first), {}  # memo key -> target whose value it holds
+    for vi, terms in first:
+        reads = [src for op, _, src, *_ in terms if op in _READS_X]
+        holder[reads[-1] if reads else vi] = vi
+    ran = {vi for vi, _ in first}
+    for vi, terms in program:
+        if vi not in holder and vi not in ran:
+            steps.append((vi, [
+                t[:2] + (holder.get(t[2], t[2]),) + t[3:]
+                if t[0] in _READS_X and not t[3] else t
+                for t in terms
+            ]))
+        holder.setdefault(vi, vi)
+    return steps
 
 
 def generate_mcar_config(
@@ -959,19 +871,18 @@ def generate_mcar_config(
     """Returns (missing_df, complete_df) like the reference's generator
     (d1.py:213-235): the MCAR mask draws AFTER the full recurrence, one
     uniform per cell in row-major order."""
-    from ..dsl.registry import equations
-
     eqs = equations("d1", n_vars, max_lag)
     if not eqs:
-        raise ValueError(f"no linear registry for ({n_vars}, {max_lag})")
+        raise ValueError(f"no d1 registry for ({n_vars}, {max_lag})")
 
     _seed_all(seed, "global")  # t-stream idiom of this family's script (see _seed_all)
     X = np.zeros((n_points, n_vars))
     for i in range(max_lag):
         X[i] = _draw(noise_type, n_vars, noise_scale, df)
 
-    _two_pass_steps(X, None, max_lag, _two_pass_program(eqs),
-                    lambda: _draw(noise_type, n_vars, noise_scale, df))
+    _program_steps(X, None, _regular_rows(n_points, max_lag), max_lag,
+                   _two_pass_schedule(compile_equations("d1", eqs)),
+                   lambda: _draw(noise_type, n_vars, noise_scale, df))
 
     mask = np.random.random(X.shape) < missing_rate
     X_missing = X.copy()
@@ -1036,18 +947,16 @@ def generate_block_missing_config(
     df: int = 3,
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """(missing_df, complete_df), bit-exact vs the D2 seed-42 CSVs."""
-    from ..dsl.registry import equations
-
-    links = _parse_poly_links(equations("d2", n_vars, max_lag))
-    if not links:
-        raise ValueError(f"no poly registry for ({n_vars}, {max_lag})")
+    eqs = equations("d2", n_vars, max_lag)
+    if not eqs:
+        raise ValueError(f"no d2 registry for ({n_vars}, {max_lag})")
     _seed_all(seed, "global")  # t-stream idiom of this family's script (see _seed_all)
     X = np.zeros((n_points, n_vars))
     ts = _adaptive_timestamps_noreseed(n_points)
     for i in range(max_lag):
         X[i] = _draw(noise_type, n_vars, noise_scale, df)
     _poly_steps(
-        X, _irregular_rows(ts, max_lag), max_lag, _group_links(links, n_vars),
+        X, _irregular_rows(ts, max_lag), max_lag, compile_equations("d2", eqs),
         lambda: _draw(noise_type, n_vars, noise_scale, df),
     )
     mask = _block_pattern(n_points, n_vars, block_prob)
@@ -1086,8 +995,6 @@ def generate_trig_irregular_config(
     (c2.py:96-108 — the index/continuous mismatch is the reference's),
     list-order evaluation with direct X[t] reads, nearest-abs lags inside
     sin/cos/power sub-expressions (c2.py:118-171)."""
-    from ..dsl.registry import equations
-
     eqs = equations("c2", n_vars, max_lag)
     if not eqs:
         raise ValueError(f"no c2 registry for ({n_vars}, {max_lag})")
@@ -1128,8 +1035,6 @@ def generate_mixed_missing_config(
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """(missing_df, complete_df) for the D3 family — bit-exact vs the
     reference's seed-42 CSVs."""
-    from ..dsl.registry import equations
-
     eqs = equations("d3", n_vars, max_lag)
     if not eqs:
         raise ValueError(f"no d3 registry for ({n_vars}, {max_lag})")
@@ -1140,7 +1045,7 @@ def generate_mixed_missing_config(
 
     ts = _adaptive_timestamps_noreseed(n_points)
     X, _ = _trig_core(
-        eqs, "c2", n_points, n_vars, max_lag, ts, _noise, _noise, None,
+        eqs, "d3", n_points, n_vars, max_lag, ts, _noise, _noise, None,
         trend_strength, seasonal_strength, seasonal_period,
     )
     mcar = np.random.random((n_points, n_vars)) < mcar_prob

@@ -4,8 +4,9 @@ Every family with a hidden confounder U composes an existing mechanism
 (linear / polynomial / trig dynamics, regular / irregular sampling, MCAR /
 block / mixed masks — all bit-exact in kernel.py) with U-injection: one
 extra noise slot per timestep, U written first, U terms evaluated from the
-registry. The seven generators here replicate each reference script's exact
-draw order and term grammar:
+registry. The eight generators here replicate each reference script's exact
+draw order; each script's term grammar (the power U keeps, a2c's guard) is
+data on its family's grammar in kernel.compile_equations:
 
 - B1C (Codes/b1c.py:95-158): polynomial, regular time, reverse-order eval,
   U enters as coef * U[t]**power (squared per registry).
@@ -26,6 +27,8 @@ draw order and term grammar:
   MCAR ∪ block mask. Warmup U draws use include_confounder=True with size 1,
   consuming THREE size-2 arrays per warmup row (d3c.py:188-203,384).
   The C2C linear-U quirk applies (d3c.py:275-283).
+- A2C (Codes/a2c.py:116-223): linear + U over irregular time. Its grammar
+  drops every registry equation, so the data is pure noise.
 
 All numerics are plain numpy with np.random.seed(seed) — bit-exact against
 the reference's seed-42 corpus for gaussian/mixture noise (Student-t uses
@@ -43,48 +46,18 @@ from .kernel import (
     _adaptive_timestamps_noreseed,
     _block_pattern,
     _draw,
-    _group_links,
+    _eval,
     _irregular_rows,
     _mixed_noise,
     _poly_steps,
+    _program_steps,
     _regular_rows,
     _seed_all,
     _trig_core,
-    _two_pass_program,
-    _two_pass_steps,
+    _two_pass_schedule,
+    compile_equations,
+    irregular_timestamps,
 )
-
-
-def _parse_poly_links_u(eqs: list[str]) -> dict[tuple[str, int, str, int], float]:
-    """extract_coefficients_from_equations (b1c.py:160-202, same code in
-    b2c/d2c): '+'-split with quirk Q1 (cubic tails discarded), keys
-    (source, lag<=0, target, power); U terms get lag 0 and keep their
-    declared power."""
-    links: dict[tuple[str, int, str, int], float] = {}
-    for eq in eqs:
-        if "=" not in eq:
-            continue
-        left, right = [s.strip() for s in eq.split("=")]
-        if "e" in right and len(right.split("+")) == 1:
-            continue  # pure-noise equations (U[t] = eU)
-        tgt = left.split("[")[0]
-        for raw in right.split("+"):
-            term = raw.strip()
-            if "*" not in term or not ("X" in term or "U" in term):
-                continue
-            parts = term.split("*")
-            coeff = float(parts[0].strip())
-            var_part = parts[1].strip()
-            base = var_part.split("^")[0] if "^" in var_part else var_part
-            var = base.split("[")[0]
-            power = int(var_part.split("^")[1].split(" ")[0]) if "^" in var_part else 1
-            if var == "U":
-                lag = 0
-            else:
-                lag_part = base.split("[")[1].split("]")[0]
-                lag = 0 if lag_part == "t" else -int(lag_part.split("-")[1])
-            links[(var, lag, tgt, power)] = coeff
-    return links
 
 
 def _frame(X, U, time) -> pd.DataFrame:
@@ -105,8 +78,8 @@ def generate_confounded_poly_config(
 ) -> pd.DataFrame:
     """B1C: polynomial + U^2, regular sampling (b1c.py:95-158). Warmup rows
     interleave an n_vars X draw and a 1-draw U per row (b1c.py:146-148)."""
-    links = _parse_poly_links_u(equations("b1c", n_vars, max_lag))
-    if not links:
+    eqs = equations("b1c", n_vars, max_lag)
+    if not eqs:
         raise ValueError(f"no b1c registry for ({n_vars}, {max_lag})")
     _seed_all(seed, "percall")  # t-stream idiom of this family's script (see _seed_all)
     X = np.zeros((n_points, n_vars))
@@ -115,7 +88,7 @@ def generate_confounded_poly_config(
         X[i] = _draw(noise_type, n_vars, noise_scale, df)
         U[i] = _draw(noise_type, 1, noise_scale, df)[0]
     _poly_steps(
-        X, _regular_rows(n_points, max_lag), max_lag, _group_links(links, n_vars),
+        X, _regular_rows(n_points, max_lag), max_lag, compile_equations("b1c", eqs),
         lambda: _draw(noise_type, n_vars + 1, noise_scale, df), U,
     )
     return _frame(X, U, np.arange(n_points))
@@ -132,8 +105,8 @@ def generate_confounded_poly_mixture_config(
     """B2C: polynomial + U^2 over irregular time with mixture noise
     (b2c.py:137-165): timestamps first, then interleaved X/U warmup draws,
     then per-t mixture draws of n_vars+1."""
-    links = _parse_poly_links_u(equations("b2c", n_vars, max_lag))
-    if not links:
+    eqs = equations("b2c", n_vars, max_lag)
+    if not eqs:
         raise ValueError(f"no b2c registry for ({n_vars}, {max_lag})")
     _seed_all(seed)
     X = np.zeros((n_points, n_vars))
@@ -143,7 +116,7 @@ def generate_confounded_poly_mixture_config(
         X[i] = _mixed_noise(n_vars, mix_ratio, noise_scale)
         U[i] = _mixed_noise(1, mix_ratio, noise_scale)[0]
     _poly_steps(
-        X, _irregular_rows(ts, max_lag), max_lag, _group_links(links, n_vars),
+        X, _irregular_rows(ts, max_lag), max_lag, compile_equations("b2c", eqs),
         lambda: _mixed_noise(n_vars + 1, mix_ratio, noise_scale), U,
     )
     return _frame(X, U, ts)
@@ -162,8 +135,8 @@ def generate_confounded_block_missing_config(
     """D2C: (missing_df, complete_df) — B1C-style polynomial irregular
     dynamics + Markov block mask on X only; U always observed
     (d2c.py:227-264, mask d2c.py:169-195)."""
-    links = _parse_poly_links_u(equations("d2c", n_vars, max_lag))
-    if not links:
+    eqs = equations("d2c", n_vars, max_lag)
+    if not eqs:
         raise ValueError(f"no d2c registry for ({n_vars}, {max_lag})")
     _seed_all(seed, "global")  # t-stream idiom of this family's script (see _seed_all)
     X = np.zeros((n_points, n_vars))
@@ -173,7 +146,7 @@ def generate_confounded_block_missing_config(
         X[i] = _draw(noise_type, n_vars, noise_scale, df)
         U[i] = _draw(noise_type, 1, noise_scale, df)[0]
     _poly_steps(
-        X, _irregular_rows(ts, max_lag), max_lag, _group_links(links, n_vars),
+        X, _irregular_rows(ts, max_lag), max_lag, compile_equations("d2c", eqs),
         lambda: _draw(noise_type, n_vars + 1, noise_scale, df), U,
     )
     mask = _block_pattern(n_points, n_vars, block_prob)
@@ -233,7 +206,8 @@ def generate_confounded_trig_irregular_config(
     df: int = 3,
 ) -> pd.DataFrame:
     """C2C (c2c.py:116-310): warmup U draws are plain 1-draws; per-t draws
-    are n_vars+1; U effectively linear (see _compile_trig)."""
+    are n_vars+1; U effectively linear (see the trig grammar in
+    compile_equations)."""
     eqs = equations("c2c", n_vars, max_lag)
     if not eqs:
         raise ValueError(f"no c2c registry for ({n_vars}, {max_lag})")
@@ -273,7 +247,7 @@ def generate_confounded_mixed_missing_config(
     _seed_all(seed)
     ts = _adaptive_timestamps_noreseed(n_points)
     X, U = _trig_core(
-        eqs, "c2c", n_points, n_vars, max_lag, ts,
+        eqs, "d3c", n_points, n_vars, max_lag, ts,
         lambda: _mixed_noise(n_vars + 1, mix_ratio, noise_scale),
         lambda: _mixed_noise(n_vars, mix_ratio, noise_scale),
         lambda: _mixed_noise(2, mix_ratio, noise_scale)[-1],
@@ -318,8 +292,9 @@ def generate_confounded_mcar_config(
         X[i] = _draw(noise_type, n_vars, noise_scale, df)
         U[i] = _draw(noise_type, 1, noise_scale, df)[0]
 
-    _two_pass_steps(X, U, max_lag, _two_pass_program(eqs),
-                    lambda: _draw(noise_type, n_vars + 1, noise_scale, df))
+    _program_steps(X, U, _regular_rows(n_points, max_lag), max_lag,
+                   _two_pass_schedule(compile_equations("d1c", eqs)),
+                   lambda: _draw(noise_type, n_vars + 1, noise_scale, df))
 
     mask = np.random.random(X.shape) < missing_rate
     Xm = X.copy()
@@ -333,34 +308,6 @@ def generate_confounded_mcar_config(
 # ---------------------------------------------------------------------------
 
 
-def _parse_a2c_links(eqs: list[str]) -> dict[tuple[str, int, str], float]:
-    """extract_coefficients_from_equations (a2c.py:227-250) — including its
-    fatal guard: ``'e' not in eq.split('=')[1]`` skips any equation whose
-    RHS contains the letter 'e'. Every registry equation carries a noise
-    term ('+ e4'), so the returned link dict is EMPTY and the generator's
-    causal pass never fires (corpus-confirmed: A2C datasets are pure noise).
-    Replicated rather than fixed so the kernel matches the shipped data."""
-    links: dict[tuple[str, int, str], float] = {}
-    for eq in eqs:
-        if "=" not in eq or "e" in eq.split("=")[1]:
-            continue
-        left, right = [s.strip() for s in eq.split("=")]
-        tgt = left.split("[")[0]
-        for raw in right.split("+"):
-            term = raw.strip()
-            if "*" not in term:
-                continue
-            coeff, var_part = [p.strip() for p in term.split("*")[:2]]
-            var = var_part.split("[")[0]
-            if var == "U":
-                lag = 0
-            else:
-                lag_part = var_part.split("[")[1].split("]")[0]
-                lag = 0 if lag_part == "t" else -int(lag_part.split("-")[1])
-            links[(var, lag, tgt)] = float(coeff)
-    return links
-
-
 def generate_confounded_irregular_config(
     n_points: int,
     n_vars: int,
@@ -372,13 +319,13 @@ def generate_confounded_irregular_config(
 ) -> pd.DataFrame:
     """A2C (a2c.py:154-223): double re-seed (Q4 — once in the driver, again
     inside timestamp generation), interleaved X/U warmup, per-t draws of
-    n_vars+1 with U last. Because _parse_a2c_links returns {} for the real
-    registry, every X cell is exogenous: the ``value != 0`` noise gate
+    n_vars+1 with U last. The a2c grammar drops every registry equation
+    (compile_equations: a2c.py's ``'e' not in rhs`` guard), so no X has a
+    link and every X cell is exogenous: the ``value != 0`` noise gate
     (a2c.py:190-192) never rewrites it, leaving pure noise — bit-exact vs
     the shipped A2C corpus."""
-    from .kernel import irregular_timestamps
-
-    links = _parse_a2c_links(equations("a2c", n_vars, max_lag))
+    program = dict(compile_equations("a2c", equations("a2c", n_vars, max_lag)))
+    groups = [program.get(i, []) for i in range(n_vars)]
     _seed_all(seed, "percall")  # t-stream idiom of this family's script (see _seed_all)
     X = np.zeros((n_points, n_vars))
     U = np.zeros(n_points)
@@ -386,7 +333,6 @@ def generate_confounded_irregular_config(
     for i in range(max_lag):
         X[i] = _draw(noise_type, n_vars, noise_scale, df)
         U[i] = _draw(noise_type, 1, noise_scale, df)[0]
-    groups = _group_links(links, n_vars)
     rows = _irregular_rows(ts, max_lag)
     for t in range(max_lag, n_points):
         r = rows[t]
@@ -396,9 +342,7 @@ def generate_confounded_irregular_config(
             if not groups[i]:
                 X[t, i] = noise[i]
         for i in range(n_vars - 1, -1, -1):
-            value = 0.0
-            for coef, si, k, _ in groups[i]:
-                value += coef * (U[t] if si is None else X[r[k], si])
+            value = _eval(groups[i], i, X, U, t, r, None)
             if value != 0:
                 X[t, i] = value + noise[i]
     return _frame(X, U, ts)

@@ -5,20 +5,24 @@ The reference persists one CSV + npy tensors + a structure txt per config
 into a `family/noise/vars/lag` directory tree (Codes/a1.py:237-306). The
 engine's equivalents: CSV with header and empty-string nulls (pandas
 to_csv compatible), edge lists as parquet (the relational tensor form), a
-JSON-lines structure sidecar (rendered once per process and written from
-the driver as one file, no Spark job), and
-`partitionBy(family, noise, n_vars, max_lag)` for the tree — which at
-100 TB doubles as partition pruning for any per-config read.
+JSON-lines structure sidecar (rendered in Python from the generation
+kernels' equation compile and written from the driver as one file, no
+Spark job), and `partitionBy(family, noise, n_vars, max_lag)` for the
+tree — which at 100 TB doubles as partition pruning for any per-config
+read.
 """
 
 from __future__ import annotations
 
+import itertools
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .dsl.registry import equations
+from .generation.kernel import structure_edges
 from .queries.dsl import _parsed_edges
 
 
@@ -43,45 +47,39 @@ def write_edge_list(spark: SparkSession, path: str) -> None:
     _parsed_edges(spark).write.mode("overwrite").parquet(path)
 
 
-def _structure_frame(spark: SparkSession) -> DataFrame:
-    """One record per edge with the equation text attached."""
-    return _parsed_edges(spark).select(
-        "family",
-        "n_vars",
-        "max_lag",
-        "source",
-        "target",
-        "lag",
-        "func",
-        "coef",
-        F.concat(
-            F.lit("("), "source", F.lit(", "), F.col("lag").cast("string"),
-            F.lit(", "), "target", F.lit(") => "), F.col("coef").cast("string"),
-        ).alias("link_str"),
-    )
+def _link_str(source: str, lag: int, target: str, coef: float) -> str:
+    return f"({source}, {lag}, {target}) => {coef!r}"
 
 
-# The sidecar's JSON-lines bytes. They depend only on EQUATION_ROWS, so one
-# render serves every call (and every session) in the process.
-_structure_json: "bytes | None" = None
+def _structure_lines(families):
+    """One JSON line per declared edge of every registry config of each
+    family, in the field order and number text of a Spark ``df.write.json``
+    over the same nine columns."""
+    for family in families:
+        for n_vars, max_lag in itertools.product((4, 6, 8), (2, 3, 4)):
+            for src, tgt, lag, func, coef in structure_edges(family, n_vars, max_lag):
+                yield json.dumps({
+                    "family": family, "n_vars": n_vars, "max_lag": max_lag,
+                    "source": src, "target": tgt, "lag": lag, "func": func,
+                    "coef": coef, "link_str": _link_str(src, lag, tgt, coef),
+                }, separators=(",", ":")) + "\n"
 
 
-def write_structure_json(spark: SparkSession, path: str) -> None:
-    """G18: structure sidecar as JSON lines — one record per edge with the
-    equation text attached, replacing the reference's free-text
-    `(source, lag, target) => coef` files (a1.py:296-306).
+def write_structure_json(
+    spark: SparkSession, path: str, families=("a1", "b2", "c1")
+) -> None:
+    """G18: structure sidecar as JSON lines — one record per declared edge
+    of ``families`` (default: the three the relational ``parse_edges``
+    covers) with its ``(source, lag, target) => coef`` text, replacing the
+    reference's free-text files (a1.py:296-306).
 
-    The lines are rendered once per process (`toJSON().collect()`, the
-    same records and order a `df.write.json` writes) and written from the
-    driver through the path's Hadoop FileSystem: one `part-00000.json`
-    plus `_SUCCESS`, replacing whatever the path held. On a 4-core host a
-    Spark write job of these few hundred driver-literal rows costs ~0.17 s
-    per call and this write ~0.035 s; it still reaches any URI the series
-    write does."""
-    global _structure_json
-    if _structure_json is None:
-        lines = _structure_frame(spark).toJSON().collect()
-        _structure_json = "".join(f"{line}\n" for line in lines).encode("utf-8")
+    The lines are rendered in Python from the kernels' own compile
+    (generation.kernel.structure_edges), so they declare the edges each
+    family's grammar reads — U edges have source "U", a2c has none — and
+    are written from the driver through the path's Hadoop FileSystem: one
+    `part-00000.json` plus `_SUCCESS`, replacing whatever the path held.
+    No Spark job runs; the write reaches any URI the series write does."""
+    data = "".join(_structure_lines(families)).encode("utf-8")
     jvm = spark.sparkContext._jvm
     Path = jvm.org.apache.hadoop.fs.Path
     out = Path(path)
@@ -89,7 +87,7 @@ def write_structure_json(spark: SparkSession, path: str) -> None:
     fs.delete(out, True)
     stream = fs.create(Path(out, "part-00000.json"), True)
     try:
-        stream.write(_structure_json)
+        stream.write(data)
     finally:
         stream.close()
     fs.create(Path(out, "_SUCCESS"), True).close()
@@ -97,14 +95,15 @@ def write_structure_json(spark: SparkSession, path: str) -> None:
 
 def write_structure_txt(family: str, n_vars: int, max_lag: int, path: str) -> None:
     """Driver-side text twin of the reference's structure file format
-    (a1.py:298-306) for single-config interop."""
-    eqs = equations(family, n_vars, max_lag)
+    (a1.py:298-306) for single-config interop: the declared edges as
+    ``(source, lag, target) => coefficient`` lines, then the equations."""
+    links = [_link_str(src, lag, tgt, coef)
+             for src, tgt, lag, _, coef in structure_edges(family, n_vars, max_lag)]
     with open(path, "w") as f:
         f.write(f"True Causal Structure ({family}):\n")
-        f.write("Format: (source, lag, target) => coefficient\n")
-        f.write("\nEquations:\n")
-        for eq in eqs:
-            f.write(f"{eq}\n")
+        f.write("Format: (source, lag, target) => coefficient\n\n")
+        for line in links + ["", "Equations:"] + equations(family, n_vars, max_lag):
+            f.write(f"{line}\n")
 
 
 def write_partitioned_dataset(df: DataFrame, path: str, *cols: str) -> None:

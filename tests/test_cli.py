@@ -55,14 +55,13 @@ def test_cli_generate_single_family_tree(spark):
 
 
 def test_cli_generate_runs_one_job_per_umbrella(spark):
-    """Once the process has rendered the structure sidecar, a one-umbrella
-    `generate` runs exactly one Spark job: the series write. The sidecar is
-    written from the driver."""
+    """A one-umbrella `generate` runs exactly one Spark job: the series
+    write. The structure sidecar is rendered in Python and written from the
+    driver."""
     out = tempfile.mkdtemp(prefix="cli_gj_")
     argv = ["generate", "--families", "c2", "--out", out, "--format", "parquet"]
     sc = spark.sparkContext
     try:
-        assert main(argv) == 0
         sc.setJobGroup("cli_generate_jobs", "generate --families c2")
         try:
             assert main(argv) == 0
@@ -71,6 +70,21 @@ def test_cli_generate_runs_one_job_per_umbrella(spark):
                         "spark.job.interruptOnCancel"):
                 sc.setLocalProperty(key, None)
         assert len(sc.statusTracker().getJobIdsForGroup("cli_generate_jobs")) == 1
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_cli_generate_sidecar_holds_the_written_families(spark):
+    """The sidecar declares the edges of the families written and of no
+    other; a2c's grammar drops every equation, so it adds no row."""
+    out = tempfile.mkdtemp(prefix="cli_gs_")
+    try:
+        argv = ["generate", "--families", "c2,a2c", "--out", out,
+                "--format", "parquet"]
+        assert main(argv) == 0
+        side = spark.read.json(os.path.join(out, "structure"))
+        got = side.groupBy("family").count().collect()
+        assert [(r["family"], r["count"] > 0) for r in got] == [("c2", True)]
     finally:
         shutil.rmtree(out, ignore_errors=True)
 

@@ -1,10 +1,10 @@
-"""Hypothesis property tests for the DSL parsing/scheduling kernel layer.
+"""Hypothesis property tests for the DSL compile/scheduling kernel layer.
 
 The reference's parsers were only ever exercised on the ~150 registry
-strings; these properties pin the engine's parser on the whole grammar
-(arbitrary coefficients, lags, and term orders) and the topological
-scheduler on arbitrary contemporaneous DAGs — the robustness the
-single-digit-index reference parser (quirk Q6) lacks.
+strings; these properties pin the engine's equation compile on the whole
+linear grammar (arbitrary coefficients, lags, and term orders) and the
+topological scheduler on arbitrary contemporaneous DAGs — the robustness
+the single-digit-index reference parser (quirk Q6) lacks.
 """
 
 from __future__ import annotations
@@ -13,7 +13,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from synth_timeseries_data_spark.generation.kernel import (
-    parse_linear_equation,
+    compile_equations,
     topo_order,
 )
 
@@ -49,13 +49,13 @@ def linear_equations(draw):
 @settings(max_examples=200, deadline=None)
 def test_parse_linear_roundtrip(case):
     """Every synthesized (coef, source, lag) term — and nothing else — must
-    come back from the parser, with the noise term iff declared."""
+    come back from the compile, with the noise term iff declared."""
     eq, target, terms, with_noise = case
-    tgt, parsed = parse_linear_equation(eq)
-    assert tgt == target - 1  # parser is 0-indexed
+    [(tgt, parsed)] = compile_equations("a1", [eq])
+    assert tgt == target - 1  # compile is 0-indexed
     got_noise = [t for t in parsed if t[0] == "noise"]
     got_terms = [
-        (t[1], t[2] + 1, t[3]) for t in parsed if t[0] == "var"
+        (t[1], t[2] + 1, t[3]) for t in parsed if t[0] == "lin"
     ]
     assert len(got_noise) == (1 if with_noise else 0)
     assert sorted(got_terms) == sorted(terms)
@@ -63,9 +63,10 @@ def test_parse_linear_roundtrip(case):
 
 @st.composite
 def contemporaneous_dags(draw):
-    """A random acyclic lag-0 dependency structure as parsed-term dicts."""
+    """A random acyclic lag-0 dependency structure as linear equations,
+    compiled to a ``{target: terms}`` program."""
     n_vars = draw(st.integers(min_value=2, max_value=8))
-    parsed = {}
+    eqs = []
     for v in range(n_vars):
         # acyclic by construction: v may depend only on w > v at lag 0
         deps = draw(
@@ -75,19 +76,23 @@ def contemporaneous_dags(draw):
                 max_size=max(0, n_vars - 1 - v),
             )
         ) if v < n_vars - 1 else []
-        parsed[v] = [("var", 0.5, w, 0) for w in deps] + [("noise",)]
-    return n_vars, parsed
+        eqs.append(
+            f"X{v + 1}[t] = "
+            + "".join(f"0.5 * X{w + 1}[t] + " for w in deps)
+            + f"e{v + 1}"
+        )
+    return n_vars, dict(compile_equations("a1", eqs))
 
 
 @given(contemporaneous_dags())
 @settings(max_examples=200, deadline=None)
 def test_topo_order_respects_dependencies(case):
     """Every lag-0 source must be scheduled before its target."""
-    n_vars, parsed = case
-    order = topo_order(parsed, n_vars)
+    n_vars, program = case
+    order = topo_order(program, n_vars)
     assert sorted(order) == list(range(n_vars))
     pos = {v: i for i, v in enumerate(order)}
-    for v, terms in parsed.items():
+    for v, terms in program.items():
         for t in terms:
-            if t[0] == "var" and t[3] == 0:
+            if t[0] == "lin" and t[3] == 0:
                 assert pos[t[2]] < pos[v], (v, t)

@@ -75,6 +75,29 @@ def test_parse_matches_reference_parsers(duck):
                 assert actual == expect, (family, n_vars, max_lag)
 
 
+def test_kernel_compile_matches_parse_oracle():
+    """The edges the generation kernels compile (the structure sidecar's
+    rows) equal the relational parse's DuckDB oracle on a1/b2/c1, as a
+    multiset. No Spark: the oracle text reads only the registry VALUES."""
+    from collections import Counter
+
+    import duckdb
+
+    from synth_timeseries_data_spark.generation.kernel import structure_edges
+    from synth_timeseries_data_spark.queries.dsl import _PARSE_ORACLE
+
+    oracle = duckdb.connect().execute(_PARSE_ORACLE).fetchall()
+    compiled = [
+        (family, n_vars, max_lag, target, source, lag, func, coef)
+        for family in ("a1", "b2", "c1")
+        for n_vars in (4, 6, 8)
+        for max_lag in (2, 3, 4)
+        for source, target, lag, func, coef in structure_edges(family, n_vars, max_lag)
+    ]
+    assert len(compiled) == 184
+    assert Counter(compiled) == Counter(oracle)
+
+
 def test_q1_quirk_cubic_dropped(duck):
     """B-family equations declare '- 0.1 * X^3' but the effective parse keeps
     only the quadratic with the first coef (SURVEY.md Q1)."""

@@ -13,7 +13,7 @@ import pandas as pd
 import pytest
 
 from synth_timeseries_data_spark.generation import generate_linear_config, topo_order
-from synth_timeseries_data_spark.generation.kernel import parse_linear_equation
+from synth_timeseries_data_spark.generation.kernel import compile_equations
 
 _A1 = "/root/reference/Datasets/A1"
 
@@ -72,25 +72,21 @@ def test_student_t_moments():
 
 
 def test_topo_order_matches_reference_order():
-    parsed = {}
-    for eq in (
+    program = dict(compile_equations("a1", [
         "X4[t] = 0.25 * X1[t-2] + e4",
         "X3[t] = 0.35 * X4[t] + e3",
         "X2[t] = 0.3 * X3[t-1] + e2",
         "X1[t] = 0.4 * X2[t] + e1",
-    ):
-        tgt, terms = parse_linear_equation(eq)
-        parsed[tgt] = terms
-    assert topo_order(parsed, 4) == [3, 2, 1, 0]
+    ]))
+    assert topo_order(program, 4) == [3, 2, 1, 0]
 
 
 def test_topo_order_raises_on_cycle():
-    parsed = {}
-    for eq in ("X1[t] = 0.5 * X2[t] + e1", "X2[t] = 0.5 * X1[t] + e2"):
-        tgt, terms = parse_linear_equation(eq)
-        parsed[tgt] = terms
+    program = dict(compile_equations(
+        "a1", ["X1[t] = 0.5 * X2[t] + e1", "X2[t] = 0.5 * X1[t] + e2"]
+    ))
     with pytest.raises(ValueError, match="cycle"):
-        topo_order(parsed, 2)
+        topo_order(program, 2)
 
 
 _A2 = "/root/reference/Datasets/A2"
@@ -463,14 +459,29 @@ def test_c2c_u_linear_quirk():
     branch, so declared U[t]^2 terms contribute coef*U[t] LINEARLY. Verify
     the kernel reproduces the quirk (and therefore the corpus) rather than
     the declared square: X3 = 0.35*X4^2 + 0.3*U + trend + season + e3.
-    The term goes through the compiled program the c2c/d3c kernels run."""
-    from synth_timeseries_data_spark.generation.kernel import _compile_trig, _eval_trig
+    The term goes through the compile and evaluator the kernels run; the
+    polynomial grammar (b1c.py) really squares U."""
+    from synth_timeseries_data_spark.generation.kernel import _eval
 
-    [(vi, terms)] = _compile_trig(["X3[t] = 0.3 * U[t]^2"], "c2c", None, None)
-    assert vi == 2 and terms[0][0] == "u"
     U = np.array([0.0, 0.0, 3.0])
     X = np.zeros((3, 4))
-    assert _eval_trig(terms, vi, X, U, 2, [2], None) == pytest.approx(0.9)  # not 2.7
+    for family, want in (("c2c", 0.9), ("d3c", 0.9), ("b1c", 2.7)):
+        [(vi, terms)] = compile_equations(family, ["X3[t] = 0.3 * U[t]^2"])
+        assert vi == 2 and terms[0][0] == "u"
+        got = _eval(terms, vi, X, U, 2, [2], None)
+        assert got == pytest.approx(want), family  # c2c/d3c: not 2.7
+
+
+def test_a2c_compiles_to_no_links():
+    """a2c.py's ``'e' not in rhs`` guard drops every registry equation, so
+    no A2C config has a link and its data is pure noise (see
+    generate_confounded_irregular_config)."""
+    from synth_timeseries_data_spark.dsl.registry import equations
+
+    configs = [(v, l) for v in (4, 6, 8) for l in (2, 3, 4)]
+    assert all(equations("a2c", v, l) for v, l in configs)
+    assert all(compile_equations("a2c", equations("a2c", v, l)) == []
+               for v, l in configs)
 
 
 def test_d1c_bitexact_both_files():

@@ -9,6 +9,7 @@ import shutil
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
 from synth_timeseries_data_spark import sinks
 from synth_timeseries_data_spark.queries.dsl import _parsed_edges
@@ -51,15 +52,33 @@ def test_structure_json_sidecar(spark, tmpdir_):
 
 
 def test_structure_json_matches_spark_json_write(spark, tmpdir_):
-    """The driver-written file holds, line for line and in order, what a
-    Spark `df.write.json` of the same select writes across its parts."""
+    """The Python-rendered lines read back through Spark's JSON reader as
+    exactly the relational parse's a1/b2/c1 edges, with the link text
+    Spark would render for them."""
     path = os.path.join(tmpdir_, "structure")
-    ref = os.path.join(tmpdir_, "reference")
-    sinks.write_structure_json(spark, path)
-    sinks._structure_frame(spark).write.mode("overwrite").json(ref)
-    got = _json_lines(path)
-    assert len(got) == 184
-    assert got == _json_lines(ref)
+    sinks.write_structure_json(spark, path, ["a1", "b2", "c1"])
+    assert len(_json_lines(path)) == 184
+    cols = ["family", "n_vars", "max_lag", "source", "target", "lag", "func", "coef"]
+    back = spark.read.json(path)
+    want = _parsed_edges(spark).select(*cols).withColumn(
+        "link_str",
+        F.concat(
+            F.lit("("), "source", F.lit(", "), F.col("lag").cast("string"),
+            F.lit(", "), "target", F.lit(") => "), F.col("coef").cast("string"),
+        ),
+    )
+    got = back.select(*[F.col(c).cast(t) for c, t in want.dtypes])
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_structure_json_holds_only_the_given_families(spark, tmpdir_):
+    path = os.path.join(tmpdir_, "structure")
+    sinks.write_structure_json(spark, path, ["c2c", "a2c"])
+    back = spark.read.json(path)
+    assert {r.family for r in back.select("family").distinct().collect()} == {"c2c"}
+    # U edges: source "U", lag 0, linear under the c2c grammar's quirk
+    u = back.where("source = 'U'").collect()
+    assert u and {(r.lag, r.func) for r in u} == {(0, "linear")}
 
 
 def test_structure_json_layout_replaces_stale_files(spark, tmpdir_):
@@ -84,6 +103,7 @@ def test_structure_txt(tmpdir_):
     sinks.write_structure_txt("a1", 4, 2, path)
     text = open(path).read()
     assert "X4[t] = 0.25 * X1[t-2] + e4" in text
+    assert "(X1, 2, X4) => 0.25\n" in text
     assert text.startswith("True Causal Structure")
 
 

@@ -28,7 +28,6 @@ def smoke_sf_dir() -> str:
 def spark():
     from synth_timeseries_data_spark.session import get_session
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_session("synth-ts-spark-tests")
     yield spark
 

@@ -601,3 +601,29 @@ def test_asof_join_orders_is_join_free(spark, oracle_sf_dir):
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert plan.count("Window") >= 1
+
+
+def test_warm_rebuild_compiles_no_generated_class(spark, smoke_sf_dir):
+    """The session keeps every generated class it compiled: rebuilding the
+    perfbench `queries` mix recompiles nothing. At Spark's default cache of
+    100 entries the mix's ~175 classes evict each other: in a fresh session
+    the rebuild re-ran Janino on 86 of them, and later warm passes on 20-45."""
+    from synth_timeseries_data_spark.session import _CODEGEN_CACHE_ENTRIES
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    queries = all_queries()
+    mix = ("pacf", "dedup_clusters", "tfidf_topterms", "kmeans_embed",
+           "quality_classifier")
+
+    def one_pass() -> int:
+        for name in mix:
+            queries[name].build(spark, smoke_sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        return compiles.METRIC_COMPILATION_TIME().getCount()
+
+    before = one_pass()
+    assert one_pass() == before
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        _CODEGEN_CACHE_ENTRIES
+    )

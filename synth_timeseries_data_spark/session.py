@@ -6,6 +6,11 @@ one shuffle partition per ~1 MiB of input, capped at N (``tune_for_input``).
 The session keeps every class its plans generate compiled, up to
 ``_CODEGEN_CACHE_ENTRIES``, so a query rebuilt in a warm session runs
 already-loaded, already-JITed code instead of recompiling it with Janino.
+A JVM that ``get_session`` launches itself writes ``file:`` paths through
+``jvm/NoForkLocalFileSystem.java`` (compiled once per source hash into the
+checkout's ``_build/``), which sets file and directory modes in-process
+instead of starting a ``chmod`` per path; a session that existed before, or
+a host without ``javac``, keeps Hadoop's stock local FileSystem.
 Cluster posture (100 TB): the same code runs unmodified — AQE handles skew and
 partition coalescing; all operators avoid driver-side collects and express
 plans declaratively so Catalyst can push filters/prune columns.
@@ -13,9 +18,16 @@ plans declaratively so Catalyst can push filters/prune columns.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
 import weakref
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 from .sources.tables import table_bytes
@@ -24,6 +36,50 @@ from .sources.tables import table_bytes
 # without the checkout root on their path they find the engine (and its
 # worker daemon) only when the driver runs from the checkout.
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_FS_SOURCE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "NoForkLocalFileSystem.java"
+)
+_FS_CLASS = "synth_timeseries_data_spark.jvm.NoForkLocalFileSystem"
+
+
+def _fork_free_fs_classes() -> str | None:
+    """The directory holding the compiled ``_FS_SOURCE``, compiled on first
+    use into ``_build/<source hash>/``; None when it cannot be compiled.
+
+    javac writes into a temp directory that is then renamed into place, so
+    a directory under that name is always complete: of two processes that
+    compile at once, the later rename fails and that process uses the
+    winner's classes."""
+    javac = shutil.which("javac")
+    if javac is None:
+        return None
+    with open(_FS_SOURCE, "rb") as fh:
+        digest = hashlib.sha256(fh.read()).hexdigest()[:16]
+    build = os.path.join(_REPO_ROOT, "_build")
+    out = os.path.join(build, digest)
+    if os.path.isdir(out):
+        return out
+    try:
+        os.makedirs(build, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=".javac-", dir=build)
+    except OSError:
+        return None
+    try:
+        subprocess.run(
+            [javac, "--release", "17", "-nowarn",
+             # the one jar the source needs (0.75 s; all of jars/* took 1.3 s)
+             "-cp", os.pathsep.join(glob.glob(os.path.join(
+                 _find_spark_home(), "jars", "hadoop-client-api-*.jar"))),
+             "-d", tmp, _FS_SOURCE],
+            check=True, capture_output=True,
+        )
+        os.replace(tmp, out)
+    except (OSError, subprocess.CalledProcessError):
+        pass
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out if os.path.isdir(out) else None
 
 
 def _default_driver_mem() -> str:
@@ -110,6 +166,29 @@ def get_session(app_name: str = "synth_timeseries_data_spark") -> SparkSession:
         # vanilla one) keeps Spark's 100.
         .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
     )
+    # Without the native libhadoop (NativeCodeLoader.isNativeCodeLoaded()
+    # false), Hadoop's local FileSystem sets every mode by starting a `chmod`
+    # process: one per data file, .crc file and directory it creates, plus
+    # one per partition directory at task commit. At local[4] (4 cores) one
+    # `generate --families c2` started 85 and one perfbench `sweep` pass
+    # ~404, ~1.9 ms each on task threads; a third of the busy task-thread
+    # samples of the partitioned write sat in Shell.runCommand.
+    # NoForkLocalFileSystem sets the same bits in-process: `sweep` pass
+    # 1.81 -> 1.33 s (10 interleaved pairs, FLOOR.md).
+    # Both confs are read only when the JVM starts (the classpath) or the
+    # first file: FileSystem is made (the impl, cached JVM-wide), so they go
+    # in only when this call launches the JVM: a session or gateway that
+    # already exists (a vanilla session handed to __spark_entry__ or built
+    # by scripts/driver_gate.py, a spark-submit parent) keeps the stock
+    # FileSystem, as it keeps Spark's 100-entry codegen cache, and no conf
+    # names a class its JVM cannot load. In local[N] the driver JVM is also
+    # the executor.
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        classes = _fork_free_fs_classes()
+        if classes is not None:
+            builder = builder.config("spark.driver.extraClassPath", classes).config(
+                "spark.hadoop.fs.file.impl", _FS_CLASS
+            )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # getOrCreate on a live session re-applies the builder's shuffle and AQE

@@ -43,6 +43,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..queries import _SPARK_D
 from .scale import write_bucketed
 
 DEFAULT_BUCKETS = 64
@@ -92,20 +93,20 @@ def index_posture(spark: SparkSession):
 def _mh_shingles_cte(where: "str | None") -> str:
     """The minhash shingle CTE chain, optionally restricted to the docs
     matching ``where``. The restriction is spliced into the one scan the
-    chain makes (the dialect helpers dispatch on dict identity, so the
-    pdocs entry cannot be overridden on a copy)."""
+    chain makes (plan-shape branches dispatch on dialect identity,
+    ``d is _SPARK_D``, so the pdocs entry cannot be overridden on a copy)."""
     from ..queries import llm_pipeline as lp
 
-    cte = lp._shingles_raw_cte(lp._SPARK_D)
+    cte = lp._shingles_raw_cte(_SPARK_D)
     if where:
-        src = f"FROM {lp._SPARK_D['pdocs']}"
+        src = f"FROM {_SPARK_D['pdocs']}"
         if cte.count(src) != 1:  # pragma: no cover - template drift guard
             raise ValueError(
                 f"shingle CTE no longer has exactly one {src!r} scan; "
                 "update _mh_shingles_cte's splice"
             )
         cte = cte.replace(
-            src, f"FROM (SELECT * FROM {lp._SPARK_D['pdocs']} WHERE ({where}))"
+            src, f"FROM (SELECT * FROM {_SPARK_D['pdocs']} WHERE ({where}))"
         )
     return cte
 
@@ -132,12 +133,12 @@ def build_minhash_index(
     lp._register_docs(spark, sf_dir)
     docagg_t, mem_t = f"{prefix}_docagg_b", f"{prefix}_mem_b"
     docagg = spark.sql(
-        _mh_shingles_cte(where) + lp._mh_docagg_sql(lp._SPARK_D)
+        _mh_shingles_cte(where) + lp._mh_docagg_sql(_SPARK_D)
     ).repartition(n_buckets, "doc_id")
     write_bucketed(docagg, docagg_t, "doc_id", n_buckets)
     mem = spark.sql(
         f"""
-        WITH sigs AS ({lp._mh_sigs_sql(lp._SPARK_D, docagg_t)}),
+        WITH sigs AS ({lp._mh_sigs_sql(_SPARK_D, docagg_t)}),
         bsize AS (SELECT band, sig, COUNT(*) AS m FROM sigs
                   GROUP BY band, sig)
         SELECT s.doc_id, s.band, s.sig, z.m
@@ -160,7 +161,7 @@ def minhash_pairs_indexed(
     return spark.sql(
         "WITH "
         + lp._minhash_tail(
-            lp._SPARK_D, docagg_table, mem_table, mem_rel=mem_table
+            _SPARK_D, docagg_table, mem_table, mem_rel=mem_table
         )
     )
 
@@ -193,7 +194,7 @@ def minhash_delta_pairs(
 
     _index_session_confs(spark)
     lp._register_docs(spark, sf_dir)
-    d = lp._SPARK_D
+    d = _SPARK_D
     # The delta aggregate feeds the signature probe AND both verify
     # sides; Spark inlines CTEs, so as a CTE the shingle/min-hash pass
     # ran FIVE times (plan-counted corpus scans: 5 → 0 after this fix).
@@ -264,21 +265,17 @@ def build_embed_index(
     adapts to corpus size exactly as the session form does (_nd_bits), so
     indexed results match the registry query at every scale. Returns
     (table name, bits)."""
-    import os
-
     from ..queries import llm_pipeline as lp
-    from ..sources import load
+    from ..sources import load, table_rows
 
     _index_session_confs(spark)
     load(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    bits = lp._nd_bits(
-        lp._parquet_rows(os.path.join(sf_dir, "embeddings.parquet"))
-    )
+    bits = lp._nd_bits(table_rows(sf_dir, "embeddings"))
     members_t = f"{prefix}_members_b"
     members = spark.sql(
         f"""
-        WITH sigs AS ({lp._nd_sigs_sql(lp._SPARK_D, lp._ND_POSEXP_SPARK, bits)}),
-        v AS ({lp._nd_v_sql(lp._SPARK_D)}),
+        WITH sigs AS ({lp._nd_sigs_sql(_SPARK_D, _SPARK_D["comps"](), bits)}),
+        v AS ({lp._nd_v_sql(_SPARK_D)}),
         bsize AS (SELECT band, sig, COUNT(*) AS c FROM sigs
                   GROUP BY band, sig)
         SELECT s.vec_id, s.band, s.sig, s.proj, z.c, v.label, v.e, v.nrm
@@ -299,30 +296,13 @@ def _pred(where: "str | None") -> str:
     return f"({where})" if where else "TRUE"
 
 
-# The exact-cosine verify over inline payloads (v.e) against the query
-# vector (q.qe) — textually the registry's _ann_tail/_ivf_tail Spark
-# expression, shared by both partition-pruned probes so the pinned
-# bit-equality contract has one local definition.
-_COS_SQL = (
-    "aggregate(zip_with(v.e, q.qe, (x, y) -> x * y), "
-    "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / "
-    "NULLIF(SQRT(aggregate(v.e, CAST(0.0 AS DOUBLE), "
-    "(acc, x) -> acc + x * x)) * SQRT(aggregate(q.qe, "
-    "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x * x)), 0.0)"
-)
-
-
 def _vec_posexp(pred: str, src: str = "embeddings") -> str:
     """Per-dimension explode of the embeddings restricted to ``pred``.
     The filter lands in the parquet scan, so a delta build SIGNS only the
     delta's rows; scan bytes are delta-proportional too when the delta
     arrives as its own files (the production ingest shape) rather than
     carved out of shared row groups by predicate (the test shape)."""
-    return (
-        "SELECT vec_id, pos + 1 AS dim, CAST(x AS DOUBLE) AS x "
-        f"FROM (SELECT * FROM {src} WHERE {pred}) "
-        "LATERAL VIEW posexplode(embedding) AS pos, x"
-    )
+    return _SPARK_D["comps"](f"(SELECT * FROM {src} WHERE {pred})")
 
 
 def _ivf_cells_df(
@@ -345,12 +325,12 @@ def _ivf_cells_df(
 
     pred = _pred(where)
     if ranked_sql is None:
-        ranked_sql = lp._ivf_ranked_sql(lp._SPARK_D, _vec_posexp(pred))
+        ranked_sql = lp._ivf_ranked_sql(_SPARK_D, _vec_posexp(pred))
     cells = spark.sql(
         f"""
         WITH ranked AS ({ranked_sql}),
         v AS (SELECT vec_id, label,
-                     transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+                     {_SPARK_D['farr']('embedding')} AS e
               FROM embeddings WHERE {pred})
         SELECT v.vec_id, v.label, v.e, a.c
         FROM (SELECT vec_id, c FROM ranked WHERE rn = 1) a
@@ -491,7 +471,7 @@ def ivf_topk_indexed(
 
         q_ranked = _ivft_ranked_values_sql(cents, _vec_posexp("vec_id = 0"))
     else:
-        q_ranked = lp._ivf_ranked_sql(lp._SPARK_D, _vec_posexp("vec_id = 0"))
+        q_ranked = lp._ivf_ranked_sql(_SPARK_D, _vec_posexp("vec_id = 0"))
     probes = [
         r["c"]
         for r in spark.sql(
@@ -506,10 +486,10 @@ def ivf_topk_indexed(
     in_list = ", ".join(str(c) for c in probes)
     return spark.sql(
         f"""
-        WITH q AS (SELECT transform(embedding, x -> CAST(x AS DOUBLE)) AS qe
+        WITH q AS (SELECT {_SPARK_D['farr']('embedding')} AS qe
                    FROM embeddings WHERE vec_id = 0),
         sims AS (
-          SELECT v.vec_id, v.label, {_COS_SQL} AS cos_sim
+          SELECT v.vec_id, v.label, {_SPARK_D['cos']('v.e', 'q.qe')} AS cos_sim
           FROM {cells_table} v CROSS JOIN q
           WHERE v.c IN ({in_list}) AND v.vec_id != 0
         )
@@ -537,9 +517,9 @@ def _lsh_cells_df(
     pred = _pred(where)
     cells = spark.sql(
         f"""
-        WITH sigs AS ({lp._ann_sigs_sql(lp._SPARK_D, _vec_posexp(pred, src))}),
+        WITH sigs AS ({lp._ann_sigs_sql(_SPARK_D, _vec_posexp(pred, src))}),
         v AS (SELECT vec_id, label,
-                     transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+                     {_SPARK_D['farr']('embedding')} AS e
               FROM {src} WHERE {pred})
         SELECT v.vec_id, v.label, v.e, s.sig
         FROM sigs s JOIN v ON v.vec_id = s.vec_id
@@ -646,7 +626,7 @@ def lsh_topk_indexed(
     from ..sources import load
 
     load(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    q_sigs = lp._ann_sigs_sql(lp._SPARK_D, _vec_posexp("vec_id = 0"))
+    q_sigs = lp._ann_sigs_sql(_SPARK_D, _vec_posexp("vec_id = 0"))
     sigs = [r["sig"] for r in spark.sql(q_sigs).collect()]
     if len(sigs) != 1:
         raise ValueError(
@@ -655,10 +635,10 @@ def lsh_topk_indexed(
     [qsig] = sigs
     return spark.sql(
         f"""
-        WITH q AS (SELECT transform(embedding, x -> CAST(x AS DOUBLE)) AS qe
+        WITH q AS (SELECT {_SPARK_D['farr']('embedding')} AS qe
                    FROM embeddings WHERE vec_id = 0),
         sims AS (
-          SELECT v.vec_id, v.label, {_COS_SQL} AS cos_sim
+          SELECT v.vec_id, v.label, {_SPARK_D['cos']('v.e', 'q.qe')} AS cos_sim
           FROM {cells_table} v CROSS JOIN q
           WHERE v.sig = {qsig} AND v.vec_id != 0
         )
@@ -721,7 +701,7 @@ def _pq_codes_df(spark: SparkSession, where: "str | None") -> DataFrame:
     )
     return spark.sql(
         f"WITH comps AS ({comps}),"
-        + lp._pq_dists_sql(lp._SPARK_D, "WHERE _sel")
+        + lp._pq_dists_sql(_SPARK_D, "WHERE _sel")
         + f""",
         codes AS ({lp._PQ_CODES_TAIL})
         SELECT vec_id,
@@ -781,7 +761,7 @@ def pq_topk_indexed(
     load(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
     adc_rows = spark.sql(
         f"WITH comps AS ({_vec_posexp(f'vec_id BETWEEN 0 AND {lp._PQ_K}')}),"
-        + lp._pq_dists_sql(lp._SPARK_D, "WHERE vec_id = 0")
+        + lp._pq_dists_sql(_SPARK_D, "WHERE vec_id = 0")
         + "\n        SELECT m, c, d2 FROM dists"
     ).collect()
     if len(adc_rows) != lp._PQ_M * lp._PQ_K:
@@ -851,7 +831,7 @@ def embed_pairs_indexed(
     return spark.sql(
         "WITH "
         + lp._nd_tail(
-            lp._SPARK_D,
+            _SPARK_D,
             members_table,
             members_table,
             broadcast_cand=bits == 8,
@@ -884,7 +864,7 @@ def build_runs_index(
 
     _index_session_confs(spark)
     lp._register_docs(spark, sf_dir)
-    d = lp._SPARK_D
+    d = _SPARK_D
     runs_t = f"{prefix}_runs_b"
     runs = spark.sql(
         cx._novelty_head(d, where)
@@ -922,7 +902,7 @@ def novelty_delta(
     _index_session_confs(spark)
     lp._register_docs(spark, sf_dir)
     return spark.sql(
-        cx._novelty_head(lp._SPARK_D, delta_where)
+        cx._novelty_head(_SPARK_D, delta_where)
         + _novelty_probe_tail(runs_table)
     )
 
@@ -937,7 +917,7 @@ def _novelty_probe_tail(runs_table: str, g_rel: "str | None" = None) -> str:
     from ..queries import corpus_ext as cx
     from ..queries import llm_pipeline as lp
 
-    run = cx._novelty_run_expr(lp._SPARK_D)
+    run = cx._novelty_run_expr(_SPARK_D)
     g_cte = (
         f"g AS (SELECT h, ds FROM {g_rel})"
         if g_rel
@@ -987,7 +967,7 @@ def novelty_ingest_stream(
 
     _index_session_confs(spark)
     schema = spark.read.parquet(docs_dir).schema
-    d = lp._SPARK_D
+    d = _SPARK_D
     run = cx._novelty_run_expr(d)
     # Per-stream view suffix — same concurrent-streams fix as
     # lsh_ingest_stream / minhash_delta_pairs.
@@ -1084,7 +1064,7 @@ def build_winnow_index(
     lp._register_docs(spark, sf_dir)
     t = f"{prefix}_fp_b"
     fp = spark.sql(
-        cm._winnowing_sql(lp._SPARK_D, where=where)
+        cm._winnowing_sql(_SPARK_D, where=where)
     ).repartition(n_buckets, "fp")
     write_bucketed(fp, t, "fp", n_buckets)
     # narrow probe companion: DISTINCT (fp, doc_id), bucketed the same way
@@ -1141,7 +1121,7 @@ def winnow_candidates(
     lp._register_docs(spark, sf_dir)
     view = f"_wn_delta_{uuid.uuid4().hex[:12]}"
     spark.sql(
-        cm._winnowing_sql(lp._SPARK_D, where=delta_where)
+        cm._winnowing_sql(_SPARK_D, where=delta_where)
     ).createOrReplaceTempView(view)
     df = spark.sql(
         _winnow_probe_sql(_winnow_docs_table(fp_table), view, min_shared)
@@ -1228,7 +1208,7 @@ def winnow_ingest_stream(
         # materialize once: the fp relation feeds the probe AND both
         # index appends (the minhash_delta_pairs device)
         s.sql(
-            cm._winnowing_sql(lp._SPARK_D, src=view)
+            cm._winnowing_sql(_SPARK_D, src=view)
         ).localCheckpoint().createOrReplaceTempView(fps_view)
         if not s.catalog.tableExists(fp_table):
             empty = s.sql(f"SELECT * FROM {fps_view} WHERE 1 = 0")

@@ -93,14 +93,156 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return wrap
 
 
-# Select-list row expansion, the one dialect difference most dual-engine
-# texts share: ``expand(lo, hi)`` yields one row per integer in [lo, hi].
-def _spark_expand(lo: str, hi: str) -> str:
-    return f"explode(sequence({lo}, {hi}))"
+# --------------------------------------------------------------------------
+# Dialect table: the one place a dual-engine template learns its engine.
+# Every builder that renders a Spark text and its DuckDB twin takes one of
+# these dicts as ``d`` and spells each engine difference through an entry;
+# semantics are identical. An inline ``d is _SPARK_D`` test marks a
+# deliberate plan difference (a hint, a one-pass Spark aggregate against
+# the oracle's relational form, a stack against an unnest of structs) and
+# says why next to it.
+# --------------------------------------------------------------------------
+
+_SPARK_D = {
+    "split": lambda s, sep="' '": f"split({s}, {sep})",
+    "nl": "'\\n'",
+    "len": lambda a: f"size({a})",
+    "distinct": lambda a: f"array_distinct({a})",
+    "el": lambda a, i: f"element_at({a}, {i})",
+    "filter": lambda a, lam: f"filter({a}, {lam})",
+    "minarr": lambda a: f"array_min({a})",
+    "transform": lambda a, lam: f"transform({a}, {lam})",
+    "retokens": lambda s, p: f"size(regexp_extract_all({s}, '{p}', 0))",
+    # select-list row expansion: one row per integer in [lo, hi]
+    "expand": lambda lo, hi: f"explode(sequence({lo}, {hi}))",
+    "seq": lambda lo, hi: f"sequence({lo}, {hi})",
+    "unnest": lambda a: f"explode({a})",
+    "array": lambda items: f"array({items})",
+    # k elements of ``a`` from 1-based ``start`` (truncates at the end);
+    # ``bare`` drops the DuckDB bound parentheses (a spelling only)
+    "slice": lambda a, start, k, bare=False: f"slice({a}, {start}, {k})",
+    "joinarr": lambda a, sep="' '": f"array_join({a}, {sep})",
+    # the elements of ``a`` but its first and last
+    "inner": lambda a: f"slice({a}, 2, size({a}) - 2)",
+    "startswith": "startswith",
+    "endswith": "endswith",
+    "rlike": lambda x, p: f"{x} rlike '{p}'",
+    "intersect": "array_intersect",
+    "set_agg": lambda x: f"collect_set({x})",
+    # event-time micros: ts is an epoch-ns BIGINT in Spark (sources/tables.py
+    # load normalizes it), a TIMESTAMP in DuckDB
+    "tus": "(ts div 1000)",
+    # window value skipping NULLs
+    "lastnn": lambda x: f"last_value({x}, true)",
+    "firstnn": lambda x: f"first_value({x}, true)",
+    "idiv": "DIV",
+    "str": "STRING",
+    "hex2int": lambda e: f"CAST(CONV({e}, 16, 10) AS BIGINT)",
+    "farr": lambda a: f"transform({a}, x -> CAST(x AS DOUBLE))",
+    # the sequential higher-order fold: a flat 64-term element_at sum was
+    # A/B'd expecting a codegen win and measured 4x SLOWER (1.7 s vs 0.4 s
+    # at sf0.1, semdedup) — the giant expression falls off the fast path
+    "dot": lambda a, b: (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+        f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+    ),
+    "norm": lambda a: (
+        f"SQRT(aggregate({a}, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x * x))"
+    ),
+    # one row per embedding component: (vec_id, 1-based dim, DOUBLE x)
+    "comps": lambda src="embeddings": (
+        "SELECT vec_id, pos + 1 AS dim, CAST(x AS DOUBLE) AS x "
+        f"FROM {src} LATERAL VIEW posexplode(embedding) AS pos, x"
+    ),
+    # regexp_replace replaces every match; DuckDB needs the global flag
+    "gflag": "",
+    # word tokens of w.ws, one row per token, keyed by ``keys``
+    "terms": lambda keys="": (
+        f"SELECT {keys}tok AS term FROM w LATERAL VIEW explode(ws) x AS tok"
+    ),
+    # one row per element of ``a`` as column ``col`` beside ``src``'s
+    # columns, read back as lcol(col). Names only: ``alias`` is DuckDB's
+    # unnest relation, ``gen`` Spark's generator (a bare ``AS`` names it
+    # "as").
+    "lateral": lambda src, a, col, alias="u", gen="": (
+        f"{src} LATERAL VIEW explode({a}) {gen} AS {col}"
+    ),
+    "lcol": lambda col: col,
+    # Compute-heavy templates (explode/md5 per word or char) read this
+    # instead of `documents`: a view pre-repartitioned to the session's
+    # parallelism. The fixture is one parquet row group → one task; without
+    # the spread, the whole explode+hash pipeline runs single-threaded no
+    # matter how many cores exist. The tiny doc-id shuffle (~KBs) buys
+    # full-width execution of the expensive stage — same reasoning at 100 TB
+    # when an upstream stage emits few large partitions. DuckDB reads the
+    # plain table (it parallelizes within a row group natively).
+    "pdocs": "documents_par",
+}
+
+_DUCK_D = {
+    "split": lambda s, sep="' '": f"str_split({s}, {sep})",
+    "nl": "chr(10)",
+    "len": lambda a: f"len({a})",
+    "distinct": lambda a: f"list_distinct({a})",
+    "el": lambda a, i: f"list_extract({a}, {i})",
+    "filter": lambda a, lam: f"list_filter({a}, {lam})",
+    "minarr": lambda a: f"list_aggregate({a}, 'min')",
+    "transform": lambda a, lam: f"list_transform({a}, {lam})",
+    "retokens": lambda s, p: f"len(regexp_extract_all({s}, '{p}', 0))",
+    "expand": lambda lo, hi: f"unnest(generate_series({lo}, {hi}))",
+    "seq": lambda lo, hi: f"generate_series({lo}, {hi})",
+    "unnest": lambda a: f"unnest({a})",
+    "array": lambda items: f"[{items}]",
+    "slice": lambda a, start, k, bare=False: (
+        f"{a}[{start}:{start}+{k - 1}]"
+        if bare
+        else f"{a}[({start}):(({start}) + {k - 1})]"
+    ),
+    "joinarr": lambda a, sep="' '": f"array_to_string({a}, {sep})",
+    "inner": lambda a: f"list_slice({a}, 2, len({a}) - 1)",
+    "startswith": "starts_with",
+    "endswith": "ends_with",
+    "rlike": lambda x, p: f"regexp_matches({x}, '{p}')",
+    "intersect": "list_intersect",
+    "set_agg": lambda x: f"list(DISTINCT {x})",
+    "tus": "epoch_us(ts)",
+    "lastnn": lambda x: f"last_value({x} IGNORE NULLS)",
+    "firstnn": lambda x: f"first_value({x} IGNORE NULLS)",
+    "idiv": "//",
+    "str": "VARCHAR",
+    "hex2int": lambda e: f"CAST('0x' || {e} AS BIGINT)",
+    "farr": lambda a: f"CAST({a} AS DOUBLE[])",
+    "dot": lambda a, b: f"list_dot_product({a}, {b})",
+    "norm": lambda a: f"SQRT(list_dot_product({a}, {a}))",
+    "comps": lambda src="embeddings": (
+        "SELECT vec_id, generate_subscripts(embedding, 1) AS dim, "
+        f"CAST(unnest(embedding) AS DOUBLE) AS x FROM {src}"
+    ),
+    "gflag": ", 'g'",
+    "terms": lambda keys="": f"SELECT {keys}u.term FROM w, unnest(w.ws) AS u(term)",
+    "lateral": lambda src, a, col, alias="u", gen="": (
+        f"{src}, unnest({a}) AS {alias}({col})"
+    ),
+    "lcol": lambda col: f"u.{col}",
+    "pdocs": "documents",
+}
+
+for _d in (_SPARK_D, _DUCK_D):
+    # composites, spelled once from the entries above
+    _d["bucket"] = (
+        lambda salt, col="doc_id", d=_d: d["hex2int"](
+            f"SUBSTR(md5(CONCAT('{salt}|', CAST({col} AS {d['str']}))), 1, 15)"
+        )
+    )
+    _d["cos"] = lambda a, b, d=_d: (
+        f"{d['dot'](a, b)} / NULLIF({d['norm'](a)} * {d['norm'](b)}, 0.0)"
+    )
+del _d
 
 
-def _duck_expand(lo: str, hi: str) -> str:
-    return f"unnest(generate_series({lo}, {hi}))"
+def _dual(build):
+    """(spark_sql, duck_sql) from a dialect-parameterized builder."""
+    return build(_SPARK_D), build(_DUCK_D)
 
 
 # --------------------------------------------------------------------------

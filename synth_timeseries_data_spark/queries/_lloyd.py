@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import _DUCK_D
+
 _KM_K = 8
 _KM_ITERS = 3
 _KM_DIMS = 64
@@ -80,8 +82,7 @@ def _km_cent_chain(k: int = _KM_K, iters: int = _KM_ITERS, prefix: str = ""):
         f"""{p}v AS (SELECT vec_id,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ea
            FROM embeddings),
-    {p}comps AS (SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-                 CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
+    {p}comps AS ({_DUCK_D['comps']()}),
     {p}sel8 AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {k}),
     {p}sel AS (
       SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c

@@ -41,7 +41,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import _spark_expand, register
+from . import _SPARK_D, register
 from .discovery import _gtc, _metric_tail, _screener
 from .dsl import _parsed_edges
 
@@ -65,7 +65,7 @@ def _score_sql(meta_sql: str) -> str:
     (family, config_id, t, var, value long form) against
     ``parsed_edges_bench``, keyed by config_id."""
     tail = _metric_tail(
-        _spark_expand, "mc", "cap", "r.rn IS NOT NULL AND r.rn <= c.cap",
+        _SPARK_D, "mc", "cap", "r.rn IS NOT NULL AND r.rn <= c.cap",
         "ranked r ON r.config_id = c.config_id"
         " AND r.vt = c.i AND r.vs = c.j AND r.k = c.k",
         keys=("family", "config_id", "n_vars", "max_lag"),
@@ -113,7 +113,7 @@ def _score_sql(meta_sql: str) -> str:
     ),
     tgts AS (
       SELECT /*+ BROADCAST(m) */ s.config_id, s.v AS vt, s.r,
-             s.value AS yv, {_spark_expand('0', 'm.max_lag')} AS k
+             s.value AS yv, {_SPARK_D['expand']('0', 'm.max_lag')} AS k
       FROM ser s JOIN meta m ON m.config_id = s.config_id
     ),
     -- lag alignment: source sample r-k vs target sample r — both sides
@@ -173,7 +173,7 @@ _PRED_SCORE_SQL = f"""
       SELECT DISTINCT family, n_vars, max_lag FROM preds
     ),
     {_metric_tail(
-        _spark_expand, "configs", None, "p.i IS NOT NULL",
+        _SPARK_D, "configs", None, "p.i IS NOT NULL",
         "preds p ON p.family = c.family AND p.n_vars = c.n_vars"
         " AND p.max_lag = c.max_lag AND p.i = c.i AND p.j = c.j AND p.k = c.k",
     )}"""

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.detrand import lcg_uniform_sql
-from . import _duck_expand, _spark_expand, register
+from . import _DUCK_D, _SPARK_D, register
 
 _P = 6  # variables in the synthetic link matrices
 _L = 3  # max lag
@@ -33,14 +33,14 @@ _L = 3  # max lag
 _PAIR_U = lcg_uniform_sql("pairkey", salt=21)
 
 
-def _links_cte(expand) -> str:
+def _links_cte(d) -> str:
     """Consistent tigramite-style link-string matrix (cells i,j,k,s):
     a link type is drawn per unordered pair (i<j) and lag, then mirrored to
     (j,i) with the arrow flipped — exactly the symmetry tigramite emits."""
     return f"""
-    WITH lo AS (SELECT {expand('0', str(_P - 1))} AS i),
-    lo2 AS (SELECT i, {expand('0', str(_P - 1))} AS j FROM lo),
-    lo3 AS (SELECT i, j, {expand('0', str(_L))} AS k FROM lo2 WHERE i < j),
+    WITH lo AS (SELECT {d['expand']('0', str(_P - 1))} AS i),
+    lo2 AS (SELECT i, {d['expand']('0', str(_P - 1))} AS j FROM lo),
+    lo3 AS (SELECT i, j, {d['expand']('0', str(_L))} AS k FROM lo2 WHERE i < j),
     drawn AS (
       SELECT i, j, k,
              CAST((i * 64 + j) * 16 + k AS BIGINT) AS pairkey
@@ -82,14 +82,10 @@ def _cells_view(spark: SparkSession) -> str:
         spark,
         "links_cells",
         lambda: spark.sql(
-            _links_cte(_spark_expand) + "SELECT i, j, k, s FROM cells"
+            _links_cte(_SPARK_D) + "SELECT i, j, k, s FROM cells"
         ),
     ).createOrReplaceTempView("links_cells")
     return "WITH cells AS (SELECT i, j, k, s FROM links_cells)"
-
-
-def _dual_links(body: str):
-    return _links_cte(_spark_expand) + body, _links_cte(_duck_expand) + body
 
 
 # --------------------------------------------------------------------------
@@ -120,7 +116,7 @@ _VALIDATE_BODY = """
     GROUP BY s
     """
 
-_VALIDATE_SPARK, _VALIDATE_DUCK = _dual_links(_VALIDATE_BODY)
+_VALIDATE_DUCK = _links_cte(_DUCK_D) + _VALIDATE_BODY
 
 
 @register("validate_links", _VALIDATE_DUCK)
@@ -153,7 +149,7 @@ _ENCODE_BODY = """
     GROUP BY source, target, k
     """
 
-_ENCODE_SPARK, _ENCODE_DUCK = _dual_links(_ENCODE_BODY)
+_ENCODE_DUCK = _links_cte(_DUCK_D) + _ENCODE_BODY
 
 
 @register("encode_links", _ENCODE_DUCK)
@@ -170,11 +166,13 @@ def encode_links(spark: SparkSession, sf_dir: str) -> DataFrame:
 # literals (the link pipeline never produces 4, but Tetrad-style inputs do).
 # --------------------------------------------------------------------------
 
-def _decode_body(spark_dialect: bool) -> str:
+def _decode_body(d) -> str:
     # Single pass over dedup: a UNION ALL of two SELECTs from the same CTE
     # would make Spark (which inlines CTEs) evaluate the groupBy twice; the
-    # explode form emits the code-4 mirror row in the same scan.
-    if spark_dialect:
+    # explode form emits the code-4 mirror row in the same scan. The engines
+    # unnest structs differently (Spark: a generator over an array of
+    # named_structs; DuckDB: unnest of struct literals), the pacf class.
+    if d is _SPARK_D:
         decoded = """
       SELECT st.source AS source, st.target AS target, k
       FROM dedup
@@ -220,8 +218,7 @@ def _decode_body(spark_dialect: bool) -> str:
     """
 
 
-_DECODE_SPARK = _links_cte(_spark_expand) + _decode_body(True)
-_DECODE_DUCK = _links_cte(_duck_expand) + _decode_body(False)
+_DECODE_DUCK = _links_cte(_DUCK_D) + _decode_body(_DUCK_D)
 
 
 @register("decode_edges", _DECODE_DUCK)
@@ -229,7 +226,7 @@ def decode_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer edge codes → boolean directed edges (to_bool_edges,
     metrics_helper.py:45-78): codes 1/2/3/other mark the stored cell, code 4
     marks both directions (the union branch)."""
-    return spark.sql(_cells_view(spark) + _decode_body(True))
+    return spark.sql(_cells_view(spark) + _decode_body(_SPARK_D))
 
 
 # --------------------------------------------------------------------------
@@ -282,10 +279,10 @@ _TETRAD_L = 2
 _EDGE_U = lcg_uniform_sql("pairkey", salt=31)
 
 
-def _tetrad_cte(expand) -> str:
+def _tetrad_cte(d) -> str:
     return f"""
-    WITH v1 AS (SELECT {expand('1', str(_TETRAD_P))} AS var),
-    nm AS (SELECT var, {expand('0', str(_TETRAD_L))} AS lag FROM v1),
+    WITH v1 AS (SELECT {d['expand']('1', str(_TETRAD_P))} AS var),
+    nm AS (SELECT var, {d['expand']('0', str(_TETRAD_L))} AS lag FROM v1),
     names AS (SELECT var, lag, (var - 1) * {_TETRAD_L + 1} + lag AS nid FROM nm),
     pairs AS (
       SELECT u.var AS u_var, u.lag AS u_lag, u.nid AS u_nid,
@@ -313,8 +310,8 @@ _TETRAD_BODY = """
     GROUP BY u_var, v_var, u_lag - v_lag
     """
 
-_TETRAD_SPARK = _tetrad_cte(_spark_expand) + _TETRAD_BODY
-_TETRAD_DUCK = _tetrad_cte(_duck_expand) + _TETRAD_BODY
+_TETRAD_SPARK = _tetrad_cte(_SPARK_D) + _TETRAD_BODY
+_TETRAD_DUCK = _tetrad_cte(_DUCK_D) + _TETRAD_BODY
 
 
 @register("tetrad_edges", _TETRAD_DUCK)
@@ -375,7 +372,7 @@ _PRETTY_BODY = """
     FROM dedup
     """
 
-_PRETTY_SPARK, _PRETTY_DUCK = _dual_links(_PRETTY_BODY)
+_PRETTY_DUCK = _links_cte(_DUCK_D) + _PRETTY_BODY
 
 
 @register("pretty_edges", _PRETTY_DUCK)

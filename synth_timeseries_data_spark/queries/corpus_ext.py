@@ -39,44 +39,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.detrand import lcg_uniform_sql
 from ..functions.materialize import materialized
-from . import register
+from . import _DUCK_D, _SPARK_D, _dual, register
 from ._lloyd import _KM_ITERS, _km_assign_numpy, _km_cent_chain, _km_quantizer
 from .llm_pipeline import (
-    _DUCK_D,
     _ND_DUCK,
     _Q_COMPOSITE,
-    _SPARK_D,
     _STOPWORDS,
-    _dual,
-    _hex2int,
     _indexed,
-    _parquet_rows,
     _register_docs,
     _spark_docs,
 )
-
-# --------------------------------------------------------------------------
-# Shared dialect helpers (beyond llm_pipeline's table)
-# --------------------------------------------------------------------------
-
-
-def _idiv(d, a: str, b: str) -> str:
-    """Integer division (both operands non-negative here)."""
-    return f"({a} DIV {b})" if d is _SPARK_D else f"({a} // {b})"
-
-
-def _slice(d, arr: str, start: str, k: int) -> str:
-    """k elements of ``arr`` from 1-based ``start`` (truncates at the end)."""
-    if d is _SPARK_D:
-        return f"slice({arr}, {start}, {k})"
-    return f"{arr}[({start}):(({start}) + {k - 1})]"
-
-
-def _joinarr(d, arr: str) -> str:
-    return (
-        f"array_join({arr}, ' ')" if d is _SPARK_D else f"array_to_string({arr}, ' ')"
-    )
-
 
 # --------------------------------------------------------------------------
 # doc_chunks: overlapping fixed-size token windows.
@@ -94,10 +66,10 @@ def _doc_chunks_sql(d) -> str:
     # projection that exploded the chunk ids — one pipeline, no re-join.
     last_k = (
         f"CASE WHEN n <= {_CHUNK} THEN 0 "
-        f"ELSE {_idiv(d, f'(n - {_CHUNK} + {_STRIDE} - 1)', str(_STRIDE))} END"
+        f"ELSE ((n - {_CHUNK} + {_STRIDE} - 1) {d['idiv']} {_STRIDE}) END"
     )
     start = f"1 + chunk_id * {_STRIDE}"
-    sl = _slice(d, "ws", start, _CHUNK)
+    sl = d["slice"]("ws", start, _CHUNK)
     return f"""
     WITH w AS (SELECT doc_id, {ws} AS ws FROM {d['pdocs']}),
     m AS (SELECT doc_id, ws, {d['len']('ws')} AS n FROM w),
@@ -106,7 +78,7 @@ def _doc_chunks_sql(d) -> str:
            CAST(chunk_id AS INT) AS chunk_id,
            CAST({start} AS INT) AS start_tok,
            CAST(LEAST({_CHUNK}, n - ({start}) + 1) AS INT) AS n_tok,
-           md5({_joinarr(d, sl)}) AS chunk_fp
+           md5({d['joinarr'](sl)}) AS chunk_fp
     FROM k
     """
 
@@ -136,12 +108,9 @@ _PACK_BUCKETS = 64
 
 
 def _pack_sql(d) -> str:
-    strcast = "STRING" if d is _SPARK_D else "VARCHAR"
-    bucket = _hex2int(
-        d, f"SUBSTR(md5(CONCAT('pack|', CAST(doc_id AS {strcast}))), 1, 15)"
-    )
+    bucket = d["bucket"]("pack")
     ws = d["split"]("text")
-    seq_id = _idiv(d, "(cum - n)", str(_PACK_CAP))
+    seq_id = f"((cum - n) {d['idiv']} {_PACK_CAP})"
     return f"""
     WITH t AS (
       SELECT doc_id,
@@ -192,10 +161,7 @@ _DC_CAP = 1000  # stop-gram cap: runs in more docs than this are boilerplate
 
 
 def _decontam_sql(d) -> str:
-    strcast = "STRING" if d is _SPARK_D else "VARCHAR"
-    bucket = _hex2int(
-        d, f"SUBSTR(md5(CONCAT('split|', CAST(doc_id AS {strcast}))), 1, 15)"
-    )
+    bucket = d["bucket"]("split")
     ws = d["split"]("text")
     # Hash-function note: h is internal-only here, so each engine uses its
     # cheapest collision-safe form. Spark: MULTI-ARG xxhash64 over the 8
@@ -209,7 +175,7 @@ def _decontam_sql(d) -> str:
     if d is _SPARK_D:
         run = f"xxhash64({', '.join(f'element_at(ws, i + {j})' for j in range(_DC_K))})"
     else:
-        run = f"md5({_joinarr(d, _slice(d, 'ws', 'i', _DC_K))})"
+        run = f"md5({d['joinarr'](d['slice']('ws', 'i', _DC_K))})"
     # `runs_cte` is the only engine split in the head: Spark skips the
     # DISTINCT (the collect_set aggregate below dedups per-doc runs in the
     # same exchange, with map-side partial agg); the oracle keeps the
@@ -307,17 +273,14 @@ _BLOOM_HASHES = 4  # k: disjoint 8-hex-char md5 slices → 32-bit values
 
 
 def _bloom_decontam_sql(d) -> str:
-    strcast = "STRING" if d is _SPARK_D else "VARCHAR"
-    bucket = _hex2int(
-        d, f"SUBSTR(md5(CONCAT('split|', CAST(doc_id AS {strcast}))), 1, 15)"
-    )
+    bucket = d["bucket"]("split")
     ws = d["split"]("text")
     # md5 on BOTH engines here (unlike decontam's internal xxhash64): the
     # bit POSITIONS are the cross-engine contract, so the underlying hash
     # must be dialect-portable. k=4 positions per run from disjoint
     # 8-hex-char md5 slices, reduced mod m.
-    run_md5 = f"md5({_joinarr(d, _slice(d, 'ws', 'i', _DC_K))})"
-    posj = _hex2int(d, "SUBSTR(hh, 1 + j * 8, 8)")
+    run_md5 = f"md5({d['joinarr'](d['slice']('ws', 'i', _DC_K))})"
+    posj = d["hex2int"]("SUBSTR(hh, 1 + j * 8, 8)")
     hint = "/*+ BROADCAST(b) */ " if d is _SPARK_D else ""
     # m = next power of two >= 64 * distinct test grams, computed IN-SQL
     # so both engines derive the identical size at any scale: fill stays
@@ -378,10 +341,8 @@ def _bloom_g_spark() -> str:
     single-aggregate device — collect_set dedups per-doc runs in the
     same exchange)."""
     d = _SPARK_D
-    bucket = _hex2int(
-        d, "SUBSTR(md5(CONCAT('split|', CAST(doc_id AS STRING))), 1, 15)"
-    )
-    run_md5 = f"md5({_joinarr(d, _slice(d, 'ws', 'i', _DC_K))})"
+    bucket = d["bucket"]("split")
+    run_md5 = f"md5({d['joinarr'](d['slice']('ws', 'i', _DC_K))})"
     return f"""
     WITH s AS (
       SELECT doc_id, {d['split']('text')} AS ws,
@@ -402,7 +363,7 @@ def _bloom_g_spark() -> str:
     """
 
 
-_BLOOM_POSJ = _hex2int(_SPARK_D, "SUBSTR(hh, 1 + j * 8, 8)")
+_BLOOM_POSJ = _SPARK_D["hex2int"]("SUBSTR(hh, 1 + j * 8, 8)")
 
 # tail over the materialized gram relation: every reference re-executes
 # only the tiny checkpointed leaf, not the corpus pipeline
@@ -503,8 +464,7 @@ def _sd_assign_sql(k: int = _SD_K) -> str:
     return f"""
     WITH {chain},
     tcent AS ({trained}),
-    comps AS (SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-              CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
+    comps AS ({_DUCK_D['comps']()}),
     dists AS (
       SELECT p.vec_id, ct.c,
              SUM(CAST(FLOOR((p.x - ct.w) * (p.x - ct.w) * 1000000.0) AS BIGINT)) AS d2
@@ -518,21 +478,6 @@ def _sd_assign_sql(k: int = _SD_K) -> str:
     )
     SELECT vec_id, c FROM ranked WHERE rn = 1
     """
-
-
-def _sd_dot(d, a: str, b: str) -> str:
-    """Dot product of two 64-dim array columns — the sequential
-    higher-order fold. (A flat 64-term element_at sum was A/B'd in round
-    6 expecting a codegen win: it measured 4× SLOWER, 1.7 s vs 0.4 s at
-    sf0.1 — the giant expression falls off the fast path. The fold
-    stays; the sf10 scale problem was pair VOLUME, fixed by the
-    dense-cluster guard below.)"""
-    if d is _SPARK_D:
-        return (
-            f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-            f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-    return f"list_dot_product({a}, {b})"
 
 
 # Dense-cluster guard (the embed_neardup _ND_BUCKET_CAP device): CLUSTERED
@@ -577,27 +522,19 @@ def _sd_tail(d, assign: str, guard: bool = False) -> str:
     engaged by the Spark builder only past ~20k vectors, where its extra
     exchanges are noise but unguarded skew is fatal. Below every cap the
     two forms produce IDENTICAL results by construction."""
-    e = (
-        "transform(embedding, x -> CAST(x AS DOUBLE))"
-        if d is _SPARK_D
-        else "CAST(embedding AS DOUBLE[])"
-    )
-    _blk = _idiv(d, "(rn - 1)", str(_SD_NEIGHBORS))
-    _expand_blk = (
-        "explode(array(blk, blk + 1))"
-        if d is _SPARK_D
-        else "unnest([blk, blk + 1])"
-    )
+    e = d["farr"]("embedding")
+    _blk = f"((rn - 1) {d['idiv']} {_SD_NEIGHBORS})"
+    _expand_blk = d["unnest"](d["array"]("blk, blk + 1"))
     if not guard:
         return f"""
     v0 AS (SELECT vec_id, {e} AS e FROM embeddings),
-    v AS (SELECT vec_id, e, SQRT({_sd_dot(d, 'e', 'e')}) AS nrm FROM v0),
+    v AS (SELECT vec_id, e, SQRT({d['dot']('e', 'e')}) AS nrm FROM v0),
     pairs AS (
       SELECT b.vec_id AS vec_id, a.vec_id AS lo,
              -- NULLIF: Spark 4 ANSI throws DIVIDE_BY_ZERO even on double
              -- division, so a zero vector would crash; NULL compares
              -- false against the keep threshold in both engines
-             ROUND({_sd_dot(d, 'va.e', 'vb.e')} / NULLIF(va.nrm * vb.nrm, 0.0), 6) AS rcos
+             ROUND({d['dot']('va.e', 'vb.e')} / NULLIF(va.nrm * vb.nrm, 0.0), 6) AS rcos
       FROM {assign} a
       JOIN {assign} b ON b.c = a.c AND a.vec_id < b.vec_id
       JOIN v va ON va.vec_id = a.vec_id
@@ -617,7 +554,7 @@ def _sd_tail(d, assign: str, guard: bool = False) -> str:
     """
     return f"""
     v0 AS (SELECT vec_id, {e} AS e FROM embeddings),
-    v AS (SELECT vec_id, e, SQRT({_sd_dot(d, 'e', 'e')}) AS nrm,
+    v AS (SELECT vec_id, e, SQRT({d['dot']('e', 'e')}) AS nrm,
                  CAST(FLOOR({d['el']('e', '1')} * 1000000.0) AS BIGINT) AS proj
           FROM v0),
     csize AS (SELECT c, COUNT(*) AS m FROM {assign} GROUP BY c),
@@ -654,12 +591,12 @@ def _sd_tail(d, assign: str, guard: bool = False) -> str:
     -- threshold in both engines.
     pairs AS (
       SELECT b.vec_id AS vec_id, a.vec_id AS lo,
-             ROUND({_sd_dot(d, 'a.e', 'b.e')} / NULLIF(a.nrm * b.nrm, 0.0), 6) AS rcos
+             ROUND({d['dot']('a.e', 'b.e')} / NULLIF(a.nrm * b.nrm, 0.0), 6) AS rcos
       FROM small a JOIN small b ON b.c = a.c AND a.vec_id < b.vec_id
       UNION ALL
       SELECT GREATEST(a.vec_id, b.vec_id) AS vec_id,
              LEAST(a.vec_id, b.vec_id) AS lo,
-             ROUND({_sd_dot(d, 'a.e', 'b.e')} / NULLIF(a.nrm * b.nrm, 0.0), 6) AS rcos
+             ROUND({d['dot']('a.e', 'b.e')} / NULLIF(a.nrm * b.nrm, 0.0), 6) AS rcos
       FROM probe a JOIN dense b
         ON b.c = a.c AND b.blk = a.jblk
        AND b.rn > a.rn AND b.rn <= a.rn + {_SD_NEIGHBORS}
@@ -722,13 +659,11 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation materializes once per session (the artifact a pipeline would
     persist) and the pair join + verify read only it and the candidates'
     embeddings."""
-    import os as _os
-
     from ..functions.materialize import materialized
-    from ..sources import load
+    from ..sources import load, table_rows
 
     load(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    k = _sd_k(_parquet_rows(_os.path.join(sf_dir, "embeddings.parquet")))
+    k = _sd_k(table_rows(sf_dir, "embeddings"))
     materialized(
         spark, f"semdedup_assign|{k}|{sf_dir}",
         lambda: _sd_assign_numpy(spark, k, sf_dir),
@@ -830,7 +765,7 @@ def _length_pct_sql(d) -> str:
     # cannot change the VALUE at a fixed rank (equal n's are
     # interchangeable), only stabilize row order.
     ws = d["split"]("text")
-    idx = lambda k, m: _idiv(d, f"(cnt * {k} + {m - 1})", str(m))  # noqa: E731
+    idx = lambda k, m: f"((cnt * {k} + {m - 1}) {d['idiv']} {m})"  # noqa: E731
     pick = lambda e: f"CAST(MAX(CASE WHEN rk = {e} THEN n END) AS BIGINT)"  # noqa: E731
     return f"""
     WITH t AS (SELECT source, doc_id, {d['len'](ws)} AS n FROM {d['pdocs']}),
@@ -866,7 +801,7 @@ def _length_pct_hist_sql(d) -> str:
     # cumulative count >= r; identical integer arithmetic, so the naive
     # DuckDB oracle stays the independent check.
     ws = d["split"]("text")
-    idx = lambda k, m: _idiv(d, f"(cnt * {k} + {m - 1})", str(m))  # noqa: E731
+    idx = lambda k, m: f"((cnt * {k} + {m - 1}) {d['idiv']} {m})"  # noqa: E731
     pick = lambda e: f"CAST(MIN(CASE WHEN cum >= {e} THEN n END) AS BIGINT)"  # noqa: E731
     return f"""
     WITH h AS (
@@ -991,16 +926,7 @@ def _bpe_encode_sql(d) -> str:
     # COALESCE guards a sub-8-pair corpus (chr(2) can never match:
     # tokens are space-split text, the boundary is chr(1)).
     ws = d["split"]("text")
-    join = (
-        (lambda a, s: f"array_join({a}, {s})")
-        if d is _SPARK_D
-        else (lambda a, s: f"array_to_string({a}, {s})")
-    )
-    resplit = (
-        (lambda s, sep: f"split({s}, {sep})")
-        if d is _SPARK_D
-        else (lambda s, sep: f"str_split({s}, {sep})")
-    )
+    join, resplit = d["joinarr"], d["split"]
     b2 = "CONCAT(chr(1), chr(1))"  # token boundary (doubled)
     enc = f"CONCAT({b2}, {join('ws', b2)}, {b2})"
     for k in range(1, _BPE_ENC_MERGES + 1):
@@ -1172,13 +1098,7 @@ def _bpe_train_pairs_over(d, enc_rel: str) -> str:
     (dropping the leading/trailing empties), positional-explode, count.
     The argmax row under (n DESC, a, b) is the round's merge."""
     b2 = "CONCAT(chr(1), chr(1))"
-    if d is _SPARK_D:
-        resplit = f"slice(split(enc, {b2}), 2, size(split(enc, {b2})) - 2)"
-    else:
-        resplit = (
-            f"list_slice(str_split(enc, {b2}), 2, "
-            f"len(str_split(enc, {b2})) - 1)"
-        )
+    resplit = d["inner"](d["split"]("enc", b2))
     return f"""
       SELECT {d['el']('ws', 'i')} AS a, {d['el']('ws', 'i + 1')} AS b,
              COUNT(*) AS n
@@ -1315,11 +1235,8 @@ def _pack_bpe_tail(d, enc_rel: str) -> str:
     """The pack_sequences rule over an encoded relation carrying
     (doc_id, n_bpe_tokens) — identical md5 bucketing / cumsum / window
     arithmetic, n = merged-token count."""
-    strcast = "STRING" if d is _SPARK_D else "VARCHAR"
-    bucket = _hex2int(
-        d, f"SUBSTR(md5(CONCAT('pack|', CAST(doc_id AS {strcast}))), 1, 15)"
-    )
-    seq_id = _idiv(d, "(cum - n)", str(_PACK_CAP))
+    bucket = d["bucket"]("pack")
+    seq_id = f"((cum - n) {d['idiv']} {_PACK_CAP})"
     return f"""
     t AS (
       SELECT doc_id,
@@ -1458,27 +1375,18 @@ _GOPHER_STOPS = "('the', 'be', 'to', 'of', 'and', 'that', 'have', 'with')"
 
 
 def _gopher_sql(d) -> str:
-    spark = d is _SPARK_D
     ws = d["split"]("text")
-    lines = (
-        "split(text, '\\n')" if spark else "str_split(text, chr(10))"
+    lines = d["split"]("text", d["nl"])
+    alpha = f"w -> {d['rlike']('w', '[A-Za-z]')}"
+    bullets = (
+        f"x -> {d['startswith']}(x, '- ') OR {d['startswith']}(x, '* ')"
     )
-    sw = (lambda x, p: f"startswith({x}, '{p}')") if spark else (
-        lambda x, p: f"starts_with({x}, '{p}')"
-    )
-    ew = (lambda x, p: f"endswith({x}, '{p}')") if spark else (
-        lambda x, p: f"ends_with({x}, '{p}')"
-    )
-    alpha = "w -> w rlike '[A-Za-z]'" if spark else (
-        "w -> regexp_matches(w, '[A-Za-z]')"
-    )
-    bullets = f"x -> {sw('x', '- ')} OR {sw('x', '* ')}"
-    ell_line = f"x -> {ew('x', '...')}"
-    intersect = "array_intersect" if spark else "list_intersect"
+    ell_line = f"x -> {d['endswith']}(x, '...')"
+    intersect = d["intersect"]
     distinct = d["distinct"]
     ln = d["len"]
     filt = d["filter"]
-    stops = f"array{_GOPHER_STOPS}" if spark else f"[{_GOPHER_STOPS[1:-1]}]"
+    stops = d["array"](_GOPHER_STOPS[1:-1])
     # Every ratio below is a quotient of exact integers (raw doubles, no
     # ROUND — bit-identical across engines); denominators are ≥ 1 by
     # construction (split always yields at least one token/line).
@@ -1896,7 +1804,7 @@ def _novelty_run_expr(d) -> str:
     value gate visibly."""
     if d is _SPARK_D:
         return f"xxhash64({', '.join(f'element_at(ws, i + {j})' for j in range(_DC_K))})"
-    return f"md5({_joinarr(d, _slice(d, 'ws', 'i', _DC_K))})"
+    return f"md5({d['joinarr'](d['slice']('ws', 'i', _DC_K))})"
 
 
 def _novelty_head(
@@ -2042,7 +1950,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _dedup_spans_sql(d, agg_form: bool = False) -> str:
+def _dedup_spans_sql(d) -> str:
     # A token position is COVERED iff it lies inside some 8-token run
     # whose min-doc_id occurrence is in an EARLIER doc — the rule is
     # DOC-grain: every occurrence inside the min doc is kept (within-doc
@@ -2062,30 +1970,21 @@ def _dedup_spans_sql(d, agg_form: bool = False) -> str:
     # the driver — the fact-proportional-broadcast failure class the
     # sf100 ladder first caught; a hint-pinned shuffle join survives but
     # pays the position relation through the h exchange TWICE (Spark
-    # inlines the ph CTE per consumer). A hot boilerplate run skews the
-    # window's h partition; the window is a sortless full-partition MIN,
-    # so the skewed task streams linearly (buffering/spilling the hot h's
-    # positions in ONE task). Past _SPANS_AGG_ROWS documents the SPARK
-    # side switches to ``agg_form`` (the dedup_spans docstring has the
-    # measured A/B): GROUP BY h replaces the window — Spark's hash
-    # aggregate partial-aggregates map-side, which IS the two-level
-    # (h, salt) MIN with salt = map task, so the hot run reduces to
-    # ≤ #tasks partial rows before the exchange — then the run relation
-    # joins back to ph under a SHUFFLE_HASH hint (a broadcast would be
-    # fact-proportional, the measured sf1 OOM) where AQE's skew-join
-    # splitting can divide the hot-h probe partition across tasks. The
-    # price is the position pass (scan+explode+hash) running twice
-    # (Spark inlines the ph CTE per consumer; the exchanges differ — one
-    # carries the partial aggregate — so ReusedExchange cannot fire).
+    # inlines the ph CTE per consumer) and lost to the window at every
+    # measured tier, hot boilerplate included (FLOOR.md §r8). A hot
+    # boilerplate run skews the window's h partition; the window is a
+    # sortless full-partition MIN, so the skewed task streams linearly
+    # (buffering/spilling the hot h's positions in ONE task).
     run = _novelty_run_expr(d)
     ws = d["split"]("text")
-    strcast = "STRING" if d is _SPARK_D else "VARCHAR"
+    # The ordered rebuild is each engine's own plan: Spark positions tokens
+    # with posexplode and sorts a collect_list of (t, tok) structs, DuckDB
+    # indexes the list and aggregates with string_agg(... ORDER BY t).
     if d is _SPARK_D:
         tok_rel = (
             "SELECT doc_id, pos + 1 AS t, tok FROM allw "
             "LATERAL VIEW posexplode(ws) AS pos, tok"
         )
-        j_expand = f"LATERAL VIEW explode(sequence(0, {_DC_K - 1})) AS j"
         rebuild = (
             "array_join(transform(array_sort(collect_list("
             "named_struct('t', k.t, 'tok', k.tok))), s -> s.tok), ' ')"
@@ -2095,27 +1994,18 @@ def _dedup_spans_sql(d, agg_form: bool = False) -> str:
             "SELECT doc_id, t, ws[t] AS tok FROM allw, "
             "unnest(generate_series(1, len(ws))) AS u(t)"
         )
-        j_expand = f", unnest(generate_series(0, {_DC_K - 1})) AS ju(j)"
         rebuild = "string_agg(k.tok, ' ' ORDER BY k.t)"
-    if agg_form:
-        fh = """
-    runs AS (SELECT h, MIN(doc_id) AS first_doc FROM ph GROUP BY h),
-    fh AS (
-      SELECT /*+ SHUFFLE_HASH(r) */ p.doc_id, p.i, r.first_doc
-      FROM ph p JOIN runs r ON p.h = r.h
-    )"""
-    else:
-        fh = """
+    j_seq = d["seq"]("0", str(_DC_K - 1))
+    return f"""{_novelty_head(d)},
+    ph AS (SELECT doc_id, i, {run} AS h FROM pos),
     fh AS (
       SELECT doc_id, i,
              MIN(doc_id) OVER (PARTITION BY h) AS first_doc
       FROM ph
-    )"""
-    return f"""{_novelty_head(d)},
-    ph AS (SELECT doc_id, i, {run} AS h FROM pos),{fh},
+    ),
     cov AS (
       SELECT DISTINCT doc_id, i + j AS t
-      FROM fh {j_expand}
+      FROM {d['lateral']('fh', j_seq, 'j', alias='ju')}
       WHERE doc_id > first_doc
     ),
     covd AS (SELECT DISTINCT doc_id FROM cov),
@@ -2142,7 +2032,7 @@ def _dedup_spans_sql(d, agg_form: bool = False) -> str:
                 WHEN c.doc_id IS NULL THEN CAST(0 AS BIGINT)
                 ELSE CAST(b.n_tokens - COALESCE(r.n_kept, 0) AS BIGINT)
            END AS n_removed,
-           CASE WHEN b.n_tokens IS NULL THEN CAST(NULL AS {strcast})
+           CASE WHEN b.n_tokens IS NULL THEN CAST(NULL AS {d['str']})
                 WHEN c.doc_id IS NULL THEN b.text
                 ELSE COALESCE(r.clean_text, '')
            END AS clean_text
@@ -2153,30 +2043,6 @@ def _dedup_spans_sql(d, agg_form: bool = False) -> str:
 
 
 _SPANS_SPARK, _SPANS_DUCK = _dual(_dedup_spans_sql)
-_SPANS_SPARK_AGG = _dedup_spans_sql(_SPARK_D, agg_form=True)
-
-# Above this many documents (parquet footer count, no job — the
-# sliding_agg precedent) the Spark side switches from the run-keyed
-# window to the agg+SHUFFLE_HASH-join form. Measured (interleaved
-# min-of-3, scripts/spans_ab_r08.py — deleted; in git at 6e9be45 —
-# full-plan eval; hot = one 8-token block carried by 80% of docs, the
-# aac4508 stress shape at scale):
-#   sf1  uniform (50k docs):   window 1.51 s   agg 2.18 s
-#   sf1  hot     (50k docs):   window 2.57 s   agg 3.54 s
-#   sf10 uniform (500k docs):  window 7.18 s   agg 9.03 s
-#   sf10 hot     (500k docs):  window 16.0 s   agg 25.4 s
-# The WINDOW wins every measured tier INCLUDING hot boilerplate — the
-# agg form's second position pass (scan+explode+hash ×2) costs more
-# than the hot h partition, which the window streams/spills in one task
-# (at sf10-hot that task holds 400k ~50 B rows, well under spill
-# pressure). The agg form is therefore gated to the regime the ladder
-# cannot reach: where ONE run's occurrence rows make the single-task
-# window buffer the stage straggler (~GB-scale, ≥ tens of millions of
-# carrier docs) — there the AQE-splittable SHUFFLE_HASH join divides
-# the hot partition while the window cannot. 20M docs ≈ a universal
-# run buffering ~1 GB in one task; below that every measurement says
-# window.
-_SPANS_AGG_ROWS = 20_000_000
 
 
 @register("dedup_spans", _SPANS_DUCK)
@@ -2203,18 +2069,10 @@ def dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverage expansion is a bounded ×8 explode of STALE positions only;
     the rebuild is an anti-join plus one doc-keyed ordered aggregation.
     Nothing is quadratic in anything. Boilerplate-heavy corpora skew the
-    run-key window (the hot h buffers in ONE task), so past
-    _SPANS_AGG_ROWS documents (footer count, no job) the first-doc stamp
-    switches to the agg + SHUFFLE_HASH-join form: map-side partial
-    aggregation is the two-level (h, salt) MIN, and AQE skew-join
-    splitting divides the hot-h probe partition — at the price of the
-    position pass running twice. The two forms are pinned row-equal on
-    random and hot-boilerplate corpora (tests/test_corpus_ext.py); the
-    measured crossover is recorded in FLOOR.md §r8."""
-    from ..sources.tables import table_rows
-
-    if table_rows(sf_dir, "documents") > _SPANS_AGG_ROWS:
-        return _spark_docs(spark, sf_dir, _SPANS_SPARK_AGG)
+    run-key window (the hot h buffers in ONE task); the window still beat
+    the agg + SHUFFLE_HASH-join alternative at every measured tier, hot
+    boilerplate included (FLOOR.md §r8), and is pinned row-equal to the
+    oracle on random and hot-boilerplate corpora (tests/test_corpus_ext.py)."""
     return _spark_docs(spark, sf_dir, _SPANS_SPARK)
 
 
@@ -2230,10 +2088,7 @@ def _vec_split_case(d, col: str) -> str:
     """The SAME deterministic md5-bucket split rule as hash_split, applied
     to a vector id — one definition of 'which split is this row in' for
     the embeddings table."""
-    strcast = "STRING" if d is _SPARK_D else "VARCHAR"
-    bucket = _hex2int(
-        d, f"SUBSTR(md5(CONCAT('split|', CAST({col} AS {strcast}))), 1, 15)"
-    )
+    bucket = d["bucket"]("split", col)
     return (
         f"CASE WHEN {bucket} % 100 < 80 THEN 'train' "
         f"WHEN {bucket} % 100 >= 90 THEN 'test' END"

@@ -37,15 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import register
-from .corpus_ext import _joinarr, _slice
-from .llm_pipeline import (
-    _DUCK_D,
-    _SPARK_D,
-    _dual,
-    _hex2int,
-    _spark_docs,
-)
+from . import _DUCK_D, _SPARK_D, _dual, register
+from .llm_pipeline import _spark_docs
 
 # --------------------------------------------------------------------------
 # winnowing: MOSS fingerprint selection (Schleimer, Wilkerson, Aiken 2003).
@@ -74,9 +67,9 @@ def _winnowing_sql(d, where: "str | None" = None, src: "str | None" = None) -> s
     # needed. v is unique per (doc, i), so window minima are unambiguous
     # and both engines decode identical (fp, pos) pairs from identical v.
     ws = d["split"]("text")
-    gram = _joinarr(d, _slice(d, "ws", "i", _WIN_K))
-    h36 = _hex2int(d, f"SUBSTR(md5({gram}), 1, 9)")
-    idiv = "DIV" if d is _SPARK_D else "//"
+    gram = d["joinarr"](d["slice"]("ws", "i", _WIN_K))
+    h36 = d["hex2int"](f"SUBSTR(md5({gram}), 1, 9)")
+    idiv = d["idiv"]
     pred = f" AND ({where})" if where else ""
     return f"""
     WITH w AS (
@@ -250,6 +243,9 @@ def _grep_tail() -> str:
 
 
 def _gopher_repetition_sql(d) -> str:
+    # Spark folds every signal per row with higher-order functions (zero
+    # shuffle); the oracle keeps the independent explode + GROUP BY +
+    # window relational form (the repetition_ratio precedent).
     if d is _SPARK_D:
         grams = {
             n: (
@@ -327,7 +323,7 @@ def _gopher_repetition_sql(d) -> str:
         gctes.append(
             f"""g{n} AS (
       SELECT doc_id, i,
-             {_joinarr(d, _slice(d, 'ws', 'i', n))} AS g
+             {d['joinarr'](d['slice']('ws', 'i', n))} AS g
       FROM t, unnest(generate_series(1, len(ws) - {n - 1})) AS u(i)
       WHERE len(ws) >= {n}
     )"""
@@ -553,15 +549,16 @@ _LD_MIN_TOKS = 4  # lines under this many tokens are exempt (headers etc.)
 def _ld_norm(d, line: str) -> str:
     """CCNet-style line normalization for the dedup hash: lowercase,
     digits stripped, outer whitespace trimmed."""
-    flags = "" if d is _SPARK_D else ", 'g'"
-    return f"TRIM(regexp_replace(LOWER({line}), '[0-9]'{flags}, ''))"
+    return f"TRIM(regexp_replace(LOWER({line}), '[0-9]'{d['gflag']}, ''))"
 
 
 def _line_dedup_sql(d) -> str:
-    spark = d is _SPARK_D
-    lines = "split(text, '\\n')" if spark else "str_split(text, chr(10))"
-    strcast = "STRING" if spark else "VARCHAR"
-    if spark:
+    lines = d["split"]("text", d["nl"])
+    # The ordered rebuild is each engine's own plan (the dedup_spans
+    # split): Spark positions lines with posexplode and sorts a
+    # collect_list of (p, line) structs, DuckDB indexes the list and
+    # aggregates with string_agg(... ORDER BY p).
+    if d is _SPARK_D:
         lx = (
             "SELECT doc_id, p0 + 1 AS p, line FROM dl "
             "LATERAL VIEW posexplode(lines) AS p0, line"
@@ -625,7 +622,7 @@ def _line_dedup_sql(d) -> str:
                 WHEN c.doc_id IS NULL THEN CAST(0 AS BIGINT)
                 ELSE CAST(b.n_lines - COALESCE(r.n_kept, 0) AS BIGINT)
            END AS n_removed,
-           CASE WHEN b.n_lines IS NULL THEN CAST(NULL AS {strcast})
+           CASE WHEN b.n_lines IS NULL THEN CAST(NULL AS {d['str']})
                 WHEN c.doc_id IS NULL THEN b.text
                 ELSE COALESCE(r.clean_text, '')
            END AS clean_text
@@ -796,10 +793,7 @@ def _ivft_ranked_values_sql(cents, posexp: "str | None" = None) -> str:
     overrides the position-explosion source (the serving-index builders
     pass a predicate-filtered one)."""
     if posexp is None:
-        posexp = (
-            "SELECT vec_id, pos + 1 AS dim, CAST(x AS DOUBLE) AS x "
-            "FROM embeddings LATERAL VIEW posexplode(embedding) AS pos, x"
-        )
+        posexp = _SPARK_D["comps"]()
     return (
         f"WITH tcent AS (SELECT c, dim, w FROM {trained_centroid_values(cents)}),\n"
         f"    comps AS ({posexp}),\n    "
@@ -960,21 +954,15 @@ _QLR_LR_SHIFT = 16  # integer learning step: w -= grad DIV 16
 
 def _qlr_fx_sql(d) -> str:
     """Per-(doc, feature) counts + doc length — the design matrix."""
-    if d is _SPARK_D:
-        wx = (
-            f"SELECT doc_id, size(ws) AS nw, "
-            f"{_hex2int(d, 'SUBSTR(md5(w), 1, 15)')} % {_QLR_FEATS} AS f "
-            f"FROM (SELECT doc_id, {d['split']('text')} AS ws "
-            f"FROM {d['pdocs']} WHERE text IS NOT NULL) "
-            f"LATERAL VIEW explode(ws) AS w"
-        )
-    else:
-        wx = (
-            f"SELECT doc_id, len(ws) AS nw, "
-            f"{_hex2int(d, 'SUBSTR(md5(w), 1, 15)')} % {_QLR_FEATS} AS f "
-            f"FROM (SELECT doc_id, {d['split']('text')} AS ws "
-            f"FROM documents WHERE text IS NOT NULL) t, unnest(ws) AS u(w)"
-        )
+    docs = (
+        f"(SELECT doc_id, {d['split']('text')} AS ws "
+        f"FROM {d['pdocs']} WHERE text IS NOT NULL) t"
+    )
+    wx = (
+        f"SELECT doc_id, {d['len']('ws')} AS nw, "
+        f"{d['hex2int']('SUBSTR(md5(w), 1, 15)')} % {_QLR_FEATS} AS f "
+        f"FROM {d['lateral'](docs, 'ws', 'w')}"
+    )
     return (
         f"SELECT doc_id, nw, f, CAST(COUNT(*) AS BIGINT) AS c "
         f"FROM ({wx}) GROUP BY doc_id, nw, f"
@@ -982,12 +970,11 @@ def _qlr_fx_sql(d) -> str:
 
 
 def _qlr_y_sql(d) -> str:
-    from .corpus_ext import _GOPHER_DUCK, _GOPHER_SPARK
+    from .corpus_ext import _gopher_sql
 
-    g = _GOPHER_SPARK if d is _SPARK_D else _GOPHER_DUCK
     return (
         f"SELECT doc_id, CASE WHEN ok_word_count THEN 1.0 ELSE 0.0 END AS y"
-        f" FROM ({g})"
+        f" FROM ({_gopher_sql(d)})"
     )
 
 
@@ -1217,30 +1204,16 @@ _DE_DIMS = 16
 
 
 def _doc_embed_sql(d) -> str:
-    spark = d is _SPARK_D
-    strcast = "STRING" if spark else "VARCHAR"
-    h = _hex2int(
-        d, f"SUBSTR(md5(CONCAT(w, '|', CAST(dim AS {strcast}))), 1, 15)"
+    h = d["hex2int"](
+        f"SUBSTR(md5(CONCAT(w, '|', CAST(dim AS {d['str']}))), 1, 15)"
     )
-    if spark:
-        wx = (
-            f"SELECT doc_id, size(ws) AS nw, w FROM "
-            f"(SELECT doc_id, {d['split']('text')} AS ws FROM {d['pdocs']} "
-            f"WHERE text IS NOT NULL) "
-            f"LATERAL VIEW explode(ws) AS w"
-        )
-        dims = f"LATERAL VIEW explode(sequence(0, {_DE_DIMS - 1})) AS dim"
-        rel = f"FROM ({wx}) {dims}"
-    else:
-        wx = (
-            f"SELECT doc_id, len(ws) AS nw, w FROM "
-            f"(SELECT doc_id, {d['split']('text')} AS ws FROM documents "
-            f"WHERE text IS NOT NULL) t, unnest(ws) AS u(w)"
-        )
-        rel = (
-            f"FROM ({wx}) wxr, "
-            f"unnest(generate_series(0, {_DE_DIMS - 1})) AS du(dim)"
-        )
+    docs = (
+        f"(SELECT doc_id, {d['split']('text')} AS ws FROM {d['pdocs']} "
+        f"WHERE text IS NOT NULL) t"
+    )
+    wx = f"SELECT doc_id, {d['len']('ws')} AS nw, w FROM {d['lateral'](docs, 'ws', 'w')}"
+    dims = d["seq"]("0", str(_DE_DIMS - 1))
+    rel = f"FROM {d['lateral'](f'({wx}) wxr', dims, 'dim', alias='du')}"
     return f"""
     SELECT doc_id, CAST(dim AS INT) AS dim,
            CAST(SUM(({h} % 2000001) - 1000000) AS DOUBLE)
@@ -1341,7 +1314,7 @@ def winnow_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     winnowing serving index stores (functions/neardup_index.py)."""
     import uuid
 
-    from .llm_pipeline import _SPARK_D, _indexed, _register_docs
+    from .llm_pipeline import _indexed, _register_docs
 
     _register_docs(spark, sf_dir)
     # uuid-suffixed view, dropped after sql() resolves the plan (the

@@ -68,7 +68,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources import load
-from . import _duck_expand, _spark_expand, register
+from . import _DUCK_D, _SPARK_D, register
 from .dsl import _PARSE_ORACLE, _parsed_edges
 
 _CAP = 256  # aligned samples per series fed to the correlation screener
@@ -84,15 +84,11 @@ def _vmax() -> int:
 
     return max(v for _, v, _, _, _ in EQUATION_ROWS)
 
-_TS_US_SPARK = "(ts div 1000)"
-_TS_US_DUCK = "epoch_us(ts)"
-
-
-def _body(expand, idiv: str, tus: str) -> str:
-    """Everything downstream of the ``gt`` CTE — shared text, engine
-    dialect injected for row expansion, integer division and time scale."""
+def _body(d) -> str:
+    """Everything downstream of the ``gt`` CTE — shared text, the dialect
+    ``d`` spelling row expansion, integer division and time scale."""
     tail = _metric_tail(
-        expand, "configs", "m", "r.rn IS NOT NULL AND r.rn <= c.m",
+        d, "configs", "m", "r.rn IS NOT NULL AND r.rn <= c.m",
         "ranked r ON r.v_cnt = c.n_vars AND r.l_cnt = c.max_lag"
         " AND r.vt = c.i AND r.vs = c.j AND r.k = c.k",
     )
@@ -125,21 +121,21 @@ def _body(expand, idiv: str, tus: str) -> str:
       SELECT user_id, value,
              ROW_NUMBER() OVER (PARTITION BY user_id
                                 ORDER BY ts_us, event_id) AS r
-      FROM (SELECT user_id, event_id, {tus} AS ts_us, value FROM events
+      FROM (SELECT user_id, event_id, {d['tus']} AS ts_us, value FROM events
             WHERE user_id < {_GCAP * _vmax()}) e
     ),
     evc AS (SELECT user_id, value, r FROM ev WHERE r <= {_CAP}),
     srcs AS (
       SELECT c.v_cnt, c.lmax,
              CAST(e.user_id % c.v_cnt AS INT) + 1 AS v,
-             e.user_id {idiv} c.v_cnt AS g,
+             e.user_id {d['idiv']} c.v_cnt AS g,
              e.r, e.value
       FROM evc e CROSS JOIN vgrid c
-      WHERE e.user_id {idiv} c.v_cnt < {_GCAP}
+      WHERE e.user_id {d['idiv']} c.v_cnt < {_GCAP}
     ),
     tgts AS (
       SELECT v_cnt, v AS vt, g, r, value AS yv,
-             {expand('0', 'lmax')} AS k
+             {d['expand']('0', 'lmax')} AS k
       FROM srcs
     ),
     pairs AS (
@@ -218,7 +214,7 @@ def _screener(key: str) -> str:
     )"""
 
 
-def _metric_tail(expand, src: str, cap: str | None, pred: str, join: str,
+def _metric_tail(d, src: str, cap: str | None, pred: str, join: str,
                  keys=("family", "n_vars", "max_lag"), order=None) -> str:
     """Cell expansion -> ``scored`` -> M1-M5 per config, the closing CTEs
     and SELECT of a scorer. ``src`` holds one row per config (``keys``
@@ -229,11 +225,11 @@ def _metric_tail(expand, src: str, cap: str | None, pred: str, join: str,
     keys_s = ", ".join(keys)
     ckeys = ", ".join(f"c.{k}" for k in keys)
     return f"""c1 AS (SELECT {carry},
-                  {expand('1', 'n_vars')} AS i FROM {src}),
+                  {d['expand']('1', 'n_vars')} AS i FROM {src}),
     c2 AS (SELECT {carry}, i,
-                  {expand('1', 'n_vars')} AS j FROM c1),
+                  {d['expand']('1', 'n_vars')} AS j FROM c1),
     c3 AS (SELECT {carry}, i, j,
-                  {expand('0', 'max_lag')} AS k FROM c2),
+                  {d['expand']('0', 'max_lag')} AS k FROM c2),
     cells AS (SELECT * FROM c3 WHERE NOT (i = j AND k = 0)),
     scored AS (
       SELECT {ckeys}, c.i, c.j, c.k,
@@ -306,13 +302,13 @@ def _metric_tail(expand, src: str, cap: str | None, pred: str, join: str,
 
 _DISCOVERY_DUCK = (
     f"WITH gt AS ({_PARSE_ORACLE}),\n"
-    + _body(_duck_expand, "//", _TS_US_DUCK)
+    + _body(_DUCK_D)
 )
 
 _DISCOVERY_SPARK = (
     "WITH gt AS (SELECT family, n_vars, max_lag, target, source, lag\n"
     "            FROM parsed_edges_bench),\n"
-    + _body(_spark_expand, "div", _TS_US_SPARK)
+    + _body(_SPARK_D)
 )
 
 

@@ -28,8 +28,6 @@ _SRC_RE = r"X([0-9]+)"
 _LAG_RE = r"\[t-([0-9]+)\]"
 _POW_RE = r"\^([0-9]+)"
 
-_EQS_SCHEMA = "family string, n_vars int, max_lag int, eq_idx int, eq string"
-
 
 def _eqs_values_sql() -> str:
     rows = ", ".join(

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..functions.detrand import lcg_uniform_sql
 from ..sources import load
-from . import register
+from . import _DUCK_D, _SPARK_D, register
 
 _PROPS_ORACLE = """
     WITH parsed AS (
@@ -64,11 +64,11 @@ def props_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MCAR_U = lcg_uniform_sql("event_id", salt=3)
 
 
-def _pattern_sql(tus: str) -> str:
+def _pattern_sql(d) -> str:
     return f"""
     WITH masked AS (
       SELECT event_type,
-             CAST(FLOOR({tus} / 3600000000.0) AS BIGINT) AS hour_bucket,
+             CAST(FLOOR({d['tus']} / 3600000000.0) AS BIGINT) AS hour_bucket,
              CASE WHEN {_MCAR_U} < 0.2 THEN 1 ELSE 0 END AS is_missing
       FROM events
     )
@@ -81,16 +81,16 @@ def _pattern_sql(tus: str) -> str:
     """
 
 
-@register("missing_pattern", _pattern_sql("epoch_us(ts)"))
+@register("missing_pattern", _pattern_sql(_DUCK_D))
 def missing_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Missing-pattern heatmap data (G19, d1.py:327-337): MCAR-mask holes
     bucketed by hour × event type — the per-cell counts behind the
     reference's missing-pattern plot."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_pattern_sql("(ts div 1000)"))
+    return spark.sql(_pattern_sql(_SPARK_D))
 
 
-def _funnel_sql(tus: str) -> str:
+def _funnel_sql(d) -> str:
     # Ordered view → click → purchase funnel per user: each stage's entry
     # time is the MIN event time strictly after the previous stage's entry.
     # Three chained per-user aggregates (t1 feeds t2 feeds t3) — every join
@@ -98,7 +98,7 @@ def _funnel_sql(tus: str) -> str:
     # it is one partitioning reused across stages, never an event×event
     # join. Times are integer microseconds; counts are exact.
     return f"""
-    WITH e AS (SELECT user_id, event_type, {tus} AS tus FROM events),
+    WITH e AS (SELECT user_id, event_type, {d['tus']} AS tus FROM events),
     s1 AS (
       SELECT user_id, MIN(CASE WHEN event_type = 'view' THEN tus END) AS t1
       FROM e GROUP BY user_id
@@ -172,7 +172,7 @@ _FUNNEL_SPARK = """
     """
 
 
-@register("funnel", _funnel_sql("epoch_us(ts)"))
+@register("funnel", _funnel_sql(_DUCK_D))
 def funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered conversion funnel (view → click → purchase, strictly
     increasing event times) with per-stage user counts — the classic event
@@ -186,7 +186,7 @@ def funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WEEK_US = 7 * 24 * 3600 * 1000000
 
 
-def _retention_sql(tus: str) -> str:
+def _retention_sql(d) -> str:
     # Weekly cohort retention: users cohorted by their first-signup week,
     # counted distinct in each later activity week. Integer week indices
     # and exact distinct counts — nothing float anywhere. Two user-keyed
@@ -194,7 +194,7 @@ def _retention_sql(tus: str) -> str:
     # broadcasts at any corpus size where users << events.
     return f"""
     WITH e AS (SELECT user_id, event_type,
-                      CAST(FLOOR({tus} / {_WEEK_US}.0) AS BIGINT) AS week
+                      CAST(FLOOR({d['tus']} / {_WEEK_US}.0) AS BIGINT) AS week
                FROM events),
     cohort AS (
       SELECT user_id, MIN(CASE WHEN event_type = 'signup' THEN week END) AS w0
@@ -238,7 +238,7 @@ _RETENTION_SPARK = f"""
     """
 
 
-@register("retention_cohorts", _retention_sql("epoch_us(ts)"))
+@register("retention_cohorts", _retention_sql(_DUCK_D))
 def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention matrix (first-signup week × weeks-since,
     distinct active users) — the standard product-analytics rollup; exact
@@ -249,7 +249,7 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_RETENTION_SPARK)
 
 
-def _plot_frames_sql(tus: str) -> str:
+def _plot_frames_sql(d) -> str:
     # One tagged-union relation carrying all three G19 plot frames —
     # decomposition points+trend (c1.py:391-411), sampling-interval
     # histogram (c2.py:332-341), missing-pattern cells (d1.py:327-337) —
@@ -261,9 +261,9 @@ def _plot_frames_sql(tus: str) -> str:
     # numerator (the DuckDB-decimal-literal trap, see _trend_fit_sql).
     from .relational import _T0_US, _trend_fit_sql
 
-    td = f"(CAST({tus} - {_T0_US} AS DOUBLE) / 86400000000.0)"
+    td = f"(CAST({d['tus']} - {_T0_US} AS DOUBLE) / 86400000000.0)"
     return f"""
-    WITH fit AS ({_trend_fit_sql(tus)}),
+    WITH fit AS ({_trend_fit_sql(d)}),
     decomp AS (
       SELECT 'decomposition' AS frame, p.user_id AS k1, p.event_id AS k2,
              '' AS label, p.x_day AS v1, p.value AS v2,
@@ -272,8 +272,8 @@ def _plot_frames_sql(tus: str) -> str:
       JOIN fit f ON f.user_id = p.user_id
     ),
     gaps AS (
-      SELECT {tus} - LAG({tus}, 1)
-               OVER (PARTITION BY user_id ORDER BY {tus}, event_id) AS gap_us
+      SELECT {d['tus']} - LAG({d['tus']}, 1)
+               OVER (PARTITION BY user_id ORDER BY {d['tus']}, event_id) AS gap_us
       FROM events
     ),
     hist AS (
@@ -285,7 +285,7 @@ def _plot_frames_sql(tus: str) -> str:
       FROM gaps WHERE gap_us IS NOT NULL
       GROUP BY CAST(FLOOR(gap_us / 60000000.0) AS BIGINT)
     ),
-    mp AS ({_pattern_sql(tus)})
+    mp AS ({_pattern_sql(d)})
     SELECT frame, k1, k2, label, v1, v2, v3 FROM decomp
     UNION ALL
     SELECT frame, k1, k2, label, v1, v2, v3 FROM hist
@@ -298,7 +298,7 @@ def _plot_frames_sql(tus: str) -> str:
     """
 
 
-@register("plot_frames", _plot_frames_sql("epoch_us(ts)"))
+@register("plot_frames", _plot_frames_sql(_DUCK_D))
 def plot_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The plot bundle's three frames as one oracle-checked tagged union —
     the value-hash companion to `plot_bundle` (which checks the WRITE
@@ -308,7 +308,7 @@ def plot_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation branches over the events scan, exactly the bundle's three
     frame jobs, unioned under a common schema."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_plot_frames_sql("(ts div 1000)"))
+    return spark.sql(_plot_frames_sql(_SPARK_D))
 
 
 @register("plot_bundle", None)

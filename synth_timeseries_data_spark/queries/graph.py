@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.detrand import lcg_uniform_sql
-from . import _duck_expand, _spark_expand, register
+from . import _dual, register
 from .relational import _CONFIG_GRID_SQL
 
 # Unique integer key per tensor cell, identical in both engines. BIGINT from
@@ -45,17 +45,16 @@ _GT_P = 0.15
 _FLIP_P = 0.12
 
 
-def _edges_cte(expand) -> str:
-    """Shared cell-table CTE; ``expand(lo, hi)`` renders the engine's
-    select-list row expansion (explode/unnest)."""
+def _edges_cte(d) -> str:
+    """Shared cell-table CTE in dialect ``d``."""
     return f"""
     WITH grid AS ({_CONFIG_GRID_SQL}),
     g1 AS (SELECT config_id, n, n_vars, max_lag, noise,
-                  {expand('0', 'n_vars - 1')} AS i FROM grid),
+                  {d['expand']('0', 'n_vars - 1')} AS i FROM grid),
     g2 AS (SELECT config_id, n, n_vars, max_lag, noise, i,
-                  {expand('0', 'n_vars - 1')} AS j FROM g1),
+                  {d['expand']('0', 'n_vars - 1')} AS j FROM g1),
     cells AS (SELECT config_id, n, n_vars, max_lag, noise, i, j,
-                     {expand('0', 'max_lag')} AS k FROM g2),
+                     {d['expand']('0', 'max_lag')} AS k FROM g2),
     keyed AS (SELECT config_id, i, j, k, {_CELLKEY} AS cellkey FROM cells),
     edges AS (
       SELECT config_id, i, j, k,
@@ -64,11 +63,6 @@ def _edges_cte(expand) -> str:
                   THEN 1 ELSE 0 END AS pred
       FROM keyed)
     """
-
-
-def _dual(body: str):
-    """(spark_sql, duck_sql) for a query body over the shared `edges` CTE."""
-    return _edges_cte(_spark_expand) + body, _edges_cte(_duck_expand) + body
 
 
 # --------------------------------------------------------------------------
@@ -86,7 +80,7 @@ _CONFUSION_BODY = """
     GROUP BY config_id
     """
 
-_CONFUSION_SPARK, _CONFUSION_DUCK = _dual(_CONFUSION_BODY)
+_CONFUSION_SPARK, _CONFUSION_DUCK = _dual(lambda d: _edges_cte(d) + _CONFUSION_BODY)
 
 
 @register("edge_confusion", _CONFUSION_DUCK)
@@ -127,7 +121,7 @@ _SCORES_BODY = """
     FROM rates
     """
 
-_SCORES_SPARK, _SCORES_DUCK = _dual(_SCORES_BODY)
+_SCORES_SPARK, _SCORES_DUCK = _dual(lambda d: _edges_cte(d) + _SCORES_BODY)
 
 
 @register("edge_scores", _SCORES_DUCK)
@@ -149,7 +143,7 @@ _SHD_XOR_BODY = """
     GROUP BY config_id
     """
 
-_SHD_XOR_SPARK, _SHD_XOR_DUCK = _dual(_SHD_XOR_BODY)
+_SHD_XOR_SPARK, _SHD_XOR_DUCK = _dual(lambda d: _edges_cte(d) + _SHD_XOR_BODY)
 
 
 @register("shd_xor", _SHD_XOR_DUCK)
@@ -195,7 +189,7 @@ _SHD_REV_BODY = """
     GROUP BY config_id
     """
 
-_SHD_REV_SPARK, _SHD_REV_DUCK = _dual(_SHD_REV_BODY)
+_SHD_REV_SPARK, _SHD_REV_DUCK = _dual(lambda d: _edges_cte(d) + _SHD_REV_BODY)
 
 
 @register("shd_reversal", _SHD_REV_DUCK)

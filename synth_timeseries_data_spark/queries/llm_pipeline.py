@@ -9,16 +9,15 @@ Design rules for scale:
 - ANN: random-hyperplane signatures bucket the vectors; exact cosine runs
   only inside the query's bucket. Brute-force cosine is kept as the exact
   baseline (one pass, broadcast query vector).
-- Everything is expressed in both engines from shared templates; the only
-  differences are function names (split/str_split, size/len, ...), captured
-  in a dialect table. Hashes are md5 hex strings (identical in Spark and
-  DuckDB), so MinHash signatures match bit-for-bit with zero integer-
-  conversion tricks.
+- Everything is expressed in both engines from shared templates; the
+  spelling differences (split/str_split, size/len, ...) are entries of the
+  dialect table ``d`` (queries/__init__.py). Hashes are md5 hex strings
+  (identical in Spark and DuckDB), so MinHash signatures match
+  bit-for-bit with zero integer-conversion tricks.
 """
 
 from __future__ import annotations
 
-import os
 import re
 
 import pandas as pd
@@ -27,58 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions.detrand import lcg_uniform_sql
 from ..functions.materialize import materialized
 from ..functions.spread import register_spread_view
-from ..sources import load, table_bytes
-from . import _duck_expand, _spark_expand, register
-
-# --------------------------------------------------------------------------
-# Dialect table: name differences between Spark SQL and DuckDB for the
-# array/lambda functions used here. Semantics are identical.
-# --------------------------------------------------------------------------
-
-_SPARK_D = {
-    "split": lambda s: f"split({s}, ' ')",
-    "len": lambda a: f"size({a})",
-    "distinct": lambda a: f"array_distinct({a})",
-    "el": lambda a, i: f"element_at({a}, {i})",
-    "filter": lambda a, lam: f"filter({a}, {lam})",
-    "minarr": lambda a: f"array_min({a})",
-    "transform": lambda a, lam: f"transform({a}, {lam})",
-    "retokens": lambda s, p: f"size(regexp_extract_all({s}, '{p}', 0))",
-    "expand": _spark_expand,
-    "seq": lambda lo, hi: f"sequence({lo}, {hi})",
-    "unnest": lambda a: f"explode({a})",
-    "posexplode": "posexplode",  # handled inline
-    # Compute-heavy templates (explode/md5 per word or char) read this
-    # instead of `documents`: a view pre-repartitioned to the session's
-    # parallelism. The fixture is one parquet row group → one task; without
-    # the spread, the whole explode+hash pipeline runs single-threaded no
-    # matter how many cores exist. The tiny doc-id shuffle (~KBs) buys
-    # full-width execution of the expensive stage — same reasoning at 100 TB
-    # when an upstream stage emits few large partitions. DuckDB reads the
-    # plain table (it parallelizes within a row group natively).
-    "pdocs": "documents_par",
-}
-
-_DUCK_D = {
-    "split": lambda s: f"str_split({s}, ' ')",
-    "len": lambda a: f"len({a})",
-    "distinct": lambda a: f"list_distinct({a})",
-    "el": lambda a, i: f"list_extract({a}, {i})",
-    "filter": lambda a, lam: f"list_filter({a}, {lam})",
-    "minarr": lambda a: f"list_aggregate({a}, 'min')",
-    "transform": lambda a, lam: f"list_transform({a}, {lam})",
-    "retokens": lambda s, p: f"len(regexp_extract_all({s}, '{p}', 0))",
-    "expand": _duck_expand,
-    "seq": lambda lo, hi: f"generate_series({lo}, {hi})",
-    "unnest": lambda a: f"unnest({a})",
-    "pdocs": "documents",
-}
-
-
-def _dual(build):
-    """(spark_sql, duck_sql) from a dialect-parameterized builder."""
-    return build(_SPARK_D), build(_DUCK_D)
-
+from ..sources import load, table_bytes, table_rows
+from . import _DUCK_D, _SPARK_D, _dual, register
 
 # --------------------------------------------------------------------------
 # Materialized index relations (LSH/ANN). persist() + temp view is NOT
@@ -98,24 +47,6 @@ def _indexed(spark: SparkSession, key: str, sql: str) -> DataFrame:
     session-keyed, thread-safe; see functions/materialize.py for the
     staleness/catalog assumptions."""
     return materialized(spark, key, lambda: spark.sql(sql))
-
-
-def _parquet_rows(path: str) -> int:
-    """Row count from parquet footer metadata — driver-side, no Spark job.
-    Handles a single file, a flat Spark-written dataset directory, and a
-    hive-partitioned tree (recursive walk) — the one footer-count helper
-    for derived datasets (sources.table_rows stays the fixture-table
-    variant with its fingerprint memo)."""
-    import pyarrow.parquet as pq
-
-    if os.path.isdir(path):
-        return sum(
-            pq.read_metadata(os.path.join(root, f)).num_rows
-            for root, _dirs, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet")
-        )
-    return pq.read_metadata(path).num_rows
 
 
 def _register_docs(spark: SparkSession, sf_dir: str) -> None:
@@ -324,16 +255,8 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _hex2int(d, expr: str) -> str:
-    """Dialect-portable 15-hex-char → BIGINT (values identical both engines)."""
-    if d is _SPARK_D:
-        return f"CAST(CONV({expr}, 16, 10) AS BIGINT)"
-    return f"CAST('0x' || {expr} AS BIGINT)"
-
-
 def _hash_split_sql(d) -> str:
-    strcast = "STRING" if d is _SPARK_D else "VARCHAR"
-    bucket = _hex2int(d, f"SUBSTR(md5(CONCAT('split|', CAST(doc_id AS {strcast}))), 1, 15)")
+    bucket = d["bucket"]("split")
     return f"""
     WITH b AS (
       SELECT doc_id, lang, n_chars, CAST({bucket} % 100 AS INT) AS bucket
@@ -373,8 +296,7 @@ _STRAT_RATES = "(VALUES ('en', 40), ('zh', 80), ('es', 80), ('de', 100), ('fr', 
 
 
 def _stratified_sample_sql(d) -> str:
-    strcast = "STRING" if d is _SPARK_D else "VARCHAR"
-    u100 = _hex2int(d, f"SUBSTR(md5(CONCAT('strat|', CAST(doc_id AS {strcast}))), 1, 15)")
+    u100 = d["bucket"]("strat")
     return f"""
     WITH rates AS (SELECT * FROM {_STRAT_RATES} AS r(lang, keep_pct)),
     u AS (
@@ -400,8 +322,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _contamination_sql(d) -> str:
-    strcast = "STRING" if d is _SPARK_D else "VARCHAR"
-    bucket = _hex2int(d, f"SUBSTR(md5(CONCAT('split|', CAST(doc_id AS {strcast}))), 1, 15)")
+    bucket = d["bucket"]("split")
     ws = d["split"]("text")
     return f"""
     WITH s AS (
@@ -440,8 +361,7 @@ _CONTAM_DUCK = _contamination_sql(_DUCK_D)
 # at sf0.1; at cluster scale the scan is already wide).
 def _contam_spark_sql(table: str = "documents") -> str:
     d = _SPARK_D
-    strcast = "STRING"
-    bucket = _hex2int(d, f"SUBSTR(md5(CONCAT('split|', CAST(doc_id AS {strcast}))), 1, 15)")
+    bucket = d["bucket"]("split")
     ws = d["split"]("text")
     return f"""
     WITH s AS (
@@ -563,34 +483,24 @@ def repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _spark_docs(spark, sf_dir, _REP_SPARK)
 
 
-def _char_entropy_sql(d) -> str:
-    # Shannon entropy in bits from integer char counts:
-    #   H = (ln(n) - Σ c·ln(c) / n) / ln 2.
-    # The per-class Σ accumulates as FLOOR(c · ROUND(ln c, 9) · 10⁶) BIGINTs
-    # — order-independent, and ROUND(·,9) absorbs the ≤1-ulp libm ln()
-    # disagreement between engines before the FLOOR can straddle a
-    # boundary. The single remaining libm term ln(n) sits under the final
-    # ROUND(·,6) like every other libm-dependent output.
-    #
-    # Char-split caveat: Spark's split(text, '') splits on Java code points
-    # while DuckDB's str_split(text, '') is grapheme-aware — identical only
-    # for text without combining marks or astral-plane characters. That
-    # precondition is ASSERTED on every gate fixture by
-    # tests/test_corpus_ext.py::test_char_entropy_fixture_is_codepoint_split_safe
-    # — if a future fixture trips it, normalize both sides to explicit code
-    # points before comparing.
-    if d is _SPARK_D:
-        chars_from = (
-            "SELECT doc_id, ch FROM "
-            "(SELECT doc_id, split(text, '') AS cs FROM documents_par) t "
-            "LATERAL VIEW explode(cs) x AS ch"
-        )
-    else:
-        chars_from = (
-            "SELECT doc_id, unnest(str_split(text, '')) AS ch FROM documents"
-        )
-    return f"""
-    WITH chars AS ({chars_from}),
+# Shannon entropy in bits from integer char counts:
+#   H = (ln(n) - Σ c·ln(c) / n) / ln 2.
+# The per-class Σ accumulates as FLOOR(c · ROUND(ln c, 9) · 10⁶) BIGINTs
+# — order-independent, and ROUND(·,9) absorbs the ≤1-ulp libm ln()
+# disagreement between engines before the FLOOR can straddle a
+# boundary. The single remaining libm term ln(n) sits under the final
+# ROUND(·,6) like every other libm-dependent output.
+#
+# Char-split caveat: the Spark side (_entropy_batches) counts code points
+# while DuckDB's str_split(text, '') is grapheme-aware — identical only
+# for text without combining marks or astral-plane characters. That
+# precondition is ASSERTED on every gate fixture by
+# tests/test_corpus_ext.py::test_char_entropy_fixture_is_codepoint_split_safe
+# — if a future fixture trips it, normalize both sides to explicit code
+# points before comparing.
+_ENT_DUCK = """
+    WITH chars AS (SELECT doc_id, unnest(str_split(text, '')) AS ch
+                   FROM documents),
     counts AS (
       SELECT doc_id, ch, COUNT(*) AS c
       FROM chars WHERE ch != '' GROUP BY doc_id, ch
@@ -610,8 +520,6 @@ def _char_entropy_sql(d) -> str:
     """
 
 
-_ENT_SPARK, _ENT_DUCK = _dual(_char_entropy_sql)
-
 _ENT_SCHEMA = "doc_id long, n_chars_counted long, entropy_bits double"
 
 
@@ -622,13 +530,13 @@ def _entropy_batches(batches):
     doc-keyed hash aggregate; per-char row inflation (~1000×) is exactly
     the case where a vectorized histogram inside the scan task is the
     physical strategy the optimizer can't pick for us. This computes the
-    SAME integer micro-nat contract as _char_entropy_sql: per-class terms
+    SAME integer micro-nat contract as _ENT_DUCK: per-class terms
     FLOOR(c · ROUND(ln c, 9) · 1e6) summed as int64 (ROUND replicated as
     BigDecimal HALF_UP, Spark's ROUND semantics), final value under
     Decimal HALF_UP at 6 places like ROUND(.,6). ASCII docs take a
     np.bincount byte path; any non-ASCII doc falls back to a code-point
     Counter (matching Java's code-point split — see the char-split caveat
-    on _char_entropy_sql). Zero shuffles: pure map over the pruned scan.
+    on _ENT_DUCK). Zero shuffles: pure map over the pruned scan.
     """
     import math
     from collections import Counter
@@ -788,7 +696,7 @@ def _mh_docagg_sql(d) -> str:
     mins_cols = ",\n               ".join(
         f"MIN({_win('m', k)}) AS h{k}" for k in range(_MH_H)
     )
-    arr = "collect_set(s)" if d is _SPARK_D else "list(DISTINCT s)"
+    arr = d["set_agg"]("s")
     n_sh = d["len"]("arr")
     return f"""
     SELECT doc_id, {n_sh} AS n_sh, {", ".join(f"h{k}" for k in range(_MH_H))}, arr
@@ -803,7 +711,8 @@ def _mh_docagg_sql(d) -> str:
 
 
 def _mh_sigs_sql(d, docagg: str) -> str:
-    """Band signatures (doc_id, band, sig) exploded from ``docagg``."""
+    """Band signatures (doc_id, band, sig) exploded from ``docagg``:
+    Spark unpivots the bands with STACK, DuckDB unnests struct literals."""
     if d is _SPARK_D:
         stack_args = ", ".join(
             f"{b}, md5(CONCAT(h{2 * b}, '|', h{2 * b + 1}))" for b in range(_MH_BANDS)
@@ -846,21 +755,9 @@ def _minhash_tail(d, docagg: str, sigs: str, mem_rel: str | None = None) -> str:
     ``bucketBy(band, sig)``): the bsize aggregation and the bsize join
     drop out of the re-query plan entirely, and the bucket self-join plus
     the dense-guard rank window run exchange-free on the bucketed scan."""
-    n_inter = (
-        "size(array_intersect(da.arr, db.arr))"
-        if d is _SPARK_D
-        else "len(list_intersect(da.arr, db.arr))"
-    )
-    blk = (
-        f"((rn - 1) DIV {_MH_NEIGHBORS})"
-        if d is _SPARK_D
-        else f"((rn - 1) // {_MH_NEIGHBORS})"
-    )
-    expand_blk = (
-        "explode(array(blk, blk + 1))"
-        if d is _SPARK_D
-        else "unnest([blk, blk + 1])"
-    )
+    n_inter = d["len"](f"{d['intersect']}(da.arr, db.arr)")
+    blk = f"((rn - 1) {d['idiv']} {_MH_NEIGHBORS})"
+    expand_blk = d["unnest"](d["array"]("blk, blk + 1"))
     if mem_rel is None:
         mem_ctes = f"""
     bsize AS (SELECT band, sig, COUNT(*) AS m FROM {sigs} GROUP BY band, sig),
@@ -1194,8 +1091,6 @@ def _cc_labels(spark: SparkSession, sf_dir: str, pairs: DataFrame) -> DataFrame:
     """(v, label) component-min labels over a 2-column edge relation:
     driver union-find under _CC_DRIVER_DOCS corpus rows and
     _CC_DRIVER_PAIRS edges, else _cc_hybrid."""
-    from ..sources import table_rows
-
     if table_rows(sf_dir, "documents") <= _CC_DRIVER_DOCS:
         # bounded probe: one job over the already-materialized pair
         # relation; returns ≤ gate+1 rows regardless of true pair count
@@ -1308,8 +1203,6 @@ def neardup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from ..functions.scale import broadcast_if_small
-    from ..sources import table_rows
-
     clusters = dedup_clusters(spark, sf_dir)
     drops = (
         clusters.where(F.col("doc_id") != F.col("cluster_rep"))
@@ -1388,9 +1281,8 @@ def _simhash_sql(d) -> str:
     )
     bits = " + ".join(f"(CASE WHEN v{p} >= 0 THEN {2 ** (p - 1)} ELSE 0 END)" for p in range(1, 17))
     words_from = (
-        "SELECT doc_id, md5(w) AS h FROM w LATERAL VIEW explode(ws) ex AS w"
-        if d is _SPARK_D
-        else "SELECT doc_id, md5(u.w) AS h FROM w, unnest(ws) AS u(w)"
+        f"SELECT doc_id, md5({d['lcol']('w')}) AS h "
+        f"FROM {d['lateral']('w', 'ws', 'w', gen='ex')}"
     )
     return f"""
     WITH w AS (SELECT doc_id, {d['split']('text')} AS ws FROM {d['pdocs']}),
@@ -1427,19 +1319,13 @@ def _spark_vecs(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     return spark.sql(sql)
 
 
-_VEC_SPARK = """
-    WITH v AS (SELECT vec_id, label,
-                      transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+def _vec_sql(d) -> str:
+    return f"""
+    WITH v AS (SELECT vec_id, label, {d['farr']('embedding')} AS e
                FROM embeddings),
     q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
     sims AS (
-      SELECT v.vec_id, v.label,
-             aggregate(zip_with(v.e, q.qe, (x, y) -> x * y),
-                       CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)
-             / NULLIF(SQRT(aggregate(v.e, CAST(0.0 AS DOUBLE),
-                                     (acc, x) -> acc + x * x))
-                      * SQRT(aggregate(q.qe, CAST(0.0 AS DOUBLE),
-                                       (acc, x) -> acc + x * x)), 0.0) AS cos_sim
+      SELECT v.vec_id, v.label, {d['cos']('v.e', 'q.qe')} AS cos_sim
       FROM v CROSS JOIN q
       WHERE v.vec_id != 0
     )
@@ -1449,23 +1335,8 @@ _VEC_SPARK = """
     LIMIT 20
     """
 
-_VEC_DUCK = """
-    WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
-               FROM embeddings),
-    q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
-    sims AS (
-      SELECT v.vec_id, v.label,
-             list_dot_product(v.e, q.qe)
-             / NULLIF(SQRT(list_dot_product(v.e, v.e))
-                      * SQRT(list_dot_product(q.qe, q.qe)), 0.0) AS cos_sim
-      FROM v CROSS JOIN q
-      WHERE v.vec_id != 0
-    )
-    SELECT vec_id, label, ROUND(cos_sim, 6) AS cos_sim
-    FROM sims
-    ORDER BY ROUND(cos_sim, 6) DESC, vec_id
-    LIMIT 20
-    """
+
+_VEC_SPARK, _VEC_DUCK = _dual(_vec_sql)
 
 
 @register("vec_topk", _VEC_DUCK)
@@ -1481,15 +1352,16 @@ _ANN_DIMS = 64
 _PLANE_W = f"(2.0 * {lcg_uniform_sql('(p * 64 + dim)', salt=71)} - 1.0)"
 
 
-def _ann_sigs_sql(d, posexp: str) -> str:
-    """The LSH index relation: one 8-bit signature per vector."""
+def _ann_sigs_sql(d, posexp: "str | None" = None) -> str:
+    """The LSH index relation: one 8-bit signature per vector, over the
+    component rows ``posexp`` (default: every embedding's d["comps"])."""
     return f"""
     WITH planes AS (
       SELECT p, dim, {_PLANE_W} AS w
       FROM (SELECT {d['expand']('0', str(_ANN_PLANES - 1))} AS p) pp,
            (SELECT {d['expand']('1', str(_ANN_DIMS))} AS dim) dd
     ),
-    comps AS ({posexp}),
+    comps AS ({posexp or d['comps']()}),
     dots AS (
       -- bigint micro-sum: order-independent and bit-identical across
       -- engines (a raw double SUM depends on partition merge order, and a
@@ -1515,14 +1387,12 @@ def _ann_tail(d, sigs: str) -> str:
       SELECT s.vec_id FROM {sigs} s, qsig
       WHERE s.sig = qsig.sig AND s.vec_id != 0
     ),
-    v AS (SELECT vec_id, label, {'transform(embedding, x -> CAST(x AS DOUBLE))' if d is _SPARK_D else 'CAST(embedding AS DOUBLE[])'} AS e
+    v AS (SELECT vec_id, label, {d['farr']('embedding')} AS e
           FROM embeddings),
     q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
     sims AS (
       SELECT /*+ BROADCAST(cand) */ v.vec_id, v.label,
-             {'aggregate(zip_with(v.e, q.qe, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / NULLIF(SQRT(aggregate(v.e, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x * x)) * SQRT(aggregate(q.qe, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x * x)), 0.0)'
-              if d is _SPARK_D else
-              'list_dot_product(v.e, q.qe) / NULLIF(SQRT(list_dot_product(v.e, v.e)) * SQRT(list_dot_product(q.qe, q.qe)), 0.0)'} AS cos_sim
+             {d['cos']('v.e', 'q.qe')} AS cos_sim
       FROM v JOIN cand ON cand.vec_id = v.vec_id CROSS JOIN q
     )
     SELECT vec_id, label, ROUND(cos_sim, 6) AS cos_sim
@@ -1532,11 +1402,9 @@ def _ann_tail(d, sigs: str) -> str:
     """
 
 
-_ANN_SIGS_SPARK = _ann_sigs_sql(
-    _SPARK_D,
-    "SELECT vec_id, pos + 1 AS dim, CAST(x AS DOUBLE) AS x "
-    "FROM embeddings LATERAL VIEW posexplode(embedding) AS pos, x",
-)
+_ANN_SIGS_SPARK = _ann_sigs_sql(_SPARK_D)
+
+
 def _as_cte(pipeline_sql: str, name: str, tail: str) -> str:
     """Wrap a ``WITH a AS (...), b AS (...) SELECT ...`` pipeline's final
     SELECT as one more CTE named ``name`` and append ``tail`` (which begins
@@ -1553,11 +1421,7 @@ def _as_cte(pipeline_sql: str, name: str, tail: str) -> str:
 
 
 _ANN_DUCK = _as_cte(
-    _ann_sigs_sql(
-        _DUCK_D,
-        "SELECT vec_id, generate_subscripts(embedding, 1) AS dim, "
-        "CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings",
-    ),
+    _ann_sigs_sql(_DUCK_D),
     "sigs",
     _ann_tail(_DUCK_D, "sigs"),
 )
@@ -1602,15 +1466,16 @@ _IVF_PROBES = 2
 _IVF_CENTROID_W = f"(2.0 * {lcg_uniform_sql('(c * 64 + dim)', salt=79)} - 1.0)"
 
 
-def _ivf_ranked_sql(d, posexp: str) -> str:
-    """The IVF index relation: per-vector centroid ranking (vec_id, c, rn)."""
+def _ivf_ranked_sql(d, posexp: "str | None" = None) -> str:
+    """The IVF index relation: per-vector centroid ranking (vec_id, c, rn)
+    over the component rows ``posexp`` (default: d["comps"])."""
     return f"""
     WITH centroids AS (
       SELECT c, dim, {_IVF_CENTROID_W} AS w
       FROM (SELECT {d['expand']('0', str(_IVF_K - 1))} AS c) cc,
            (SELECT {d['expand']('1', str(_ANN_DIMS))} AS dim) dd
     ),
-    comps AS ({posexp}),
+    comps AS ({posexp or d['comps']()}),
     dists AS (
       SELECT p.vec_id, ct.c,
              SUM(CAST(FLOOR((p.x - ct.w) * (p.x - ct.w) * 1000000.0) AS BIGINT)) AS d2
@@ -1632,14 +1497,12 @@ def _ivf_tail(d, ranked: str, probes: int = _IVF_PROBES) -> str:
       SELECT a.vec_id FROM assign a JOIN qprobe qp ON qp.c = a.c
       WHERE a.vec_id != 0
     ),
-    v AS (SELECT vec_id, label, {'transform(embedding, x -> CAST(x AS DOUBLE))' if d is _SPARK_D else 'CAST(embedding AS DOUBLE[])'} AS e
+    v AS (SELECT vec_id, label, {d['farr']('embedding')} AS e
           FROM embeddings),
     q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
     sims AS (
       SELECT /*+ BROADCAST(cand) */ v.vec_id, v.label,
-             {'aggregate(zip_with(v.e, q.qe, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / NULLIF(SQRT(aggregate(v.e, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x * x)) * SQRT(aggregate(q.qe, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x * x)), 0.0)'
-              if d is _SPARK_D else
-              'list_dot_product(v.e, q.qe) / NULLIF(SQRT(list_dot_product(v.e, v.e)) * SQRT(list_dot_product(q.qe, q.qe)), 0.0)'} AS cos_sim
+             {d['cos']('v.e', 'q.qe')} AS cos_sim
       FROM v JOIN cand ON cand.vec_id = v.vec_id CROSS JOIN q
     )
     SELECT vec_id, label, ROUND(cos_sim, 6) + 0.0 AS cos_sim
@@ -1649,17 +1512,9 @@ def _ivf_tail(d, ranked: str, probes: int = _IVF_PROBES) -> str:
     """
 
 
-_IVF_RANKED_SPARK = _ivf_ranked_sql(
-    _SPARK_D,
-    "SELECT vec_id, pos + 1 AS dim, CAST(x AS DOUBLE) AS x "
-    "FROM embeddings LATERAL VIEW posexplode(embedding) AS pos, x",
-)
+_IVF_RANKED_SPARK = _ivf_ranked_sql(_SPARK_D)
 _IVF_DUCK = _as_cte(
-    _ivf_ranked_sql(
-        _DUCK_D,
-        "SELECT vec_id, generate_subscripts(embedding, 1) AS dim, "
-        "CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings",
-    ),
+    _ivf_ranked_sql(_DUCK_D),
     "ranked",
     _ivf_tail(_DUCK_D, "ranked"),
 )
@@ -1710,11 +1565,7 @@ _PQ_SHORTLIST = 100  # ADC candidates kept for exact re-rank
 
 
 def _pq_subdiv(d) -> str:
-    return (
-        f"CAST((dim - 1) DIV {_PQ_SUB} AS INT)"
-        if d is _SPARK_D
-        else f"CAST((dim - 1) // {_PQ_SUB} AS INT)"
-    )
+    return f"CAST((dim - 1) {d['idiv']} {_PQ_SUB} AS INT)"
 
 
 def _pq_dists_sql(d, who: str) -> str:
@@ -1782,19 +1633,10 @@ def _pq_tail(d, codes: str) -> str:
     """
 
 
-_PQ_POSEXP_SPARK = (
-    "SELECT vec_id, pos + 1 AS dim, CAST(x AS DOUBLE) AS x "
-    "FROM embeddings LATERAL VIEW posexplode(embedding) AS pos, x"
-)
-_PQ_POSEXP_DUCK = (
-    "SELECT vec_id, generate_subscripts(embedding, 1) AS dim, "
-    "CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings"
-)
-
 # DuckDB one-statement twin: dists for ALL vectors once, codes = argmin,
 # qd = the query's slice of the same dists relation.
 _PQ_DUCK = (
-    f"WITH comps AS ({_PQ_POSEXP_DUCK}),"
+    f"WITH comps AS ({_DUCK_D['comps']()}),"
     + _pq_dists_sql(_DUCK_D, "")
     + f",\n    codes AS ({_PQ_CODES_TAIL}),"
     + "\n    qd AS (SELECT m, c, d2 FROM dists WHERE vec_id = 0),"
@@ -1829,14 +1671,14 @@ def vec_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     _indexed(
         spark,
         f"pq_codes|{sf_dir}",
-        f"WITH comps AS ({_PQ_POSEXP_SPARK}),"
+        f"WITH comps AS ({_SPARK_D['comps']()}),"
         + _pq_dists_sql(_SPARK_D, "")
         + _PQ_CODES_TAIL,
     ).createOrReplaceTempView("pq_codes")
     adc_rows = _indexed(
         spark,
         f"pq_qd|{sf_dir}",
-        f"WITH comps AS ({_PQ_POSEXP_SPARK}),"
+        f"WITH comps AS ({_SPARK_D['comps']()}),"
         + _pq_dists_sql(_SPARK_D, "WHERE vec_id = 0")
         + "\n    SELECT m, c, d2 FROM dists",
     ).collect()
@@ -1967,9 +1809,8 @@ def _nd_v_sql(d) -> str:
     # interpreted in Spark, so fold count is the verify-stage cost driver
     return f"""
     SELECT vec_id, label, e,
-           {'SQRT(aggregate(e, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x * x))'
-            if d is _SPARK_D else 'SQRT(list_dot_product(e, e))'} AS nrm
-    FROM (SELECT vec_id, label, {'transform(embedding, x -> CAST(x AS DOUBLE))' if d is _SPARK_D else 'CAST(embedding AS DOUBLE[])'} AS e
+           {d['norm']('e')} AS nrm
+    FROM (SELECT vec_id, label, {d['farr']('embedding')} AS e
           FROM embeddings) ve
     """
 
@@ -2042,28 +1883,12 @@ def _nd_tail(
     the bucketed scan."""
     del broadcast_cand
 
-    def dot(a: str, b: str) -> str:
-        if d is _SPARK_D:
-            return (
-                f"aggregate(zip_with({a}.e, {b}.e, (x, y) -> x * y), "
-                f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-            )
-        return f"list_dot_product({a}.e, {b}.e)"
-
     def cos(a: str, b: str) -> str:
-        return f"{dot(a, b)} / NULLIF({a}.nrm * {b}.nrm, 0.0)"
+        return f"{d['dot'](f'{a}.e', f'{b}.e')} / NULLIF({a}.nrm * {b}.nrm, 0.0)"
 
     if dense_guard:
-        blk = (
-            f"((rn - 1) DIV {_ND_NEIGHBORS})"
-            if d is _SPARK_D
-            else f"((rn - 1) // {_ND_NEIGHBORS})"
-        )
-        expand_blk = (
-            "explode(array(blk, blk + 1))"
-            if d is _SPARK_D
-            else "unnest([blk, blk + 1])"
-        )
+        blk = f"((rn - 1) {d['idiv']} {_ND_NEIGHBORS})"
+        expand_blk = d["unnest"](d["array"]("blk, blk + 1"))
         if members_rel is None:
             member_ctes = f"""
     bsize AS (
@@ -2131,10 +1956,6 @@ def _nd_tail(
     """
 
 
-_ND_POSEXP_SPARK = (
-    "SELECT vec_id, pos + 1 AS dim, CAST(x AS DOUBLE) AS x "
-    "FROM embeddings LATERAL VIEW posexplode(embedding) AS pos, x"
-)
 # The DuckDB side is one statement: planes/comps/dots CTEs + sigs + v +
 # the shared tail (DuckDB materializes multiply-referenced CTEs itself).
 _ND_DUCK = (
@@ -2144,8 +1965,7 @@ _ND_DUCK = (
       FROM (SELECT {_DUCK_D['expand']('0', str(_ND_PLANES - 1))} AS p) pp,
            (SELECT {_DUCK_D['expand']('1', str(_ANN_DIMS))} AS dim) dd
     ),
-    comps AS (SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-                     CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
+    comps AS ({_DUCK_D['comps']()}),
     dots AS (
       SELECT c.vec_id, CAST(FLOOR(pl.p / 8) AS INT) AS band, pl.p,
              SUM(CAST(FLOOR(c.x * pl.w * 1000000.0) AS BIGINT)) AS dot_p
@@ -2181,11 +2001,11 @@ def embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN index writes to storage. Band width adapts to corpus size (see
     _nd_bits) — the parquet footer row count is read driver-side, no job."""
     load(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    bits = _nd_bits(_parquet_rows(os.path.join(sf_dir, "embeddings.parquet")))
+    bits = _nd_bits(table_rows(sf_dir, "embeddings"))
     _indexed(
         spark,
         f"nd_sigs|{bits}|{sf_dir}",
-        _nd_sigs_sql(_SPARK_D, _ND_POSEXP_SPARK, bits),
+        _nd_sigs_sql(_SPARK_D, _SPARK_D["comps"](), bits),
     ).createOrReplaceTempView("nd_sigs")
     _indexed(spark, f"nd_v|{sf_dir}", _nd_v_sql(_SPARK_D)).createOrReplaceTempView(
         "nd_v"
@@ -2219,11 +2039,7 @@ def _tfidf_sql(d) -> str:
     # ROUNDED score with the term string as tiebreak, so ranking is
     # engine-independent. Window partitions by doc_id — the same key the
     # TF aggregate already clustered on.
-    unnest_toks = (
-        "SELECT doc_id, tok AS term FROM w LATERAL VIEW explode(ws) x AS tok"
-        if d is _SPARK_D
-        else "SELECT doc_id, u.term FROM w, unnest(w.ws) AS u(term)"
-    )
+    unnest_toks = d["terms"]("doc_id, ")
     return f"""
     WITH w AS (SELECT doc_id, {d['split']('text')} AS ws FROM {d['pdocs']}),
     toks AS ({unnest_toks}),
@@ -2330,7 +2146,7 @@ _PII_PHONE = "[+]?[0-9][0-9 -]{6,}[0-9]"
 
 
 def _pii_sql(d) -> str:
-    g = ", 'g'" if d is not _SPARK_D else ""  # DuckDB needs the global flag
+    g = d["gflag"]
     red = (
         f"regexp_replace(regexp_replace(text, '{_PII_EMAIL}', '<EMAIL>'{g}), "
         f"'{_PII_PHONE}', '<PHONE>'{g})"
@@ -2392,10 +2208,7 @@ def _subdup_cold(d) -> str:
 
 
 def _substring_dup_sql(d, cap: int = _RUN_CAP) -> str:
-    if d is _SPARK_D:
-        run = "md5(array_join(slice(ws, i, 10), ' '))"
-    else:
-        run = "md5(array_to_string(ws[i:i+9], ' '))"
+    run = f"md5({d['joinarr'](d['slice']('ws', 'i', 10, bare=True))})"
     return f"""
     WITH w AS (SELECT doc_id, {d['split']('text')} AS ws FROM {d['pdocs']}
                WHERE {d['len'](d['split']('text'))} >= 10),
@@ -2559,11 +2372,7 @@ def _xent_sql(d) -> str:
     # order-independent and bit-identical across engines; the final value
     # carries the usual ROUND(.,6)+0.0. T comes from a documents scan
     # (SUM of word counts — no second explode).
-    unnest_toks = (
-        "SELECT doc_id, tok AS term FROM w LATERAL VIEW explode(ws) x AS tok"
-        if d is _SPARK_D
-        else "SELECT doc_id, u.term FROM w, unnest(w.ws) AS u(term)"
-    )
+    unnest_toks = d["terms"]("doc_id, ")
     total = f"SELECT CAST(SUM({d['len'](d['split']('text'))}) AS DOUBLE) AS t FROM documents"
     if d is _SPARK_D:
         # Broadcast-vocab plan: the big relation (tf) NEVER moves. tf
@@ -2639,8 +2448,7 @@ def unigram_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bigram_xent_sql(d) -> str:
-    spark = d is _SPARK_D
-    if spark:
+    if d is _SPARK_D:
         # size(ws) >= 2 guard: Spark's sequence(start, stop) defaults the
         # step to -1 when start > stop, so a single-token doc would explode
         # sequence(1, 0) = [1, 0] and element_at(ws, 0) throws
@@ -2739,12 +2547,7 @@ _ZIPF_CAP = 1000
 
 
 def _zipf_sql(d) -> str:
-    spark = d is _SPARK_D
-    toks = (
-        "SELECT source, tok AS term FROM w LATERAL VIEW explode(ws) x AS tok"
-        if spark
-        else "SELECT source, u.term FROM w, unnest(w.ws) AS u(term)"
-    )
+    toks = d["terms"]("source, ")
     return f"""
     WITH w AS (SELECT source, {d['split']('text')} AS ws FROM {d['pdocs']}),
     toks AS ({toks}),
@@ -2832,12 +2635,7 @@ def _hll_registers_sql(d, docs_rel: str) -> str:
     """(source, bucket, mj) registers over any docs relation — the
     MAX-mergeable sketch fragment shared by the registry query and the
     streaming maintainer (streaming/jobs.py hll_ingest_stream)."""
-    spark = d is _SPARK_D
-    toks = (
-        "SELECT source, tok AS term FROM w LATERAL VIEW explode(ws) x AS tok"
-        if spark
-        else "SELECT source, u.term FROM w, unnest(w.ws) AS u(term)"
-    )
+    toks = d["terms"]("source, ")
     return f"""
     WITH w AS (SELECT source, {d['split']('text')} AS ws FROM {docs_rel}),
     toks AS ({toks}),
@@ -2964,13 +2762,9 @@ _CMS_TOPK = 32
 
 
 def _cms_sql(d) -> str:
-    spark = d is _SPARK_D
-    toks = (
-        "SELECT tok AS term FROM w LATERAL VIEW explode(ws) x AS tok"
-        if spark
-        else "SELECT u.term FROM w, unnest(w.ws) AS u(term)"
-    )
-    if spark:
+    toks = d["terms"]()
+    # Spark unpivots the rows with stack(); DuckDB unnests struct literals
+    if d is _SPARK_D:
         rows_unpivot = (
             "LATERAL VIEW stack(" + str(_CMS_D) + ", "
             + ", ".join(
@@ -3146,11 +2940,7 @@ def ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _skl_ssc_sql(d) -> str:
     """The per-(source, term) count relation — ONE corpus explode pass."""
-    unnest_toks = (
-        "SELECT source, tok AS term FROM w LATERAL VIEW explode(ws) x AS tok"
-        if d is _SPARK_D
-        else "SELECT source, u.term FROM w, unnest(w.ws) AS u(term)"
-    )
+    unnest_toks = d["terms"]("source, ")
     # lc1 = the snapped micro-nat log of (c+1), computed ONCE per
     # (source, term) row here instead of per intersection-join row (the
     # join output is ~pairs-sharing-a-term x vocab — 19M ln calls at
@@ -3275,12 +3065,7 @@ def _dsir_sql(d) -> str:
     # separate scalar subquery would re-inline (re-explode) the corpus CTE
     # a third time under Spark — a whole extra corpus pass at scale — while
     # the window costs one single-partition exchange of ~vocab rows.
-    unnest_toks = (
-        "SELECT doc_id, source, tok AS term FROM w"
-        " LATERAL VIEW explode(ws) x AS tok"
-        if d is _SPARK_D
-        else "SELECT doc_id, source, u.term FROM w, unnest(w.ws) AS u(term)"
-    )
+    unnest_toks = d["terms"]("doc_id, source, ")
     is_tgt = f"source = '{_DSIR_TARGET}'"
     if d is _SPARK_D:
         # unigram_xent's broadcast-vocab shape: tf aggregates exchange-free
@@ -3432,8 +3217,6 @@ def dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle twin expresses the same K via a scalar COUNT over the
     doc-grain relation, fine in-process."""
     import uuid
-
-    from ..sources import table_rows
 
     k = -(-table_rows(sf_dir, "documents") // _DSIR_KEEP_DEN)
     dsir = dsir_weights(spark, sf_dir)

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.detrand import lcg_uniform_sql
 from ..sources import load
-from . import _duck_expand, _spark_expand, register
+from . import _DUCK_D, _SPARK_D, register
 
 # --------------------------------------------------------------------------
 # G13 — MCAR over the events fixture, swept over the rate grid.
@@ -70,10 +70,10 @@ _NVAR_U = lcg_uniform_sql("cellkey", salt=54)
 _VSEL_U = lcg_uniform_sql("(cellkey * 8 + v)", salt=53)
 
 
-def _block_cte(expand) -> str:
+def _block_cte(d) -> str:
     return f"""
-    WITH s AS (SELECT {expand('0', str(_BM_SERIES - 1))} AS sid),
-    rows_ AS (SELECT sid, {expand('0', str(_BM_POINTS - 1))} AS t FROM s),
+    WITH s AS (SELECT {d['expand']('0', str(_BM_SERIES - 1))} AS sid),
+    rows_ AS (SELECT sid, {d['expand']('0', str(_BM_POINTS - 1))} AS t FROM s),
     keyed AS (
       SELECT sid, t, CAST(sid * 100000 + t AS BIGINT) AS cellkey FROM rows_
     ),
@@ -88,14 +88,14 @@ def _block_cte(expand) -> str:
       SELECT sid, t, blen, v
       FROM (
         SELECT sid, t, blen, n_affected, cellkey,
-               {expand('0', str(_BM_VARS - 1))} AS v
+               {d['expand']('0', str(_BM_VARS - 1))} AS v
         FROM seeds
       ) sv
       WHERE {_VSEL_U} < CAST(n_affected AS DOUBLE) / {_BM_VARS}
     ),
     spans AS (
       SELECT sid, v,
-             {expand('t', f'LEAST(t + blen - 1, {_BM_POINTS - 1})')} AS tt
+             {d['expand']('t', f'LEAST(t + blen - 1, {_BM_POINTS - 1})')} AS tt
       FROM seed_vars
     ),
     cells AS (SELECT DISTINCT sid, v, tt FROM spans),
@@ -113,11 +113,11 @@ def _block_cte(expand) -> str:
     """
 
 
-@register("block_mask", _block_cte(_duck_expand))
+@register("block_mask", _block_cte(_DUCK_D))
 def block_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Block-missingness mask by seed-and-expand (G14, d2.py:112-138):
     Bernoulli seeds carry a drawn length and per-variable hit set, spans
     expand via sequence+explode, overlapping spans union, and block counts
     come from a gaps-and-islands window — no sequential state, scales as one
     shuffle on (series, var)."""
-    return spark.sql(_block_cte(_spark_expand))
+    return spark.sql(_block_cte(_SPARK_D))

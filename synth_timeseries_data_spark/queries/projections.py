@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ..functions.detrand import gaussian_sql, laplace_sql, lcg_uniform_sql
 from ..functions.spread import register_spread_view
 from ..sources import load
-from . import _duck_expand, _spark_expand, register
+from . import _DUCK_D, _SPARK_D, register
 
 # --------------------------------------------------------------------------
 # G9+G10 — trend + two-harmonic seasonality over the reference's (trend,
@@ -30,7 +30,7 @@ _TS_N = 200
 _TS_PERIOD = 12
 
 
-def _trend_season_cte(expand) -> str:
+def _trend_season_cte(d) -> str:
     return f"""
     WITH strengths AS (
       SELECT ts.trend_strength, ss.seasonal_strength
@@ -38,9 +38,9 @@ def _trend_season_cte(expand) -> str:
       CROSS JOIN (SELECT CAST(0.3 AS DOUBLE) AS seasonal_strength UNION ALL SELECT 0.5) ss
     ),
     vars_ AS (SELECT trend_strength, seasonal_strength,
-                     {expand('0', '3')} AS var_idx FROM strengths),
+                     {d['expand']('0', '3')} AS var_idx FROM strengths),
     pts AS (SELECT trend_strength, seasonal_strength, var_idx,
-                   {expand('0', str(_TS_N - 1))} AS t FROM vars_)
+                   {d['expand']('0', str(_TS_N - 1))} AS t FROM vars_)
     SELECT trend_strength, seasonal_strength, var_idx, t,
            -- + 0.0 normalizes IEEE signed zero: ROUND can yield -0.0 in one
            -- engine and +0.0 in the other for sin/cos sums that cancel, which
@@ -54,11 +54,11 @@ def _trend_season_cte(expand) -> str:
     """
 
 
-@register("trend_season", _trend_season_cte(_duck_expand))
+@register("trend_season", _trend_season_cte(_DUCK_D))
 def trend_season(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic trend + seasonality components over the c1 sweep grid —
     pure projection, zero shuffles, whole-stage codegen end to end."""
-    return spark.sql(_trend_season_cte(_spark_expand))
+    return spark.sql(_trend_season_cte(_SPARK_D))
 
 
 # --------------------------------------------------------------------------

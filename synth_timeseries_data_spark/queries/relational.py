@@ -16,7 +16,7 @@ from ..functions.materialize import persisted
 from ..functions.numeric import davg, dsum, sql_davg, sql_dsum
 from ..functions.scale import BROADCAST_CAP_BYTES, broadcast_if_small
 from ..sources import load, table_rows
-from . import register
+from . import _DUCK_D, _SPARK_D, register
 
 # Shared deterministic-uniform snippet: the Spark expression and the DuckDB
 # oracle embed the *same* formula string, so masks match bit-for-bit.
@@ -28,10 +28,6 @@ _MCAR_U = lcg_uniform_sql("event_id", salt=3)
 # --------------------------------------------------------------------------
 
 _WIN_ORACLE = "PARTITION BY user_id ORDER BY ts, event_id"
-
-# events.ts arrives as an epoch-NANOSECOND bigint (see session.py nanosAsLong);
-# canonical time scale is integer microseconds (≡ DuckDB epoch_us(ts)).
-_TS_US = "(ts div 1000)"
 
 
 @register(
@@ -53,7 +49,7 @@ def lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(
         "user_id",
         "event_id",
-        F.expr(_TS_US).alias("ts_us"),
+        F.expr(_SPARK_D["tus"]).alias("ts_us"),
         "value",
         F.lag("value", 1).over(w).alias("value_lag1"),
         F.lag("value", 2).over(w).alias("value_lag2"),
@@ -101,7 +97,7 @@ def ts_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     microsecond gaps."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ev = load(spark, sf_dir, "events")
-    t = F.expr(_TS_US)
+    t = F.expr(_SPARK_D["tus"])
     return ev.select(
         "user_id",
         "event_id",
@@ -126,7 +122,7 @@ def sampling_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(gap/width) + groupBy().count()."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ev = load(spark, sf_dir, "events")
-    t = F.expr(_TS_US)
+    t = F.expr(_SPARK_D["tus"])
     gaps = ev.select((t - F.lag(t, 1).over(w)).alias("gap_us")).where(
         F.col("gap_us").isNotNull()
     )
@@ -269,10 +265,9 @@ def corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _T0_US = 1704067200000000  # 2024-01-01 UTC — fixed origin for trend regressions
-_TDAYS = f"((epoch_us(ts) - {_T0_US}) / 86400000000.0)"
 
 
-def _trend_fit_sql(tus: str) -> str:
+def _trend_fit_sql(d) -> str:
     # degree-1 least squares from exact micro-floored sums: REGR_SLOPE /
     # REGR_INTERCEPT are differently-implemented streaming aggregates per
     # engine (agreement at round-6 was data luck), while identical bigint
@@ -285,7 +280,7 @@ def _trend_fit_sql(tus: str) -> str:
     # and BIGINT / DECIMAL runs exact decimal division — higher precision
     # than Spark's double division, which then diverges inside
     # FLOOR(x·x·1e6). DOUBLE / DECIMAL promotes to double in both engines.
-    td = f"(CAST({tus} - {_T0_US} AS DOUBLE) / 86400000000.0)"
+    td = f"(CAST({d['tus']} - {_T0_US} AS DOUBLE) / 86400000000.0)"
     return f"""
     WITH pts AS (SELECT user_id, value, {td} AS x FROM events),
     s AS (
@@ -314,13 +309,13 @@ def _trend_fit_sql(tus: str) -> str:
     """
 
 
-@register("trend_fit", _trend_fit_sql("epoch_us(ts)"))
+@register("trend_fit", _trend_fit_sql(_DUCK_D))
 def trend_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """np.polyfit(time, y, 1) per series (Codes/c1.py:400-403) — ordinary
     least squares from exact scaled-bigint raw sums in one codegen'd
     aggregation pass (see _trend_fit_sql notes)."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_trend_fit_sql(_TS_US))
+    return spark.sql(_trend_fit_sql(_SPARK_D))
 
 
 @register(

@@ -18,16 +18,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources import load
-from . import register
+from . import _DUCK_D, _SPARK_D, register
 
 _HOUR_US = 3_600_000_000
 _QTR_US = 900_000_000
 _GAP_US = 1_800_000_000  # 30 min session gap
 
 
-def _tumbling_sql(tus: str) -> str:
+def _tumbling_sql(d) -> str:
     return f"""
-    WITH e AS (SELECT {tus} AS tus, event_type, value FROM events)
+    WITH e AS (SELECT {d['tus']} AS tus, event_type, value FROM events)
     SELECT CAST(FLOOR(tus / {_HOUR_US}.0) AS BIGINT) AS hour_bucket,
            event_type,
            COUNT(*) AS n_events,
@@ -37,16 +37,16 @@ def _tumbling_sql(tus: str) -> str:
     """
 
 
-@register("tumbling_agg", _tumbling_sql("epoch_us(ts)"))
+@register("tumbling_agg", _tumbling_sql(_DUCK_D))
 def tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling windows × event_type — the batch analog of
     `groupBy(window(ts, '1 hour'), event_type)`; one shuffle, map-side
     partial aggregation."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_tumbling_sql("(ts div 1000)"))
+    return spark.sql(_tumbling_sql(_SPARK_D))
 
 
-def _sliding_sql(tus: str, spark_dialect: bool = False) -> str:
+def _sliding_sql(d) -> str:
     # Single-aggregation form: each event in quarter q belongs to exactly
     # the windows starting at q-3..q, so explode by k=0..3 and aggregate
     # once on (win_start_qtr, event_type). The 4× row inflation happens on
@@ -64,18 +64,12 @@ def _sliding_sql(tus: str, spark_dialect: bool = False) -> str:
     # ladder tier (100M events) that map-side CPU is 42 s vs 13.5 s for the
     # rollup — so sliding_agg size-gates between the two forms on the
     # parquet footer row count (no job), the _nd_bits/_sd_k precedent.
-    expand = (
-        "LATERAL VIEW explode(sequence(0, 3)) ks AS k"
-        if spark_dialect
-        else ", unnest(generate_series(0, 3)) AS ks(k)"
-    )
     return f"""
-    WITH e AS (SELECT {tus} AS tus, event_type, value FROM events),
+    WITH e AS (SELECT {d['tus']} AS tus, event_type, value FROM events),
     assigned AS (
       SELECT CAST(FLOOR(tus / {_QTR_US}.0) AS BIGINT) - k AS win_start_qtr,
              event_type, value
-      FROM e
-      {expand}
+      FROM {d['lateral']("e", d['seq']('0', '3'), "k", alias="ks", gen="ks")}
     )
     SELECT CAST(win_start_qtr AS DOUBLE) AS win_start_qtr,
            event_type,
@@ -87,7 +81,7 @@ def _sliding_sql(tus: str, spark_dialect: bool = False) -> str:
     """
 
 
-def _sliding_rollup_sql(tus: str) -> str:
+def _sliding_rollup_sql(d) -> str:
     # Two-level rollup for the large-input tier: aggregate per quarter
     # bucket FIRST (tumbling-sized — each fact row passes the hash
     # aggregate exactly once), then explode the per-quarter PARTIALS by
@@ -96,7 +90,7 @@ def _sliding_rollup_sql(tus: str) -> str:
     # the price is a second (partial-sized) exchange. Gated in by
     # _SLIDING_ROLLUP_ROWS.
     return f"""
-    WITH e AS (SELECT {tus} AS tus, event_type, value FROM events),
+    WITH e AS (SELECT {d['tus']} AS tus, event_type, value FROM events),
     partials AS (
       SELECT CAST(FLOOR(tus / {_QTR_US}.0) AS BIGINT) AS qtr, event_type,
              COUNT(*) AS n,
@@ -106,7 +100,7 @@ def _sliding_rollup_sql(tus: str) -> str:
     ),
     assigned AS (
       SELECT qtr - k AS win_start_qtr, event_type, n, sv
-      FROM partials LATERAL VIEW explode(sequence(0, 3)) ks AS k
+      FROM {d['lateral']("partials", d['seq']('0', '3'), "k", alias="ks", gen="ks")}
     )
     SELECT CAST(win_start_qtr AS DOUBLE) AS win_start_qtr,
            event_type,
@@ -126,7 +120,7 @@ def _sliding_rollup_sql(tus: str) -> str:
 _SLIDING_ROLLUP_ROWS = 2_000_000
 
 
-@register("sliding_agg", _sliding_sql("epoch_us(ts)"))
+@register("sliding_agg", _sliding_sql(_DUCK_D))
 def sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour windows sliding every 15 min — the `window(ts, '1h', '15m')`
     analog as ONE hash aggregation over the k=0..3 window explode; map-side
@@ -138,15 +132,15 @@ def sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
     if table_rows(sf_dir, "events") > _SLIDING_ROLLUP_ROWS:
-        return spark.sql(_sliding_rollup_sql("(ts div 1000)"))
-    return spark.sql(_sliding_sql("(ts div 1000)", spark_dialect=True))
+        return spark.sql(_sliding_rollup_sql(_SPARK_D))
+    return spark.sql(_sliding_sql(_SPARK_D))
 
 
-def _session_sql(tus: str) -> str:
+def _session_sql(d) -> str:
     return f"""
     WITH e AS (
-      SELECT user_id, event_id, {tus} AS tus,
-             LAG({tus}, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_tus
+      SELECT user_id, event_id, {d['tus']} AS tus,
+             LAG({d['tus']}, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_tus
       FROM events
     ),
     marked AS (
@@ -174,11 +168,11 @@ def _session_sql(tus: str) -> str:
     """
 
 
-@register("session_agg", _session_sql("epoch_us(ts)"))
+@register("session_agg", _session_sql(_DUCK_D))
 def session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows with a 30-min inactivity gap — gaps-and-islands
     (lag → new-session flag → running sum) per series; the batch analog of
     `session_window(ts, '30 minutes')` and the reference's burst-mask state
     (G14). One window shuffle on the series key."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_session_sql("(ts div 1000)"))
+    return spark.sql(_session_sql(_SPARK_D))

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.detrand import exponential_sql
 from ..sources import load
-from . import _duck_expand, _spark_expand, register
+from . import _DUCK_D, _SPARK_D, register
 
 # ---------------------------------------------------------------------------
 # G7 — irregular timestamps: cumulative exponential gaps with a min-gap floor.
@@ -51,10 +51,10 @@ _SCALE = _TOTAL_TIME / _N_POINTS
 _GAP_U = exponential_sql("cellkey", salt=41, scale=_SCALE)
 
 
-def _irr_cte(expand) -> str:
+def _irr_cte(d) -> str:
     return f"""
-    WITH s AS (SELECT {expand('0', str(_N_SERIES - 1))} AS series_id),
-    pts AS (SELECT series_id, {expand('1', str(_N_POINTS))} AS i FROM s),
+    WITH s AS (SELECT {d['expand']('0', str(_N_SERIES - 1))} AS series_id),
+    pts AS (SELECT series_id, {d['expand']('1', str(_N_POINTS))} AS i FROM s),
     keyed AS (
       SELECT series_id, i,
              CAST(series_id * 100000 + i AS BIGINT) AS cellkey
@@ -75,20 +75,20 @@ def _irr_cte(expand) -> str:
     """
 
 
-@register("irregular_ts", _irr_cte(_duck_expand))
+@register("irregular_ts", _irr_cte(_DUCK_D))
 def irregular_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Irregular timestamps as a prefix-sum of floored exponential gaps
     (G7, a2.py:146-160 family) — LCG-uniform → inverse-CDF exponential →
     running-sum window; bit-built from the same SQL text in both engines
     (ln() rounded to 6)."""
-    return spark.sql(_irr_cte(_spark_expand))
+    return spark.sql(_irr_cte(_SPARK_D))
 
 
 # ---------------------------------------------------------------------------
 # G8 / Q5 — nearest-abs as-of lag over the events fixture.
 # ---------------------------------------------------------------------------
 
-def _asof_sql(tus: str) -> str:
+def _asof_sql(d) -> str:
     """Banded nearest-abs as-of oracle with a DATA-DERIVED band.
 
     The candidate band is not a fixture-calibrated constant: ``band``
@@ -105,7 +105,7 @@ def _asof_sql(tus: str) -> str:
     """
     return f"""
     WITH ev AS (
-      SELECT user_id, event_id, value, {tus} AS tus,
+      SELECT user_id, event_id, value, {d['tus']} AS tus,
              ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
       FROM events
     ),
@@ -176,7 +176,7 @@ def _asof_sql(tus: str) -> str:
     """
 
 
-_ASOF_DUCK = _asof_sql("epoch_us(ts)")
+_ASOF_DUCK = _asof_sql(_DUCK_D)
 
 # Spark plan: bracket-based exact argmin, JOIN-FREE (see module docstring).
 # For each probe (event, k) the answer is either the last point at-or-below
@@ -430,7 +430,7 @@ def rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ITP_RATE = 0.2  # the rate grid's middle point (d1.py:386)
 
 
-def _interpolate_sql(spark_side: bool, carry: tuple = ()) -> str:
+def _interpolate_sql(d, carry: tuple = ()) -> str:
     """``carry``: (source_expr, name) pass-through columns for composers —
     imputation_error carries the TRUTH value and event_type through the
     pipeline instead of joining back to the events scan (r10
@@ -439,18 +439,12 @@ def _interpolate_sql(spark_side: bool, carry: tuple = ()) -> str:
     from ..functions.detrand import lcg_uniform_sql
 
     u = lcg_uniform_sql("event_id", salt=3)
-    tus = "ts DIV 1000" if spark_side else "epoch_us(ts)"
     carry_src = "".join(f", {src} AS {name}" for src, name in carry)
     carry_thru = "".join(f", {name}" for _, name in carry)
-    if spark_side:
-        lastnn = lambda x: f"last_value({x}, true)"
-        firstnn = lambda x: f"first_value({x}, true)"
-    else:
-        lastnn = lambda x: f"last_value({x} IGNORE NULLS)"
-        firstnn = lambda x: f"first_value({x} IGNORE NULLS)"
+    lastnn, firstnn = d["lastnn"], d["firstnn"]
     return f"""
     WITH m AS (
-      SELECT user_id, event_id, {tus} AS ts_us,
+      SELECT user_id, event_id, {d['tus']} AS ts_us,
              CASE WHEN {u} < {_ITP_RATE} THEN NULL ELSE value END AS v{carry_src}
       FROM events
     ),
@@ -480,7 +474,7 @@ def _interpolate_sql(spark_side: bool, carry: tuple = ()) -> str:
     """
 
 
-_ITP_DUCK = _interpolate_sql(False)
+_ITP_DUCK = _interpolate_sql(_DUCK_D)
 
 
 @register("interpolate_ts", _ITP_DUCK)
@@ -503,7 +497,7 @@ def interpolate_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     The interpolation arithmetic is exact-integer time deltas cast to
     double, so both engines emit bit-identical doubles."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_interpolate_sql(True))
+    return spark.sql(_interpolate_sql(_SPARK_D))
 
 
 # --------------------------------------------------------------------------
@@ -518,9 +512,8 @@ def interpolate_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _outlier_sql(spark_side: bool) -> str:
-    tus = "ts DIV 1000" if spark_side else "epoch_us(ts)"
-    idiv = "DIV" if spark_side else "//"
+def _outlier_sql(d) -> str:
+    tus, idiv = d["tus"], d["idiv"]
     return f"""
     WITH base AS (
       SELECT user_id, event_id, {tus} AS ts_us, value,
@@ -552,7 +545,7 @@ def _outlier_sql(spark_side: bool) -> str:
     """
 
 
-_OUTLIER_DUCK = _outlier_sql(False)
+_OUTLIER_DUCK = _outlier_sql(_DUCK_D)
 
 
 @register("outlier_flags", _OUTLIER_DUCK)
@@ -571,7 +564,7 @@ def outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition after a series-keyed repartition — nothing is
     corpus-global."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_outlier_sql(True))
+    return spark.sql(_outlier_sql(_SPARK_D))
 
 
 # --------------------------------------------------------------------------
@@ -584,8 +577,8 @@ def outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _imputation_error_sql(spark_side: bool) -> str:
-    if spark_side:
+def _imputation_error_sql(d) -> str:
+    if d is _SPARK_D:
         # r10 optimization: the truth value and event_type are columns of
         # the SAME events scan the interpolation pipeline masks, so carry
         # them through the window instead of joining the filled relation
@@ -594,7 +587,7 @@ def _imputation_error_sql(spark_side: bool) -> str:
         # every aggregate are identical because the join was 1:1 on
         # event_id. The DuckDB oracle keeps the composed join form.
         filled = _interpolate_sql(
-            True, carry=(("value", "v_true"), ("event_type", "event_type"))
+            d, carry=(("value", "v_true"), ("event_type", "event_type"))
         )
         return f"""
     WITH filled AS ({filled})
@@ -621,7 +614,7 @@ def _imputation_error_sql(spark_side: bool) -> str:
     WHERE f.was_masked
     GROUP BY f.event_type
     """
-    filled = _interpolate_sql(spark_side)
+    filled = _interpolate_sql(d)
     return f"""
     WITH filled AS ({filled})
     SELECT e.event_type,
@@ -650,7 +643,7 @@ def _imputation_error_sql(spark_side: bool) -> str:
     """
 
 
-_IMP_ERR_DUCK = _imputation_error_sql(False)
+_IMP_ERR_DUCK = _imputation_error_sql(_DUCK_D)
 
 
 @register("imputation_error", _IMP_ERR_DUCK)
@@ -670,7 +663,7 @@ def imputation_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id-equi join back to the truth scan, and one
     event-type-bounded aggregation with map-side partials."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_imputation_error_sql(True))
+    return spark.sql(_imputation_error_sql(_SPARK_D))
 
 
 # --------------------------------------------------------------------------
@@ -689,12 +682,12 @@ def imputation_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ACF_LAGS = 8
 
 
-def _acf_sql(spark_side: bool) -> str:
-    tus = "ts DIV 1000" if spark_side else "epoch_us(ts)"
+def _acf_sql(d) -> str:
+    tus = d["tus"]
     lags = ", ".join(
         f"LAG(value, {k}) OVER win AS l{k}" for k in range(1, _ACF_LAGS + 1)
     )
-    if spark_side:
+    if d is _SPARK_D:
         # stack() unpivots in ONE pass of the window relation; a UNION ALL
         # of per-lag branches would re-execute the window 8x (Spark
         # inlines CTEs — the discovery_benchmark metric-tail lesson)
@@ -750,7 +743,7 @@ def _acf_sql(spark_side: bool) -> str:
     """
 
 
-_ACF_DUCK = _acf_sql(False)
+_ACF_DUCK = _acf_sql(_DUCK_D)
 
 
 @register("acf", _ACF_DUCK)
@@ -767,7 +760,7 @@ def acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no re-execution, no join); the aggregation is series×8-bounded with
     map-side partials. Skew bound = longest single series."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_acf_sql(True))
+    return spark.sql(_acf_sql(_SPARK_D))
 
 
 # --------------------------------------------------------------------------
@@ -813,17 +806,17 @@ def _pacf_snap(v: str, limit: str) -> str:
     )
 
 
-def _pacf_prefix(spark_side: bool) -> str:
+def _pacf_prefix(d) -> str:
     """The CTEs both engines share, without the WITH keyword: the lag
     window, the lag-pair unpivot, the exact-sum aggregation and the pivot
     ``r`` — one row per series carrying the nano-scaled autocorrelation
     BIGINTs rn1..rnL, the whole input of the Durbin-Levinson fold."""
     L = _PACF_LAGS
-    tus = "ts DIV 1000" if spark_side else "epoch_us(ts)"
+    tus = d["tus"]
     lags = ", ".join(
         f"LAG(value, {k}) OVER win AS l{k}" for k in range(1, L + 1)
     )
-    if spark_side:
+    if d is _SPARK_D:
         # lag 0 rides in the same stack() unpivot: its row is the series'
         # own (n, Σx, Σx²) — the c0/mean inputs — so no separate totals
         # aggregation or join is needed.
@@ -946,11 +939,11 @@ def _pacf_dl_duck(rlt: str = "rlt") -> str:
 
 _PACF_RNS = ", ".join(f"rn{k}" for k in range(1, _PACF_LAGS + 1))
 _PACF_DUCK = f"""
-    WITH RECURSIVE {_pacf_prefix(False).lstrip()},
+    WITH RECURSIVE {_pacf_prefix(_DUCK_D).lstrip()},
     rlt AS (SELECT user_id, [{_PACF_RNS}] AS rl FROM r),
     {_pacf_dl_duck().lstrip()}"""
 _PACF_RL_SPARK = f"""
-    WITH {_pacf_prefix(True).lstrip()}
+    WITH {_pacf_prefix(_SPARK_D).lstrip()}
     SELECT user_id, {_PACF_RNS} FROM r
     """
 
@@ -1099,8 +1092,8 @@ def pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _cusum_sql(spark_side: bool) -> str:
-    tus = "ts DIV 1000" if spark_side else "epoch_us(ts)"
+def _cusum_sql(d) -> str:
+    tus = d["tus"]
     return f"""
     WITH e AS (
       SELECT user_id, event_id, {tus} AS ts_us, value FROM events
@@ -1145,7 +1138,7 @@ def _cusum_sql(spark_side: bool) -> str:
     """
 
 
-_CUSUM_DUCK = _cusum_sql(False)
+_CUSUM_DUCK = _cusum_sql(_DUCK_D)
 
 
 @register("cusum_changepoint", _CUSUM_DUCK)
@@ -1163,7 +1156,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond the initial series partitioning. Skew bound = longest single
     series."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_cusum_sql(True))
+    return spark.sql(_cusum_sql(_SPARK_D))
 
 
 # --------------------------------------------------------------------------

@@ -120,15 +120,15 @@ def _decomposition_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     joining it back is a series-keyed equi join (per-series fit rows are
     tiny relative to points at any scale, and the join key matches the
     series partitioning every window op already uses)."""
-    from .queries.relational import _T0_US, _TS_US, _trend_fit_sql
-
+    from .queries import _SPARK_D
+    from .queries.relational import _T0_US, _trend_fit_sql
     from .sources import load
 
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    td = f"(CAST({_TS_US} - {_T0_US} AS DOUBLE) / 86400000000.0)"
+    td = f"(CAST({_SPARK_D['tus']} - {_T0_US} AS DOUBLE) / 86400000000.0)"
     return spark.sql(
         f"""
-        WITH fit AS ({_trend_fit_sql(_TS_US)}),
+        WITH fit AS ({_trend_fit_sql(_SPARK_D)}),
         pts AS (SELECT user_id, event_id, {td} AS x_day, value FROM events)
         SELECT p.user_id, p.event_id, p.x_day, p.value,
                f.intercept + f.slope * p.x_day AS trend
@@ -149,9 +149,9 @@ def write_plot_bundle(spark: SparkSession, sf_dir: str, out: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     from .queries.events_ext import missing_pattern
-    from .queries.llm_pipeline import _parquet_rows
     from .queries.relational import sampling_hist
     from .session import fast_commit
+    from .sources import parquet_rows
 
     fast_commit(spark)
     frames = {
@@ -168,7 +168,7 @@ def write_plot_bundle(spark: SparkSession, sf_dir: str, out: str) -> DataFrame:
         name, df = item
         path = os.path.join(out, f"frame={name}")
         df.write.mode("overwrite").parquet(path)
-        return name, _parquet_rows(path)
+        return name, parquet_rows(path)
 
     with ThreadPoolExecutor(max_workers=len(frames)) as pool:
         counts = list(pool.map(_write, frames.items()))
@@ -190,8 +190,8 @@ def curate_decisions_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes). LEFT joins throughout: a doc with NULL text still gets its
     audit row (NULL signals, keep follows the coalesced gates)."""
     from .queries.corpus_ext import gopher_rules
+    from .queries import _SPARK_D
     from .queries.llm_pipeline import (
-        _SPARK_D,
         _doc_quality_gate_sql,
         _spark_docs,
         dedup_clusters,
@@ -318,9 +318,8 @@ def write_curated_corpus(spark: SparkSession, sf_dir: str, out: str) -> DataFram
     Returns a (stage, n) summary frame with footer-verified written
     counts."""
     from .functions.scale import broadcast_if_small
-    from .queries.llm_pipeline import _parquet_rows
     from .session import fast_commit
-    from .sources import table_rows
+    from .sources import parquet_rows, table_rows
 
     from pyspark.sql import Observation
 
@@ -371,8 +370,8 @@ def write_curated_corpus(spark: SparkSession, sf_dir: str, out: str) -> DataFram
         ("dup_dropped", int(agg["n_dup_dropped"] or 0)),
         ("kept", int(agg["n_kept"] or 0)),
         ("tokens_kept", int(agg["n_tokens_kept"] or 0)),
-        ("decisions_rows_written", _parquet_rows(dec_path)),
-        ("corpus_rows_written", _parquet_rows(corpus_path)),
+        ("decisions_rows_written", parquet_rows(dec_path)),
+        ("corpus_rows_written", parquet_rows(corpus_path)),
         ("decisions_fingerprint", int(agg["fingerprint"] or 0)),
     ]
     return spark.createDataFrame(rows, "stage string, n long")
@@ -430,18 +429,17 @@ def write_curated_corpus_incremental(
 
     from .functions.neardup_index import _mh_shingles_cte, minhash_delta_pairs
     from .functions.scale import broadcast_if_small
+    from .queries import _SPARK_D
     from .queries import llm_pipeline as lp
     from .queries.corpus_ext import gopher_rules
     from .queries.llm_pipeline import (
-        _SPARK_D,
         _cc_labels,
         _doc_quality_gate_sql,
-        _parquet_rows,
         _spark_docs,
         dsir_weights,
     )
     from .session import fast_commit
-    from .sources import load, table_rows
+    from .sources import load, parquet_rows, table_rows
 
     fast_commit(spark)
     d = _SPARK_D
@@ -563,12 +561,12 @@ def write_curated_corpus_incremental(
     for v in (dagg_v, mem_v, bd_v):
         spark.catalog.dropTempView(v)
     rows = [
-        ("docs_processed_total", _parquet_rows(paths["signals"])),
+        ("docs_processed_total", parquet_rows(paths["signals"])),
         ("batch_new_edges", n_new_edges),
-        ("edges_total", _parquet_rows(paths["edges"])),
+        ("edges_total", parquet_rows(paths["edges"])),
         ("kept", n_kept),
-        ("decisions_rows_written", _parquet_rows(dec_path)),
-        ("corpus_rows_written", _parquet_rows(corpus_path)),
+        ("decisions_rows_written", parquet_rows(dec_path)),
+        ("corpus_rows_written", parquet_rows(corpus_path)),
         ("published_version", -1 if version is None else version),
     ]
     return spark.createDataFrame(rows, "stage string, n long")
@@ -667,8 +665,8 @@ def publish_version(
     orphan is garbage a retention job may remove."""
     import json
 
-    from .queries.llm_pipeline import _parquet_rows
     from .session import fast_commit
+    from .sources import parquet_rows
 
     os.makedirs(root, exist_ok=True)
     version = _next_version(root)
@@ -684,7 +682,7 @@ def publish_version(
     pointer = {
         "version": version,
         "path": f"v{version}",
-        "n_rows": _parquet_rows(final),
+        "n_rows": parquet_rows(final),
     }
     tmp_ptr = os.path.join(root, f"_tmp_{_LATEST}_{os.getpid()}")
     with open(tmp_ptr, "w") as f:
@@ -774,12 +772,12 @@ def rollback(root: str, version: int) -> None:
     target = os.path.join(root, f"v{version}")
     if not os.path.isdir(target):
         raise FileNotFoundError(f"no published version directory {target}")
-    from .queries.llm_pipeline import _parquet_rows
+    from .sources import parquet_rows
 
     pointer = {
         "version": version,
         "path": f"v{version}",
-        "n_rows": _parquet_rows(target),
+        "n_rows": parquet_rows(target),
     }
     tmp_ptr = os.path.join(root, f"_tmp_{_LATEST}_{os.getpid()}")
     with open(tmp_ptr, "w") as f:
@@ -877,10 +875,9 @@ def write_corpus_report(spark: SparkSession, sf_dir: str, out: str) -> DataFrame
     preserved); the profiles are language/source-cardinality-bounded."""
     from .queries.corpus_ext import length_percentiles, ngram_novelty
     from .queries.corpus_mining import gopher_repetition, tokenizer_stats
-    from .queries.llm_pipeline import _parquet_rows
     from .queries.corpus_ext import gopher_rules
     from .session import fast_commit
-    from .sources import table_rows
+    from .sources import parquet_rows, table_rows
 
     fast_commit(spark)
     shapes = gopher_rules(spark, sf_dir).select(
@@ -921,13 +918,13 @@ def write_corpus_report(spark: SparkSession, sf_dir: str, out: str) -> DataFrame
     ).collect()[0]
     rows = [
         ("docs_in", table_rows(sf_dir, "documents")),
-        ("docs_audited", _parquet_rows(audit_path)),
+        ("docs_audited", parquet_rows(audit_path)),
         ("clean", int(agg["n_clean"] or 0)),
         ("shape_fail", int(agg["n_shape_fail"] or 0)),
         ("repetition_fail", int(agg["n_repetition_fail"] or 0)),
         ("novel_runs", int(agg["novel_runs"] or 0)),
-        ("lang_rows_written", _parquet_rows(lang_path)),
-        ("length_rows_written", _parquet_rows(len_path)),
+        ("lang_rows_written", parquet_rows(lang_path)),
+        ("length_rows_written", parquet_rows(len_path)),
         ("audit_fingerprint", int(agg["fingerprint"] or 0)),
     ]
     return spark.createDataFrame(rows, "stage string, n long")

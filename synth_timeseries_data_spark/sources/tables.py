@@ -28,8 +28,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.01"
-
 # Resolved-relation cache (the engine's catalog): `spark.read.parquet` costs
 # ~50 ms of driver work per call (file listing, footer/schema read, py4j
 # round-trips) — pure metadata, re-done identically on every query over the
@@ -111,33 +109,50 @@ def _footer_stats(sf_dir: str, name: str) -> tuple[int, int]:
     if hit is not None and hit[0] == fp:
         return hit[1], hit[2]
     try:
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            # Walk RECURSIVELY: hive-partitioned datasets nest part files
-            # under key=value subdirectories, and a top-level-only listing
-            # would report 0 rows — which downstream size gates read as
-            # "tiny, safe to broadcast", the exact failure the 2**62
-            # fail-safe exists to prevent.
-            parts = [
-                os.path.join(root, f)
-                for root, _dirs, files in os.walk(path)
-                for f in files
-                if f.endswith(".parquet")
-            ]
-        else:
-            parts = [path]
+        parts = _part_files(path)
         if not parts:
             # A dataset directory with zero readable footers is
             # UNKNOWN, not empty: keep the no-broadcast fail-safe.
             n = nbytes = 2**62
         else:
-            n = sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
+            n = _footer_rows(parts)
             nbytes = sum(os.path.getsize(p) for p in parts)
     except Exception:
         n = nbytes = 2**62
     _ROWS_CACHE[path] = (fp, n, nbytes)
     return n, nbytes
+
+
+def _part_files(path: str) -> list[str]:
+    """The parquet part files of ``path``: the file itself, or every part
+    under a dataset directory. The walk is RECURSIVE: hive-partitioned
+    datasets nest part files under key=value subdirectories, and a
+    top-level-only listing would report 0 rows — which downstream size
+    gates read as "tiny, safe to broadcast", the exact failure the 2**62
+    fail-safe exists to prevent."""
+    if not os.path.isdir(path):
+        return [path]
+    return [
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    ]
+
+
+def _footer_rows(parts: list[str]) -> int:
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(p).num_rows for p in parts)
+
+
+def parquet_rows(path: str) -> int:
+    """Row count of a parquet file or dataset directory (flat or
+    hive-partitioned) from its footers — driver-side, no Spark job, not
+    memoized: the counter for datasets a sink has just written
+    (:func:`table_rows` is the fixture-table form, memoized per
+    fingerprint and fail-safe on unreadable footers; this one raises)."""
+    return _footer_rows(_part_files(path))
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -401,9 +401,9 @@ def hll_ingest_stream(
     StreamingQuery."""
     import uuid
 
+    from ..queries import _SPARK_D as d
     from ..queries import llm_pipeline as lp
 
-    d = lp._SPARK_D
     stream_tag = uuid.uuid4().hex[:12]
     docs = stream_documents(spark, docs_dir)
 

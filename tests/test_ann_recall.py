@@ -200,7 +200,6 @@ def test_dense_bucket_guard_keeps_blob_connected(spark):
 
     from synth_timeseries_data_spark.queries.llm_pipeline import (
         _ND_BUCKET_CAP,
-        _ND_POSEXP_SPARK,
         _SPARK_D,
         _nd_sigs_sql,
         _nd_tail,
@@ -225,7 +224,7 @@ def test_dense_bucket_guard_keeps_blob_connected(spark):
     ).createOrReplaceTempView("embeddings")
     try:
         spark.sql(
-            _nd_sigs_sql(_SPARK_D, _ND_POSEXP_SPARK, 12)
+            _nd_sigs_sql(_SPARK_D, _SPARK_D["comps"](), 12)
         ).createOrReplaceTempView("g_sigs")
         spark.sql(_nd_v_sql(_SPARK_D)).createOrReplaceTempView("g_v")
         pairs = [
@@ -264,18 +263,17 @@ def test_dense_bucket_guard_keeps_blob_connected(spark):
 def _pq_sqls(codes_view: str):
     from synth_timeseries_data_spark.queries.llm_pipeline import (
         _PQ_CODES_TAIL,
-        _PQ_POSEXP_SPARK,
         _pq_dists_sql,
         _pq_tail,
     )
 
     idx = (
-        f"WITH comps AS ({_PQ_POSEXP_SPARK}),"
+        f"WITH comps AS ({_SPARK_D['comps']()}),"
         + _pq_dists_sql(_SPARK_D, "")
         + _PQ_CODES_TAIL
     )
     tail = (
-        f"WITH comps AS ({_PQ_POSEXP_SPARK}),"
+        f"WITH comps AS ({_SPARK_D['comps']()}),"
         + _pq_dists_sql(_SPARK_D, "WHERE vec_id = 0")
         + ",\n    qd AS (SELECT m, c, d2 FROM dists),"
         + _pq_tail(_SPARK_D, codes_view)

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import duckdb
 
+from synth_timeseries_data_spark.queries import _DUCK_D
 from synth_timeseries_data_spark.queries.timeseries import _ASOF_SPARK, _asof_sql
 
 _BAND_PRED = "p.rn >= c.rn - (SELECT b FROM band) AND "
@@ -47,7 +48,7 @@ def _adversarial_rows() -> list[tuple[int, int, int, float]]:
 
 
 def _cmp(con) -> None:
-    banded = _asof_sql("epoch_us(ts)")
+    banded = _asof_sql(_DUCK_D)
     assert _BAND_PRED in banded
     unbounded = banded.replace(_BAND_PRED, "")
     a = (
@@ -122,7 +123,7 @@ def test_spark_asof_matches_oracle_on_adversarial_fixture(spark):
         spark.catalog.dropTempView("events")
     con = _adversarial_duck()
     want = (
-        con.execute(_asof_sql("epoch_us(ts)"))
+        con.execute(_asof_sql(_DUCK_D))
         .df()
         .sort_values(["user_id", "event_id", "k"])
         .reset_index(drop=True)

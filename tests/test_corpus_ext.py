@@ -129,11 +129,9 @@ def test_decontam_detects_planted_8gram_leak(spark):
     """A verbatim 8-token run shared train->test MUST be reported (with
     correct run/doc counts); a 7-token overlap must NOT."""
     from synth_timeseries_data_spark.queries.corpus_ext import _DECONTAM_SPARK
-    from synth_timeseries_data_spark.queries.llm_pipeline import _SPARK_D, _hex2int
+    from synth_timeseries_data_spark.queries import _SPARK_D
 
-    bucket = _hex2int(
-        _SPARK_D, "SUBSTR(md5(CONCAT('split|', CAST(id AS STRING))), 1, 15)"
-    )
+    bucket = _SPARK_D["bucket"]("split", "id")
     buckets = {
         r.id: r.b
         for r in spark.sql(
@@ -457,7 +455,7 @@ def test_char_entropy_fixture_is_codepoint_split_safe():
     grapheme is one code point. Assert that holds for every document at the
     gate SF dirs — combining marks (Mn/Mc/Me) and astral-plane chars are the
     divergence classes. If this ever fires, normalize BOTH oracle sides to
-    explicit code points before comparing (caveat on _char_entropy_sql)."""
+    explicit code points before comparing (caveat on _ENT_DUCK)."""
     import unicodedata
 
     import pyarrow.parquet as pq
@@ -1290,25 +1288,41 @@ def _skew_gate_corpora(tmp_path) -> list:
     ]
 
 
-def test_dedup_spans_window_and_agg_forms_row_equal(spark, tmp_path):
-    """The size-gated first-doc-stamp forms (run-keyed window vs
-    GROUP BY h + SHUFFLE_HASH join back) must be row-identical on both a
-    random-overlap corpus and the hot-boilerplate skew shape — the gate
-    may only ever change the plan, never a value."""
+def test_dedup_spans_matches_oracle_on_skew_corpora(spark, tmp_path):
+    """The run-keyed window form must be row-identical to the DuckDB
+    oracle on both a random-overlap corpus and the hot-boilerplate skew
+    shape (one run carried by 80% of docs, buffered in one window task)."""
+    import duckdb
+
     from synth_timeseries_data_spark.queries.corpus_ext import (
+        _SPANS_DUCK,
         _SPANS_SPARK,
-        _SPANS_SPARK_AGG,
     )
     from synth_timeseries_data_spark.queries.llm_pipeline import (
         _register_docs,
     )
 
+    key = lambda r: (r[0], r[1], r[2], r[3])  # noqa: E731
     for sf_dir in _skew_gate_corpora(tmp_path):
         _register_docs(spark, sf_dir)
-        key = lambda r: (r.doc_id, r.n_tokens, r.n_removed, r.clean_text)
-        a = sorted(map(key, spark.sql(_SPANS_SPARK).collect()))
-        b = sorted(map(key, spark.sql(_SPANS_SPARK_AGG).collect()))
-        assert a == b and len(a) > 0, sf_dir
+        got = sorted(
+            map(key, spark.sql(_SPANS_SPARK)
+                .select("doc_id", "n_tokens", "n_removed", "clean_text")
+                .collect())
+        )
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM "
+            f"'{sf_dir}/documents.parquet'"
+        )
+        want = sorted(
+            map(key, con.execute(
+                f"SELECT doc_id, n_tokens, n_removed, clean_text "
+                f"FROM ({_SPANS_DUCK})"
+            ).fetchall())
+        )
+        con.close()
+        assert got == want and len(got) > 0, sf_dir
 
 
 def test_ngram_novelty_single_and_two_phase_forms_row_equal(spark, tmp_path):
@@ -1515,13 +1529,11 @@ def test_perplexity_buckets_tercile_properties(spark, oracle_sf_dir):
 
 
 def test_skew_gates_switch_forms_past_thresholds(spark, oracle_sf_dir, monkeypatch):
-    """The size gates must actually fire: with the footer count
-    monkeypatched past each threshold, dedup_spans' plan switches to the
-    agg+join form (a SortMergeJoin/ShuffledHashJoin appears where the
-    window was) and ngram_novelty's drops the collect_set aggregation;
-    at the real fixture size both run their small-tier forms."""
-    from synth_timeseries_data_spark.queries import corpus_ext as cx
-
+    """The size gate must actually fire: with the footer count
+    monkeypatched past its threshold, ngram_novelty's plan drops the
+    collect_set aggregation for the two-phase join; at the real fixture
+    size it runs its small-tier form. dedup_spans has one form (the
+    run-keyed window) at every size."""
     qs = all_queries()
 
     def plan(name):
@@ -1541,8 +1553,7 @@ def test_skew_gates_switch_forms_past_thresholds(spark, oracle_sf_dir, monkeypat
         "synth_timeseries_data_spark.sources.tables.table_rows",
         lambda sf_dir, name: 2**40,
     )
-    big_spans = plan("dedup_spans")
-    assert "ShuffledHashJoin" in big_spans
+    assert "Window" in plan("dedup_spans")
     big_nov = plan("ngram_novelty")
     assert "collect_set" not in big_nov
     assert "ShuffledHashJoin" in big_nov

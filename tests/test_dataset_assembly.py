@@ -51,17 +51,11 @@ def test_stratified_sample_respects_rates(spark, oracle_sf_dir):
 def test_contamination_detects_planted_leak(spark):
     """A doc duplicated into ids that hash to train and test splits MUST be
     reported; distinct-prefix docs must not be."""
-    from synth_timeseries_data_spark.queries.llm_pipeline import (
-        _SPARK_D,
-        _contam_spark_sql,
-        _hex2int,
-    )
+    from synth_timeseries_data_spark.queries import _SPARK_D
+    from synth_timeseries_data_spark.queries.llm_pipeline import _contam_spark_sql
 
     # find ids in each split by evaluating the same bucket expression
-    strcast = "STRING"
-    bucket = _hex2int(
-        _SPARK_D, f"SUBSTR(md5(CONCAT('split|', CAST(id AS {strcast}))), 1, 15)"
-    )
+    bucket = _SPARK_D["bucket"]("split", "id")
     buckets = {
         r.id: r.b
         for r in spark.sql(

@@ -14,10 +14,10 @@ from __future__ import annotations
 import duckdb
 import pandas as pd
 
+from synth_timeseries_data_spark.queries import _DUCK_D, _SPARK_D
 from synth_timeseries_data_spark.queries.relational import (
     _CORR_SQL,
     _SUMMARY_SQL,
-    _TS_US,
     _trend_fit_sql,
 )
 
@@ -71,7 +71,8 @@ def test_trend_fit_singleton_and_constant_time_series(spark):
     # (ts div 1000) conversion so both engines run identical arithmetic.
     got, want = _run_both(
         spark, sdf, "events",
-        _trend_fit_sql(_TS_US), _trend_fit_sql("(ts // 1000)"),
+        _trend_fit_sql(_SPARK_D),
+        _trend_fit_sql({**_DUCK_D, "tus": "(ts // 1000)"}),
         ["user_id"],
     )
     assert got["slope"].isna().tolist() == [True, True, False]
@@ -233,6 +234,7 @@ def test_acf_constant_and_singleton_series(spark):
     yields finite values. Engine-vs-engine on the constructed fixture."""
     import pandas as pd
 
+    from synth_timeseries_data_spark.queries import _SPARK_D
     from synth_timeseries_data_spark.queries.timeseries import _acf_sql
 
     rows = []
@@ -252,7 +254,7 @@ def test_acf_constant_and_singleton_series(spark):
     sdf.createOrReplaceTempView("events")
     try:
         got = (
-            spark.sql(_acf_sql(True))
+            spark.sql(_acf_sql(_SPARK_D))
             .toPandas()
             .sort_values(["user_id", "lag"])
             .reset_index(drop=True)

@@ -13,13 +13,13 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from synth_timeseries_data_spark.queries import all_queries
-from synth_timeseries_data_spark.queries.graph import _duck_expand, _edges_cte
+from synth_timeseries_data_spark.queries import _DUCK_D, all_queries
+from synth_timeseries_data_spark.queries.graph import _edges_cte
 
 
 @pytest.fixture(scope="module")
 def cells(duck):
-    sql = _edges_cte(_duck_expand) + "SELECT config_id, i, j, k, gt, pred FROM edges"
+    sql = _edges_cte(_DUCK_D) + "SELECT config_id, i, j, k, gt, pred FROM edges"
     return duck.execute(sql).df()
 
 

@@ -318,6 +318,7 @@ def test_cusum_changepoint_semantics(spark):
     import numpy as np
     import pandas as pd
 
+    from synth_timeseries_data_spark.queries import _SPARK_D
     from synth_timeseries_data_spark.queries.timeseries import _cusum_sql
 
     rng = np.random.RandomState(7)
@@ -335,7 +336,7 @@ def test_cusum_changepoint_semantics(spark):
     spark.createDataFrame(pdf).createOrReplaceTempView("events")
     try:
         got = (
-            spark.sql(_cusum_sql(True))
+            spark.sql(_cusum_sql(_SPARK_D))
             .toPandas()
             .set_index("user_id")
             .sort_index()

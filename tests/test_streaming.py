@@ -506,6 +506,7 @@ def test_sliding_rollup_form_equals_one_level_form(spark, oracle_sf_dir):
     """The size-gated two-level rollup (partial per quarter → explode
     partials → re-combine) must produce exactly the one-exchange form's
     result — the gate may only ever change the plan, never the answer."""
+    from synth_timeseries_data_spark.queries import _SPARK_D
     from synth_timeseries_data_spark.queries.streaming_analog import (
         _sliding_rollup_sql,
         _sliding_sql,
@@ -513,8 +514,8 @@ def test_sliding_rollup_form_equals_one_level_form(spark, oracle_sf_dir):
     from synth_timeseries_data_spark.sources import load
 
     load(spark, oracle_sf_dir, "events").createOrReplaceTempView("events")
-    one = spark.sql(_sliding_sql("(ts div 1000)", spark_dialect=True))
-    two = spark.sql(_sliding_rollup_sql("(ts div 1000)"))
+    one = spark.sql(_sliding_sql(_SPARK_D))
+    two = spark.sql(_sliding_rollup_sql(_SPARK_D))
     key = lambda r: (r["win_start_qtr"], r["event_type"])  # noqa: E731
     a = sorted(one.collect(), key=key)
     b = sorted(two.collect(), key=key)

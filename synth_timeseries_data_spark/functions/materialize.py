@@ -20,11 +20,12 @@ the id() for a new session while the entry is alive. Assumes the inputs the
 builder reads are immutable for the session's lifetime (true for the
 driver's read-only fixtures and for driver-side literals).
 
-The lock serializes concurrent gate workers (the driver runs queries at 5-
-and 32-way parallelism): without it, stale-entry eviction iterates the dict
-while another thread inserts (RuntimeError), and racing threads rebuild the
-same relation redundantly. The build runs under the lock on purpose — one
-thread materializes, the rest reuse.
+Locking is per key. A short global lock guards the memo dicts: without it,
+stale-entry eviction iterates a dict while another thread inserts
+(RuntimeError). Each key's build runs under that key's own lock, so of the
+threads asking for one relation (the driver runs queries at 5- and 32-way
+parallelism) one builds and the rest wait and reuse it, while a slow build
+no longer holds up threads that want other keys.
 """
 
 from __future__ import annotations
@@ -34,12 +35,54 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_CACHE: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
+_Memo = dict[tuple[int, str], tuple[SparkSession, DataFrame]]
+
+_CACHE: _Memo = {}
+_PCACHE: _Memo = {}
+# guards both memo dicts and _KEY_LOCKS; never held across a build
+_LOCK = threading.Lock()
 # RLock, not Lock: a build function may itself call materialized() for its
 # inputs (dedup_clusters materializes the minhash pair relation, whose
-# build materializes the LSH index relations) — a plain Lock deadlocks on
-# that same-thread reentry
-_LOCK = threading.RLock()
+# build materializes the LSH index relations). Such nesting follows the
+# build's input graph, which has no cycle, so two threads never wait on
+# each other's key.
+_KEY_LOCKS: dict[tuple[int, int, str], threading.RLock] = {}
+
+
+def _memo(
+    cache: _Memo,
+    spark: SparkSession,
+    key: str,
+    build: Callable[[], DataFrame],
+    drop: Callable[[DataFrame], None] = lambda df: None,
+) -> DataFrame:
+    """``cache``'s relation for (session, ``key``), built by ``build()`` under
+    the key's own lock on first use. Entries and key locks of other sessions
+    are evicted (``drop`` frees an evicted relation): they can never be used
+    again, and a long-lived process recreating sessions must not pin old
+    plans."""
+    sid = id(spark)
+    k = (sid, key)
+    with _LOCK:
+        stale = [s for s in cache if s[0] != sid]
+        dropped = [cache.pop(s)[1] for s in stale]
+        for lk in [lk for lk in _KEY_LOCKS if lk[0] == id(cache) and lk[1] != sid]:
+            del _KEY_LOCKS[lk]
+        hit = cache.get(k)
+        lock = _KEY_LOCKS.setdefault((id(cache), *k), threading.RLock())
+    for df in dropped:
+        drop(df)
+    if hit is not None:
+        return hit[1]
+    with lock:
+        with _LOCK:
+            hit = cache.get(k)
+        if hit is not None:  # built while this thread waited
+            return hit[1]
+        df = build()
+        with _LOCK:
+            cache[k] = (spark, df)
+    return df
 
 
 def materialized(
@@ -47,23 +90,14 @@ def materialized(
 ) -> DataFrame:
     """Return the session's materialized relation for ``key``, building it
     with ``build()`` (then localCheckpoint) on first use."""
-    sid = id(spark)
-    k = (sid, key)
-    with _LOCK:
-        # entries from dead sessions can never be used again — evict them
-        # so a long-lived process recreating sessions doesn't pin old plans
-        for stale in [s for s in _CACHE if s[0] != sid]:
-            del _CACHE[stale]
-        hit = _CACHE.get(k)
-        if hit is None:
-            df = build().localCheckpoint()
-            _CACHE[k] = (spark, df)
-        else:
-            df = hit[1]
-    return df
+    return _memo(_CACHE, spark, key, lambda: build().localCheckpoint())
 
 
-_PCACHE: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:  # session already stopped — nothing to free
+        pass
 
 
 def persisted(
@@ -82,19 +116,4 @@ def persisted(
     caches (persist is lazy) — no separate materialization job. At cluster
     scale this is the session dimension cache every warehouse engine keeps
     (the bridge is dimension-sized: |orders| rows, 2 int columns)."""
-    sid = id(spark)
-    k = (sid, key)
-    with _LOCK:
-        for stale in [s for s in _PCACHE if s[0] != sid]:
-            try:
-                _PCACHE[stale][1].unpersist()
-            except Exception:  # session already stopped — nothing to free
-                pass
-            del _PCACHE[stale]
-        hit = _PCACHE.get(k)
-        if hit is None:
-            df = build().persist()
-            _PCACHE[k] = (spark, df)
-        else:
-            df = hit[1]
-    return df
+    return _memo(_PCACHE, spark, key, lambda: build().persist(), _unpersist)

@@ -484,15 +484,11 @@ def ivf_topk_indexed(
             f"query vector (vec_id 0) not found in {sf_dir}'s embeddings"
         )
     in_list = ", ".join(str(c) for c in probes)
+    # the registry's verify, over the probed cells' inline payloads
     return spark.sql(
         f"""
-        WITH q AS (SELECT {_SPARK_D['farr']('embedding')} AS qe
-                   FROM embeddings WHERE vec_id = 0),
-        sims AS (
-          SELECT v.vec_id, v.label, {_SPARK_D['cos']('v.e', 'q.qe')} AS cos_sim
-          FROM {cells_table} v CROSS JOIN q
-          WHERE v.c IN ({in_list}) AND v.vec_id != 0
-        )
+        WITH {lp._verify_ctes(_SPARK_D, f"{cells_table} v CROSS JOIN q "
+                              f"WHERE v.c IN ({in_list}) AND v.vec_id != 0")}
         SELECT vec_id, label, ROUND(cos_sim, 6) + 0.0 AS cos_sim
         FROM sims
         ORDER BY ROUND(cos_sim, 6) DESC, vec_id
@@ -633,15 +629,11 @@ def lsh_topk_indexed(
             f"query vector (vec_id 0) not found in {sf_dir}'s embeddings"
         )
     [qsig] = sigs
+    # the registry's verify, over the probed bucket's inline payloads
     return spark.sql(
         f"""
-        WITH q AS (SELECT {_SPARK_D['farr']('embedding')} AS qe
-                   FROM embeddings WHERE vec_id = 0),
-        sims AS (
-          SELECT v.vec_id, v.label, {_SPARK_D['cos']('v.e', 'q.qe')} AS cos_sim
-          FROM {cells_table} v CROSS JOIN q
-          WHERE v.sig = {qsig} AND v.vec_id != 0
-        )
+        WITH {lp._verify_ctes(_SPARK_D, f"{cells_table} v CROSS JOIN q "
+                              f"WHERE v.sig = {qsig} AND v.vec_id != 0")}
         SELECT vec_id, label, ROUND(cos_sim, 6) AS cos_sim
         FROM sims
         ORDER BY ROUND(cos_sim, 6) DESC, vec_id

@@ -1319,16 +1319,35 @@ def _spark_vecs(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     return spark.sql(sql)
 
 
-def _vec_sql(d) -> str:
+def _verify_ctes(d, cand: str, hint: str = "") -> str:
+    """The exact-cosine verify every embedding top-k shares: ``v`` (each
+    embedding as a double array), ``q`` (the vec_id = 0 query vector) and
+    ``sims`` (each candidate's cosine to ``q``). ``cand`` is the FROM clause
+    of ``sims`` — rows aliased ``v`` with vec_id, label and e, crossed with
+    ``q``, and the candidate filter — and ``hint`` an optional plan hint
+    for it. A persisted index (functions/neardup_index.py) passes its cells
+    table aliased ``v``: ``sims`` then scores the inline payloads while
+    ``q`` still reads the query vector from ``embeddings``. One text, so the
+    registry forms and the index probes score with bit-identical
+    expressions."""
     return f"""
-    WITH v AS (SELECT vec_id, label, {d['farr']('embedding')} AS e
-               FROM embeddings),
+    v AS (SELECT vec_id, label, {d['farr']('embedding')} AS e
+          FROM embeddings),
     q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
     sims AS (
-      SELECT v.vec_id, v.label, {d['cos']('v.e', 'q.qe')} AS cos_sim
-      FROM v CROSS JOIN q
-      WHERE v.vec_id != 0
-    )
+      SELECT {hint and f"/*+ {hint} */ "}v.vec_id, v.label,
+             {d['cos']('v.e', 'q.qe')} AS cos_sim
+      FROM {cand}
+    )"""
+
+
+# the LSH and IVF candidates: a small vec_id relation, broadcast to the scan
+_CAND_JOIN = ("v JOIN cand ON cand.vec_id = v.vec_id CROSS JOIN q", "BROADCAST(cand)")
+
+
+def _vec_sql(d) -> str:
+    return f"""
+    WITH {_verify_ctes(d, "v CROSS JOIN q WHERE v.vec_id != 0")}
     SELECT vec_id, label, ROUND(cos_sim, 6) AS cos_sim
     FROM sims
     ORDER BY ROUND(cos_sim, 6) DESC, vec_id
@@ -1386,15 +1405,7 @@ def _ann_tail(d, sigs: str) -> str:
     cand AS (
       SELECT s.vec_id FROM {sigs} s, qsig
       WHERE s.sig = qsig.sig AND s.vec_id != 0
-    ),
-    v AS (SELECT vec_id, label, {d['farr']('embedding')} AS e
-          FROM embeddings),
-    q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
-    sims AS (
-      SELECT /*+ BROADCAST(cand) */ v.vec_id, v.label,
-             {d['cos']('v.e', 'q.qe')} AS cos_sim
-      FROM v JOIN cand ON cand.vec_id = v.vec_id CROSS JOIN q
-    )
+    ),{_verify_ctes(d, *_CAND_JOIN)}
     SELECT vec_id, label, ROUND(cos_sim, 6) AS cos_sim
     FROM sims
     ORDER BY ROUND(cos_sim, 6) DESC, vec_id
@@ -1496,15 +1507,7 @@ def _ivf_tail(d, ranked: str, probes: int = _IVF_PROBES) -> str:
     cand AS (
       SELECT a.vec_id FROM assign a JOIN qprobe qp ON qp.c = a.c
       WHERE a.vec_id != 0
-    ),
-    v AS (SELECT vec_id, label, {d['farr']('embedding')} AS e
-          FROM embeddings),
-    q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
-    sims AS (
-      SELECT /*+ BROADCAST(cand) */ v.vec_id, v.label,
-             {d['cos']('v.e', 'q.qe')} AS cos_sim
-      FROM v JOIN cand ON cand.vec_id = v.vec_id CROSS JOIN q
-    )
+    ),{_verify_ctes(d, *_CAND_JOIN)}
     SELECT vec_id, label, ROUND(cos_sim, 6) + 0.0 AS cos_sim
     FROM sims
     ORDER BY ROUND(cos_sim, 6) DESC, vec_id

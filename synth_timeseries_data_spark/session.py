@@ -9,8 +9,13 @@ already-loaded, already-JITed code instead of recompiling it with Janino.
 A JVM that ``get_session`` launches itself writes ``file:`` paths through
 ``jvm/NoForkLocalFileSystem.java`` (compiled once per source hash into the
 checkout's ``_build/``), which sets file and directory modes in-process
-instead of starting a ``chmod`` per path; a session that existed before, or
-a host without ``javac``, keeps Hadoop's stock local FileSystem.
+instead of starting a ``chmod`` per path, and maps a class-data-sharing
+archive of its classpath (``cds.py``): the first such launch per JDK and
+classpath records the archive at interpreter exit, and every later one
+starts from the JVM's already-parsed classes (cold ``queries`` set-up
+10.1 -> 6.3 s, FLOOR.md). A session that existed before, or a host without
+``javac``, keeps Hadoop's stock local FileSystem and no archive; so does a
+launch whose Spark conf directory holds anything but ``*.template`` files.
 Cluster posture (100 TB): the same code runs unmodified — AQE handles skew and
 partition coalescing; all operators avoid driver-side collects and express
 plans declaratively so Catalyst can push filters/prune columns.
@@ -30,6 +35,7 @@ from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
+from . import cds
 from .sources.tables import table_bytes
 
 # Python workers start in the driver's cwd with the driver's PYTHONPATH, so
@@ -42,44 +48,49 @@ _FS_SOURCE = os.path.join(
 )
 _FS_CLASS = "synth_timeseries_data_spark.jvm.NoForkLocalFileSystem"
 
+# Compiled JVM helpers and the class-data-sharing archive (gitignored).
+_BUILD = os.path.join(_REPO_ROOT, "_build")
 
-def _fork_free_fs_classes() -> str | None:
-    """The directory holding the compiled ``_FS_SOURCE``, compiled on first
-    use into ``_build/<source hash>/``; None when it cannot be compiled.
 
-    javac writes into a temp directory that is then renamed into place, so
-    a directory under that name is always complete: of two processes that
-    compile at once, the later rename fails and that process uses the
-    winner's classes."""
+def _fork_free_fs_jar() -> str | None:
+    """The compiled ``_FS_SOURCE`` as ``_build/<source hash>.jar``, compiled on
+    first use; None when it cannot be compiled.
+
+    A jar, not a class directory: HotSpot records no class-data-sharing
+    archive for a classpath that holds a non-empty directory (``cds``).
+    javac writes into a temp directory that is zipped (in-process, no
+    fork) into a temp jar, which is then hard-linked into place, so a jar under that name is
+    always complete and never replaced: of two processes that compile at
+    once, the later link fails and that process uses the winner's jar."""
     javac = shutil.which("javac")
     if javac is None:
         return None
     with open(_FS_SOURCE, "rb") as fh:
         digest = hashlib.sha256(fh.read()).hexdigest()[:16]
-    build = os.path.join(_REPO_ROOT, "_build")
-    out = os.path.join(build, digest)
-    if os.path.isdir(out):
-        return out
+    jar = os.path.join(_BUILD, digest + ".jar")
+    if os.path.isfile(jar):
+        return jar
     try:
-        os.makedirs(build, exist_ok=True)
-        tmp = tempfile.mkdtemp(prefix=".javac-", dir=build)
+        os.makedirs(_BUILD, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=".javac-", dir=_BUILD)
     except OSError:
         return None
     try:
+        classes = os.path.join(tmp, "classes")
         subprocess.run(
             [javac, "--release", "17", "-nowarn",
              # the one jar the source needs (0.75 s; all of jars/* took 1.3 s)
              "-cp", os.pathsep.join(glob.glob(os.path.join(
                  _find_spark_home(), "jars", "hadoop-client-api-*.jar"))),
-             "-d", tmp, _FS_SOURCE],
+             "-d", classes, _FS_SOURCE],
             check=True, capture_output=True,
         )
-        os.replace(tmp, out)
+        os.link(shutil.make_archive(os.path.join(tmp, "fs"), "zip", classes), jar)
     except (OSError, subprocess.CalledProcessError):
         pass
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return out if os.path.isdir(out) else None
+    return jar if os.path.isfile(jar) else None
 
 
 def _default_driver_mem() -> str:
@@ -97,6 +108,7 @@ def _default_driver_mem() -> str:
 
 def get_session(app_name: str = "synth_timeseries_data_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
     # Shuffle parallelism starts at the core count; tune_for_input resizes
     # it per input (one partition per ~1 MiB below the small gate, capped at
     # the core count; ~64 MB of input per partition above it, where AQE
@@ -140,10 +152,7 @@ def get_session(app_name: str = "synth_timeseries_data_spark") -> SparkSession:
             "synth_timeseries_data_spark.worker_daemon",
         )
         .config("spark.executorEnv.PYTHONPATH", _REPO_ROOT)
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
-        )
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -183,13 +192,34 @@ def get_session(app_name: str = "synth_timeseries_data_spark") -> SparkSession:
     # FileSystem, as it keeps Spark's 100-entry codegen cache, and no conf
     # names a class its JVM cannot load. In local[N] the driver JVM is also
     # the executor.
+    # The same goes for the class-data-sharing archive (cds.py): its JVM
+    # options apply only to a JVM this call starts. They go in
+    # defaultJavaOptions, which the launcher puts before extraJavaOptions,
+    # so both apply: a caller's --conf extraJavaOptions (perfbench's heap
+    # flags) replaces a builder-set extraJavaOptions outright. Cold
+    # `queries` set-up 10.1 -> 6.3 s (median of 10 pairs, FLOOR.md).
+    plan = None
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
-        classes = _fork_free_fs_classes()
-        if classes is not None:
-            builder = builder.config("spark.driver.extraClassPath", classes).config(
+        jar = _fork_free_fs_jar()
+        if jar is not None:
+            builder = builder.config("spark.driver.extraClassPath", jar).config(
                 "spark.hadoop.fs.file.impl", _FS_CLASS
             )
-    spark = builder.getOrCreate()
+            plan = cds.plan(_BUILD, jar, driver_mem)
+    if plan is None:
+        spark = builder.getOrCreate()
+    else:
+        builder = builder.config("spark.driver.defaultJavaOptions", plan.java_options)
+        conf_dir = os.environ.get("SPARK_CONF_DIR")
+        os.environ["SPARK_CONF_DIR"] = plan.conf_dir
+        try:
+            spark = builder.getOrCreate()
+        finally:
+            if conf_dir is None:
+                del os.environ["SPARK_CONF_DIR"]
+            else:
+                os.environ["SPARK_CONF_DIR"] = conf_dir
+        plan.record_at_exit()
     spark.sparkContext.setLogLevel("WARN")
     # getOrCreate on a live session re-applies the builder's shuffle and AQE
     # confs over whatever tune_for_input set, so its record of the applied

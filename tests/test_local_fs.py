@@ -12,6 +12,7 @@ import stat
 import subprocess
 import sys
 import textwrap
+import zipfile
 
 import pytest
 
@@ -58,6 +59,19 @@ def _file_fs(spark):
 def test_shared_session_writes_through_fork_free_fs(spark):
     raw = _file_fs(spark).getRawFileSystem()
     assert raw.getClass().getName() == session._FS_CLASS + "$Raw"
+
+
+@needs_javac
+def test_fork_free_fs_is_one_jar(spark):
+    """The compiled FileSystem reaches the driver classpath as one jar, not a
+    class directory: HotSpot records no class-data-sharing archive for a
+    classpath that holds a non-empty directory."""
+    jar = spark.conf.get("spark.driver.extraClassPath")
+    assert jar == session._fork_free_fs_jar()
+    with zipfile.ZipFile(jar) as zf:
+        names = set(zf.namelist())
+    cls = session._FS_CLASS.replace(".", "/")
+    assert {cls + ".class", cls + "$Raw.class"} <= names
 
 
 def test_generate_output_modes_match_stock_chmod(spark, tmp_path):
@@ -165,7 +179,8 @@ def test_generate_starts_no_chmod_process(tmp_path):
 
 def test_vanilla_session_first_keeps_stock_fs(tmp_path):
     """The `__spark_entry__` order: a vanilla session, then get_session. The
-    JVM was launched without the compiled class, so no conf may name it."""
+    JVM was launched without the compiled class, so no conf may name it,
+    and without class-data-sharing options, so none may be claimed."""
     got = _run(
         """
         import json, sys
@@ -184,6 +199,7 @@ def test_vanilla_session_first_keeps_stock_fs(tmp_path):
             "impl": hconf.get("fs.file.impl"),
             "session_impl": spark.conf.get("spark.hadoop.fs.file.impl", None),
             "raw": fs.getRawFileSystem().getClass().getName(),
+            "java_opts": spark.conf.get("spark.driver.defaultJavaOptions", None),
         }))
         """,
         str(tmp_path / "out"),
@@ -193,4 +209,5 @@ def test_vanilla_session_first_keeps_stock_fs(tmp_path):
         "impl": None,
         "session_impl": None,
         "raw": "org.apache.hadoop.fs.RawLocalFileSystem",
+        "java_opts": None,
     }
